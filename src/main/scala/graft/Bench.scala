@@ -1,23 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the generated-class cache defaults to 100 entries; a session
-      // running hundreds of distinct query plans (this bench, any
-      // long-lived production driver) thrashes it and RE-COMPILES
-      // identical sources — scale-independent, measured 2026-08-19
-      // (q184 task threads: 7.9 s sampled in classloader/Janino)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DevSession.builder(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM warmup (standard benchmark hygiene, as JMH warmup iterations):
     // run the HEAVIEST query DAGs once at the smallest scale factor so the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time a subset of queries in a fresh JVM.
   * runMain graft.BenchSome <sfDir> <q1,q2,...>
   */
@@ -10,13 +8,7 @@ object BenchSome {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DevSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val t0 = System.nanoTime()

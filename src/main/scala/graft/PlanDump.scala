@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `.explain("formatted")` of declared queries to files
   * (the plans/r{N}/ evidence the optimization rounds commit).
   * runMain graft.PlanDump <outDir> <suffix> q1,q2,... [sfDir]
@@ -12,14 +10,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(',').toSeq
     val dir = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DevSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>

@@ -2,8 +2,6 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for the registered queries so
   * scan pushdown / broadcast / codegen coverage can be reviewed.
   * Usage: runMain graft.Plans [sfDir] [outFile] [q1,q2,...]
@@ -13,13 +11,7 @@ object Plans {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("/tmp/plans.txt")
     val only = args.lift(2).map(_.split(",").toSet)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DevSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val pw = new PrintWriter(new File(out))
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

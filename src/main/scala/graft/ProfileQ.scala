@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (guide §1: measure first): replay one harness-shaped query's
@@ -15,14 +14,9 @@ object ProfileQ {
     val extra = sys.env.get("GRAFT_PROF_CONF").toSeq
       .flatMap(_.split(';')).map(_.split('=')).collect {
         case Array(k, v) => (k, v) }
-    val spark0 = SparkSession.builder().master("local[32]")
+    val spark0 = DevSession.builder(32)
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("GRAFT_PROF_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
     val spark = extra.foldLeft(spark0) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,16 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DevSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     args.foreach { name =>
       val t0 = System.nanoTime()

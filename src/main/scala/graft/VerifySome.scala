@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump a subset of queries + their oracle SQL for
@@ -10,13 +9,7 @@ object VerifySome {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, list) = args.take(3)
     val names = list.split(",").toSeq
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DevSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>

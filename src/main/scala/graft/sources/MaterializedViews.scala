@@ -340,6 +340,15 @@ object MaterializedViews {
       .groupBy(groupCols.map(col): _*)
       .agg(aggExprOf(aggs.head), aggs.tail.map(aggExprOf): _*)
 
+  /** A table's current column names and types from its manifest — no
+    * parquet relation build (which checks and lists every live bucket
+    * directory) per refresh.
+    */
+  private def currentSchema(spark: SparkSession, path: String): StructType =
+    MergeWriter.pinManifest(spark, path, None, None)
+      .map(MergeWriter.indexSchema(spark, path, _))
+      .getOrElse(MergeWriter.readTable(spark, path).schema)
+
   private def dimFrames(spark: SparkSession,
                         d: MvDef): Seq[(DataFrame, MvDim)] =
     d.dims.map(x => (MergeWriter.readTable(spark, x.path), x))
@@ -554,7 +563,7 @@ object MaterializedViews {
         // re-aggregates groups to the same values. Dims are small by
         // contract; the feed is bucket-pruned regardless.
         val keyIsJoin = dimKeys.exists(_.equalsIgnoreCase(x.dimCol))
-        val nonKey = MergeWriter.readTable(spark, x.path).schema.fieldNames
+        val nonKey = currentSchema(spark, x.path).fieldNames
           .filterNot(cn => dimKeys.exists(_.equalsIgnoreCase(cn))).toSeq
         val feed = MergeWriter.changeFeed(spark, x.path, a, c, dimKeys,
           nonKey)
@@ -634,7 +643,7 @@ object MaterializedViews {
             MergeWriter.recordTxn(spark, mvPath, (dimTxnApp(x.path), c)) }
           return true
         }
-        val mvSchema = MergeWriter.readTable(spark, mvPath).schema
+        val mvSchema = currentSchema(spark, mvPath)
         val recomputed = evaluate(srcAtFrom, dimsAt(old = false),
           d.groupCols, d.aggs, d.whereSql, restrictTo = Some(affected))
         val cast = recomputed.select((d.groupCols.map(col) ++
@@ -710,7 +719,7 @@ object MaterializedViews {
     // (group + agg + WHERE + join references that live in the source);
     // merge keys ride plain; dim-side columns arrive via the broadcast
     // dim join below
-    val srcFields = MergeWriter.readTable(spark, d.source).schema.fieldNames
+    val srcFields = currentSchema(spark, d.source).fieldNames
     def inSrc(c: String) = srcFields.exists(_.equalsIgnoreCase(c))
     val whereCols = d.whereSql.toSeq.flatMap(w =>
       spark.sessionState.sqlParser.parseExpression(w).collect {
@@ -795,7 +804,7 @@ object MaterializedViews {
     // current MV rows for exactly the touched groups (bounded point
     // read), folded, then ONE atomic mixed commit: live groups upsert,
     // vanished groups delete, the version anchor in the same ledger
-    val mvSchema: StructType = MergeWriter.readTable(spark, mvPath).schema
+    val mvSchema: StructType = currentSchema(spark, mvPath)
     val cur = MergeWriter.readKeys(spark, mvPath,
       delta.select(d.groupCols.map(col): _*), d.groupCols)
     val starAlias = d.aggs.find(_.fn == "count_star").get.alias

@@ -1710,10 +1710,7 @@ object MergeWriter {
         case None => throw new IllegalArgumentException(
           s"createTag: $tablePath holds no committed graft table")
         case Some(man) =>
-          val retained = manifestFiles(fs, dir).map(_._1)
-          require(retained.contains(v),
-            s"createTag: version $v not retained for $tablePath " +
-              s"(readable: ${retained.mkString(", ")})")
+          retainedFile(fs, dir, ManifestPrefix, v)
           try {
             commitManifest(fs, dir,
               man.copy(version = man.version + 1,
@@ -2389,13 +2386,9 @@ object MergeWriter {
 
   /** Snapshot read of the branch head — the WAP "audit" read. */
   def readBranch(spark: SparkSession, tablePath: String,
-                 name: String): DataFrame = {
-    val fs = fsFor(spark, tablePath)
-    val man = branchHead(fs, new Path(tablePath), name).getOrElse(
-      throw new IllegalArgumentException(
-        s"readBranch: no branch '$name' on $tablePath"))
-    readPinnedWhere(spark, tablePath, man, Seq.empty)
-  }
+                 name: String): DataFrame =
+    scanPinned(spark, tablePath,
+      pinManifest(spark, tablePath, None, None, Some(name)).get)
 
   /** A version REFERENCE — a numeric version or a tag name — resolved
     * to the concrete version it names (tags resolve through the
@@ -2485,12 +2478,7 @@ object MergeWriter {
           s"restore: no committed graft table at $tablePath")
         case Some(man) =>
           if (man.version == version) return // already that state
-          val retained = manifestFiles(fs, dir)
-          val target = retained.find(_._1 == version)
-            .map(h => readManifest(fs, version, h._2))
-            .getOrElse(throw new IllegalArgumentException(
-              s"restore: version $version not retained for $tablePath " +
-                s"(readable: ${retained.map(_._1).mkString(", ")})"))
+          val target = pinManifest(spark, tablePath, Some(version), None).get
           try {
             commitManifest(fs, dir, target.copy(
               version = man.version + 1,
@@ -6275,18 +6263,9 @@ object MergeWriter {
     * no schema to synthesize an empty relation from).
     */
   def readGroupTable(spark: SparkSession, groupPath: String,
-                     name: String): DataFrame = {
-    val fs = fsFor(spark, groupPath)
-    val man = currentGroupManifest(fs, new Path(groupPath))
-      .getOrElse(throw new IllegalArgumentException(
-        s"readGroupTable: no committed group manifest at $groupPath"))
-    val m = man.tables.getOrElse(name,
-      throw new IllegalArgumentException(
-        s"readGroupTable: member '$name' not in group " +
-          s"(members: ${man.tables.keys.toSeq.sorted.mkString(", ")})"))
-    val paths = allDirPaths(s"$groupPath/$name", m)
-    stripFrame(readWithSchema(spark, m, s"$groupPath/$name", paths))
-  }
+                     name: String): DataFrame =
+    scanPinned(spark, s"$groupPath/$name",
+      currentMember(spark, groupPath, name, "readGroupTable"))
 
   /** Post-commit auto-maintenance for the members a group load touched
     * — [[maybeAutoSplit]] and [[maybeAutoCompact]] at member scope, the
@@ -6510,26 +6489,9 @@ object MergeWriter {
     * readable range.
     */
   def readGroupTableVersion(spark: SparkSession, groupPath: String,
-                            name: String, version: Long): DataFrame = {
-    val fs = fsFor(spark, groupPath)
-    val dir = new Path(groupPath)
-    val retained = manifestFiles(fs, dir, GroupPrefix)
-    val hit = retained.find(_._1 == version).getOrElse(
-      throw new IllegalArgumentException(
-        s"readGroupTableVersion: version $version not retained for " +
-          s"$groupPath (readable: ${retained.map(_._1).mkString(", ")})"))
-    val node = readJsonFile(fs, hit._2)
-    val tables = scala.collection.mutable.Map.empty[String, Manifest]
-    node.get("tables").fields().forEachRemaining { t =>
-      tables(t.getKey) = manifestFromNode(t.getValue, version)
-    }
-    val m = tables.getOrElse(name,
-      throw new IllegalArgumentException(
-        s"readGroupTableVersion: member '$name' not in group at version " +
-          s"$version (members: ${tables.keys.toSeq.sorted.mkString(", ")})"))
-    val paths = allDirPaths(s"$groupPath/$name", m)
-    stripFrame(readWithSchema(spark, m, s"$groupPath/$name", paths))
-  }
+                            name: String, version: Long): DataFrame =
+    scanPinned(spark, s"$groupPath/$name",
+      pinGroupMember(spark, groupPath, name, Some(version), None).get)
 
   /** Operational introspection for groups ([[describeTable]] at group
     * scope): one row per member with the group's current version, the
@@ -6589,12 +6551,10 @@ object MergeWriter {
   def readGroupTableRange(spark: SparkSession, groupPath: String,
                           name: String, column: String,
                           lower: Option[Any] = None,
-                          upper: Option[Any] = None): DataFrame = {
-    val fs = fsFor(spark, groupPath)
-    val (_, man) = requireMember(fs, groupPath, name, "readGroupTableRange")
-    rangeReadFromManifest(spark, s"$groupPath/$name", man, column, lower,
-      upper)
-  }
+                          upper: Option[Any] = None): DataFrame =
+    readPinnedWhere(spark, s"$groupPath/$name",
+      currentMember(spark, groupPath, name, "readGroupTableRange"),
+      Seq(ColumnRange(column, lower, upper)))
 
   /** [[readTableWhere]] for a group member: the AND of ranges and
     * IN-lists against the member's state pinned in the current group
@@ -6605,9 +6565,8 @@ object MergeWriter {
                           ranges: Seq[ColumnPredicate]): DataFrame = {
     require(ranges.nonEmpty,
       "readGroupTableWhere requires at least one predicate")
-    val fs = fsFor(spark, groupPath)
-    val (_, man) = requireMember(fs, groupPath, name, "readGroupTableWhere")
-    whereReadFromManifest(spark, s"$groupPath/$name", man, ranges)
+    readPinnedWhere(spark, s"$groupPath/$name",
+      currentMember(spark, groupPath, name, "readGroupTableWhere"), ranges)
   }
 
   /** Change feed for a group member between two retained GROUP versions
@@ -6622,9 +6581,7 @@ object MergeWriter {
                       keys: Seq[String],
                       compareCols: Seq[String]): DataFrame = {
     def memberAt(v: Long): Manifest =
-      pinGroupMember(spark, groupPath, name, Some(v), None).getOrElse(
-        throw new IllegalArgumentException(
-          s"changeFeedGroup: version $v not retained for $groupPath"))
+      pinGroupMember(spark, groupPath, name, Some(v), None).get
     // same bucket-pruned, fingerprint-paired core as the table feed —
     // a member diff reads changed buckets, never the member table
     diffManifests(spark, s"$groupPath/$name",
@@ -6694,13 +6651,7 @@ object MergeWriter {
     val keep = keptByAge ++ keepByCount
     drop.foreach { case (_, p) => fs.delete(p, false) }
     val keptManifests = keep.map { case (v, p) =>
-      val node = readJsonFile(fs, p)
-      val tables = scala.collection.mutable.Map.empty[String, Manifest]
-      node.get("tables").fields().forEachRemaining { t =>
-        tables(t.getKey) = manifestFromNode(t.getValue, v)
-      }
-      tables.toMap
-    }
+      readGroupManifest(fs, v, p).tables }
     val now = System.currentTimeMillis()
     // member candidates come from the group root's DIRECTORY LISTING, not
     // from kept manifests: a crash during a member's first-ever staged
@@ -7901,15 +7852,11 @@ object MergeWriter {
     * pre-manifest/plain parquet directory, for compatibility), without the
     * physical bucket column.
     */
-  def readTable(spark: SparkSession, tablePath: String): DataFrame = {
-    val fs = fsFor(spark, tablePath)
-    currentManifest(fs, new Path(tablePath)) match {
-      case Some(m) =>
-        val paths = allDirPaths(tablePath, m)
-        stripFrame(readWithSchema(spark, m, tablePath, paths))
+  def readTable(spark: SparkSession, tablePath: String): DataFrame =
+    pinManifest(spark, tablePath, None, None) match {
+      case Some(m) => scanPinned(spark, tablePath, m)
       case None => spark.read.parquet(tablePath).drop(BucketCol)
     }
-  }
 
   /** Committed manifest versions still retained on disk (ascending) —
     * the readable time-travel range: [[KeepManifests]] bounds it, so a
@@ -7927,20 +7874,9 @@ object MergeWriter {
     * with the readable range instead of silently reading the wrong data.
     */
   def readTableVersion(spark: SparkSession, tablePath: String,
-                       version: Long): DataFrame = {
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    val retained = manifestFiles(fs, dir)
-    val hit = retained.find(_._1 == version).getOrElse(
-      throw new IllegalArgumentException(
-        s"readTableVersion: version $version not retained for $tablePath " +
-          s"(readable: ${retained.map(_._1).mkString(", ")})"))
-    val m = readManifest(fs, version, hit._2)
-    val paths = allDirPaths(tablePath, m)
-    // each retained version reads with ITS OWN recorded schema — a pinned
-    // read before an evolution (or a rename) sees the old columns
-    stripFrame(readWithSchema(spark, m, tablePath, paths))
-  }
+                       version: Long): DataFrame =
+    scanPinned(spark, tablePath,
+      pinManifest(spark, tablePath, Some(version), None).get)
 
   /** [[readTableWhere]] AS OF a retained version: data skipping composes
     * with time travel — the pinned manifest's stats and Bloom sidecars
@@ -7954,14 +7890,8 @@ object MergeWriter {
                             ranges: Seq[ColumnPredicate]): DataFrame = {
     require(ranges.nonEmpty,
       "readTableVersionWhere requires at least one predicate")
-    val fs = fsFor(spark, tablePath)
-    val retained = manifestFiles(fs, new Path(tablePath))
-    val hit = retained.find(_._1 == version).getOrElse(
-      throw new IllegalArgumentException(
-        s"readTableVersionWhere: version $version not retained for " +
-          s"$tablePath (readable: ${retained.map(_._1).mkString(", ")})"))
-    whereReadFromManifest(spark, tablePath,
-      readManifest(fs, version, hit._2), ranges)
+    readPinnedWhere(spark, tablePath,
+      pinManifest(spark, tablePath, Some(version), None).get, ranges)
   }
 
   /** Time travel by WALL CLOCK (Delta's `TIMESTAMP AS OF`): read the
@@ -7972,20 +7902,9 @@ object MergeWriter {
     * loudly with the readable range, never silently reads newer data.
     */
   def readTableAsOf(spark: SparkSession, tablePath: String,
-                    timestampMs: Long): DataFrame = {
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    val retained = manifestFiles(fs, dir)
-    val hit = retained.filter { case (_, p) =>
-      fs.getFileStatus(p).getModificationTime <= timestampMs
-    }.lastOption.getOrElse(throw new IllegalArgumentException(
-      s"readTableAsOf: no retained version of $tablePath committed at or " +
-        s"before $timestampMs (readable commits: " +
-        retained.map { case (v, p) =>
-          s"$v@${fs.getFileStatus(p).getModificationTime}"
-        }.mkString(", ") + ")"))
-    readTableVersion(spark, tablePath, hit._1)
-  }
+                    timestampMs: Long): DataFrame =
+    scanPinned(spark, tablePath,
+      pinManifest(spark, tablePath, None, Some(timestampMs)).get)
 
   /** Keyed point-lookup read: resolve the key-hash buckets of the
     * requested keys and scan ONLY those bucket directories — the
@@ -8000,8 +7919,7 @@ object MergeWriter {
   def readKeys(spark: SparkSession, tablePath: String, wanted: DataFrame,
                keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "readKeys requires at least one key column")
-    val fs = fsFor(spark, tablePath)
-    currentManifest(fs, new Path(tablePath)) match {
+    pinManifest(spark, tablePath, None, None) match {
       case None =>
         readTable(spark, tablePath)
           .join(wanted.select(keys.map(col): _*).distinct(), keys, "left_semi")
@@ -8018,9 +7936,8 @@ object MergeWriter {
   def readGroupKeys(spark: SparkSession, groupPath: String, name: String,
                     wanted: DataFrame, keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "readGroupKeys requires at least one key column")
-    val fs = fsFor(spark, groupPath)
-    val (_, man) = requireMember(fs, groupPath, name, "readGroupKeys")
-    keysReadFromManifest(spark, s"$groupPath/$name", man, wanted, keys,
+    keysReadFromManifest(spark, s"$groupPath/$name",
+      currentMember(spark, groupPath, name, "readGroupKeys"), wanted, keys,
       "readGroupKeys")
   }
 
@@ -8077,27 +7994,10 @@ object MergeWriter {
           case None => true
         }
       }
-    val paths = byBucket.keys.toSeq.sorted.flatMap { b =>
-      man.epochs.get(b).toSeq.flatMap { e =>
-        man.stats.get(b) match {
-          case Some(fss) =>
-            fss.filter(f => byBucket(b).exists(
-                tupleCouldBeIn(fileEpoch(man, b, f), b, f, _)))
-              .map(f => fileReadPath(tableRoot, man, b, f))
-          case None => bucketDirPaths(tableRoot, man, b)
-        }
-      }
-    }
-    val base =
-      if (paths.nonEmpty) stripFrame(readWithSchema(spark, man, tableRoot, paths))
-      else man.schema match {
-        case Some(s) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          DataType.fromJson(s).asInstanceOf[StructType])
-        // pre-schema manifest: an empty typed frame needs the footers
-        case None => readTable(spark, tableRoot).limit(0)
-      }
-    base.join(w.drop(BucketCol), keys, "left_semi")
+    scanPinned(spark, tableRoot, man, buckets = Some(byBucket.keySet),
+      keep = b => Some(f => byBucket(b).exists(
+        tupleCouldBeIn(fileEpoch(man, b, f), b, f, _))))
+      .join(w.drop(BucketCol), keys, "left_semi")
   }
 
   /** Range read with DATA SKIPPING (Delta's file-stats skipping /
@@ -8120,23 +8020,18 @@ object MergeWriter {
     */
   def readTableRange(spark: SparkSession, tablePath: String, column: String,
                      lower: Option[Any] = None,
-                     upper: Option[Any] = None): DataFrame = {
-    val fs = fsFor(spark, tablePath)
-    currentManifest(fs, new Path(tablePath)) match {
-      case None =>
-        applyRange(readTable(spark, tablePath), column, lower, upper)
-      case Some(man) =>
-        rangeReadFromManifest(spark, tablePath, man, column, lower, upper)
-    }
-  }
+                     upper: Option[Any] = None): DataFrame =
+    readCurrentWhere(spark, tablePath, Seq(ColumnRange(column, lower, upper)))
 
-  private def applyRange(df: DataFrame, column: String, lower: Option[Any],
-                         upper: Option[Any]): DataFrame = {
-    val dt = df.schema(column).dataType
-    val conds = lower.map(v => col(column) >= lit(v).cast(dt)).toSeq ++
-      upper.map(v => col(column) <= lit(v).cast(dt))
-    conds.reduceOption(_ && _).map(df.filter).getOrElse(df)
-  }
+  /** [[readPinnedWhere]] at the current version; a path with no manifest
+    * (pre-manifest parquet) filters a plain read exactly.
+    */
+  private def readCurrentWhere(spark: SparkSession, tablePath: String,
+                               ranges: Seq[ColumnPredicate]): DataFrame =
+    pinManifest(spark, tablePath, None, None) match {
+      case Some(man) => readPinnedWhere(spark, tablePath, man, ranges)
+      case None => ranges.foldLeft(readTable(spark, tablePath))(applyPredicate)
+    }
 
   /** The exact residual condition of one [[ColumnPredicate]] — always
     * applied after skipping, so results never depend on stats/blooms.
@@ -8218,13 +8113,7 @@ object MergeWriter {
   def readTableWhere(spark: SparkSession, tablePath: String,
                      ranges: Seq[ColumnPredicate]): DataFrame = {
     require(ranges.nonEmpty, "readTableWhere requires at least one predicate")
-    val fs = fsFor(spark, tablePath)
-    currentManifest(fs, new Path(tablePath)) match {
-      case None =>
-        ranges.foldLeft(readTable(spark, tablePath))(applyPredicate)
-      case Some(man) =>
-        whereReadFromManifest(spark, tablePath, man, ranges)
-    }
+    readCurrentWhere(spark, tablePath, ranges)
   }
 
   /** One file-keep function per predicate whose bounds/values all
@@ -8234,7 +8123,7 @@ object MergeWriter {
     * declared Bloom columns) the per-file sidecar filter: the skip
     * that works on high-cardinality columns the table is NOT clustered
     * by, where every file's [min,max] spans the domain and stats alone
-    * never skip. Shared by [[whereReadFromManifest]] and the Catalyst
+    * never skip. Shared by [[readPinnedWhere]] and the Catalyst
     * FileIndex path ([[indexCandidateFiles]]).
     */
   private def fileKeepFns(fs: FileSystem, tableRoot: String, man: Manifest,
@@ -8297,55 +8186,84 @@ object MergeWriter {
     }
   }
 
-  /** Pruned snapshot read of a PINNED manifest, empty predicate list
-    * allowed — the read behind the V1 bridge that serves
-    * `format("graft")` scans of DELETION-VECTOR-bearing versions (the
-    * plain V1 file scan cannot position-filter; this core can; the
-    * CATALOG path filters positions inside its native DSv2 scan).
-    * Pushed predicates prune files through the same stats/Bloom keep
-    * functions as every storage read; Spark re-evaluates them exactly
-    * on top.
+  /** [[fileKeepFns]] conjoined into one (bucket, file) test — None when
+    * no predicate can prune.
+    */
+  private def predicateKeep(fs: FileSystem, tableRoot: String, man: Manifest,
+                            ranges: Seq[ColumnPredicate])
+      : Option[(Int, FileStat) => Boolean] = {
+    val keeps =
+      if (ranges.isEmpty) Seq.empty else fileKeepFns(fs, tableRoot, man, ranges)
+    if (keeps.isEmpty) None
+    else Some((b, f) => keeps.forall(_(fileEpoch(man, b, f), b, f)))
+  }
+
+  /** The files a pinned read covers, bucket-ordered: per live bucket
+    * (within `buckets` when given) Some(the stats-listed files `keep`
+    * admits), or None — `keep` declines to filter the bucket, or it has
+    * no recorded stats — for the bucket's live directories whole
+    * (skipping only ever removes provably irrelevant I/O). The one file
+    * selector behind [[scanPinned]] and the catalog FileIndex
+    * ([[indexCandidateFiles]]).
+    */
+  private def pinnedFiles(man: Manifest, buckets: Option[Set[Int]],
+                          keep: Int => Option[FileStat => Boolean])
+      : Seq[(Int, Option[Seq[FileStat]])] =
+    man.epochs.keys.toSeq.sorted.filter(b => buckets.forall(_(b))).map { b =>
+      b -> (for (k <- keep(b); fss <- man.stats.get(b)) yield fss.filter(k))
+    }
+
+  /** The typed empty frame of a read whose files were all pruned: the
+    * pinned schema (footer-merged for a legacy pre-schema manifest) as
+    * a file scan reports it — every column nullable — so an empty
+    * answer has exactly the schema a non-empty one would.
+    */
+  private def emptyFrame(spark: SparkSession, root: String,
+                         man: Manifest): DataFrame =
+    if (man.schema.isEmpty && man.epochs.isEmpty) spark.emptyDataFrame
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.GraftColumnShim.asNullable(
+        stripSchemaIds(indexSchema(spark, root, man))))
+
+  /** Step two of every storage read: scan a PINNED manifest (see
+    * [[pinManifest]] / [[pinGroupMember]]). Selects the files
+    * ([[pinnedFiles]]: `buckets`, then `keep` per bucket), reads them
+    * through the DV/eq-delete-aware core ([[readWithSchema]]) with the
+    * field ids stripped — or the typed [[emptyFrame]] when no file
+    * survives — and applies `residual` as exact filters, so results
+    * never depend on stats or blooms.
+    */
+  private def scanPinned(spark: SparkSession, root: String, man: Manifest,
+                         buckets: Option[Set[Int]] = None,
+                         keep: Int => Option[FileStat => Boolean] = _ => None,
+                         residual: Seq[ColumnPredicate] = Seq.empty)
+      : DataFrame = {
+    val paths = pinnedFiles(man, buckets, keep).flatMap {
+      case (b, Some(kept)) => kept.map(fileReadPath(root, man, b, _))
+      case (b, None) => bucketDirPaths(root, man, b)
+    }
+    val base =
+      if (paths.isEmpty) emptyFrame(spark, root, man)
+      else stripFrame(readWithSchema(spark, man, root, paths))
+    residual.foldLeft(base)(applyPredicate)
+  }
+
+  /** Pruned snapshot read of a PINNED manifest under a conjunction of
+    * predicates, empty list allowed: files prune through the stats/Bloom
+    * keep functions, then the exact residual filter applies. Serves
+    * every where/range read, and the V1 bridge's `format("graft")`
+    * scans of DELETION-VECTOR-bearing versions (the plain V1 file scan
+    * cannot position-filter; this core can; the CATALOG path filters
+    * positions inside its native DSv2 scan).
     */
   private[sources] def readPinnedWhere(spark: SparkSession,
                                        tableRoot: String, man: Manifest,
                                        ranges: Seq[ColumnPredicate])
-      : DataFrame =
-    if (ranges.nonEmpty) whereReadFromManifest(spark, tableRoot, man, ranges)
-    else {
-      val paths = allDirPaths(tableRoot, man)
-      if (paths.nonEmpty)
-        stripFrame(readWithSchema(spark, man, tableRoot, paths))
-      else man.schema match {
-        case Some(s) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          stripSchemaIds(DataType.fromJson(s).asInstanceOf[StructType]))
-        case None => spark.emptyDataFrame
-      }
-    }
-
-  private def whereReadFromManifest(spark: SparkSession, tableRoot: String,
-                                    man: Manifest,
-                                    ranges: Seq[ColumnPredicate]): DataFrame = {
-    val fs = fsFor(spark, tableRoot)
-    val schema = man.schema.map(s =>
-      DataType.fromJson(s).asInstanceOf[StructType])
-    val keeps = fileKeepFns(fs, tableRoot, man, ranges)
-    val paths = man.epochs.toSeq.sortBy(_._1).flatMap { case (b, e) =>
-      man.stats.get(b) match {
-        case Some(fss) if keeps.nonEmpty =>
-          fss.filter(f => keeps.forall(_(fileEpoch(man, b, f), b, f)))
-            .map(f => fileReadPath(tableRoot, man, b, f))
-        case _ => bucketDirPaths(tableRoot, man, b)
-      }
-    }
-    val base =
-      if (paths.nonEmpty) stripFrame(readWithSchema(spark, man, tableRoot, paths))
-      else schema match {
-        case Some(s) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-        case None => spark.emptyDataFrame
-      }
-    ranges.foldLeft(base)(applyPredicate)
+      : DataFrame = {
+    val keep = predicateKeep(fsFor(spark, tableRoot), tableRoot, man, ranges)
+    scanPinned(spark, tableRoot, man, keep = b => keep.map(k => k(b, _)),
+      residual = ranges)
   }
 
   /** Canonical stats value → the column's external Spark value (the
@@ -8496,11 +8414,55 @@ object MergeWriter {
     }
   }
 
-  /** Resolve the manifest a Catalyst-facing read pins: the current
-    * version, `VERSION AS OF`, or `TIMESTAMP AS OF` — the same
-    * resolution rules (and the same loud failure on an aged-out
-    * version) as [[readTableVersion]] / [[readTableAsOf]]. None = the
-    * path has no manifest (not a graft table).
+  /** The retained manifest file (table or group `prefix`) of committed
+    * version `v` — the ONE aged-out check behind every pinned read,
+    * restore and tag: a version retention already reclaimed fails
+    * loudly with the readable range, never silently reads other data.
+    */
+  private def retainedFile(fs: FileSystem, dir: Path, prefix: String,
+                           v: Long): Path = {
+    val retained = manifestFiles(fs, dir, prefix)
+    retained.find(_._1 == v).map(_._2).getOrElse(
+      throw new IllegalArgumentException(
+        s"graft: version $v not retained for $dir " +
+          s"(readable: ${retained.map(_._1).mkString(", ")})"))
+  }
+
+  /** The manifest file a read pins: `VERSION AS OF` a retained version,
+    * `TIMESTAMP AS OF` the latest version COMMITTED at or before the
+    * instant (manifest publish times are the commit instants — each
+    * version is one atomically-published file), else the current one.
+    * None only for a current pin of a directory with no commit.
+    */
+  private def pinnedFile(fs: FileSystem, dir: Path, prefix: String,
+                         versionAsOf: Option[Long],
+                         timestampMsAsOf: Option[Long]): Option[(Long, Path)] =
+    versionAsOf match {
+      case Some(v) => Some((v, retainedFile(fs, dir, prefix, v)))
+      case None =>
+        val retained = manifestFiles(fs, dir, prefix)
+        timestampMsAsOf match {
+          case None => retained.lastOption
+          case Some(ts) => Some(retained.filter { case (_, p) =>
+            fs.getFileStatus(p).getModificationTime <= ts
+          }.lastOption.getOrElse(throw new IllegalArgumentException(
+            s"timestampAsOf: no retained version of $dir committed at or " +
+              s"before $ts (readable commits: " + retained.map { case (v, p) =>
+                s"$v@${fs.getFileStatus(p).getModificationTime}"
+              }.mkString(", ") + ")")))
+        }
+    }
+
+  /** Resolve the manifest a read pins — step one of every storage read
+    * (the public `readTable*` / `readKeys` / `changeFeed` / `readBranch`
+    * surface) and of the Catalyst face: the current version,
+    * `VERSION AS OF`, `TIMESTAMP AS OF` (see [[pinnedFile]]), or a
+    * branch head. Epoch files are immutable and every retained
+    * manifest's epochs survive gc, so a pinned read is stable even
+    * while newer merges commit; each version reads with ITS OWN
+    * recorded schema. None = a current pin of a path with no manifest
+    * (not a graft table); a version or instant pin is always Some or
+    * fails loudly.
     */
   private[sources] def pinManifest(spark: SparkSession, tablePath: String,
                                    versionAsOf: Option[Long],
@@ -8509,30 +8471,12 @@ object MergeWriter {
       : Option[Manifest] = {
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
-    branch.foreach { b =>
-      return Some(branchHead(fs, dir, b).getOrElse(
+    branch match {
+      case Some(b) => Some(branchHead(fs, dir, b).getOrElse(
         throw new IllegalArgumentException(
           s"branch: no branch '$b' on $tablePath")))
-    }
-    versionAsOf match {
-      case Some(v) =>
-        val retained = manifestFiles(fs, dir)
-        val hit = retained.find(_._1 == v).getOrElse(
-          throw new IllegalArgumentException(
-            s"versionAsOf: version $v not retained for $tablePath " +
-              s"(readable: ${retained.map(_._1).mkString(", ")})"))
-        Some(readManifest(fs, v, hit._2))
-      case None => timestampMsAsOf match {
-        case Some(ts) =>
-          val retained = manifestFiles(fs, dir)
-          val hit = retained.filter { case (_, p) =>
-            fs.getFileStatus(p).getModificationTime <= ts
-          }.lastOption.getOrElse(throw new IllegalArgumentException(
-            s"timestampAsOf: no retained version of $tablePath committed " +
-              s"at or before $ts"))
-          Some(readManifest(fs, hit._1, hit._2))
-        case None => currentManifest(fs, dir)
-      }
+      case None => pinnedFile(fs, dir, ManifestPrefix, versionAsOf,
+        timestampMsAsOf).map { case (v, p) => readManifest(fs, v, p) }
     }
   }
 
@@ -8548,44 +8492,24 @@ object MergeWriter {
                                       timestampMsAsOf: Option[Long])
       : Option[Manifest] = {
     val fs = fsFor(spark, groupPath)
-    val dir = new Path(groupPath)
-    def memberOf(v: Long, p: Path): Manifest = {
-      val node = readJsonFile(fs, p)
-      val tables = scala.collection.mutable.Map.empty[String, Manifest]
-      node.get("tables").fields().forEachRemaining { t =>
-        tables(t.getKey) = manifestFromNode(t.getValue, v)
-      }
-      tables.getOrElse(name, throw new IllegalArgumentException(
+    pinnedFile(fs, new Path(groupPath), GroupPrefix, versionAsOf,
+      timestampMsAsOf).map { case (v, p) =>
+      val g = readGroupManifest(fs, v, p)
+      g.tables.getOrElse(name, throw new IllegalArgumentException(
         s"graft: member '$name' not in group $groupPath at version $v " +
-          s"(members: ${tables.keys.toSeq.sorted.mkString(", ")})"))
-    }
-    versionAsOf match {
-      case Some(v) =>
-        val retained = manifestFiles(fs, dir, GroupPrefix)
-        val hit = retained.find(_._1 == v).getOrElse(
-          throw new IllegalArgumentException(
-            s"versionAsOf: group version $v not retained for $groupPath " +
-              s"(readable: ${retained.map(_._1).mkString(", ")})"))
-        Some(memberOf(v, hit._2))
-      case None => timestampMsAsOf match {
-        case Some(ts) =>
-          val retained = manifestFiles(fs, dir, GroupPrefix)
-          val hit = retained.filter { case (_, p) =>
-            fs.getFileStatus(p).getModificationTime <= ts
-          }.lastOption.getOrElse(throw new IllegalArgumentException(
-            s"timestampAsOf: no retained group version of $groupPath " +
-              s"committed at or before $ts"))
-          Some(memberOf(hit._1, hit._2))
-        case None =>
-          currentGroupManifest(fs, dir).flatMap { g =>
-            Some(g.tables.getOrElse(name,
-              throw new IllegalArgumentException(
-                s"graft: member '$name' not in group $groupPath " +
-                  s"(members: ${g.tables.keys.toSeq.sorted.mkString(", ")})")))
-          }
-      }
+          s"(members: ${g.tables.keys.toSeq.sorted.mkString(", ")})"))
     }
   }
+
+  /** A member pinned at the CURRENT group version; an uncommitted group
+    * fails loudly (there is no schema to synthesize an empty relation
+    * from).
+    */
+  private def currentMember(spark: SparkSession, groupPath: String,
+                            name: String, op: String): Manifest =
+    pinGroupMember(spark, groupPath, name, None, None).getOrElse(
+      throw new IllegalArgumentException(
+        s"$op: no committed group manifest at $groupPath"))
 
   /** The group's current committed version (None while no commit). */
   private[sources] def currentGroupVersion(spark: SparkSession,
@@ -8593,10 +8517,6 @@ object MergeWriter {
     currentGroupManifest(fsFor(spark, groupPath), new Path(groupPath))
       .map(_.version)
 
-  /** The pinned manifest's data schema — recorded at commit for every
-    * post-evolution table; a legacy manifest without one falls back to
-    * a one-off parquet footer merge over its epochs.
-    */
   /** The SQL-catalog-facing schema: [[indexSchema]] with merge keys
     * surfaced NOT NULL (the write side enforces it — see
     * `bucketExprChecked` — and Spark's row-level DML requires
@@ -8626,6 +8546,10 @@ object MergeWriter {
       if (man.keyCols.contains(f.name)) f.copy(nullable = false) else f))
   }
 
+  /** The pinned manifest's data schema — recorded at commit for every
+    * post-evolution table; a legacy manifest without one falls back to
+    * a one-off parquet footer merge over its epochs.
+    */
   private[sources] def indexSchema(spark: SparkSession, tablePath: String,
                                    man: Manifest): StructType =
     man.schema.map(s => DataType.fromJson(s).asInstanceOf[StructType])
@@ -8634,13 +8558,6 @@ object MergeWriter {
         spark.read.option("mergeSchema", "true").parquet(paths: _*).schema
       }
 
-  /** The file set a pinned read must scan under a conjunction of
-    * predicates, with per-file sizes — the [[fileKeepFns]] stats+Bloom
-    * skip resolved to concrete (path, bytes) pairs for Catalyst's
-    * FileIndex contract. Buckets without recorded file stats fall back
-    * to a directory listing (kept wholesale: skipping only ever removes
-    * provably irrelevant I/O).
-    */
   /** The key-hash bucket a fully-specified key tuple lands in — the
     * DRIVER-SIDE evaluation of the write path's
     * `pmod(hash(keys…), buckets)` (Spark's `hash` = Murmur3 seed 42;
@@ -8664,6 +8581,14 @@ object MergeWriter {
       Math.floorMod(h, man.buckets)
     }.toOption
 
+  /** The file set a pinned read must scan under a conjunction of
+    * predicates, with per-file sizes — [[pinnedFiles]]' stats+Bloom
+    * skip resolved to concrete (path, bytes) pairs for Catalyst's
+    * FileIndex contract (every stats-listed file is listed, even
+    * unfiltered). Buckets without recorded file stats fall back to a
+    * directory listing (kept wholesale: skipping only ever removes
+    * provably irrelevant I/O).
+    */
   private[sources] def indexCandidateFiles(spark: SparkSession,
                                            tableRoot: String, man: Manifest,
                                            ranges: Seq[ColumnPredicate],
@@ -8671,42 +8596,22 @@ object MergeWriter {
                                              None)
       : Seq[(Path, Long)] = {
     val fs = fsFor(spark, tableRoot)
-    val keeps =
-      if (ranges.isEmpty) Seq.empty else fileKeepFns(fs, tableRoot, man, ranges)
-    man.epochs.toSeq.sortBy(_._1)
-      .filter { case (b, _) => bucketFilter.forall(_.contains(b)) }
-      .flatMap { case (b, e) =>
-      man.stats.get(b) match {
-        case Some(fss) =>
-          val kept =
-            if (keeps.isEmpty) fss
-            else fss.filter(f => keeps.forall(_(fileEpoch(man, b, f), b, f)))
-          kept.map(f =>
-            (new Path(fileReadPath(tableRoot, man, b, f)), f.bytes))
-        case None =>
-          val d = new Path(bucketPath(tableRoot, e, b))
+    val keep = predicateKeep(fs, tableRoot, man, ranges)
+    pinnedFiles(man, bucketFilter, b => Some(f => keep.forall(_(b, f))))
+      .flatMap {
+        case (b, Some(kept)) => kept.map(f =>
+          (new Path(fileReadPath(tableRoot, man, b, f)), f.bytes))
+        case (b, None) => bucketDirPaths(tableRoot, man, b).flatMap { p =>
+          val d = new Path(p)
           if (fs.exists(d))
             fs.listStatus(d).toSeq
               .filter(st => !st.isDirectory &&
                 st.getPath.getName.startsWith("part-"))
               .map(st => (st.getPath, st.getLen))
           else Seq.empty
+        }
       }
-    }
   }
-
-  /** The skip-then-residual-filter core shared by [[readTableRange]] and
-    * [[readGroupTableRange]]: one range is just the 1-element conjunction,
-    * so [[whereReadFromManifest]] serves both — including the Bloom
-    * sidecar probe when the range is degenerate (lower == upper) on a
-    * declared bloom column.
-    */
-  private def rangeReadFromManifest(spark: SparkSession, tableRoot: String,
-                                    man: Manifest, column: String,
-                                    lower: Option[Any],
-                                    upper: Option[Any]): DataFrame =
-    whereReadFromManifest(spark, tableRoot, man,
-      Seq(ColumnRange(column, lower, upper)))
 
   /** Change feed between two retained committed versions (Delta's CDF /
     * `table_changes`, scaled to the manifest protocol): the keyed diff
@@ -8715,7 +8620,7 @@ object MergeWriter {
     * [[graft.operators.Reconcile.snapshotDiff]] contract). Epoch files
     * are immutable and retained manifests' epochs survive gc, so both
     * sides are stable snapshots even while newer merges commit; asking
-    * for an aged-out version fails loudly via [[readTableVersion]].
+    * for an aged-out version fails loudly via [[pinManifest]].
     * One full-outer join on `keys` — change-volume output, never
     * corpus-sized, which is what an incremental downstream consumer
     * of a 100 TB table actually wants to read.
@@ -8723,16 +8628,10 @@ object MergeWriter {
   def changeFeed(spark: SparkSession, tablePath: String,
                  fromVersion: Long, toVersion: Long,
                  keys: Seq[String], compareCols: Seq[String]): DataFrame = {
-    val fs = fsFor(spark, tablePath)
-    val retained = manifestFiles(fs, new Path(tablePath))
-    def manOf(v: Long): Manifest = retained.find(_._1 == v)
-      .map(h => readManifest(fs, v, h._2))
-      .getOrElse(throw new IllegalArgumentException(
-        s"changeFeed: version $v not retained for $tablePath " +
-          s"(readable: ${retained.map(_._1).mkString(", ")})"))
-    val mFrom = manOf(fromVersion)
-    val mTo = manOf(toVersion)
-    diffManifests(spark, tablePath, mFrom, mTo, keys, compareCols)
+    def manOf(v: Long): Manifest =
+      pinManifest(spark, tablePath, Some(v), None).get
+    diffManifests(spark, tablePath, manOf(fromVersion), manOf(toVersion),
+      keys, compareCols)
   }
 
   /** The manifest-pair diff core shared by [[changeFeed]] and
@@ -8811,38 +8710,16 @@ object MergeWriter {
           if (mFrom.fingerprint && mTo.fingerprint)
             changed.toSeq.map(b => b -> pairedDrop(b)).toMap
           else Map.empty
-        def side(m: Manifest, dropOf: Int => Set[String]): DataFrame = {
-          val paths = m.epochs.keys.toSeq.filter(changed).sorted
-            .flatMap { b =>
-              val dropped = dropOf(b)
-              m.stats.get(b) match {
-                case Some(fss) if dropped.nonEmpty =>
-                  fss.filterNot(f => dropped(f.e + "/" + f.name))
-                    .map(f => fileReadPath(dataPath, m, b, f))
-                case _ => bucketDirPaths(dataPath, m, b)
-              }
-            }
-          if (paths.isEmpty)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              DataType.fromJson(m.schema.get).asInstanceOf[StructType])
-          else readWithSchema(spark, m, dataPath, paths)
-        }
+        def side(m: Manifest, dropOf: Int => Set[String]): DataFrame =
+          scanPinned(spark, dataPath, m, buckets = Some(changed),
+            keep = b => Some(dropOf(b)).filter(_.nonEmpty)
+              .map(dropped => f => !dropped(f.e + "/" + f.name)))
         (side(mFrom, b => drops.get(b).map(_._1).getOrElse(Set.empty)),
           side(mTo, b => drops.get(b).map(_._2).getOrElse(Set.empty)))
       } else {
         // modulus/schema mismatch: full two-sided diff straight from
         // the manifests (no path-level version resolution needed)
-        def full(m: Manifest): DataFrame = {
-          val paths = allDirPaths(dataPath, m)
-          if (paths.isEmpty) m.schema match {
-            case Some(sch) => spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              DataType.fromJson(sch).asInstanceOf[StructType])
-            case None => spark.emptyDataFrame
-          } else readWithSchema(spark, m, dataPath, paths)
-        }
-        (full(mFrom), full(mTo))
+        (scanPinned(spark, dataPath, mFrom), scanPinned(spark, dataPath, mTo))
       }
     // a feed that spans a RENAME serves every version under the CURRENT
     // column names (Delta CDF's column-mapping behavior): both sides
@@ -8852,8 +8729,8 @@ object MergeWriter {
     // name-world tables.
     val cur = currentManifest(fsFor(spark, dataPath), new Path(dataPath))
       .getOrElse(mTo)
-    val oldAligned = stripFrame(alignToIds(oldDf, mFrom, cur))
-    val newAligned = stripFrame(alignToIds(newDf, mTo, cur))
+    val oldAligned = alignToIds(oldDf, mFrom, cur)
+    val newAligned = alignToIds(newDf, mTo, cur)
     // CONFORM both sides to the CURRENT schema (names already aligned by
     // field id above): a version that PREDATES a column addition
     // null-pads it, and a version that predates a type widening casts up

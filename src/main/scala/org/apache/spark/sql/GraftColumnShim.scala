@@ -33,6 +33,12 @@ object GraftColumnShim {
                                 b: org.apache.spark.sql.types.DataType): Boolean =
     org.apache.spark.sql.types.DataType.equalsIgnoreNullability(a, b)
 
+  /** The schema a parquet relation reports for `s` (`asNullable` is
+    * `private[spark]`): file reads surface every column nullable.
+    */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+
   /** Apply DSv2 TableChanges to a schema through Spark's own machinery
     * (`CatalogV2Util.applySchemaChanges` is `private[sql]`) — the one
     * correct encoder of column DEFAULT metadata (CURRENT_DEFAULT +

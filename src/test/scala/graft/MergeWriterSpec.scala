@@ -2383,4 +2383,82 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       expectFresh = true)
     assert(MergeWriter.readTable(spark, dir2).count() == 1)
   }
+
+  test("every read variant equals a filtered full read of its pin; a read " +
+    "that prunes every file is empty with the table's schema") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("readpins").toString
+    val (dir, grp, member) = (s"$root/t", s"$root/g", "snapshots")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "50")
+    try {
+      val d0 = java.time.LocalDate.of(2024, 1, 1)
+      def rows(n: Int, rev: Int) = (0 until n).map { i =>
+        (s"item#${i % 199}", java.sql.Date.valueOf(d0.plusDays(i / 10)),
+          rev + i)
+      }.toDF("k", "snapshotDate", "rev")
+      val keys = Seq("k", "snapshotDate")
+      // the same two commits land on a clustered, bloom-declared table
+      // and on a group member, so one reference answers for both
+      MergeWriter.merge(spark, dir, rows(400, 0), keys, buckets = 4,
+        clusterBy = Seq("snapshotDate"), bloomBy = Seq("k"),
+        bloomItems = 500)
+      MergeWriter.mergeGroup(spark, grp, Seq((member, rows(400, 0), keys)),
+        buckets = 4, clusterBy = Map(member -> Seq("snapshotDate")),
+        bloomBy = Map(member -> Seq("k")), bloomItems = 500)
+      val v0 = MergeWriter.availableVersions(spark, dir).max
+      val g0 = MergeWriter.availableGroupVersions(spark, grp).max
+      Thread.sleep(20)
+      val between = System.currentTimeMillis()
+      Thread.sleep(20)
+      MergeWriter.merge(spark, dir, rows(150, 5000), keys)
+      MergeWriter.mergeGroup(spark, grp, Seq((member, rows(150, 5000), keys)))
+      MergeWriter.createBranch(spark, dir, "audit")
+      val cur = MergeWriter.readTable(spark, dir)
+      val old = MergeWriter.readTableVersion(spark, dir, v0)
+      // item#7's one row on 2024-01-01, then a date outside every
+      // file's recorded range: that probe prunes EVERY file
+      for ((day, hits) <- Seq(("2024-01-01", true), ("2031-01-01", false))) {
+        val d = java.sql.Date.valueOf(day)
+        val onDay = col("snapshotDate") === d
+        val cond = col("k") === "item#7" && onDay
+        val preds = Seq(MergeWriter.ColumnIn("k", Seq("item#7")),
+          MergeWriter.ColumnRange("snapshotDate", Some(d), Some(d)))
+        val wanted = Seq(("item#7", d)).toDF(keys: _*)
+        // (variant, its answer, the filtered full read of the same pin,
+        //  whether the variant prunes files itself)
+        val variants = Seq(
+          ("as-of", MergeWriter.readTableAsOf(spark, dir, between)
+            .filter(cond), old.filter(cond), false),
+          ("branch", MergeWriter.readBranch(spark, dir, "audit").filter(cond),
+            cur.filter(cond), false),
+          ("group", MergeWriter.readGroupTable(spark, grp, member)
+            .filter(cond), cur.filter(cond), false),
+          ("group version", MergeWriter.readGroupTableVersion(spark, grp,
+            member, g0).filter(cond), old.filter(cond), false),
+          ("range", MergeWriter.readTableRange(spark, dir, "snapshotDate",
+            Some(d), Some(d)), cur.filter(onDay), true),
+          ("where", MergeWriter.readTableWhere(spark, dir, preds),
+            cur.filter(cond), true),
+          ("version where", MergeWriter.readTableVersionWhere(spark, dir, v0,
+            preds), old.filter(cond), true),
+          ("keys", MergeWriter.readKeys(spark, dir, wanted, keys),
+            cur.filter(cond), true),
+          ("group range", MergeWriter.readGroupTableRange(spark, grp, member,
+            "snapshotDate", Some(d), Some(d)), cur.filter(onDay), true),
+          ("group where", MergeWriter.readGroupTableWhere(spark, grp, member,
+            preds), cur.filter(cond), true),
+          ("group keys", MergeWriter.readGroupKeys(spark, grp, member, wanted,
+            keys), cur.filter(cond), true))
+        variants.foreach { case (name, got, want, prunes) =>
+          val label = s"$name @ $day"
+          val wantRows = want.collect().map(_.toSeq).toSet
+          assert(got.collect().map(_.toSeq).toSet == wantRows, label)
+          assert(got.schema == want.schema, label)
+          assert(wantRows.nonEmpty == hits, s"test setup: $label")
+          if (prunes && !hits)
+            assert(got.inputFiles.isEmpty, s"$label opened files")
+        }
+      }
+    } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+  }
 }
