@@ -29,7 +29,7 @@ object ProfileQ {
           private val starts = new java.util.concurrent.ConcurrentHashMap[
             Int, (Long, String)]()
           private val stageJob = new java.util.concurrent.ConcurrentHashMap[
-            Int, Int]()
+            Integer, Integer]()
           // per-job task tally: (nTasks, sum task run ms, max task run ms)
           private val tasks = new java.util.concurrent.ConcurrentHashMap[
             Int, (Int, Long, Long)]()
@@ -45,12 +45,14 @@ object ProfileQ {
           }
           override def onTaskEnd(
               te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val j = stageJob.get(te.stageId)
-            if (j != null && te.taskInfo != null) {
-              val ms = te.taskInfo.duration
-              tasks.merge(j, (1, ms, ms), (a, b) =>
-                (a._1 + 1, a._2 + b._2, math.max(a._3, b._3)))
-            }
+            // a stage no recorded job owns is dropped, never tallied
+            // under job 0 (a missing Int key would unbox to 0)
+            Option(stageJob.get(te.stageId))
+              .filter(_ => te.taskInfo != null).foreach { j =>
+                val ms = te.taskInfo.duration
+                tasks.merge(j, (1, ms, ms), (a, b) =>
+                  (a._1 + 1, a._2 + b._2, math.max(a._3, b._3)))
+              }
           }
           override def onJobEnd(
               je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {

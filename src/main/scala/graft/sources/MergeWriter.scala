@@ -2361,13 +2361,11 @@ object MergeWriter {
     branchManifestFiles(fs, dir)
       .filter { case (n, k, _) => n == name && k <= bh.version }
       .foreach { case (_, _, p) => fs.delete(p, false) }
-    gc(fs, dir)
     // staging DEFERRED auto-maintenance here: the published state may
     // carry the whole staging window's epochs, overlays and DVs, and a
     // WAP-only workload has no direct main write to drain the pressure
-    maybeAutoSplit(spark, fs, dir, tablePath, AutoSplitBytesPerBucket)
-    maybeAutoCompact(spark, fs, dir, tablePath, AutoCompactEpochs)
-    maybeAutoCompactMor(spark, fs, dir, tablePath)
+    maintainAfterWrite(spark, fs, tablePath, AutoSplitBytesPerBucket,
+      AutoCompactEpochs)
   }
 
   /** Abandon a branch: its staged manifests drop now; the epochs only
@@ -4237,6 +4235,13 @@ object MergeWriter {
   private def bucketDirPaths(root: String, m: Manifest, b: Int): Seq[String] =
     bucketEpochs(m, b).map(e => bucketPath(root, e, b))
 
+  /** The bucket directories of the touched buckets that hold stored data
+    * — manifest-level pruning: a keyed write reads ONLY these.
+    */
+  private def touchedPaths(root: String, m: Manifest,
+                           touched: Seq[Int]): Seq[String] =
+    touched.filter(m.epochs.contains).flatMap(bucketDirPaths(root, m, _))
+
   /** All live bucket directories of the manifest, bucket-ordered. */
   private def allDirPaths(root: String, m: Manifest): Seq[String] =
     m.epochs.keys.toSeq.sorted.flatMap(b => bucketDirPaths(root, m, b))
@@ -4287,6 +4292,60 @@ object MergeWriter {
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
+  /** A merge-on-read batch (still carrying [[BucketCol]]) aligned to the
+    * recorded schema. Column ORDER is provenance noise (a by-name INSERT
+    * delivers the user-list order), so it is reordered instead of
+    * refusing the fast path and paying a CoW bucket rewrite; None — the
+    * caller falls back to copy-on-write — when the column SET or a type
+    * differs (evolution stays CoW).
+    */
+  private def alignToRecorded(inc: DataFrame,
+                              recorded: StructType): Option[DataFrame] = {
+    val names = inc.drop(BucketCol).columns.toSeq
+    val aligned =
+      if (names == recorded.fieldNames.toSeq) inc
+      else if (names.sorted == recorded.fieldNames.toSeq.sorted)
+        inc.select((recorded.fieldNames.toSeq :+ BucketCol)
+          .filter(inc.columns.contains).map(col): _*)
+      else return None
+    Some(aligned).filter(a => org.apache.spark.sql.GraftColumnShim
+      .sameTypeIgnoreNullability(recorded,
+        stripSchemaIds(a.drop(BucketCol).schema)))
+  }
+
+  /** A merge-on-read OVERLAY epoch: the batch (order-aligned to the
+    * recorded schema, still carrying [[BucketCol]]) written exactly like
+    * any epoch — [[prepareRows]] then [[stageEpoch]] under the base's
+    * layout — with each file's stats attributed to the overlay epoch
+    * (overlay part-file names collide with base names). No batch, no
+    * epoch: a pure-delete changeset writes none.
+    */
+  private def stageOverlay(spark: SparkSession, fs: FileSystem, root: String,
+                           man: Manifest, rows: Option[DataFrame],
+                           keys: Seq[String])
+      : (String, Set[Int], Map[Int, Seq[FileStat]]) =
+    rows.fold(("", Set.empty[Int], Map.empty[Int, Seq[FileStat]])) { r =>
+      val (epoch, written, stats) = stageEpoch(spark, fs, root,
+        prepareRows(r.drop(BucketCol), man.checks, man.colIds, keys,
+          man.buckets, root), man)
+      (epoch, written.toSet,
+        stats.map { case (b, fss) => b -> fss.map(_.copy(e = epoch)) })
+    }
+
+  /** `m` with an overlay epoch from [[stageOverlay]] appended: a written
+    * bucket without a stored pointer adopts it as its BASE, the others
+    * list it as their newest overlay; its file stats join the bucket's.
+    */
+  private def withOverlay(m: Manifest, epoch: String, written: Set[Int],
+                          overlayStats: Map[Int, Seq[FileStat]]): Manifest = {
+    val (stacked, fresh) = written.partition(m.epochs.contains)
+    m.copy(epochs = m.epochs ++ fresh.map(_ -> epoch),
+      overlays = m.overlays ++ stacked.map(b =>
+        b -> (m.overlays.getOrElse(b, Seq.empty) :+ epoch)),
+      stats = m.stats ++ overlayStats.map { case (b, fss) =>
+        b -> (m.stats.getOrElse(b, Seq.empty) ++ fss) })
+  }
+
   /** MERGE-ON-READ keyed upsert (Iceberg v2's merge-on-read writes:
     * data-file adds beside position deletes): the incoming batch lands
     * as ONE overlay epoch — clustered, Bloom'd, fingerprinted and
@@ -4325,21 +4384,7 @@ object MergeWriter {
     if (man.schema.isEmpty) return false
     val recorded = DataType.fromJson(man.schema.get)
       .asInstanceOf[StructType]
-    // column ORDER is provenance noise (a by-name INSERT delivers the
-    // user-list order) — reorder to the recorded schema instead of
-    // silently refusing the fast path and paying a CoW bucket rewrite;
-    // only a genuinely different column SET or type falls back
-    val incNames = inc.drop(BucketCol).columns.toSeq
-    val inc0 =
-      if (incNames == recorded.fieldNames.toSeq) inc
-      else if (incNames.sorted == recorded.fieldNames.toSeq.sorted)
-        inc.select((recorded.fieldNames.toSeq :+ BucketCol)
-          .filter(inc.columns.contains).map(col): _*)
-      else return false
-    val cleanSchema = stripSchemaIds(inc0.drop(BucketCol).schema)
-    if (!org.apache.spark.sql.GraftColumnShim
-          .sameTypeIgnoreNullability(recorded, cleanSchema))
-      return false
+    val inc0 = alignToRecorded(inc, recorded).getOrElse(return false)
     val touchedStored = touched.filter(man.epochs.contains)
     if (touchedStored.exists(b => man.stats.get(b).forall(_.isEmpty)))
       return false
@@ -4363,8 +4408,7 @@ object MergeWriter {
     //    size — keyed-table invariant; already-dead rows stay out via
     //    the DV-aware read). Upserted keys vacate their old copy;
     //    deleted keys just end here.
-    val storedPaths = touchedStored.flatMap(b =>
-      bucketDirPaths(tablePath, man, b))
+    val storedPaths = touchedPaths(tablePath, man, touched)
     val hits =
       if (storedPaths.isEmpty) Array.empty[org.apache.spark.sql.Row]
       // doomed is cap-bounded (checked above) — broadcast it so the
@@ -4374,44 +4418,9 @@ object MergeWriter {
         .select(col("__graft_file"), col("__graft_pos"))
         .collect()
     if (incCount == 0 && hits.isEmpty) return true // provable no-op
-    // 2. the overlay epoch: the batch written exactly like any epoch
-    //    (a pure-delete changeset writes none)
-    val epoch = "e-" + UUID.randomUUID()
-    val written: Set[Int] =
-      if (incCount == 0) Set.empty
-      else {
-        // the overlay rows pass the same CHECK-constraint guard as any
-        // epoch write (fused into the write's own pass)
-        val incChecked = enforceChecks(inc0.drop(BucketCol), man.checks,
-          tablePath)
-        val stamped =
-          if (man.colIds.isEmpty) stripFrame(incChecked)
-          else stampFrame(incChecked, man.colIds)
-        val data = stamped.withColumn(BucketCol,
-          bucketExprChecked(keys, man.buckets))
-        val clustered = clusterSort(data.repartition(col(BucketCol)),
-          man.clusterCols)
-        withShredCols(clustered, man.shredCols)
-          .write.mode(SaveMode.ErrorIfExists).partitionBy(BucketCol)
-          .parquet(s"$tablePath/$epoch")
-        listWrittenBuckets(fs, s"$tablePath/$epoch").toSet
-      }
-    val stats0 = collectFileStats(fs, new Path(s"$tablePath/$epoch"),
-      withColumnStats = man.clusterCols.nonEmpty,
-      priorityCols = man.shredCols.map(shredColName).toSet)
-    val statsFp =
-      if (man.fingerprint && written.nonEmpty)
-        withFingerprints(stats0,
-          fileFingerprints(spark, s"$tablePath/$epoch",
-            Some(cleanSchema.json), man.colIds))
-      else stats0
-    // overlay files carry their epoch attribution in the stats record
-    val overlayStats: Map[Int, Seq[FileStat]] =
-      statsFp.map { case (b, fss) => b -> fss.map(_.copy(e = epoch)) }
-    if ((man.bloomCols.nonEmpty || man.shredCols.nonEmpty) &&
-        written.nonEmpty)
-      writeBloomSidecar(spark, fs, s"$tablePath/$epoch", man.bloomCols,
-        man.bloomItems, Some(cleanSchema.json), man.shredCols)
+    // 2. the overlay epoch (a pure-delete changeset writes none)
+    val (epoch, written, overlayStats) = stageOverlay(spark, fs, tablePath,
+      man, if (incCount == 0) None else Some(inc0), keys)
     // 3. deletion vectors for the replaced keys' old rows: the sidecar
     //    entry is each file's FULL (prior ∪ new) dead set, as ever
     val newDead: Map[String, Array[Long]] = hits.groupBy(_.getString(0))
@@ -4441,9 +4450,7 @@ object MergeWriter {
     // identity high-water from the overlay files (same cost shape);
     // specs come from the DECLARED schema — the incoming frame never
     // carries the identity metadata
-    val morIdSpec = man.schema
-      .map(s => identitySpecs(DataType.fromJson(s).asInstanceOf[StructType]))
-      .getOrElse(identitySpecs(cleanSchema))
+    val morIdSpec = identitySpecs(recorded)
     val morIdExt =
       if (morIdSpec.nonEmpty && written.nonEmpty)
         identityExtremes(spark, s"$tablePath/$epoch", morIdSpec)
@@ -4453,27 +4460,20 @@ object MergeWriter {
     var base = man
     var attempt = 0
     while (true) {
-      val freshBase = written.filterNot(base.epochs.contains)
-      val stats2 = (base.stats.map { case (b, fss) =>
-        val withDv =
-          if (mergedDead.isEmpty) fss
-          else fss.map { f =>
+      val dvStats =
+        if (mergedDead.isEmpty) base.stats
+        else base.stats.map { case (b, fss) =>
+          b -> fss.map { f =>
             mergedDead.get(dvRelKey(fileEpoch(base, b, f), b, f.name)) match {
               case Some(ps) => f.copy(dv = sidecar, dvn = ps.length.toLong)
               case None => f
             }
           }
-        b -> (withDv ++ (if (written(b)) overlayStats.getOrElse(b, Seq.empty)
-                         else Seq.empty))
-      }) ++ overlayStats.filter { case (b, _) => !base.stats.contains(b) }
+        }
       try {
         refCommit(fs, new Path(tablePath), ref,
-          withRefreshedStats(base.copy(version = base.version + 1,
-            epochs = base.epochs ++ freshBase.map(_ -> epoch).toMap,
-            overlays = base.overlays ++
-              written.intersect(base.epochs.keySet).map(b =>
-                b -> (base.overlays.getOrElse(b, Seq.empty) :+ epoch)).toMap,
-            stats = stats2,
+          withRefreshedStats(withOverlay(base.copy(stats = dvStats), epoch,
+            written, overlayStats).copy(version = base.version + 1,
             txns = base.txns ++ txn,
             idhw = advanceIdhw(base.idhw, morIdSpec, morIdExt),
             op = opName, opTs = System.currentTimeMillis()), batchSk))
@@ -4539,8 +4539,7 @@ object MergeWriter {
       return false
     if (delTotalHint.getOrElse(del.count()) > DvMaxPositionsPerCommit)
       return false
-    val paths = touchedStored.flatMap(b =>
-      bucketDirPaths(tablePath, man, b))
+    val paths = touchedPaths(tablePath, man, touched)
     // LIVE rows matching the doomed keys, with physical positions: the
     // DV-aware read keeps already-dead rows out, so the collected set is
     // ≤ one row per doomed key (keyed-table invariant) — bounded by the
@@ -4656,23 +4655,8 @@ object MergeWriter {
                        delTotalHint: Option[Long] = None): Boolean = {
     if (man.schema.isEmpty) return false
     val recorded = DataType.fromJson(man.schema.get).asInstanceOf[StructType]
-    // column ORDER is provenance noise — reorder to the recorded schema
-    // (morApply's rule); a different column SET or type falls back
-    val inc0opt: Option[DataFrame] = incOpt match {
-      case None => None
-      case Some(inc) =>
-        val incNames = inc.drop(BucketCol).columns.toSeq
-        val reordered =
-          if (incNames == recorded.fieldNames.toSeq) inc
-          else if (incNames.sorted == recorded.fieldNames.toSeq.sorted)
-            inc.select((recorded.fieldNames.toSeq :+ BucketCol)
-              .filter(inc.columns.contains).map(col): _*)
-          else return false
-        if (!org.apache.spark.sql.GraftColumnShim.sameTypeIgnoreNullability(
-              recorded, stripSchemaIds(reordered.drop(BucketCol).schema)))
-          return false
-        Some(reordered)
-    }
+    val inc0opt: Option[DataFrame] =
+      incOpt.map(alignToRecorded(_, recorded).getOrElse(return false))
     val capProbe = (DvMaxPositionsPerCommit + 1).toInt
     val incCount = incTotalHint.getOrElse(
       incOpt.fold(0L)(_.limit(capProbe).count()))
@@ -4698,45 +4682,9 @@ object MergeWriter {
     val doomed = (inc0opt.map(_.select(keys.map(col): _*)).toSeq ++
       delKeys.map(_.select(keys.map(col): _*)).toSeq)
       .reduce(_ union _).distinct()
-    // 1. the overlay epoch: the batch written exactly like any epoch
-    //    (a pure-delete changeset writes none)
-    val epoch = "e-" + UUID.randomUUID()
-    val written: Set[Int] =
-      if (incCount == 0) Set.empty
-      else {
-        val inc0 = inc0opt.get
-        val incChecked = enforceChecks(inc0.drop(BucketCol), man.checks,
-          tablePath)
-        val stamped =
-          if (man.colIds.isEmpty) stripFrame(incChecked)
-          else stampFrame(incChecked, man.colIds)
-        val data = stamped.withColumn(BucketCol,
-          bucketExprChecked(keys, man.buckets))
-        val clustered = clusterSort(data.repartition(col(BucketCol)),
-          man.clusterCols)
-        withShredCols(clustered, man.shredCols)
-          .write.mode(SaveMode.ErrorIfExists).partitionBy(BucketCol)
-          .parquet(s"$tablePath/$epoch")
-        listWrittenBuckets(fs, s"$tablePath/$epoch").toSet
-      }
-    val cleanSchemaJson = inc0opt
-      .map(i => stripSchemaIds(i.drop(BucketCol).schema).json)
-      .orElse(man.schema)
-    val stats0 = collectFileStats(fs, new Path(s"$tablePath/$epoch"),
-      withColumnStats = man.clusterCols.nonEmpty,
-      priorityCols = man.shredCols.map(shredColName).toSet)
-    val statsFp =
-      if (man.fingerprint && written.nonEmpty)
-        withFingerprints(stats0,
-          fileFingerprints(spark, s"$tablePath/$epoch", cleanSchemaJson,
-            man.colIds))
-      else stats0
-    val overlayStats: Map[Int, Seq[FileStat]] =
-      statsFp.map { case (b, fss) => b -> fss.map(_.copy(e = epoch)) }
-    if ((man.bloomCols.nonEmpty || man.shredCols.nonEmpty) &&
-        written.nonEmpty)
-      writeBloomSidecar(spark, fs, s"$tablePath/$epoch", man.bloomCols,
-        man.bloomItems, cleanSchemaJson, man.shredCols)
+    // 1. the overlay epoch (a pure-delete changeset writes none)
+    val (epoch, written, overlayStats) = stageOverlay(spark, fs, tablePath,
+      man, if (incCount == 0) None else inc0opt, keys)
     // 2. the doomed-key sidecar (skipped when no touched bucket stores
     //    anything — nothing to delete from). Sidecar first, manifest
     //    last; a failed commit leaves an orphan for gc's age guard.
@@ -4761,11 +4709,6 @@ object MergeWriter {
     var base = man
     var attempt = 0
     while (true) {
-      val freshBase = written.filterNot(base.epochs.contains)
-      val stats2 = (base.stats.map { case (b, fss) =>
-        b -> (fss ++ (if (written(b)) overlayStats.getOrElse(b, Seq.empty)
-                      else Seq.empty))
-      }) ++ overlayStats.filter { case (b, _) => !base.stats.contains(b) }
       // upTo from the PRE-COMMIT base: the overlay appended below takes
       // ordinal upTo, keeping this commit's own rows exempt
       val eqds2 =
@@ -4776,13 +4719,8 @@ object MergeWriter {
         }
       try {
         refCommit(fs, new Path(tablePath), ref,
-          withRefreshedStats(base.copy(version = base.version + 1,
-            epochs = base.epochs ++ freshBase.map(_ -> epoch).toMap,
-            overlays = base.overlays ++
-              written.intersect(base.epochs.keySet).map(b =>
-                b -> (base.overlays.getOrElse(b, Seq.empty) :+ epoch)).toMap,
-            stats = stats2,
-            eqds = eqds2,
+          withRefreshedStats(withOverlay(base, epoch, written, overlayStats)
+            .copy(version = base.version + 1, eqds = eqds2,
             txns = base.txns ++ txn,
             idhw = advanceIdhw(base.idhw, morIdSpec, morIdExt),
             op = opName, opTs = System.currentTimeMillis()), batchSk))
@@ -5309,6 +5247,30 @@ object MergeWriter {
         (!st.isDirectory && n.startsWith("part-"))
     }
 
+  /** Migrate a pre-manifest table ([[legacyData]]) with one full rewrite
+    * into the manifest layout, so every later write is bucket-local; a
+    * no-op once a manifest exists. The read uses mergeSchema to merge
+    * heterogeneous legacy footers (files written across an additive
+    * evolution) — it runs once per table, so the O(files) footer-job
+    * cost argument does not apply. The root-level legacy files are
+    * reclaimed by the caller's post-commit gc (or any later one, should
+    * the process die first).
+    */
+  private def migrateLegacy(spark: SparkSession, fs: FileSystem,
+                            tablePath: String, keys: Seq[String],
+                            buckets: Int,
+                            clusterBy: Seq[String] = Seq.empty,
+                            bloomBy: Seq[String] = Seq.empty,
+                            bloomItems: Long = DefaultBloomItems): Unit = {
+    val dir = new Path(tablePath)
+    if (currentManifest(fs, dir).isEmpty && legacyData(fs, dir))
+      writeEpochAndCommit(spark, fs, tablePath,
+        spark.read.option("mergeSchema", "true").parquet(tablePath)
+          .drop(BucketCol),
+        keys, buckets, None, clusterCols = clusterBy, bloomCols = bloomBy,
+        bloomN = bloomItems)
+  }
+
   /** MERGE: rows in `incoming` replace existing rows with the same key;
     * all other existing rows survive. Equivalent to
     * `MERGE INTO target USING incoming ON keys WHEN MATCHED UPDATE WHEN NOT
@@ -5378,19 +5340,9 @@ object MergeWriter {
       require(branchHead(fs, dir, b).isDefined,
         s"merge: no branch '$b' on $tablePath — createBranch first")
     }
-    // legacy pre-manifest table: migrate with one full rewrite into the
-    // manifest layout, then merge bucket-locally ever after
-    if (ref.isEmpty && currentManifest(fs, dir).isEmpty && legacyData(fs, dir)) {
-      // the root-level legacy files are reclaimed by gc() after this
-      // merge commits (and by any later merge if this process dies first)
-      // one-time migration read: mergeSchema merges heterogeneous legacy
-      // footers (files written across an additive evolution) — runs once
-      // per table, so the O(files) footer-job cost argument does not apply
-      val legacy = spark.read.option("mergeSchema", "true")
-        .parquet(tablePath).drop(BucketCol)
-      writeEpochAndCommit(spark, fs, tablePath, legacy, keys, buckets, None,
-        clusterCols = clusterBy, bloomCols = bloomBy, bloomN = bloomItems)
-    }
+    if (ref.isEmpty)
+      migrateLegacy(spark, fs, tablePath, keys, buckets, clusterBy, bloomBy,
+        bloomItems)
     val m = refCurrent(fs, dir, ref)
     m.foreach(validateKeys(_, keys, "merge"))
     // keyed merge is replay-IDEMPOTENT by construction, so the optional
@@ -5418,15 +5370,9 @@ object MergeWriter {
       // always bucket-local.
       val touchedCounts: Map[Int, Long] = assertUnique match {
         case Some(stmt) =>
-          val per = inc.groupBy((col(BucketCol) +: keys.map(col)): _*)
-            .agg(count(lit(1)).as("__graft_kn"))
-            .groupBy(col(BucketCol))
-            .agg(max(col("__graft_kn")).as("__graft_mx"),
-              sum(col("__graft_kn")).as("__graft_n"))
-            .collect()
-          if (per.exists(_.getLong(1) > 1L))
-            requireUniqueKeys(inc, keys, stmt) // throws with key detail
-          per.map(r => r.getInt(0) -> r.getLong(2)).toMap
+          val (counts, dup) = touchedCountsUnique(inc, keys)
+          if (dup) requireUniqueKeys(inc, keys, stmt) // throws with key detail
+          counts
         case None => touchedBucketCounts(inc)
       }
       val touched = touchedCounts.keys.toIndexedSeq.sorted
@@ -5469,10 +5415,7 @@ object MergeWriter {
                     touched, txn, ref = ref,
                     incTotalHint = Some(touchedCounts.values.sum))
                 }))) {
-            // manifest-level pruning: read ONLY the touched buckets' dirs
-            val existingPaths = touched.flatMap(b =>
-              (if (man.epochs.contains(b)) bucketDirPaths(tablePath, man, b)
-               else Seq.empty))
+            val existingPaths = touchedPaths(tablePath, man, touched)
             val survivors =
               if (existingPaths.isEmpty) None
               else Some(readWithSchema(spark, man, tablePath, existingPaths)
@@ -5497,17 +5440,11 @@ object MergeWriter {
               ref = ref)
           }
       }
-      if (ref.isEmpty) {
-        // branch staging defers maintenance to the publish: gc would
-        // need the branch refs anyway, and compaction/split churn on a
-        // short-lived staging lineage is wasted work
-        labeled(spark, "graft.maintain") {
-          gc(fs, dir)
-          maybeAutoSplit(spark, fs, dir, tablePath, autoSplitBytesPerBucket)
-          maybeAutoCompact(spark, fs, dir, tablePath, autoCompactEpochs)
-          maybeAutoCompactMor(spark, fs, dir, tablePath)
-        }
-      }
+      // branch staging defers maintenance to the publish: gc would
+      // need the branch refs anyway, and compaction/split churn on a
+      // short-lived staging lineage is wasted work
+      if (ref.isEmpty) maintainAfterWrite(spark, fs, tablePath,
+        autoSplitBytesPerBucket, autoCompactEpochs)
     } finally { inc.unpersist(); () }
   }
 
@@ -5563,9 +5500,7 @@ object MergeWriter {
       val folded = m match {
         case None => inc.drop(BucketCol)
         case Some(man) =>
-          val existingPaths = touched.flatMap(b =>
-            (if (man.epochs.contains(b)) bucketDirPaths(tablePath, man, b)
-             else Seq.empty))
+          val existingPaths = touchedPaths(tablePath, man, touched)
           if (existingPaths.isEmpty) inc.drop(BucketCol)
           else readWithSchema(spark, man, tablePath, existingPaths).select(cols: _*)
             .unionByName(inc.drop(BucketCol).select(cols: _*))
@@ -5575,10 +5510,8 @@ object MergeWriter {
       }
       writeEpochAndCommit(spark, fs, tablePath, folded, keys, nb, m, Some(txn),
         opName = "mergeAdditive")
-      gc(fs, dir)
-      maybeAutoSplit(spark, fs, dir, tablePath, autoSplitBytesPerBucket)
-      maybeAutoCompact(spark, fs, dir, tablePath, autoCompactEpochs)
-      maybeAutoCompactMor(spark, fs, dir, tablePath)
+      maintainAfterWrite(spark, fs, tablePath, autoSplitBytesPerBucket,
+        autoCompactEpochs)
     } finally { inc.unpersist(); () }
   }
 
@@ -5751,11 +5684,6 @@ object MergeWriter {
       shredCols = shred))
   }
 
-  /** The touched-bucket set of a bucketed incoming frame — one bounded
-    * metadata job (≤ bucket-count rows; empty batch → empty seq), shared
-    * by [[merge]] and [[mergeVersioned]] so emptiness and pruning don't
-    * pay two scans.
-    */
   /** Key-count bound under which a CoW rewrite's survivor anti-join
     * broadcasts the batch's key set instead of shuffle-joining it: the
     * survivor scan then pays NO Exchange and NO sort (guide §3.1), and
@@ -5782,8 +5710,32 @@ object MergeWriter {
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     }
 
+  /** The touched-bucket set of a bucketed incoming frame, sorted — one
+    * bounded metadata job (≤ bucket-count rows; empty batch → empty
+    * seq), so emptiness and pruning don't pay two scans.
+    */
   private def touchedBuckets(inc: DataFrame): IndexedSeq[Int] =
     touchedBucketCounts(inc).keys.toIndexedSeq.sorted
+
+  /** [[touchedBucketCounts]] with the statement-level duplicate-key
+    * guard FUSED in: the per-bucket agg also tracks the max per-key
+    * multiplicity (keys hash into one bucket, so a duplicate is always
+    * bucket-local). Returns the counts and whether some key repeats —
+    * only then does the caller pay [[requireUniqueKeys]]' detailed
+    * error pass. Because the check reads the SAME persisted rows the
+    * write consumes, it is sound for non-deterministic sources.
+    */
+  private def touchedCountsUnique(inc: DataFrame, keys: Seq[String])
+      : (Map[Int, Long], Boolean) = {
+    val per = inc.groupBy((col(BucketCol) +: keys.map(col)): _*)
+      .agg(count(lit(1)).as("__graft_kn"))
+      .groupBy(col(BucketCol))
+      .agg(max(col("__graft_kn")).as("__graft_mx"),
+        sum(col("__graft_kn")).as("__graft_n"))
+      .collect()
+    (per.map(r => r.getInt(0) -> r.getLong(2)).toMap,
+      per.exists(_.getLong(1) > 1L))
+  }
 
   /** Label the Spark jobs an engine phase submits (guide §1.5) so the
     * UI/profilers attribute them; thread-local, restores the caller's
@@ -5940,9 +5892,7 @@ object MergeWriter {
       val merged = st match {
         case None => inc.drop(BucketCol)
         case Some(man) =>
-          val existingPaths = touched.flatMap(b =>
-            (if (man.epochs.contains(b)) bucketDirPaths(tableRoot, man, b)
-             else Seq.empty))
+          val existingPaths = touchedPaths(tableRoot, man, touched)
           if (existingPaths.isEmpty) inc.drop(BucketCol)
           else {
             val sv = readWithSchema(spark, man, tableRoot, existingPaths)
@@ -5956,76 +5906,15 @@ object MergeWriter {
               sv.unionByName(inc.select(sv.columns.map(col).toIndexedSeq: _*))
           }
       }
-      val epoch = "e-" + UUID.randomUUID()
-      // field-id stamping, the writeEpochAndCommit rule at member scope:
-      // carried ids by name + fresh ids for evolved columns; a member
-      // this commit creates is stamped from scratch; a legacy member
-      // with surviving files stays name-world
-      val cleanSchema = stripSchemaIds(merged.schema)
-      val (memberIds, memberNext) = st match {
-        case Some(p) if p.nextColId > 0L =>
-          var n = p.nextColId
-          val ids = cleanSchema.fields.map { f =>
-            f.name -> p.colIds.getOrElse(f.name, { val v = n; n += 1; v })
-          }.toMap
-          (ids, n)
-        case None =>
-          (cleanSchema.fields.zipWithIndex
-            .map { case (f, i) => f.name -> (i + 1L) }.toMap,
-            cleanSchema.fields.length + 1L)
-        case Some(_) => (Map.empty[String, Long], 0L)
-      }
-      val stamped =
-        if (memberIds.isEmpty) stripFrame(merged)
-        else stampFrame(merged, memberIds)
-      // clusterBy applies at member CREATION (like `buckets`); an
-      // existing member keeps its recorded clustering, empty included
-      val cluster = st.map(_.clusterCols).getOrElse(clusterBy)
-      val clustered = clusterSort(stamped
-        .withColumn(BucketCol, bucketExprChecked(keys, nb))
-        .repartition(col(BucketCol)), cluster)
-      // shred declarations apply at member CREATION only through the
-      // single-table API; an existing member's recorded shreds persist
-      val shred = st.map(_.shredCols).getOrElse(Seq.empty)
-      withShredCols(clustered, shred)
-        .write.mode(SaveMode.ErrorIfExists).partitionBy(BucketCol)
-        .parquet(s"$tableRoot/$epoch")
-      val written = fs.listStatus(new Path(s"$tableRoot/$epoch")).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith(BucketCol + "="))
-        .map(_.stripPrefix(BucketCol + "=").toInt)
-      // bloomBy applies at member CREATION (like clusterBy); an existing
-      // member keeps its recorded bloom columns
-      val bloom = st.map(_.bloomCols).getOrElse(bloomBy)
-      val bloomN = st.filter(_.bloomCols.nonEmpty).map(_.bloomItems)
-        .getOrElse(bloomItems)
-      if ((bloom.nonEmpty || shred.nonEmpty) && written.nonEmpty)
-        writeBloomSidecar(spark, fs, s"$tableRoot/$epoch", bloom, bloomN,
-          Some(cleanSchema.json), shred)
-      val writtenSet = written.toSet
-      Some(Manifest(0L, nb,
-        st.map(_.epochs).getOrElse(Map.empty) ++ written.map(_ -> epoch),
-        Map.empty, Some(cleanSchema.json), keys, cluster,
-        st.map(_.stats).getOrElse(Map.empty) ++
-          collectFileStats(fs, new Path(s"$tableRoot/$epoch"),
-            withColumnStats = cluster.nonEmpty,
-            priorityCols = shred.map(shredColName).toSet),
-        bloom, bloomN,
-        // retention policy rides every group commit forward
-        retainVersions = st.map(_.retainVersions).getOrElse(KeepManifests),
-        retainMs = st.map(_.retainMs).getOrElse(0L),
-        colIds = memberIds, nextColId = memberNext,
-        // a rewritten bucket folded its overlays in and filtered its
-        // doomed keys out — clear its merge-on-read state; untouched
-        // buckets keep theirs (dropping them would orphan live overlay
-        // files and resurrect eq-deleted rows)
-        overlays = st.map(_.overlays.filterNot { case (b, _) =>
-          writtenSet(b) }).getOrElse(Map.empty),
-        eqds = st.map(_.eqds.filterNot { case (b, _) => writtenSet(b) })
-          .getOrElse(Map.empty),
-        deleteVectors = st.map(_.deleteVectors).getOrElse(eqdSeed),
-        eqDeletes = st.map(_.eqDeletes).getOrElse(eqdSeed),
-        shredCols = shred))
+      // the table commit's staging and assembly at member scope, minus
+      // the CAS (the group manifest is the commit point). clusterBy and
+      // bloomBy apply at member CREATION (like `buckets`): an existing
+      // member keeps its recorded layout, empty included
+      val staged = stageRewrite(spark, fs, tableRoot, merged, keys, nb, st,
+        clusterCols = st.map(_.clusterCols).getOrElse(clusterBy),
+        bloomCols = st.map(_.bloomCols).getOrElse(bloomBy),
+        bloomN = bloomItems, dvSeed = eqdSeed, eqdSeed = eqdSeed)
+      Some(assembleManifest(st, staged, None, "mergeGroup"))
     } finally { inc.unpersist(); () }
   }
 
@@ -6052,19 +5941,7 @@ object MergeWriter {
     if (man.schema.isEmpty) return None
     val recorded = DataType.fromJson(man.schema.get).asInstanceOf[StructType]
     if (identitySpecs(recorded).nonEmpty) return None
-    // column ORDER is provenance noise — reorder to the recorded
-    // schema; a different column SET or type falls back (eqdApply's
-    // rule)
-    val incNames = inc.drop(BucketCol).columns.toSeq
-    val reordered =
-      if (incNames == recorded.fieldNames.toSeq) inc
-      else if (incNames.sorted == recorded.fieldNames.toSeq.sorted)
-        inc.select((recorded.fieldNames.toSeq :+ BucketCol)
-          .filter(inc.columns.contains).map(col): _*)
-      else return None
-    if (!org.apache.spark.sql.GraftColumnShim.sameTypeIgnoreNullability(
-          recorded, stripSchemaIds(reordered.drop(BucketCol).schema)))
-      return None
+    val reordered = alignToRecorded(inc, recorded).getOrElse(return None)
     val capProbe = (DvMaxPositionsPerCommit + 1).toInt
     val incCount = incTotalHint.getOrElse(
       reordered.limit(capProbe).count())
@@ -6072,35 +5949,8 @@ object MergeWriter {
     val touchedStored = touched.filter(man.epochs.contains)
     if (touchedStored.exists(b => man.stats.get(b).forall(_.isEmpty)))
       return None
-    val epoch = "e-" + UUID.randomUUID()
-    val incChecked = enforceChecks(reordered.drop(BucketCol), man.checks,
-      tableRoot)
-    val stamped =
-      if (man.colIds.isEmpty) stripFrame(incChecked)
-      else stampFrame(incChecked, man.colIds)
-    val data = stamped.withColumn(BucketCol,
-      bucketExprChecked(keys, man.buckets))
-    val clustered = clusterSort(data.repartition(col(BucketCol)),
-      man.clusterCols)
-    withShredCols(clustered, man.shredCols)
-      .write.mode(SaveMode.ErrorIfExists).partitionBy(BucketCol)
-      .parquet(s"$tableRoot/$epoch")
-    val written = listWrittenBuckets(fs, s"$tableRoot/$epoch").toSet
-    val stats0 = collectFileStats(fs, new Path(s"$tableRoot/$epoch"),
-      withColumnStats = man.clusterCols.nonEmpty,
-      priorityCols = man.shredCols.map(shredColName).toSet)
-    val statsFp =
-      if (man.fingerprint && written.nonEmpty)
-        withFingerprints(stats0,
-          fileFingerprints(spark, s"$tableRoot/$epoch", man.schema,
-            man.colIds))
-      else stats0
-    val overlayStats: Map[Int, Seq[FileStat]] =
-      statsFp.map { case (b, fss) => b -> fss.map(_.copy(e = epoch)) }
-    if ((man.bloomCols.nonEmpty || man.shredCols.nonEmpty) &&
-        written.nonEmpty)
-      writeBloomSidecar(spark, fs, s"$tableRoot/$epoch", man.bloomCols,
-        man.bloomItems, man.schema, man.shredCols)
+    val (epoch, written, overlayStats) =
+      stageOverlay(spark, fs, tableRoot, man, Some(reordered), keys)
     // doomed-key sidecar, skipped when no touched bucket stores
     // anything; upTo from the PRE-COMMIT state keeps this batch's own
     // overlay exempt (eqdApply's sequence-number scoping)
@@ -6108,24 +5958,13 @@ object MergeWriter {
     if (touchedStored.nonEmpty)
       writeEqdSidecar(spark, tableRoot, sidecar,
         reordered.select(keys.map(col): _*).distinct(), man.colIds)
-    val freshBase = written.filterNot(man.epochs.contains)
-    val stats2 = (man.stats.map { case (b, fss) =>
-      b -> (fss ++ (if (written(b)) overlayStats.getOrElse(b, Seq.empty)
-                    else Seq.empty))
-    }) ++ overlayStats.filter { case (b, _) => !man.stats.contains(b) }
     val eqds2 =
       if (touchedStored.isEmpty) man.eqds
       else man.eqds ++ touchedStored.map { b =>
         b -> (man.eqds.getOrElse(b, Seq.empty) :+
           EqDel(sidecar, bucketEpochs(man, b).length, incCount))
       }
-    Some(man.copy(
-      epochs = man.epochs ++ freshBase.map(_ -> epoch).toMap,
-      overlays = man.overlays ++
-        written.intersect(man.epochs.keySet).map(b =>
-          b -> (man.overlays.getOrElse(b, Seq.empty) :+ epoch)).toMap,
-      stats = stats2,
-      eqds = eqds2))
+    Some(withOverlay(man, epoch, written, overlayStats).copy(eqds = eqds2))
   }
 
   /** MERGE into several member tables of one group and make ALL of them
@@ -6309,15 +6148,6 @@ object MergeWriter {
         }
       }
     }
-
-  /** Operational VACUUM at group scope ([[vacuum]] for groups): reclaim
-    * member epochs no kept group manifest references, plus aged staging
-    * files, without committing anything — for cold groups whose last
-    * writer crashed mid-stage.
-    */
-  def vacuumGroup(spark: SparkSession, groupPath: String,
-                  retentionMs: Long = OrphanRetentionMs): Unit =
-    gcGroup(fsFor(spark, groupPath), new Path(groupPath), retentionMs)
 
   /** Committed member names of a group (empty when no group manifest is
     * committed yet) — the existence probe a streaming sink needs before
@@ -6764,14 +6594,7 @@ object MergeWriter {
         s"mergeVersioned: incoming frame must not contain reserved column '$c'"))
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
-    if (currentManifest(fs, dir).isEmpty && legacyData(fs, dir)) {
-      // one-time migration read: mergeSchema merges heterogeneous legacy
-      // footers (files written across an additive evolution) — runs once
-      // per table, so the O(files) footer-job cost argument does not apply
-      val legacy = spark.read.option("mergeSchema", "true")
-        .parquet(tablePath).drop(BucketCol)
-      writeEpochAndCommit(spark, fs, tablePath, legacy, keys, buckets, None)
-    }
+    migrateLegacy(spark, fs, tablePath, keys, buckets)
     val m = currentManifest(fs, dir)
     m.foreach(validateKeys(_, keys, "mergeVersioned"))
     val nb = m.map(_.buckets).getOrElse(buckets)
@@ -6789,9 +6612,7 @@ object MergeWriter {
             newestPerKey(inc.drop(BucketCol), keys, versionCol, pri = None),
             keys, nb, None, opName = "mergeVersioned")
         case Some(man) =>
-          val existingPaths = touched.flatMap(b =>
-            (if (man.epochs.contains(b)) bucketDirPaths(tablePath, man, b)
-             else Seq.empty))
+          val existingPaths = touchedPaths(tablePath, man, touched)
           val existing =
             if (existingPaths.isEmpty) None
             else Some(readWithSchema(spark, man, tablePath, existingPaths))
@@ -6808,10 +6629,8 @@ object MergeWriter {
             newestPerKey(all.drop(BucketCol), keys, versionCol, pri = Some("__pri")),
             keys, nb, Some(man), opName = "mergeVersioned")
       }
-      gc(fs, dir)
-      maybeAutoSplit(spark, fs, dir, tablePath, autoSplitBytesPerBucket)
-      maybeAutoCompact(spark, fs, dir, tablePath, autoCompactEpochs)
-      maybeAutoCompactMor(spark, fs, dir, tablePath)
+      maintainAfterWrite(spark, fs, tablePath, autoSplitBytesPerBucket,
+        autoCompactEpochs)
     } finally { inc.unpersist(); () }
   }
 
@@ -6836,23 +6655,6 @@ object MergeWriter {
       .drop("__vrn").drop(pri.toSeq: _*)
   }
 
-  /** Write `rows` (bucket column recomputed from the keys) into a fresh
-    * epoch directory, then commit the next manifest version pointing the
-    * written buckets at it. Nothing is visible until the commit rename.
-    *
-    * OPTIMISTIC CONCURRENCY (Delta's commit protocol, scaled down): a
-    * lost version race does not fail the write outright. The committer
-    * re-reads the current manifest and REBASES — its new pointers apply
-    * on top of the winner's — provided none of ITS buckets (written or
-    * dropped) changed pointer since `prev` was read and the schema is
-    * unchanged: disjoint-bucket writers then all succeed, serialized by
-    * the version CAS. A bucket this write READ-MODIFIED that the winner
-    * also rewrote means the survivors were computed from stale data —
-    * that is a genuine data conflict and fails loudly with
-    * `ConcurrentModificationException` (the caller re-runs its merge
-    * against the new state). The age guard in [[gc]] keeps the loser's
-    * staged epoch alive through this window.
-    */
   /** Per-file CONTENT fingerprints of a just-written epoch: an
     * order-insensitive 128-bit identity of each file's row multiset —
     * `bit_xor` of two independently-derived 64-bit row hashes, prefixed
@@ -6907,37 +6709,116 @@ object MergeWriter {
       }.toMap
   }
 
-  /** Attach [[fileFingerprints]] to freshly-collected stats. */
-  private def withFingerprints(stats: Map[Int, Seq[FileStat]],
-                               fps: Map[(Int, String), String])
-      : Map[Int, Seq[FileStat]] =
-    stats.map { case (b, fss) =>
-      b -> fss.map(f => f.copy(fp = fps.getOrElse((b, f.name), "")))
-    }
-
-  private def writeEpochAndCommit(spark: SparkSession, fs: FileSystem,
-                                  tablePath: String, rows: DataFrame,
-                                  keys: Seq[String], buckets: Int,
-                                  prev: Option[Manifest],
-                                  txn: Option[(String, Long)] = None,
-                                  dropBuckets: Set[Int] = Set.empty,
-                                  clusterCols: Seq[String] = Seq.empty,
-                                  bloomCols: Seq[String] = Seq.empty,
-                                  bloomN: Long = DefaultBloomItems,
-                                  opName: String = "merge",
-                                  fpSeed: Boolean = false,
-                                  dvSeed: Boolean = false,
-                                  eqdSeed: Boolean = false,
-                                  ref: Option[String] = None,
-                                  shredSeed: Seq[ShredSpec] = Seq.empty)
-      : Unit = {
+  /** The ONE epoch writer: every data-file write of the protocol — CoW
+    * rewrite, merge-on-read overlay, group-member stage, compaction,
+    * split — lands in a fresh `e-<uuid>` directory through here.
+    * `data` already carries [[BucketCol]]; `lay` supplies the layout —
+    * cluster and shred columns, Bloom columns and sizing, the
+    * fingerprint policy, and the schema and field ids that type the
+    * fingerprint and Bloom passes — from the base manifest or, for a
+    * keyed rewrite, its staged target. The write clusters by bucket
+    * first (each bucket's rows land wholly in one task → one file per
+    * bucket, small-file hygiene); with cluster columns a LOCAL sort (no
+    * extra exchange) orders each bucket's rows so maxRecordsPerFile
+    * splits land range-disjoint files — what makes the per-file stats
+    * skip. `repartition = false` keeps the source's partitioning
+    * ([[splitBuckets]]' pmod refinement deliberately has no exchange).
+    * Then, over the written files only: per-file footer stats, content
+    * fingerprints when the layout records them, and the Bloom/shred
+    * sidecar. Nothing is visible until a manifest commit names the
+    * epoch. Returns (epoch, written buckets, per-file stats).
+    */
+  private def stageEpoch(spark: SparkSession, fs: FileSystem, root: String,
+                         data: DataFrame, lay: Manifest,
+                         repartition: Boolean = true)
+      : (String, Seq[Int], Map[Int, Seq[FileStat]]) = {
     val epoch = "e-" + UUID.randomUUID()
+    val dir = s"$root/$epoch"
+    val clustered = clusterSort(
+      if (repartition) data.repartition(col(BucketCol)) else data,
+      lay.clusterCols)
+    labeled(spark, "graft.epoch-write") {
+      // every epoch (re-)materializes the hidden shred columns: a
+      // rewrite's schema-projected read dropped them, and they are a
+      // pure function of the variant column
+      withShredCols(clustered, lay.shredCols)
+        .write.mode(SaveMode.ErrorIfExists).partitionBy(BucketCol)
+        .parquet(dir)
+    }
+    val written = fs.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(BucketCol + "="))
+      .map(_.stripPrefix(BucketCol + "=").toInt)
+    val stats0 = collectFileStats(fs, new Path(dir),
+      withColumnStats = lay.clusterCols.nonEmpty,
+      priorityCols = lay.shredCols.map(shredColName).toSet)
+    // content fingerprints (recorded at creation, like clusterCols):
+    // one pass over the written epoch, O(written data)
+    val stats =
+      if (lay.fingerprint && written.nonEmpty) {
+        val fps = fileFingerprints(spark, dir, lay.schema, lay.colIds)
+        stats0.map { case (b, fss) =>
+          b -> fss.map(f => f.copy(fp = fps.getOrElse((b, f.name), "")))
+        }
+      } else stats0
+    if ((lay.bloomCols.nonEmpty || lay.shredCols.nonEmpty) && written.nonEmpty)
+      writeBloomSidecar(spark, fs, dir, lay.bloomCols, lay.bloomItems,
+        lay.schema, lay.shredCols)
+    (epoch, written, stats)
+  }
+
+  /** Incoming rows made writable — the one preparation every incoming-
+    * row writer applies before [[stageEpoch]]: the recorded CHECK
+    * constraints fused into the write's own pass (a violating row fails
+    * the statement before anything commits), field ids stamped (or stray
+    * ids from another table's read stripped), and the bucket column
+    * derived under the NULL-key assertion of [[bucketExprChecked]].
+    */
+  private def prepareRows(rows: DataFrame, checks: Map[String, String],
+                          colIds: Map[String, Long], keys: Seq[String],
+                          buckets: Int, tablePath: String): DataFrame = {
+    val checked = enforceChecks(rows, checks, tablePath)
+    (if (colIds.isEmpty) stripFrame(checked) else stampFrame(checked, colIds))
+      .withColumn(BucketCol, bucketExprChecked(keys, buckets))
+  }
+
+  /** A keyed rewrite's written epoch plus what the next manifest derives
+    * from it. `target` is the state the write asserts, as a version-0
+    * manifest without data: schema, merge keys, modulus, field ids,
+    * constraints, the layout it wrote under and — for a table the write
+    * creates — the policy seeds. [[assembleManifest]] folds it onto a
+    * base.
+    */
+  private case class StagedRewrite(epoch: String, written: Seq[Int],
+                                   stats: Map[Int, Seq[FileStat]],
+                                   target: Manifest, dropBuckets: Set[Int],
+                                   idSpec: Map[String, (Long, Long)],
+                                   idExt: Map[String, Long],
+                                   batchSk: Option[BatchColStats])
+
+  /** Stage `rows` (bucket column recomputed from the keys) as a fresh
+    * epoch over `prev`: derive the committed schema and field ids,
+    * prepare the rows, write them through [[stageEpoch]], and take the
+    * per-commit stats (HLL batch, identity extremes) from the written
+    * files. The layout params only seed a table this write creates.
+    */
+  private def stageRewrite(spark: SparkSession, fs: FileSystem,
+                           tablePath: String, rows: DataFrame,
+                           keys: Seq[String], buckets: Int,
+                           prev: Option[Manifest],
+                           dropBuckets: Set[Int] = Set.empty,
+                           clusterCols: Seq[String] = Seq.empty,
+                           bloomCols: Seq[String] = Seq.empty,
+                           bloomN: Long = DefaultBloomItems,
+                           fpSeed: Boolean = false,
+                           dvSeed: Boolean = false,
+                           eqdSeed: Boolean = false,
+                           shredSeed: Seq[ShredSpec] = Seq.empty)
+      : StagedRewrite = {
     // CHECK-constraint guard fused into the epoch write's pass: every
     // row this commit stores (incoming AND rewritten survivors — the
     // latter passed when first written, so re-proving them is free on
     // the happy path) streams through the recorded predicates
     val effChecks = prev.map(_.checks).getOrElse(Map.empty)
-    val rowsChecked = enforceChecks(rows, effChecks, tablePath)
     // schema-resident column METADATA (DEFAULT-value keys) carries
     // forward from the recorded schema by name: the written frame's
     // schema comes from the statement's source, which never knows the
@@ -7000,55 +6881,23 @@ object MergeWriter {
             cleanSchema.fields.length + 1L)
         case None => (Map.empty[String, Long], 0L)
       }
-    val stamped =
-      if (colIds.isEmpty) stripFrame(rowsChecked)
-      else stampFrame(rowsChecked, colIds)
-    val data = stamped
-      .withColumn(BucketCol, bucketExprChecked(keys, buckets))
-    // cluster by bucket before the partitioned write: each bucket's rows
-    // land wholly in one task → one file per bucket (small-file hygiene).
-    // With clusterCols a LOCAL sort (no extra exchange) orders the
-    // bucket's rows so maxRecordsPerFile splits land range-disjoint
-    // files — what makes the per-file stats below actually skip.
-    // an existing table's recorded clustering always applies; the param
-    // only seeds table creation (mirrors `buckets`)
-    val effCluster = prev.map(_.clusterCols).filter(_.nonEmpty)
-      .getOrElse(clusterCols)
-    // shred declarations are creation-time (the catalog path / a CTAS
-    // seed) and ride every commit forward like clusterCols
-    val effShred = prev.map(_.shredCols).getOrElse(shredSeed)
-    val clustered = clusterSort(data.repartition(col(BucketCol)), effCluster)
-    labeled(spark, "graft.epoch-write") {
-      withShredCols(clustered, effShred)
-        .write.mode(SaveMode.ErrorIfExists).partitionBy(BucketCol)
-        .parquet(s"$tablePath/$epoch")
-    }
-    val written = fs.listStatus(new Path(s"$tablePath/$epoch")).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith(BucketCol + "="))
-      .map(_.stripPrefix(BucketCol + "=").toInt)
-    val fileStats0 = collectFileStats(fs, new Path(s"$tablePath/$epoch"),
-      withColumnStats = effCluster.nonEmpty,
-      priorityCols = effShred.map(shredColName).toSet)
-    // content fingerprints (recorded at creation, like clusterCols):
-    // one pass over the TOUCHED epoch, O(written data)
-    val effFp = prev.map(_.fingerprint).getOrElse(fpSeed)
-    val fileStats =
-      if (effFp && written.nonEmpty)
-        withFingerprints(fileStats0,
-          fileFingerprints(spark, s"$tablePath/$epoch",
-            Some(cleanSchema.json), colIds))
-      else fileStats0
-    // an existing table's recorded bloom columns always apply (the param
-    // only seeds creation, like clusterCols) — so deletes, txn merges and
-    // evolutions all keep the sidecar maintained without opting in
-    val effBloom = prev.map(_.bloomCols).filter(_.nonEmpty)
-      .getOrElse(bloomCols)
-    val effBloomN = prev.filter(_.bloomCols.nonEmpty).map(_.bloomItems)
-      .getOrElse(bloomN)
-    if ((effBloom.nonEmpty || effShred.nonEmpty) && written.nonEmpty)
-      writeBloomSidecar(spark, fs, s"$tablePath/$epoch", effBloom,
-        effBloomN, Some(cleanSchema.json), effShred)
+    // an existing table's recorded layout always applies (shred
+    // declarations and fingerprinting included); the params only seed
+    // table creation, like `buckets`
+    val target = Manifest(0L, buckets, Map.empty,
+      schema = Some(cleanSchema.json), keyCols = keys,
+      clusterCols = prev.map(_.clusterCols).filter(_.nonEmpty)
+        .getOrElse(clusterCols),
+      bloomCols = prev.map(_.bloomCols).filter(_.nonEmpty)
+        .getOrElse(bloomCols),
+      bloomItems = prev.filter(_.bloomCols.nonEmpty).map(_.bloomItems)
+        .getOrElse(bloomN),
+      fingerprint = prev.map(_.fingerprint).getOrElse(fpSeed),
+      colIds = colIds, nextColId = nextColId, deleteVectors = dvSeed,
+      checks = effChecks, eqDeletes = eqdSeed,
+      shredCols = prev.map(_.shredCols).getOrElse(shredSeed))
+    val (epoch, written, stats) = stageEpoch(spark, fs, tablePath,
+      prepareRows(rows, effChecks, colIds, keys, buckets, tablePath), target)
     // incremental stats: ONE narrow scan of the freshly-written epoch
     // files (never the corpus, never a recompute of the input plan)
     // yields this commit's per-column HLL batch; the union happens
@@ -7061,100 +6910,119 @@ object MergeWriter {
       else None
     // identity high-water: one narrow agg over the written files moves
     // it past both assigned and explicit values
-    val epochIdSpec = identitySpecs(cleanSchema)
+    val idSpec = identitySpecs(cleanSchema)
     val idExt =
-      if (epochIdSpec.nonEmpty && written.nonEmpty)
-        identityExtremes(spark, s"$tablePath/$epoch", epochIdSpec)
+      if (idSpec.nonEmpty && written.nonEmpty)
+        identityExtremes(spark, s"$tablePath/$epoch", idSpec)
       else Map.empty[String, Long]
-    val mine = written.toSet ++ dropBuckets
+    StagedRewrite(epoch, written, stats, target, dropBuckets, idSpec, idExt,
+      batchSk)
+  }
+
+  /** The next manifest of a staged rewrite over `base` — the one
+    * assembly behind every table commit ([[writeEpochAndCommit]], once
+    * per CAS attempt) and every group member's staged state
+    * ([[stageMergeInto]]). Written buckets point at the new epoch and
+    * take its fresh stats; dropped buckets lose pointer and stats; both
+    * shed their merge-on-read overlays and equality deletes (the
+    * survivor read folded the one in and filtered the other out).
+    * Everything else — txn ledger, retention and fingerprint policy,
+    * ANALYZE statistics, tags, branch fork version, deletion-vector and
+    * equality-delete policy — rides forward from the base; a table the
+    * write creates starts from the staged target.
+    */
+  private def assembleManifest(base: Option[Manifest], s: StagedRewrite,
+                               txn: Option[(String, Long)],
+                               opName: String): Manifest = {
+    val t = s.target
+    val b = base.getOrElse(t)
+    // dropBuckets clears stale pointers for touched buckets the write
+    // left EMPTY (a delete can empty a bucket; the partitioned write
+    // emits no directory for it, so without the drop the old epoch —
+    // still holding the deleted rows — would stay visible)
+    val rewritten = s.dropBuckets ++ s.written
+    // every row THIS commit wrote passed bucketExprChecked's
+    // AssertNotNull, so the NULL-key certificate holds iff the base
+    // already carried it or no pre-existing epoch pointer survives
+    // (creation / truncating overwrite / delete-all rewrite)
+    val checked = base.forall(_.keysChecked) ||
+      (b.epochs.keySet -- rewritten).isEmpty
+    withRefreshedStats(b.copy(version = b.version + 1, buckets = t.buckets,
+      epochs = (b.epochs -- s.dropBuckets) ++ s.written.map(_ -> s.epoch),
+      overlays = b.overlays -- rewritten, eqds = b.eqds -- rewritten,
+      stats = (b.stats -- s.dropBuckets) ++ s.stats,
+      // the new txn (if any) rides the SAME atomic rename as the data
+      // it applied
+      txns = b.txns ++ txn,
+      // the committed schema is the written frame's (sans the physical
+      // bucket column) — on an evolving merge already the union schema,
+      // so schema and data commit in the same atomic rename
+      schema = t.schema, keyCols = t.keyCols,
+      // layout is recorded at creation; a CREATION race adopts the
+      // winner's (advisory layout, not a conflict)
+      clusterCols = if (b.clusterCols.nonEmpty) b.clusterCols
+                    else t.clusterCols,
+      bloomCols = if (b.bloomCols.nonEmpty) b.bloomCols else t.bloomCols,
+      bloomItems = if (b.bloomCols.nonEmpty) b.bloomItems else t.bloomItems,
+      // the epoch was written WITH the target's hidden shred columns
+      shredCols = t.shredCols,
+      op = opName, opTs = System.currentTimeMillis(), keysChecked = checked,
+      // a rebase over a non-conflicting commit keeps the id space
+      // monotone (a schema-moving concurrent commit conflicts, so ids
+      // can never collide)
+      colIds = t.colIds, nextColId = math.max(t.nextColId, b.nextColId),
+      // the batch was proven under the target's constraint set; the
+      // CAS loop conflicts when the set moved underneath the write
+      checks = t.checks,
+      idhw = advanceIdhw(b.idhw, s.idSpec, s.idExt)), s.batchSk)
+  }
+
+  /** Write `rows` (bucket column recomputed from the keys) into a fresh
+    * epoch directory ([[stageRewrite]]), then commit the next manifest
+    * version ([[assembleManifest]]) pointing the written buckets at it.
+    * Nothing is visible until the commit rename.
+    *
+    * OPTIMISTIC CONCURRENCY (Delta's commit protocol, scaled down): a
+    * lost version race does not fail the write outright. The CAS loop
+    * re-reads the current manifest and REBASES — it re-assembles the
+    * staged epoch on top of the winner's manifest — provided none of
+    * ITS buckets (written or dropped) changed signature since `prev`
+    * was read and the schema, modulus, merge keys, CHECK constraints and
+    * identity high-water are unchanged: disjoint-bucket writers then all
+    * succeed, serialized by the version CAS. A bucket this write
+    * READ-MODIFIED that the winner also rewrote means the survivors were
+    * computed from stale data — that is a genuine data conflict and
+    * fails loudly with `ConcurrentModificationException` (the caller
+    * re-runs its merge against the new state). The age guard in [[gc]]
+    * keeps the loser's staged epoch alive through this window.
+    */
+  private def writeEpochAndCommit(spark: SparkSession, fs: FileSystem,
+                                  tablePath: String, rows: DataFrame,
+                                  keys: Seq[String], buckets: Int,
+                                  prev: Option[Manifest],
+                                  txn: Option[(String, Long)] = None,
+                                  dropBuckets: Set[Int] = Set.empty,
+                                  clusterCols: Seq[String] = Seq.empty,
+                                  bloomCols: Seq[String] = Seq.empty,
+                                  bloomN: Long = DefaultBloomItems,
+                                  opName: String = "merge",
+                                  fpSeed: Boolean = false,
+                                  dvSeed: Boolean = false,
+                                  eqdSeed: Boolean = false,
+                                  ref: Option[String] = None,
+                                  shredSeed: Seq[ShredSpec] = Seq.empty)
+      : Unit = {
+    val s = stageRewrite(spark, fs, tablePath, rows, keys, buckets, prev,
+      dropBuckets, clusterCols, bloomCols, bloomN, fpSeed, dvSeed, eqdSeed,
+      shredSeed)
+    val t = s.target
+    val mine = s.written.toSet ++ dropBuckets
     var base = prev
     var attempt = 0
     while (true) {
-      // dropBuckets clears stale pointers for touched buckets the write
-      // left EMPTY (a delete can empty a bucket; the partitioned write
-      // emits no directory for it, so without the drop the old epoch —
-      // still holding the deleted rows — would stay visible)
-      val epochs = (base.map(_.epochs).getOrElse(Map.empty) -- dropBuckets) ++
-        written.map(_ -> epoch)
-      // a full bucket rewrite supersedes its merge-on-read overlays (the
-      // survivor read above already folded their rows in) — and its
-      // equality-delete records (the survivor read filtered doomed keys)
-      val overlays = (base.map(_.overlays).getOrElse(Map.empty)
-        -- dropBuckets) -- written
-      val eqds = (base.map(_.eqds).getOrElse(Map.empty)
-        -- dropBuckets) -- written
-      // txn ledger survives every commit; the new txn (if any) rides the
-      // SAME atomic rename as the data it applied
-      val txns = base.map(_.txns).getOrElse(Map.empty) ++ txn
-      // untouched buckets keep their old files' stats (their pointers
-      // didn't move); rewritten buckets take the fresh footer stats
-      val stats = (base.map(_.stats).getOrElse(Map.empty) -- dropBuckets) ++
-        fileStats
-      // clustering is recorded at creation; a CREATION race adopts the
-      // winner's recorded clustering (advisory layout, not a conflict)
-      val cluster = base.map(_.clusterCols).filter(_.nonEmpty)
-        .getOrElse(effCluster)
-      val bloom = base.map(_.bloomCols).filter(_.nonEmpty).getOrElse(effBloom)
-      val bloomSz = base.filter(_.bloomCols.nonEmpty).map(_.bloomItems)
-        .getOrElse(effBloomN)
-      // the committed schema is the written frame's (sans the physical
-      // bucket column) — on an evolving merge this is already the union
-      // schema, so the recorded schema and the data it describes commit
-      // in the same atomic rename
-      // every row THIS commit wrote passed bucketExprChecked's
-      // AssertNotNull, so the NULL-key certificate holds iff the base
-      // already carried it or no pre-existing epoch pointer survives
-      // (creation / truncating overwrite / delete-all rewrite)
-      val checked = base.forall(_.keysChecked) ||
-        (base.map(_.epochs.keySet).getOrElse(Set.empty) -- dropBuckets --
-          written).isEmpty
       try {
         refCommit(fs, new Path(tablePath), ref,
-          withRefreshedStats(
-          Manifest(base.map(_.version + 1).getOrElse(1L), buckets, epochs,
-            txns, Some(cleanSchema.json), keys, cluster, stats, bloom,
-            bloomSz, opName, System.currentTimeMillis(),
-            // retention + fingerprint policy ride every commit forward
-            base.map(_.retainVersions).getOrElse(KeepManifests),
-            base.map(_.retainMs).getOrElse(0L),
-            base.map(_.fingerprint).getOrElse(effFp),
-            keysChecked = checked,
-            // a rebase over a non-conflicting commit keeps the id space
-            // monotone (a schema-moving concurrent commit conflicts
-            // above, so ids can never collide)
-            colIds = colIds,
-            nextColId = math.max(nextColId,
-              base.map(_.nextColId).getOrElse(0L)),
-            // the deletion-vector policy rides every commit forward,
-            // like fingerprint; the param only seeds creation
-            deleteVectors = base.map(_.deleteVectors).getOrElse(dvSeed),
-            // ANALYZE statistics carry forward as estimates (Delta's
-            // behavior); statsVersion keeps naming the analyzed version
-            colStats = base.map(_.colStats).getOrElse(Map.empty),
-            statsVersion = base.map(_.statsVersion).getOrElse(0L),
-            statsRows = base.map(_.statsRows).getOrElse(0L),
-            // tags ride every commit forward; they name VERSIONS, so a
-            // new commit changes nothing about what they pin
-            tags = base.map(_.tags).getOrElse(Map.empty),
-            overlays = overlays,
-            // the fork version rides every branch commit (publish-time
-            // conflict check); -1 on main commits
-            branchBase = base.map(_.branchBase).getOrElse(-1L),
-            // constraints ride every commit forward; the rebase rule
-            // below conflicts when the set moved underneath this write
-            checks = effChecks,
-            colSketches = base.map(_.colSketches).getOrElse(Map.empty),
-            idhw = advanceIdhw(base.map(_.idhw).getOrElse(Map.empty),
-              epochIdSpec, idExt),
-            colHists = base.map(_.colHists).getOrElse(Map.empty),
-            eqds = eqds,
-            // the equality-delete policy rides every commit forward,
-            // like deleteVectors; the param only seeds creation
-            eqDeletes = base.map(_.eqDeletes).getOrElse(eqdSeed),
-            // shred declarations ride every commit forward (the epoch
-            // above was written WITH their hidden columns)
-            shredCols = effShred),
-          batchSk))
+          assembleManifest(base, s, txn, opName))
         return
       } catch {
         case e: java.io.IOException =>
@@ -7179,10 +7047,7 @@ object MergeWriter {
                   DataType.fromJson(a), DataType.fromJson(b))
               case (a, b) => a == b
             }
-          val schemaConflict = prev match {
-            case Some(p) => !same(cur.schema, p.schema)
-            case None => !same(cur.schema, Some(cleanSchema.json))
-          }
+          val schemaConflict = !same(cur.schema, prev.fold(t.schema)(_.schema))
           // a creation race where the winner chose a different modulus is
           // unrebasable: this write's rows were hashed with `buckets`, so
           // its bucket ids are meaningless under the winner's layout even
@@ -7195,10 +7060,10 @@ object MergeWriter {
           val keyConflict = cur.keyCols.nonEmpty && cur.keyCols != keys
           // a concurrent ADD/DROP CONSTRAINT invalidates this write's
           // enforcement pass (the batch was proven under the OLD set)
-          val checkConflict = cur.checks != effChecks
+          val checkConflict = cur.checks != t.checks
           // a concurrent commit that moved the identity high-water may
           // have assigned values overlapping this batch's reservation
-          val idConflict = epochIdSpec.nonEmpty &&
+          val idConflict = s.idSpec.nonEmpty &&
             cur.idhw != prev.map(_.idhw).getOrElse(Map.empty)
           if (conflicting || schemaConflict || bucketConflict ||
               keyConflict || checkConflict || idConflict) {
@@ -7222,25 +7087,14 @@ object MergeWriter {
     }
   }
 
-  /** Keyed DELETE — `MERGE INTO target USING keys ON keys WHEN MATCHED
-    * DELETE` (the reference's deleted-item reconciliation writes back
-    * exactly this: items the source no longer returns are purged from
-    * the state store, ref `delete_work_items.ts` semantics). Rows whose
-    * key appears in `keysToDelete` are removed; everything else
-    * survives. Same manifest-pruned I/O as [[merge]] — only buckets
-    * containing a deleted key are read and rewritten — and the same
-    * atomic commit; a bucket emptied entirely by the delete has its
-    * epoch pointer dropped from the new manifest. Deleting keys that
-    * are absent (or from an empty/missing table) is a no-op. Single
-    * writer per table, as ever.
-    */
   /** SCAN-TO-COMMIT conflict guard for row-level statements (SQL
     * MERGE/UPDATE/DELETE): the statement's changeset was derived from a
     * scan PINNED at `expectedVersion`, but the changeset is applied
     * against the manifest read at commit time — a commit landing during
     * the statement's (long) read/join phase would otherwise be silently
     * clobbered per overlapping key (lost update / write skew). Mirrors
-    * `writeEpochAndCommit`'s rebase rule: the apply may proceed iff no
+    * the rebase rule of [[writeEpochAndCommit]]'s CAS loop: the apply
+    * may proceed iff no
     * TOUCHED bucket's epoch pointer moved since the scanned version and
     * neither the schema nor the bucket modulus changed — anything else
     * raises the protocol's `ConcurrentModificationException` ("re-run
@@ -7281,6 +7135,18 @@ object MergeWriter {
             " — re-run against the new table state")
     }
 
+  /** Keyed DELETE — `MERGE INTO target USING keys ON keys WHEN MATCHED
+    * DELETE` (the reference's deleted-item reconciliation writes back
+    * exactly this: items the source no longer returns are purged from
+    * the state store, ref `delete_work_items.ts` semantics). Rows whose
+    * key appears in `keysToDelete` are removed; everything else
+    * survives. Same manifest-pruned I/O as [[merge]] — only buckets
+    * containing a deleted key are read and rewritten — and the same
+    * atomic commit; a bucket emptied entirely by the delete has its
+    * epoch pointer dropped from the new manifest. Deleting keys that
+    * are absent (or from an empty/missing table) is a no-op. Single
+    * writer per table, as ever.
+    */
   def delete(spark: SparkSession, tablePath: String, keysToDelete: DataFrame,
              keys: Seq[String],
              autoCompactEpochs: Int = AutoCompactEpochs,
@@ -7294,16 +7160,7 @@ object MergeWriter {
       require(branchHead(fs, dir, b).isDefined,
         s"delete: no branch '$b' on $tablePath — createBranch first")
     }
-    if (ref.isEmpty && currentManifest(fs, dir).isEmpty &&
-        legacyData(fs, dir)) {
-      // one-time migration read: mergeSchema merges heterogeneous legacy
-      // footers (files written across an additive evolution) — runs once
-      // per table, so the O(files) footer-job cost argument does not apply
-      val legacy = spark.read.option("mergeSchema", "true")
-        .parquet(tablePath).drop(BucketCol)
-      writeEpochAndCommit(spark, fs, tablePath, legacy, keys,
-        buckets = 64, prev = None)
-    }
+    if (ref.isEmpty) migrateLegacy(spark, fs, tablePath, keys, buckets = 64)
     refCurrent(fs, dir, ref).foreach { man =>
       validateKeys(man, keys, "delete")
       val del = keysToDelete.select(keys.map(col): _*).distinct()
@@ -7314,9 +7171,7 @@ object MergeWriter {
         val touched = touchedCounts.keys.toIndexedSeq.sorted
         requireScanCurrent(fs, tablePath, man, expectedVersion, touched,
           "delete", ref)
-        val existingPaths = touched.flatMap(b =>
-          (if (man.epochs.contains(b)) bucketDirPaths(tablePath, man, b)
-             else Seq.empty))
+        val existingPaths = touchedPaths(tablePath, man, touched)
         // no stored bucket holds any of these keys — nothing to rewrite,
         // and committing a no-change version would just churn gc
         if (existingPaths.isEmpty) return
@@ -7343,11 +7198,9 @@ object MergeWriter {
             man.buckets, Some(man), dropBuckets = touchedStored,
             opName = "delete", ref = ref)
         }
-        if (ref.isEmpty) {
-          gc(fs, dir)
-          maybeAutoCompact(spark, fs, dir, tablePath, autoCompactEpochs)
-          maybeAutoCompactMor(spark, fs, dir, tablePath)
-        }
+        // a delete only shrinks buckets: no split
+        if (ref.isEmpty)
+          maintainAfterWrite(spark, fs, tablePath, 0L, autoCompactEpochs)
       } finally { del.unpersist(); () }
     }
   }
@@ -7402,21 +7255,12 @@ object MergeWriter {
       .withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(nb)))
       .persist()
     try {
-      // the unique-key guard FUSED into the touched-buckets job (the
-      // merge() shape): the per-bucket agg also proves per-key
-      // multiplicity <= 1 over the persisted upserts — keys hash into
-      // one bucket, so duplicates are bucket-local — and only a
-      // detected duplicate pays the detailed requireUniqueKeys error
-      // pass. Saves one full pass over the changeset per statement.
-      val perUp = up.groupBy((col(BucketCol) +: keys.map(col)): _*)
-        .agg(count(lit(1)).as("__graft_kn"))
-        .groupBy(col(BucketCol))
-        .agg(max(col("__graft_kn")).as("__graft_mx"),
-          sum(col("__graft_kn")).as("__graft_n"))
-        .collect()
+      // the unique-key guard FUSED into the upserts' touched-buckets
+      // job — saves one full pass over the changeset per statement
+      val (upCounts, upDup) = touchedCountsUnique(up, keys)
       val delCounts = touchedBucketCounts(del)
       val touched =
-        (perUp.map(_.getInt(0)).toIndexedSeq ++ delCounts.keys).distinct
+        (upCounts.keys ++ delCounts.keys).toIndexedSeq.distinct.sorted
       if (touched.isEmpty) {
         // an empty changeset is applied by definition, but its txn must
         // still be recorded (mergeAdditive's rule: a redelivery WITH
@@ -7429,8 +7273,7 @@ object MergeWriter {
       // SQL's cardinality check only guards MATCHED rows, so a MERGE
       // whose NOT-MATCHED clause fires twice for one source key would
       // smuggle a duplicate past it
-      if (perUp.exists(_.getLong(1) > 1L))
-        requireUniqueKeys(up, keys, opName) // throws with key detail
+      if (upDup) requireUniqueKeys(up, keys, opName) // throws with key detail
       // MERGE-ON-READ fast path (deleteVectors tables, small changeset):
       // the upserts land as one overlay epoch, the changed keys' old
       // rows die by deletion vector — a SQL UPDATE/MERGE then writes
@@ -7439,20 +7282,18 @@ object MergeWriter {
             (if (man.eqDeletes)
               eqdApply(spark, fs, tablePath, man, Some(up), Some(del), keys,
                 touched, txn, opName, ref,
-                incTotalHint = Some(perUp.map(_.getLong(2)).sum),
+                incTotalHint = Some(upCounts.values.sum),
                 delTotalHint = Some(delCounts.values.sum))
             else morApply(spark, fs, tablePath, man, up, Some(del), keys,
               touched, txn, opName, ref,
-              incTotalHint = Some(perUp.map(_.getLong(2)).sum),
+              incTotalHint = Some(upCounts.values.sum),
               delTotalHint = Some(delCounts.values.sum))))) {
-        val existingPaths = touched.flatMap(b =>
-          (if (man.epochs.contains(b)) bucketDirPaths(tablePath, man, b)
-               else Seq.empty))
+        val existingPaths = touchedPaths(tablePath, man, touched)
         // every changed key vacates its stored row: upserted keys get
         // re-inserted from `up`, deleted keys just end here
         val gone0 = up.select(keys.map(col): _*)
           .union(del.select(keys.map(col): _*)).distinct()
-        val goneTotal = perUp.map(_.getLong(2)).sum + delCounts.values.sum
+        val goneTotal = upCounts.values.sum + delCounts.values.sum
         val gone =
           if (goneTotal <= BroadcastKeyMax) broadcast(gone0) else gone0
         val survivors =
@@ -7469,12 +7310,8 @@ object MergeWriter {
           Some(man), txn, dropBuckets = touchedStored, opName = opName,
           ref = ref)
       }
-      if (ref.isEmpty) {
-        gc(fs, dir)
-        maybeAutoSplit(spark, fs, dir, tablePath, AutoSplitBytesPerBucket)
-        maybeAutoCompact(spark, fs, dir, tablePath, autoCompactEpochs)
-        maybeAutoCompactMor(spark, fs, dir, tablePath)
-      }
+      if (ref.isEmpty) maintainAfterWrite(spark, fs, tablePath,
+        AutoSplitBytesPerBucket, autoCompactEpochs)
     } finally { up.unpersist(); del.unpersist(); () }
   }
 
@@ -7588,13 +7425,6 @@ object MergeWriter {
           names.toSeq.sorted.mkString("(", ",", ")")))
     }
 
-  /** The written bucket ids of a freshly-written epoch directory. */
-  private def listWrittenBuckets(fs: FileSystem, epochRoot: String): Seq[Int] =
-    fs.listStatus(new Path(epochRoot)).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith(BucketCol + "="))
-      .map(_.stripPrefix(BucketCol + "=").toInt)
-
   /** [[compact]]'s epoch rewrite WITHOUT a commit: write every live
     * bucket into one fresh epoch under `tableRoot` and return the
     * updated (uncommitted, version untouched) manifest state. Shared by
@@ -7636,34 +7466,12 @@ object MergeWriter {
             sch => spark.read.schema(sch).parquet(s"$tableRoot/$e"))
             .filter(col(BucketCol).isin(m.keys.toSeq: _*))
         }
-    val epoch = "e-" + UUID.randomUUID()
-    val clustered = clusterSort(
-      live.reduce(_ unionByName _).repartition(col(BucketCol)),
-      man.clusterCols)
-    // rewrites re-materialize the hidden shred columns (the schema-
-    // projected live read dropped them; they're a pure function)
-    withShredCols(clustered, man.shredCols)
-      .write.mode(SaveMode.ErrorIfExists).partitionBy(BucketCol)
-      .parquet(s"$tableRoot/$epoch")
-    if (man.bloomCols.nonEmpty || man.shredCols.nonEmpty)
-      writeBloomSidecar(spark, fs, s"$tableRoot/$epoch", man.bloomCols,
-        man.bloomItems, man.schema, man.shredCols)
-    val stats0 = collectFileStats(fs, new Path(s"$tableRoot/$epoch"),
-      withColumnStats = man.clusterCols.nonEmpty,
-      priorityCols = man.shredCols.map(shredColName).toSet)
-    man.copy(
-      epochs = listWrittenBuckets(fs, s"$tableRoot/$epoch")
-        .map(_ -> epoch).toMap,
-      // the rewrite folded every overlay's rows in — collapse them,
-      // and it filtered every doomed key out — purge the eq-deletes
-      overlays = Map.empty,
-      eqds = Map.empty,
-      stats =
-        if (man.fingerprint)
-          withFingerprints(stats0,
-            fileFingerprints(spark, s"$tableRoot/$epoch", man.schema,
-              man.colIds))
-        else stats0)
+    val (epoch, written, stats) = stageEpoch(spark, fs, tableRoot,
+      live.reduce(_ unionByName _), man)
+    // the rewrite folded every overlay's rows in — collapse them, and
+    // it filtered every doomed key out — purge the eq-deletes
+    man.copy(epochs = written.map(_ -> epoch).toMap,
+      overlays = Map.empty, eqds = Map.empty, stats = stats)
   }
 
   /** PARTIAL compaction — rewrite ONLY the given buckets into one fresh
@@ -7690,27 +7498,8 @@ object MergeWriter {
           bucketDirPaths(tablePath, man, b))
           .withColumn(BucketCol, lit(b))
       }
-      val epoch = "e-" + UUID.randomUUID()
-      val clustered = clusterSort(
-        live.reduce(_ unionByName _).repartition(col(BucketCol)),
-        man.clusterCols)
-      withShredCols(clustered, man.shredCols)
-        .write.mode(SaveMode.ErrorIfExists).partitionBy(BucketCol)
-        .parquet(s"$tablePath/$epoch")
-      val written = listWrittenBuckets(fs, s"$tablePath/$epoch").toSet
-      if ((man.bloomCols.nonEmpty || man.shredCols.nonEmpty) &&
-          written.nonEmpty)
-        writeBloomSidecar(spark, fs, s"$tablePath/$epoch", man.bloomCols,
-          man.bloomItems, man.schema, man.shredCols)
-      val stats0 = collectFileStats(fs, new Path(s"$tablePath/$epoch"),
-        withColumnStats = man.clusterCols.nonEmpty,
-        priorityCols = man.shredCols.map(shredColName).toSet)
-      val fresh =
-        if (man.fingerprint && written.nonEmpty)
-          withFingerprints(stats0,
-            fileFingerprints(spark, s"$tablePath/$epoch", man.schema,
-              man.colIds))
-        else stats0
+      val (epoch, written, fresh) = stageEpoch(spark, fs, tablePath,
+        live.reduce(_ unionByName _), man)
       commitOrConflict(fs, dir, man.copy(
         version = man.version + 1,
         // rewritten buckets point at the fresh epoch; a fully-dead
@@ -7732,6 +7521,22 @@ object MergeWriter {
     * cluster's main load). Advisory like auto-compaction: a lost race
     * never fails the commit that already landed.
     */
+  /** Post-commit maintenance of a single-table write: gc, then the
+    * advisory auto-split, auto-compaction and merge-on-read drain, each
+    * deciding from the just-committed manifest. `splitBytes = 0` never
+    * splits.
+    */
+  private def maintainAfterWrite(spark: SparkSession, fs: FileSystem,
+                                 tablePath: String, splitBytes: Long,
+                                 compactEpochs: Int): Unit =
+    labeled(spark, "graft.maintain") {
+      val dir = new Path(tablePath)
+      gc(fs, dir)
+      maybeAutoSplit(spark, fs, dir, tablePath, splitBytes)
+      maybeAutoCompact(spark, fs, dir, tablePath, compactEpochs)
+      maybeAutoCompactMor(spark, fs, dir, tablePath)
+    }
+
   private def maybeAutoCompactMor(spark: SparkSession, fs: FileSystem,
                                   dir: Path, tablePath: String): Unit =
     currentManifest(fs, dir).foreach { man =>
@@ -7823,28 +7628,16 @@ object MergeWriter {
     val paths = allDirPaths(tableRoot, man)
     if (paths.isEmpty) man.copy(buckets = nb2, keyCols = keyRec)
     else {
-      val epoch = "e-" + UUID.randomUUID()
       val rebinned = readWithSchema(spark, man, tableRoot, paths)
         .withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(nb2)))
-      // clustering survives the split as a LOCAL sort (still no
-      // exchange in the plan — sortWithinPartitions orders each scan
-      // task's fan-out before the per-bucket file writes)
-      val clustered = clusterSort(rebinned, man.clusterCols)
-      withShredCols(clustered, man.shredCols)
-        .write.mode(SaveMode.ErrorIfExists).partitionBy(BucketCol)
-        .parquet(s"$tableRoot/$epoch")
-      if (man.bloomCols.nonEmpty || man.shredCols.nonEmpty)
-        writeBloomSidecar(spark, fs, s"$tableRoot/$epoch", man.bloomCols,
-          man.bloomItems, man.schema, man.shredCols)
-      man.copy(buckets = nb2,
-        epochs = listWrittenBuckets(fs, s"$tableRoot/$epoch")
-          .map(_ -> epoch).toMap,
-        overlays = Map.empty,
-        eqds = Map.empty,
-        keyCols = keyRec,
-        stats = collectFileStats(fs, new Path(s"$tableRoot/$epoch"),
-        withColumnStats = man.clusterCols.nonEmpty,
-        priorityCols = man.shredCols.map(shredColName).toSet))
+      // no repartition: clustering survives the split as a LOCAL sort
+      // (still no exchange in the plan — sortWithinPartitions orders
+      // each scan task's fan-out before the per-bucket file writes)
+      val (epoch, written, stats) = stageEpoch(spark, fs, tableRoot,
+        rebinned, man, repartition = false)
+      man.copy(buckets = nb2, epochs = written.map(_ -> epoch).toMap,
+        overlays = Map.empty, eqds = Map.empty, keyCols = keyRec,
+        stats = stats)
     }
   }
 

@@ -2461,4 +2461,97 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
   }
+
+  test("every epoch-writing entry point keeps the model's rows and leaves " +
+    "each live file fingerprinted with stats") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("stager").toString
+    val (cow, dv, eqd, add) =
+      (s"$root/cow", s"$root/dv", s"$root/eqd", s"$root/add")
+    type Model = Map[String, (Long, Long)]
+    def frame(m: Model) =
+      m.toSeq.map { case (k, (d, v)) => (k, d, v) }.toDF("k", "d", "v")
+    def batch(from: Int, n: Int, v: Long): Model =
+      (from until from + n).map(i => s"k$i" -> ((i % 7).toLong, v)).toMap
+    val keys = Seq("k")
+    // a small fingerprinted, clustered, bloom-declared table per policy
+    def create(dir: String, dvs: Boolean, eqds: Boolean): Model = {
+      val m = batch(0, 40, 1L)
+      MergeWriter.merge(spark, dir, frame(m), keys, buckets = 4,
+        clusterBy = Seq("d"), bloomBy = Seq("k"), bloomItems = 100,
+        fingerprint = true, deleteVectors = dvs, eqDeletes = eqds)
+      m
+    }
+    def upsert(dir: String)(m: Model): Model = {
+      val b = batch(35, 10, 2L)
+      MergeWriter.merge(spark, dir, frame(b), keys)
+      m ++ b
+    }
+    // (step, table, the write and the model it leaves, lands an overlay)
+    val steps: Seq[(String, String, Model => Model, Boolean)] = Seq(
+      ("merge creates", cow, _ => create(cow, dvs = false, eqds = false),
+        false),
+      ("merge rewrites", cow, upsert(cow), false),
+      ("delete", cow, { m =>
+        MergeWriter.delete(spark, cow, Seq("k3", "k31", "k44").toDF("k"), keys)
+        m -- Seq("k3", "k31", "k44") }, false),
+      ("applyChanges", cow, { m =>
+        val up = batch(40, 10, 3L)
+        MergeWriter.applyChanges(spark, cow, frame(up),
+          Seq("k0", "k1").toDF("k"), keys)
+        m -- Seq("k0", "k1") ++ up }, false),
+      ("mergeVersioned", cow, { m =>
+        val b = batch(10, 5, 9L) ++ batch(45, 10, 0L)
+        MergeWriter.mergeVersioned(spark, cow, frame(b), keys, "v")
+        m ++ b.filter { case (k, (_, v)) => m.get(k).forall(_._2 < v) }
+      }, false),
+      ("overwriteTable", cow, { _ =>
+        val b = batch(100, 30, 4L)
+        MergeWriter.overwriteTable(spark, cow, frame(b), keys)
+        b }, false),
+      ("compact", cow, { m => MergeWriter.compact(spark, cow); m }, false),
+      ("compactBuckets", cow,
+        { m => MergeWriter.compactBuckets(spark, cow, Set(0, 1)); m }, false),
+      ("splitBuckets", cow,
+        { m => MergeWriter.splitBuckets(spark, cow, keys); m }, false),
+      ("merge creates (deleteVectors)", dv,
+        _ => create(dv, dvs = true, eqds = false), false),
+      ("merge overlays (deleteVectors)", dv, upsert(dv), true),
+      ("merge creates (eqDeletes)", eqd,
+        _ => create(eqd, dvs = true, eqds = true), false),
+      ("merge overlays (eqDeletes)", eqd, upsert(eqd), true),
+      ("mergeAdditive", add, { _ =>
+        MergeWriter.createTable(spark, add,
+          org.apache.spark.sql.types.StructType.fromDDL(
+            "k STRING, d BIGINT, v BIGINT"), keys, buckets = 4,
+          clusterBy = Seq("d"), bloomBy = Seq("k"), bloomItems = 100,
+          fingerprint = true)
+        val b = batch(0, 30, 1L)
+        MergeWriter.mergeAdditive(spark, add, frame(b), keys,
+          Seq("d", "v"), txn = ("app", 1L))
+        b }, false),
+      ("mergeAdditive folds", add, { m =>
+        val b = batch(20, 20, 5L)
+        MergeWriter.mergeAdditive(spark, add, frame(b), keys,
+          Seq("d", "v"), txn = ("app", 2L))
+        m ++ b.map { case (k, (d, v)) =>
+          k -> m.get(k).fold((d, v)) { case (d0, v0) => (d0 + d, v0 + v) }
+        } }, false))
+    val models = scala.collection.mutable.Map.empty[String, Model]
+    steps.foreach { case (step, dir, write, overlay) =>
+      val m = write(models.getOrElse(dir, Map.empty))
+      models(dir) = m
+      val got = MergeWriter.readTable(spark, dir).collect()
+        .map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap
+      assert(got == m, step)
+      val files = MergeWriter.tableFiles(spark, dir).collect()
+      assert(files.nonEmpty, step)
+      assert(files.exists(_.getAs[Boolean]("overlay")) == overlay, step)
+      files.foreach { f =>
+        assert(f.getAs[Boolean]("fingerprinted") && !f.isNullAt(
+          f.fieldIndex("rows")) && f.getAs[Int]("stats_cols") > 0,
+          s"$step: $f")
+      }
+    }
+  }
 }
