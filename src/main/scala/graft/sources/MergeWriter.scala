@@ -878,26 +878,35 @@ object MergeWriter {
     * Every commit runs gc + auto-split/compact probes, each of which
     * re-read manifests — without the cache one commit parses O(retained
     * versions) stats-heavy JSONs, an O(commits²) driver tax per table.
+    * Group manifests share it: table and group manifest files carry
+    * distinct name prefixes, so a path always holds one kind.
     */
   private val manifestCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (Long, Long, Manifest)](
+    new java.util.LinkedHashMap[String, (Long, Long, Long, AnyRef)](
       64, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Long, Long, Manifest)]): Boolean =
+          e: java.util.Map.Entry[String, (Long, Long, Long, AnyRef)]): Boolean =
         size() > 512
     })
 
-  private def readManifest(fs: FileSystem, version: Long, p: Path): Manifest = {
+  /** The parsed manifest at `p` (table or group), served from
+    * [[manifestCache]] while the file's (mtime, len) still match.
+    */
+  private def cachedManifest[A <: AnyRef](fs: FileSystem, version: Long,
+                                          p: Path)(parse: => A): A = {
     val st = fs.getFileStatus(p)
     val key = p.toString
     val hit = manifestCache.get(key)
     if (hit != null && hit._1 == st.getModificationTime &&
-        hit._2 == st.getLen && hit._3.version == version)
-      return hit._3
-    val m = readManifestUncached(fs, version, p)
-    manifestCache.put(key, (st.getModificationTime, st.getLen, m))
+        hit._2 == st.getLen && hit._3 == version)
+      return hit._4.asInstanceOf[A]
+    val m = parse
+    manifestCache.put(key, (st.getModificationTime, st.getLen, version, m))
     m
   }
+
+  private def readManifest(fs: FileSystem, version: Long, p: Path): Manifest =
+    cachedManifest(fs, version, p)(readManifestUncached(fs, version, p))
 
   private def readManifestUncached(fs: FileSystem, version: Long,
                                    p: Path): Manifest = {
@@ -1217,28 +1226,18 @@ object MergeWriter {
     publishAtomically(fs, dir, target, body)
   }
 
-  /** The one manifest-publish seam: inline below the bucket threshold,
-    * segmented above it.
-    */
-  private def publishManifest(fs: FileSystem, dir: Path, target: Path,
-                              m: Manifest): Unit =
-    if (m.buckets > SegInlineMaxBuckets)
-      segmentedPublish(fs, dir, target, m)
-    else publishAtomically(fs, dir, target, manifestBody(m))
-
-  private def commitManifest(fs: FileSystem, dir: Path, m: Manifest): Unit =
-    publishManifest(fs, dir,
-      new Path(dir, f"$ManifestPrefix${m.version}%016d.json"), m)
-
-  /** [[commitManifest]] / [[currentManifest]] redirected by an optional
-    * branch ref — the ONE seam branch-targeted writes differ by: same
-    * epoch staging, same rebase loop, different manifest lineage.
+  /** Publish `m` as the next manifest of the table's main lineage or,
+    * with `ref`, of a branch — inline below the bucket threshold,
+    * segmented above it. The ONE seam branch-targeted writes differ by:
+    * same epoch staging, same commit loop, different manifest lineage.
+    * Only [[tableTarget]] calls it.
     */
   private def refCommit(fs: FileSystem, dir: Path, ref: Option[String],
-                        m: Manifest): Unit = ref match {
-    case None => commitManifest(fs, dir, m)
-    case Some(b) => publishManifest(fs, dir,
-      new Path(dir, f"${branchManPrefix(b)}${m.version}%016d.json"), m)
+                        m: Manifest): Unit = {
+    val target = new Path(dir,
+      f"${ref.fold(ManifestPrefix)(branchManPrefix)}${m.version}%016d.json")
+    if (m.buckets > SegInlineMaxBuckets) segmentedPublish(fs, dir, target, m)
+    else publishAtomically(fs, dir, target, manifestBody(m))
   }
 
   private def refCurrent(fs: FileSystem, dir: Path,
@@ -1254,14 +1253,114 @@ object MergeWriter {
       case Some(b) => manifestFiles(fs, dir, branchManPrefix(b))
     }
 
-  /** Commit for maintenance operations (compact, splitBuckets,
-    * truncateHistory) whose staged state was derived from ONE observed
-    * version: losing the version CAS to a concurrent merge means the
-    * derivation is stale, so surface the protocol's documented
-    * `ConcurrentModificationException` ("re-run against the new table
-    * state") instead of [[publishAtomically]]'s raw IOException — safe
-    * either way, but callers catch the protocol exception.
+  // ==== THE COMMIT LOOP ===================================================
+
+  /** Where a manifest publish lands: a table's main lineage or one of its
+    * branches ([[tableTarget]]), or a group root ([[groupTarget]]).
+    * `stamp` sets the version, op and commit time of a manifest.
     */
+  private final class CommitTarget[M](val where: String, val what: String,
+                                      val current: () => Option[M],
+                                      val publish: M => Unit,
+                                      val version: M => Long,
+                                      val stamp: (M, Long, String) => M)
+
+  private def tableTarget(fs: FileSystem, dir: Path,
+                          ref: Option[String] = None): CommitTarget[Manifest] =
+    new CommitTarget[Manifest](
+      dir.toString + ref.fold("")(b => s" (branch '$b')"), "table",
+      () => refCurrent(fs, dir, ref), refCommit(fs, dir, ref, _), _.version,
+      (m, v, op) => m.copy(version = v, op = op,
+        opTs = System.currentTimeMillis()))
+
+  private def groupTarget(fs: FileSystem,
+                          dir: Path): CommitTarget[GroupManifest] =
+    new CommitTarget[GroupManifest](dir.toString, "group",
+      () => currentGroupManifest(fs, dir), commitGroupManifest(fs, dir, _),
+      _.version, (g, v, op) => g.copy(version = v, op = op,
+        opTs = System.currentTimeMillis()))
+
+  /** Publish attempts per commit, the first included. */
+  private val CommitAttempts = 6
+
+  /** A commit rule for edits that re-derive from whichever head wins. */
+  private val rebase: Any => Option[String] = _ => None
+
+  /** THE commit loop: every manifest publish, table or group, goes
+    * through it. `step` maps the base (`start` first; `None` = nothing
+    * committed yet, so the publish is version 1) to the next manifest,
+    * or to `None` when there is nothing to commit; the loop stamps the
+    * version, `op` and commit time and publishes through the target's
+    * no-overwrite CAS. A lost CAS re-reads the winner and asks
+    * `conflict`: `Some(reason)` fails with the protocol's
+    * `ConcurrentModificationException(reason)`, `None` rebases — `step`
+    * re-derives on the winner and the loop retries, at most
+    * [[CommitAttempts]] publishes in all, after which it fails with the
+    * same exception naming `op`. Three kinds of caller:
+    *   - metadata edits re-derive from the winner and never conflict
+    *     ([[rebase]]; [[addCheckConstraint]] also conflicts when the
+    *     data it validated moved);
+    *   - staged data writes rebase while the winner left what they read
+    *     and reserved alone ([[contested]]);
+    *   - a publish derived from ONE observed version (compaction,
+    *     splits, index builds, history truncation, fast-forward, table
+    *     and branch creation) conflicts on any loss — the derivation is
+    *     stale.
+    * Returns the committed manifest, or `None` when `step` declined.
+    * Post-commit gc and maintenance stay with the caller.
+    */
+  private def commitLoop[M](t: CommitTarget[M], op: String,
+                            start: Option[M])(
+      conflict: M => Option[String])(
+      step: Option[M] => Option[M]): Option[M] = {
+    @annotation.tailrec
+    def attempt(base: Option[M], n: Int): Option[M] = step(base) match {
+      case None => None
+      case Some(next) =>
+        val m = t.stamp(next, base.fold(1L)(t.version(_) + 1), op)
+        val lost =
+          try { t.publish(m); None }
+          catch { case e: java.io.IOException => Some(e) }
+        lost match {
+          case None => Some(m)
+          case Some(e) =>
+            def fail(reason: String): Nothing =
+              throw new java.util.ConcurrentModificationException(reason, e)
+            if (n >= CommitAttempts)
+              fail(s"$op: lost the commit race to concurrent writers of " +
+                s"${t.where} on every retry ($n attempts) — re-run against " +
+                s"the new ${t.what} state")
+            val winner = t.current().getOrElse(fail(
+              s"$op: ${t.where} holds no committed ${t.what} after a lost " +
+                "commit — re-run against the new state"))
+            conflict(winner).foreach(fail)
+            attempt(Some(winner), n + 1)
+        }
+    }
+    attempt(start, 1)
+  }
+
+  /** The rule of a publish derived from ONE observed version `base`: a
+    * loss means the derivation is stale.
+    */
+  private def lostRace[M](t: CommitTarget[M], op: String,
+                          base: M): M => Option[String] = {
+    val msg = s"$op: lost the version-${t.version(base) + 1} commit race " +
+      s"to a concurrent writer of ${t.where} — re-run against the new " +
+      s"${t.what} state"
+    _ => Some(msg)
+  }
+
+  /** A metadata edit of a table: `edit` re-derives the next manifest
+    * from whichever head wins (`None` = nothing to change). True when it
+    * committed.
+    */
+  private def editTable(fs: FileSystem, dir: Path, op: String,
+                        man: Manifest, ref: Option[String] = None)(
+      edit: Manifest => Option[Manifest]): Boolean =
+    commitLoop(tableTarget(fs, dir, ref), op, Some(man))(rebase)(
+      _.flatMap(edit)).nonEmpty
+
   /** Bucket id of a row's key tuple — PLUS the write-side enforcement
     * of the keyed invariant that no key column is NULL (the catalog
     * surfaces keys as NOT NULL; a stored NULL key would let Catalyst's
@@ -1303,48 +1402,23 @@ object MergeWriter {
         "deduplicate the source and re-run")
   }
 
-  private def commitOrConflict(fs: FileSystem, dir: Path, m: Manifest,
-                               op: String): Unit =
-    try commitManifest(fs, dir,
-      m.copy(op = op, opTs = System.currentTimeMillis()))
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"$op: lost the version-${m.version} commit race to a concurrent " +
-            s"writer of $dir — re-run against the new table state", e)
-    }
-
   /** Metadata-only commit recording a streaming txn guard on an empty
     * batch. Unlike a data commit — whose staged epoch becomes stale on a
     * lost CAS — the guard derives from nothing, so losing the race to a
     * concurrent writer is retriable: re-read the manifest (which may
     * already carry an equal-or-newer guard from a concurrent replay, in
-    * which case stop) and re-publish on top of it. Stamps `op`/`opTs` so
-    * tableHistory shows the guard commit, not a duplicate of the prior
-    * operation.
+    * which case stop) and re-publish on top of it. Stamps `op = "txn"`
+    * so tableHistory shows the guard commit, not a duplicate of the
+    * prior operation.
     */
   private def commitTxnGuard(fs: FileSystem, dir: Path,
                              t: (String, Long),
-                             ref: Option[String] = None): Unit = {
-    var attempts = 0
-    while (attempts < 50) {
-      attempts += 1
-      refCurrent(fs, dir, ref) match {
-        case None => return // table vanished — nothing to guard
-        case Some(man) =>
-          if (man.txns.get(t._1).exists(_ >= t._2)) return
-          try {
-            refCommit(fs, dir, ref, man.copy(version = man.version + 1,
-              txns = man.txns + t, op = "txn",
-              opTs = System.currentTimeMillis()))
-            return
-          } catch { case _: java.io.IOException => () } // lost CAS — rebase
-      }
+                             ref: Option[String] = None): Unit =
+    refCurrent(fs, dir, ref).foreach { man0 =>
+      editTable(fs, dir, "txn", man0, ref)(man =>
+        if (man.txns.get(t._1).exists(_ >= t._2)) None
+        else Some(man.copy(txns = man.txns + t)))
     }
-    throw new java.io.IOException(
-      s"txn: could not record streaming txn guard $t on $dir after " +
-        s"$attempts attempts (persistent commit contention)")
-  }
 
   /** Record an exactly-once txn anchor WITHOUT data (a consumer that
     * proved its window contributes nothing must still advance, or it
@@ -1418,8 +1492,8 @@ object MergeWriter {
     * stage the body under a dot-file (invisible to readers — the
     * manifest listing filters on prefix), then publish through the
     * installed [[CommitPrimitive]]. Loss surfaces as the protocol's
-    * commit-failed IOException, which every caller maps to rebase /
-    * retry / `ConcurrentModificationException` per its own contract.
+    * commit-failed IOException, which [[commitLoop]] maps to a rebase
+    * or a `ConcurrentModificationException` by its caller's rule.
     */
   private def publishAtomically(fs: FileSystem, dir: Path, target: Path,
                                 body: String): Unit = {
@@ -1616,27 +1690,14 @@ object MergeWriter {
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
     // metadata-only transform: a lost CAS just means a concurrent merge
-    // won the version — re-read and re-apply the expiry on the new state
-    // (the same rebase idea as writeEpochAndCommit, trivially safe here
-    // because nothing was staged), bounded like the merge retry loop
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => return
-        case Some(man) =>
-          val remaining = man.txns -- apps
-          if (remaining.size == man.txns.size) return
-          try {
-            commitManifest(fs, dir,
-              man.copy(version = man.version + 1, txns = remaining))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
+    // won the version — the expiry re-applies on the new state
+    currentManifest(fs, dir).foreach { man0 =>
+      if (editTable(fs, dir, "expireTxns", man0) { man =>
+        val remaining = man.txns -- apps
+        if (remaining.size == man.txns.size) None
+        else Some(man.copy(txns = remaining))
+      }) gc(fs, dir)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"expireTxns: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
   }
 
   /** Collapse readable history to the CURRENT state — the
@@ -1669,10 +1730,12 @@ object MergeWriter {
       // age-retained table must setRetention down first (or wait it
       // out); silently overriding the recorded policy here would defeat
       // the lagging-consumer guarantee it exists for.
-      (1 until math.max(KeepManifests, man.retainVersions)).foreach { i =>
-        commitOrConflict(fs, dir, man.copy(version = man.version + i),
-          "truncateHistory")
-      }
+      val t = tableTarget(fs, dir)
+      (1 until math.max(KeepManifests, man.retainVersions))
+        .foldLeft(man) { (base, _) =>
+          commitLoop(t, "truncateHistory", Some(base))(
+            lostRace(t, "truncateHistory", base))(_ => Some(man)).get
+        }
       gc(fs, dir)
     }
   }
@@ -1695,35 +1758,19 @@ object MergeWriter {
         "with numeric versions, so a number cannot be a tag")
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
+    val man0 = currentManifest(fs, dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"createTag: $tablePath holds no committed graft table"))
     // resolve the DEFAULT version ONCE, before any retry: a lost commit
     // race must re-apply the tag to the version current AT THE CALL,
     // never silently re-target the concurrent writer's newer state — a
     // WAP pipeline that validated version N and tags "certified" must
     // pin N or fail, not pin unaudited N+1
-    val v = version.getOrElse(currentManifest(fs, dir)
-      .map(_.version)
-      .getOrElse(throw new IllegalArgumentException(
-        s"createTag: $tablePath holds no committed graft table")))
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"createTag: $tablePath holds no committed graft table")
-        case Some(man) =>
-          retainedFile(fs, dir, ManifestPrefix, v)
-          try {
-            commitManifest(fs, dir,
-              man.copy(version = man.version + 1,
-                tags = man.tags + (tag -> v),
-                op = "tag", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"createTag: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
+    val v = version.getOrElse(man0.version)
+    if (editTable(fs, dir, "tag", man0) { man =>
+      retainedFile(fs, dir, ManifestPrefix, v)
+      Some(man.copy(tags = man.tags + (tag -> v)))
+    }) gc(fs, dir)
   }
 
   /** Drop a version tag; the version it pinned becomes reclaimable by
@@ -1732,24 +1779,11 @@ object MergeWriter {
   def dropTag(spark: SparkSession, tablePath: String, tag: String): Unit = {
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => return
-        case Some(man) =>
-          if (!man.tags.contains(tag)) return
-          try {
-            commitManifest(fs, dir,
-              man.copy(version = man.version + 1, tags = man.tags - tag,
-                op = "untag", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
+    currentManifest(fs, dir).foreach { man0 =>
+      if (editTable(fs, dir, "untag", man0)(man =>
+        if (!man.tags.contains(tag)) None
+        else Some(man.copy(tags = man.tags - tag)))) gc(fs, dir)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"dropTag: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
   }
 
   // ---- CHECK CONSTRAINTS (ANSI table constraints) ---------------------
@@ -1909,36 +1943,18 @@ object MergeWriter {
         s"addCheckConstraint: existing rows of $tablePath violate " +
           s"CHECK ($predicate) — e.g. ${violating(0)}; constraint " +
           "not added")
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"addCheckConstraint: $tablePath lost its manifest")
-        case Some(man) =>
-          // a concurrent data commit since the validation scan may have
-          // added rows the scan never saw — those went through an
-          // enforcement pass WITHOUT this constraint, so the proof no
-          // longer covers the table: re-validate instead of committing
-          if (man.version != man0.version &&
-              (man.epochs != man0.epochs || man.overlays != man0.overlays ||
-                dvFileRefs(man) != dvFileRefs(man0)))
-            throw new java.util.ConcurrentModificationException(
-              s"addCheckConstraint: $tablePath moved from version " +
-                s"${man0.version} to ${man.version} during validation — " +
-                "re-run against the new table state")
-          try {
-            commitManifest(fs, dir,
-              man.copy(version = man.version + 1,
-                checks = man.checks + (name -> predicate),
-                op = "addconstraint", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"addCheckConstraint: lost the commit race to concurrent writers " +
-        s"of $tablePath on every retry — re-run against the new table state")
+    // a concurrent data commit since the validation scan may have added
+    // rows the scan never saw — those went through an enforcement pass
+    // WITHOUT this constraint, so the proof no longer covers the table:
+    // re-validate instead of committing
+    commitLoop(tableTarget(fs, dir), "addconstraint", Some(man0)) { man =>
+      if (man.epochs == man0.epochs && man.overlays == man0.overlays &&
+          dvFileRefs(man) == dvFileRefs(man0)) None
+      else Some(s"addCheckConstraint: $tablePath moved from version " +
+        s"${man0.version} to ${man.version} during validation — " +
+        "re-run against the new table state")
+    }(_.map(man => man.copy(checks = man.checks + (name -> predicate))))
+    gc(fs, dir)
   }
 
   /** Drop a named CHECK constraint (metadata-only commit; absent name
@@ -1948,24 +1964,11 @@ object MergeWriter {
                           name: String): Unit = {
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => return
-        case Some(man) =>
-          if (!man.checks.contains(name)) return
-          try {
-            commitManifest(fs, dir,
-              man.copy(version = man.version + 1, checks = man.checks - name,
-                op = "dropconstraint", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
+    currentManifest(fs, dir).foreach { man0 =>
+      if (editTable(fs, dir, "dropconstraint", man0)(man =>
+        if (!man.checks.contains(name)) None
+        else Some(man.copy(checks = man.checks - name)))) gc(fs, dir)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"dropCheckConstraint: lost the commit race to concurrent writers " +
-        s"of $tablePath on every retry — re-run against the new table state")
   }
 
   // ---- IDENTITY COLUMNS (GENERATED BY DEFAULT AS IDENTITY) ------------
@@ -2289,10 +2292,13 @@ object MergeWriter {
         s"createBranch: $tablePath holds no committed graft table"))
     require(branchHead(fs, dir, name).isEmpty,
       s"createBranch: branch '$name' already exists on $tablePath")
-    publishManifest(fs, dir,
-      new Path(dir, f"${branchManPrefix(name)}${man.version}%016d.json"),
-      man.copy(branchBase = man.version, op = "branch-create",
-        opTs = System.currentTimeMillis()))
+    // the branch lineage continues main's numbering: its first manifest
+    // takes main's version, as if based on the one before it
+    commitLoop(tableTarget(fs, dir, Some(name)), "branch-create",
+      Some(man.copy(version = man.version - 1)))(_ => Some(
+      s"createBranch: a racing createBranch('$name') on $tablePath " +
+        "published first — re-check the branch state and retry"))(
+      _ => Some(man.copy(branchBase = man.version)))
     // VERIFY after publish: the file-name CAS only collides when two
     // racing creators fork at the SAME main version — a main commit
     // between their reads gives them different file names and both
@@ -2341,18 +2347,12 @@ object MergeWriter {
           s"${cur.version} since branch '$name' forked at " +
           s"${bh.branchBase} — the staged (and audited) state no longer " +
           "applies; re-stage on a fresh branch")
-    try {
-      commitManifest(fs, dir, bh.copy(version = cur.version + 1,
-        branchBase = -1L, op = "fast_forward",
-        opTs = System.currentTimeMillis()))
-    } catch {
-      case e: java.io.IOException =>
-        // the no-overwrite CAS lost: a main commit raced the publish
-        throw new java.util.ConcurrentModificationException(
-          s"fastForward: a concurrent main commit on $tablePath beat " +
-            s"the publish of branch '$name' — the staged state no " +
-            "longer applies; re-stage on a fresh branch", e)
-    }
+    // a lost CAS means a main commit raced the publish
+    commitLoop(tableTarget(fs, dir), "fast_forward", Some(cur))(_ => Some(
+      s"fastForward: a concurrent main commit on $tablePath beat " +
+        s"the publish of branch '$name' — the staged state no " +
+        "longer applies; re-stage on a fresh branch"))(
+      _ => Some(bh.copy(branchBase = -1L)))
     // retire ONLY the published prefix (K ≤ the head this publish
     // carried): a staged commit racing the publish lands at K+1 and
     // must not be silently destroyed — it survives as a still-listed
@@ -2404,14 +2404,6 @@ object MergeWriter {
           s"$tablePath (tags: ${man.tags.keys.toSeq.sorted.mkString(", ")})"))
     }
 
-  /** Set the table's retention policy (see [[Manifest.retainVersions]]):
-    * a metadata-only commit every later commit carries forward.
-    * `versions` below [[KeepManifests]] clamps up (a pinned reader must
-    * survive one concurrent commit); `ms` = 0 means count-only. Takes
-    * effect immediately — RAISING retention stops gc from dropping
-    * history from now on (already-collected versions are gone);
-    * lowering it lets the next commit's gc reclaim.
-    */
   /** The table's current retention policy `(versions, ms)` — the
     * catalog's ALTER TABLE reads it to apply partial updates.
     */
@@ -2421,30 +2413,26 @@ object MergeWriter {
       .map(m => (m.retainVersions, m.retainMs))
       .getOrElse((KeepManifests, 0L))
 
+  /** Set the table's retention policy (see [[Manifest.retainVersions]]):
+    * a metadata-only commit every later commit carries forward.
+    * `versions` below [[KeepManifests]] clamps up (a pinned reader must
+    * survive one concurrent commit); `ms` = 0 means count-only. Takes
+    * effect immediately — RAISING retention stops gc from dropping
+    * history from now on (already-collected versions are gone);
+    * lowering it lets the next commit's gc reclaim.
+    */
   def setRetention(spark: SparkSession, tablePath: String,
                    versions: Int = KeepManifests, ms: Long = 0L): Unit = {
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"setRetention: no committed graft table at $tablePath")
-        case Some(man) =>
-          val v = math.max(KeepManifests, versions)
-          if (man.retainVersions == v && man.retainMs == ms) return
-          try {
-            commitManifest(fs, dir, man.copy(version = man.version + 1,
-              retainVersions = v, retainMs = math.max(0L, ms),
-              op = "retention", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"setRetention: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
+    val man0 = currentManifest(fs, dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"setRetention: no committed graft table at $tablePath"))
+    if (editTable(fs, dir, "retention", man0) { man =>
+      val v = math.max(KeepManifests, versions)
+      if (man.retainVersions == v && man.retainMs == ms) None
+      else Some(man.copy(retainVersions = v, retainMs = math.max(0L, ms)))
+    }) gc(fs, dir)
   }
 
   /** RESTORE to a retained version (Delta `RESTORE TABLE ... TO VERSION
@@ -2469,33 +2457,22 @@ object MergeWriter {
                      version: Long): Unit = {
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"restore: no committed graft table at $tablePath")
-        case Some(man) =>
-          if (man.version == version) return // already that state
-          val target = pinManifest(spark, tablePath, Some(version), None).get
-          try {
-            commitManifest(fs, dir, target.copy(
-              version = man.version + 1,
-              txns = man.txns,
-              retainVersions = man.retainVersions, retainMs = man.retainMs,
-              nextColId = math.max(man.nextColId, target.nextColId),
-              // tags name VERSIONS (policy, not data) — they survive the
-              // rollback; the writer policy flag stays current too
-              tags = man.tags,
-              deleteVectors = man.deleteVectors,
-              op = "restore", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
+    val man0 = currentManifest(fs, dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"restore: no committed graft table at $tablePath"))
+    if (editTable(fs, dir, "restore", man0) { man =>
+      if (man.version == version) None // already that state
+      else {
+        val target = pinManifest(spark, tablePath, Some(version), None).get
+        Some(target.copy(txns = man.txns,
+          retainVersions = man.retainVersions, retainMs = man.retainMs,
+          nextColId = math.max(man.nextColId, target.nextColId),
+          // tags name VERSIONS (policy, not data) — they survive the
+          // rollback; the writer policy flag stays current too
+          tags = man.tags,
+          deleteVectors = man.deleteVectors))
       }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"restore: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
+    }) gc(fs, dir)
   }
 
   /** ALTER TABLE ADD COLUMNS as a METADATA-ONLY commit: append nullable
@@ -2511,47 +2488,35 @@ object MergeWriter {
     require(cols.nonEmpty, "addColumns: no columns given")
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"addColumns: no committed graft table at $tablePath")
-        case Some(man) =>
-          val cur = man.schema.map(s =>
-            DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-            throw new IllegalStateException(
-              s"addColumns: $tablePath records no schema (pre-schema " +
-                "manifest) — run one merge first"))
-          cols.fields.foreach { f =>
-            require(!cur.fieldNames.contains(f.name),
-              s"addColumns: column '${f.name}' already exists")
-            require(f.nullable,
-              s"addColumns: '${f.name}' must be nullable — existing " +
-                "rows null-fill (declare NOT NULL data via a rewrite)")
-          }
-          val next = StructType(cur.fields ++ stripSchemaIds(
-            StructType(cols.fields)).fields)
-          // an id-stamped table assigns each added column a FRESH field
-          // id (never a reused one — see [[Manifest.nextColId]])
-          val (cids, ncid) =
-            if (man.nextColId > 0L) {
-              var n = man.nextColId
-              (man.colIds ++ cols.fields.map { f =>
-                f.name -> { val v = n; n += 1; v }
-              }, n)
-            } else (man.colIds, man.nextColId)
-          try {
-            commitManifest(fs, dir, man.copy(version = man.version + 1,
-              schema = Some(next.json), colIds = cids, nextColId = ncid,
-              op = "addColumns", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
+    val man0 = currentManifest(fs, dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"addColumns: no committed graft table at $tablePath"))
+    if (editTable(fs, dir, "addColumns", man0) { man =>
+      val cur = man.schema.map(s =>
+        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
+        throw new IllegalStateException(
+          s"addColumns: $tablePath records no schema (pre-schema " +
+            "manifest) — run one merge first"))
+      cols.fields.foreach { f =>
+        require(!cur.fieldNames.contains(f.name),
+          s"addColumns: column '${f.name}' already exists")
+        require(f.nullable,
+          s"addColumns: '${f.name}' must be nullable — existing " +
+            "rows null-fill (declare NOT NULL data via a rewrite)")
       }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"addColumns: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
+      val next = StructType(cur.fields ++ stripSchemaIds(
+        StructType(cols.fields)).fields)
+      // an id-stamped table assigns each added column a FRESH field
+      // id (never a reused one — see [[Manifest.nextColId]])
+      val (cids, ncid) =
+        if (man.nextColId > 0L) {
+          var n = man.nextColId
+          (man.colIds ++ cols.fields.map { f =>
+            f.name -> { val v = n; n += 1; v }
+          }, n)
+        } else (man.colIds, man.nextColId)
+      Some(man.copy(schema = Some(next.json), colIds = cids, nextColId = ncid))
+    }) gc(fs, dir)
   }
 
   /** ALTER TABLE RENAME COLUMN as a METADATA-ONLY commit (Iceberg field
@@ -2576,96 +2541,84 @@ object MergeWriter {
                    from: String, to: String): Unit = {
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"renameColumn: no committed graft table at $tablePath")
-        case Some(man) =>
-          val cur = man.schema.map(s =>
-            DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-            throw new IllegalStateException(
-              s"renameColumn: $tablePath records no schema (pre-schema " +
-                "manifest) — run one merge first"))
-          require(man.nextColId > 0L,
-            s"renameColumn: $tablePath predates field-id stamping — its " +
-              "files carry no column ids to match the renamed column by. " +
-              "Migrate with a full rewrite (REPLACE TABLE / overwrite), " +
-              "which stamps ids, then rename.")
-          require(cur.fieldNames.contains(from),
-            s"renameColumn: no column '$from' in $tablePath " +
-              s"(columns: ${cur.fieldNames.mkString(", ")})")
-          require(!cur.fieldNames.exists(_.equalsIgnoreCase(to)),
-            s"renameColumn: column '$to' already exists")
-          require(!man.bloomCols.contains(from),
-            s"renameColumn: '$from' is a Bloom-indexed column — its " +
-              "per-epoch sidecars are name-keyed; rebuild without the " +
-              "bloom index first")
-          man.checks.foreach { case (cn, sql) =>
-            require(!checkPredicateColumns(spark, sql, cur)
-                .exists(_.equalsIgnoreCase(from)),
-              s"renameColumn: '$from' is referenced by CHECK constraint " +
-                s"'$cn' CHECK ($sql) — drop the constraint, rename, and " +
-                "re-add it over the new name")
-          }
-          generatedReferences(spark, cur).foreach { case (gc, g, r) =>
-            require(!r.equalsIgnoreCase(from),
-              s"renameColumn: '$from' is referenced by generated column " +
-                s"'$gc' GENERATED ALWAYS AS ($g) — the stored expression " +
-                "would no longer resolve; re-create the table to rename it")
-          }
-          // shred declarations follow the rename; their HIDDEN stats
-          // keys remap too — the extraction is a pure function of the
-          // variant column (itself matched by field id), so old files'
-          // recorded min/max stay exact under the new hidden name. Old
-          // epochs' BLOOM sidecars stay keyed under the old hidden name
-          // and degrade to keep-all for those files (sound; the next
-          // rewrite re-keys them).
-          val shredRe: Map[String, String] = man.shredCols
-            .filter(_.column == from)
-            .map(s => shredColName(s) -> shredColName(s.copy(column = to)))
-            .toMap
-          def re(c: String): String =
-            if (c == from) to else shredRe.getOrElse(c, c)
-          def reCluster(entry: String): String = entry.indexOf(':') match {
-            case -1 => re(entry)
-            case i => entry.substring(0, i + 1) +
-              entry.substring(i + 1).split(',').map(c => re(c.trim))
-                .mkString(",")
-          }
-          val next = StructType(cur.fields.map(f =>
-            if (f.name == from) f.copy(name = to) else f))
-          val stats2 = man.stats.map { case (b, fss) =>
-            b -> fss.map(f => f.copy(
-              mins = f.mins.map { case (c, v) => re(c) -> v },
-              maxs = f.maxs.map { case (c, v) => re(c) -> v },
-              nulls = f.nulls.map { case (c, v) => re(c) -> v }))
-          }
-          try {
-            commitManifest(fs, dir, man.copy(version = man.version + 1,
-              schema = Some(next.json),
-              keyCols = man.keyCols.map(re),
-              clusterCols = man.clusterCols.map(reCluster),
-              stats = stats2,
-              colIds = man.colIds.map { case (c, id) => re(c) -> id },
-              colStats = man.colStats.map { case (c, s) => re(c) -> s },
-              colSketches = man.colSketches
-                .map { case (c, s) => re(c) -> s },
-              // the identity high-water is name-keyed too: a rename
-              // that orphaned it would silently re-issue stored values
-              idhw = man.idhw.map { case (c, v) => re(c) -> v },
-              colHists = man.colHists.map { case (c, h) => re(c) -> h },
-              shredCols = man.shredCols.map(s =>
-                if (s.column == from) s.copy(column = to) else s),
-              op = "renameColumn", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
+    val man0 = currentManifest(fs, dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"renameColumn: no committed graft table at $tablePath"))
+    if (editTable(fs, dir, "renameColumn", man0) { man =>
+      val cur = man.schema.map(s =>
+        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
+        throw new IllegalStateException(
+          s"renameColumn: $tablePath records no schema (pre-schema " +
+            "manifest) — run one merge first"))
+      require(man.nextColId > 0L,
+        s"renameColumn: $tablePath predates field-id stamping — its " +
+          "files carry no column ids to match the renamed column by. " +
+          "Migrate with a full rewrite (REPLACE TABLE / overwrite), " +
+          "which stamps ids, then rename.")
+      require(cur.fieldNames.contains(from),
+        s"renameColumn: no column '$from' in $tablePath " +
+          s"(columns: ${cur.fieldNames.mkString(", ")})")
+      require(!cur.fieldNames.exists(_.equalsIgnoreCase(to)),
+        s"renameColumn: column '$to' already exists")
+      require(!man.bloomCols.contains(from),
+        s"renameColumn: '$from' is a Bloom-indexed column — its " +
+          "per-epoch sidecars are name-keyed; rebuild without the " +
+          "bloom index first")
+      man.checks.foreach { case (cn, sql) =>
+        require(!checkPredicateColumns(spark, sql, cur)
+            .exists(_.equalsIgnoreCase(from)),
+          s"renameColumn: '$from' is referenced by CHECK constraint " +
+            s"'$cn' CHECK ($sql) — drop the constraint, rename, and " +
+            "re-add it over the new name")
       }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"renameColumn: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
+      generatedReferences(spark, cur).foreach { case (gc, g, r) =>
+        require(!r.equalsIgnoreCase(from),
+          s"renameColumn: '$from' is referenced by generated column " +
+            s"'$gc' GENERATED ALWAYS AS ($g) — the stored expression " +
+            "would no longer resolve; re-create the table to rename it")
+      }
+      // shred declarations follow the rename; their HIDDEN stats
+      // keys remap too — the extraction is a pure function of the
+      // variant column (itself matched by field id), so old files'
+      // recorded min/max stay exact under the new hidden name. Old
+      // epochs' BLOOM sidecars stay keyed under the old hidden name
+      // and degrade to keep-all for those files (sound; the next
+      // rewrite re-keys them).
+      val shredRe: Map[String, String] = man.shredCols
+        .filter(_.column == from)
+        .map(s => shredColName(s) -> shredColName(s.copy(column = to)))
+        .toMap
+      def re(c: String): String =
+        if (c == from) to else shredRe.getOrElse(c, c)
+      def reCluster(entry: String): String = entry.indexOf(':') match {
+        case -1 => re(entry)
+        case i => entry.substring(0, i + 1) +
+          entry.substring(i + 1).split(',').map(c => re(c.trim))
+            .mkString(",")
+      }
+      val next = StructType(cur.fields.map(f =>
+        if (f.name == from) f.copy(name = to) else f))
+      val stats2 = man.stats.map { case (b, fss) =>
+        b -> fss.map(f => f.copy(
+          mins = f.mins.map { case (c, v) => re(c) -> v },
+          maxs = f.maxs.map { case (c, v) => re(c) -> v },
+          nulls = f.nulls.map { case (c, v) => re(c) -> v }))
+      }
+      Some(man.copy(schema = Some(next.json),
+        keyCols = man.keyCols.map(re),
+        clusterCols = man.clusterCols.map(reCluster),
+        stats = stats2,
+        colIds = man.colIds.map { case (c, id) => re(c) -> id },
+        colStats = man.colStats.map { case (c, s) => re(c) -> s },
+        colSketches = man.colSketches
+          .map { case (c, s) => re(c) -> s },
+        // the identity high-water is name-keyed too: a rename
+        // that orphaned it would silently re-issue stored values
+        idhw = man.idhw.map { case (c, v) => re(c) -> v },
+        colHists = man.colHists.map { case (c, h) => re(c) -> h },
+        shredCols = man.shredCols.map(s =>
+          if (s.column == from) s.copy(column = to) else s)))
+    }) gc(fs, dir)
   }
 
   /** Safe type promotions for [[widenColumn]]: every stored value of
@@ -2705,49 +2658,69 @@ object MergeWriter {
     import org.apache.spark.sql.types._
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"widenColumn: no committed graft table at $tablePath")
-        case Some(man) =>
-          val cur = man.schema.map(s =>
-            DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-            throw new IllegalStateException(
-              s"widenColumn: $tablePath records no schema (pre-schema " +
-                "manifest) — run one merge first"))
-          val f = cur.fields.find(_.name == name).getOrElse(
-            throw new IllegalArgumentException(
-              s"widenColumn: no column '$name' in $tablePath " +
-                s"(columns: ${cur.fieldNames.mkString(", ")})"))
-          if (f.dataType == to) return // idempotent
-          require(canWiden(f.dataType, to),
-            s"widenColumn: ${f.dataType.simpleString} -> " +
-              s"${to.simpleString} is not a safe widening (allowed: " +
-              "byte/short/int -> wider integral or double, float -> " +
-              "double); anything else needs a rewrite")
-          require(!man.keyCols.contains(name),
-            s"widenColumn: '$name' is a merge key — hash(int x) != " +
-              "hash(long x), so widening would re-bin every row; " +
-              "re-create the table to change a key's type")
-          require(!man.bloomCols.contains(name) || to != DoubleType,
-            s"widenColumn: '$name' is Bloom-indexed — widening to " +
-              "double leaves sidecars no probe can match; rebuild " +
-              "without the bloom index first")
-          val next = StructType(cur.fields.map(x =>
-            if (x.name == name) x.copy(dataType = to) else x))
-          try {
-            commitManifest(fs, dir, man.copy(version = man.version + 1,
-              schema = Some(next.json),
-              op = "widenColumn", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
+    val man0 = currentManifest(fs, dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"widenColumn: no committed graft table at $tablePath"))
+    if (editTable(fs, dir, "widenColumn", man0) { man =>
+      val cur = man.schema.map(s =>
+        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
+        throw new IllegalStateException(
+          s"widenColumn: $tablePath records no schema (pre-schema " +
+            "manifest) — run one merge first"))
+      val f = cur.fields.find(_.name == name).getOrElse(
+        throw new IllegalArgumentException(
+          s"widenColumn: no column '$name' in $tablePath " +
+            s"(columns: ${cur.fieldNames.mkString(", ")})"))
+      if (f.dataType == to) None // idempotent
+      else {
+        require(canWiden(f.dataType, to),
+          s"widenColumn: ${f.dataType.simpleString} -> " +
+            s"${to.simpleString} is not a safe widening (allowed: " +
+            "byte/short/int -> wider integral or double, float -> " +
+            "double); anything else needs a rewrite")
+        require(!man.keyCols.contains(name),
+          s"widenColumn: '$name' is a merge key — hash(int x) != " +
+            "hash(long x), so widening would re-bin every row; " +
+            "re-create the table to change a key's type")
+        require(!man.bloomCols.contains(name) || to != DoubleType,
+          s"widenColumn: '$name' is Bloom-indexed — widening to " +
+            "double leaves sidecars no probe can match; rebuild " +
+            "without the bloom index first")
+        val next = StructType(cur.fields.map(x =>
+          if (x.name == name) x.copy(dataType = to) else x))
+        Some(man.copy(schema = Some(next.json)))
       }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"widenColumn: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
+    }) gc(fs, dir)
+  }
+
+  /** Replace ONLY the per-column metadata of the recorded schema (the
+    * DEFAULT-value keys — `ALTER COLUMN ... SET/DROP DEFAULT`): names
+    * and types must match the recorded schema exactly; a metadata-only
+    * commit carries everything else forward. Field ids are re-stamped
+    * from the manifest (they are write-managed, never caller-supplied).
+    */
+  def replaceSchemaMetadata(spark: SparkSession, tablePath: String,
+                            next: StructType): Unit = {
+    val fs = fsFor(spark, tablePath)
+    val dir = new Path(tablePath)
+    val man0 = currentManifest(fs, dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"replaceSchemaMetadata: no committed graft table at $tablePath"))
+    if (editTable(fs, dir, "alterDefault", man0) { man =>
+      val cur = man.schema.map(s =>
+        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
+        throw new IllegalStateException(
+          s"replaceSchemaMetadata: $tablePath records no schema"))
+      require(cur.fieldNames.toSeq == next.fieldNames.toSeq,
+        s"replaceSchemaMetadata: column set must not change " +
+          s"(${cur.fieldNames.mkString(",")} vs " +
+          s"${next.fieldNames.mkString(",")})")
+      val metaByName = stripSchemaIds(next).fields
+        .map(f => f.name -> f.metadata).toMap
+      val merged = StructType(cur.fields.map(f =>
+        f.copy(metadata = metaByName(f.name))))
+      Some(man.copy(schema = Some(merged.json)))
+    }) gc(fs, dir)
   }
 
   /** ALTER TABLE DROP COLUMN as a METADATA-ONLY commit: the column
@@ -2764,127 +2737,72 @@ object MergeWriter {
     * non-key column (a keyed table with no compared column has no
     * diffable content).
     */
-  /** Replace ONLY the per-column metadata of the recorded schema (the
-    * DEFAULT-value keys — `ALTER COLUMN ... SET/DROP DEFAULT`): names
-    * and types must match the recorded schema exactly; a metadata-only
-    * commit carries everything else forward. Field ids are re-stamped
-    * from the manifest (they are write-managed, never caller-supplied).
-    */
-  def replaceSchemaMetadata(spark: SparkSession, tablePath: String,
-                            next: StructType): Unit = {
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"replaceSchemaMetadata: no committed graft table at $tablePath")
-        case Some(man) =>
-          val cur = man.schema.map(s =>
-            DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-            throw new IllegalStateException(
-              s"replaceSchemaMetadata: $tablePath records no schema"))
-          require(cur.fieldNames.toSeq == next.fieldNames.toSeq,
-            s"replaceSchemaMetadata: column set must not change " +
-              s"(${cur.fieldNames.mkString(",")} vs " +
-              s"${next.fieldNames.mkString(",")})")
-          val metaByName = stripSchemaIds(next).fields
-            .map(f => f.name -> f.metadata).toMap
-          val merged = StructType(cur.fields.map(f =>
-            f.copy(metadata = metaByName(f.name))))
-          try {
-            commitManifest(fs, dir, man.copy(version = man.version + 1,
-              schema = Some(merged.json),
-              op = "alterDefault", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"replaceSchemaMetadata: lost the commit race to concurrent " +
-        s"writers of $tablePath on every retry — re-run against the new " +
-        "table state")
-  }
-
   def dropColumn(spark: SparkSession, tablePath: String,
                  name: String): Unit = {
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"dropColumn: no committed graft table at $tablePath")
-        case Some(man) =>
-          val cur = man.schema.map(s =>
-            DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-            throw new IllegalStateException(
-              s"dropColumn: $tablePath records no schema (pre-schema " +
-                "manifest) — run one merge first"))
-          require(man.nextColId > 0L,
-            s"dropColumn: $tablePath predates field-id stamping — " +
-              "migrate with a full rewrite (REPLACE TABLE / overwrite) " +
-              "first")
-          require(cur.fieldNames.contains(name),
-            s"dropColumn: no column '$name' in $tablePath " +
-              s"(columns: ${cur.fieldNames.mkString(", ")})")
-          require(!man.keyCols.contains(name),
-            s"dropColumn: '$name' is a merge key")
-          man.checks.foreach { case (cn, sql) =>
-            require(!checkPredicateColumns(spark, sql, cur)
-                .exists(_.equalsIgnoreCase(name)),
-              s"dropColumn: '$name' is referenced by CHECK constraint " +
-                s"'$cn' CHECK ($sql) — drop the constraint first")
-          }
-          generatedReferences(spark, cur).foreach { case (gc, g, r) =>
-            require(!r.equalsIgnoreCase(name),
-              s"dropColumn: '$name' is referenced by generated column " +
-                s"'$gc' GENERATED ALWAYS AS ($g) — drop '$gc' first")
-          }
-          val inCluster = man.clusterCols.exists { e =>
-            e.indexOf(':') match {
-              case -1 => e == name
-              case i => e.substring(i + 1).split(',').map(_.trim)
-                .contains(name)
-            }
-          }
-          require(!inCluster, s"dropColumn: '$name' is a cluster column")
-          require(!man.bloomCols.contains(name),
-            s"dropColumn: '$name' is a Bloom-indexed column")
-          require(cur.fields.exists(f =>
-            f.name != name && !man.keyCols.contains(f.name)),
-            s"dropColumn: '$name' is the last non-key column")
-          val next = StructType(cur.fields.filterNot(_.name == name))
-          // a dropped variant column takes its shred declarations (and
-          // their hidden stats keys) with it — a later same-named
-          // column must not inherit stale extraction stats
-          val droppedShredKeys = man.shredCols.filter(_.column == name)
-            .map(shredColName).toSet
-          val stats2 = man.stats.map { case (b, fss) =>
-            b -> fss.map(f => f.copy(
-              mins = f.mins - name -- droppedShredKeys,
-              maxs = f.maxs - name -- droppedShredKeys,
-              nulls = f.nulls - name -- droppedShredKeys))
-          }
-          try {
-            commitManifest(fs, dir, man.copy(version = man.version + 1,
-              schema = Some(next.json), stats = stats2,
-              colIds = man.colIds - name,
-              colStats = man.colStats - name,
-              colSketches = man.colSketches - name,
-              idhw = man.idhw - name,
-              colHists = man.colHists - name,
-              shredCols = man.shredCols.filterNot(_.column == name),
-              op = "dropColumn", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
+    val man0 = currentManifest(fs, dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"dropColumn: no committed graft table at $tablePath"))
+    if (editTable(fs, dir, "dropColumn", man0) { man =>
+      val cur = man.schema.map(s =>
+        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
+        throw new IllegalStateException(
+          s"dropColumn: $tablePath records no schema (pre-schema " +
+            "manifest) — run one merge first"))
+      require(man.nextColId > 0L,
+        s"dropColumn: $tablePath predates field-id stamping — " +
+          "migrate with a full rewrite (REPLACE TABLE / overwrite) " +
+          "first")
+      require(cur.fieldNames.contains(name),
+        s"dropColumn: no column '$name' in $tablePath " +
+          s"(columns: ${cur.fieldNames.mkString(", ")})")
+      require(!man.keyCols.contains(name),
+        s"dropColumn: '$name' is a merge key")
+      man.checks.foreach { case (cn, sql) =>
+        require(!checkPredicateColumns(spark, sql, cur)
+            .exists(_.equalsIgnoreCase(name)),
+          s"dropColumn: '$name' is referenced by CHECK constraint " +
+            s"'$cn' CHECK ($sql) — drop the constraint first")
       }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"dropColumn: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
+      generatedReferences(spark, cur).foreach { case (gc, g, r) =>
+        require(!r.equalsIgnoreCase(name),
+          s"dropColumn: '$name' is referenced by generated column " +
+            s"'$gc' GENERATED ALWAYS AS ($g) — drop '$gc' first")
+      }
+      val inCluster = man.clusterCols.exists { e =>
+        e.indexOf(':') match {
+          case -1 => e == name
+          case i => e.substring(i + 1).split(',').map(_.trim)
+            .contains(name)
+        }
+      }
+      require(!inCluster, s"dropColumn: '$name' is a cluster column")
+      require(!man.bloomCols.contains(name),
+        s"dropColumn: '$name' is a Bloom-indexed column")
+      require(cur.fields.exists(f =>
+        f.name != name && !man.keyCols.contains(f.name)),
+        s"dropColumn: '$name' is the last non-key column")
+      val next = StructType(cur.fields.filterNot(_.name == name))
+      // a dropped variant column takes its shred declarations (and
+      // their hidden stats keys) with it — a later same-named
+      // column must not inherit stale extraction stats
+      val droppedShredKeys = man.shredCols.filter(_.column == name)
+        .map(shredColName).toSet
+      val stats2 = man.stats.map { case (b, fss) =>
+        b -> fss.map(f => f.copy(
+          mins = f.mins - name -- droppedShredKeys,
+          maxs = f.maxs - name -- droppedShredKeys,
+          nulls = f.nulls - name -- droppedShredKeys))
+      }
+      Some(man.copy(schema = Some(next.json), stats = stats2,
+        colIds = man.colIds - name,
+        colStats = man.colStats - name,
+        colSketches = man.colSketches - name,
+        idhw = man.idhw - name,
+        colHists = man.colHists - name,
+        shredCols = man.shredCols.filterNot(_.column == name)))
+    }) gc(fs, dir)
   }
 
   /** Operational introspection (Delta's DESCRIBE DETAIL): one row with
@@ -3236,30 +3154,14 @@ object MergeWriter {
       c -> ColStat(unionSketch(sketchOf.get(c), None)._2,
         rows - row.getAs[Long](s"__nn_$c"), avgL, maxL, lo, hi)
     }.toMap
-    // metadata-only commit with the usual bounded rebase: losing the
-    // version CAS to a concurrent merge just means the stats are one
-    // commit staler than the head — still the estimates they claim to be
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => return computed
-        case Some(man) =>
-          try {
-            commitManifest(fs, dir,
-              man.copy(version = man.version + 1, colStats = computed,
-                statsVersion = man0.version, statsRows = rows,
-                colSketches = sketchOf,
-                colHists = histOf,
-                op = "analyze",
-                opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return computed
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"analyzeTable: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
+    // metadata-only commit that rebases: losing the version CAS to a
+    // concurrent merge just means the stats are one commit staler than
+    // the head — still the estimates they claim to be
+    editTable(fs, dir, "analyze", man0)(man => Some(man.copy(
+      colStats = computed, statsVersion = man0.version, statsRows = rows,
+      colSketches = sketchOf, colHists = histOf)))
+    gc(fs, dir)
+    computed
   }
 
   /** Commit history over the RETAINED manifest window (Delta's
@@ -3967,10 +3869,10 @@ object MergeWriter {
       if (fresh.nonEmpty) {
         val merged = man.shredCols ++ fresh
         validateShred(stripSchemaIds(schema), merged, "buildShredIndex")
-        commitOrConflict(fs, dir,
-          man.copy(version = man.version + 1, shredCols = merged,
-            op = "buildShredIndex", opTs = System.currentTimeMillis()),
-          "buildShredIndex")
+        val t = tableTarget(fs, dir)
+        commitLoop(t, "buildShredIndex", Some(man))(
+          lostRace(t, "buildShredIndex", man))(
+          _ => Some(man.copy(shredCols = merged)))
       }
       if (rewrite) compact(spark, tablePath)
     }
@@ -4002,9 +3904,10 @@ object MergeWriter {
             writeBloomSidecar(spark, fs, s"$tablePath/$e", bloomBy,
               bloomItems, man.schema)
         }
-      commitOrConflict(fs, dir,
-        man.copy(version = man.version + 1, bloomCols = bloomBy,
-          bloomItems = bloomItems), "buildBloomIndex")
+      val t = tableTarget(fs, dir)
+      commitLoop(t, "buildBloomIndex", Some(man))(
+        lostRace(t, "buildBloomIndex", man))(
+        _ => Some(man.copy(bloomCols = bloomBy, bloomItems = bloomItems)))
     }
   }
 
@@ -4281,6 +4184,54 @@ object MergeWriter {
       : (Seq[String], Seq[(String, String)], Seq[EqDel]) =
     m.map(bucketSig(_, b)).getOrElse((Seq.empty, Seq.empty, Seq.empty))
 
+  /** The one "contested" test of a staged data write — and of a
+    * row-level statement's scan ([[requireScanCurrent]]): why `cur`
+    * invalidates what the write read from `read` and reserved, or `None`
+    * when it may rebase onto `cur`. Inputs: the bucket modulus its rows
+    * were hashed with; the schema they were shaped to (ignoring
+    * nullability — the same logical schema serializes with different
+    * nullability by provenance); the merge keys its bucket ids were
+    * hashed from (empty = not checked); the touched buckets' signatures
+    * ([[bucketSig]]: pointer, overlays, DVs, equality deletes); the
+    * CHECK set its rows were proven under, when it adds rows; the
+    * identity high-water, when it reserved identity values.
+    */
+  private def contested(cur: Manifest, read: Option[Manifest], buckets: Int,
+                        schema: Option[String], keys: Seq[String],
+                        touched: Iterable[Int],
+                        checks: Option[Map[String, String]],
+                        idhw: Option[Map[String, Long]]): Option[String] = {
+    val sameSchema = (cur.schema, schema) match {
+      case (Some(a), Some(b)) => a == b ||
+        org.apache.spark.sql.GraftColumnShim.sameTypeIgnoreNullability(
+          DataType.fromJson(a), DataType.fromJson(b))
+      case (a, b) => a == b
+    }
+    val moved = touched.filter(b => bucketSig(cur, b) != bucketSigOpt(read, b))
+    val why = Seq(
+      (cur.buckets != buckets) -> s"bucket count ${cur.buckets} != $buckets",
+      !sameSchema -> "schema changed",
+      (keys.nonEmpty && cur.keyCols.nonEmpty && cur.keyCols != keys) ->
+        s"merge keys ${cur.keyCols.mkString("(", ",", ")")} != " +
+          keys.mkString("(", ",", ")"),
+      moved.nonEmpty ->
+        s"contested buckets ${moved.toSeq.sorted.mkString("{", ",", "}")}",
+      checks.exists(_ != cur.checks) -> "CHECK constraints changed",
+      idhw.exists(_ != cur.idhw) -> "identity high-water moved"
+    ).collect { case (true, w) => w }
+    if (why.isEmpty) None else Some(why.mkString(", "))
+  }
+
+  /** The commit rule of a staged data write: rebase unless `why` names
+    * a [[contested]] input.
+    */
+  private def rebaseUnless(op: String, tablePath: String)(
+      why: Manifest => Option[String]): Manifest => Option[String] =
+    cur => why(cur).map(w =>
+      s"$op: a concurrent writer moved state of $tablePath this write " +
+        s"read or reserved (version ${cur.version}: $w) — re-run against " +
+        "the new table state")
+
   private def writeDvSidecar(fs: FileSystem, tableRoot: String, name: String,
                              entries: Map[String, Array[Long]]): Unit = {
     val body = "{\"files\":{" + entries.toSeq.sortBy(_._1)
@@ -4456,10 +4407,14 @@ object MergeWriter {
         identityExtremes(spark, s"$tablePath/$epoch", morIdSpec)
       else Map.empty[String, Long]
     // 4. one manifest commit: overlays appended, DVs re-pointed, fresh
-    //    buckets (no stored pointer yet) adopt the epoch as their BASE
-    var base = man
-    var attempt = 0
-    while (true) {
+    //    buckets (no stored pointer yet) adopt the epoch as their BASE;
+    //    it rebases iff nothing this upsert read-modified moved (the
+    //    resolved positions and the overlay append are keyed to the
+    //    touched buckets' signatures at scan time)
+    commitLoop(tableTarget(fs, new Path(tablePath), ref), opName, Some(man))(
+      rebaseUnless(opName, tablePath)(contested(_, Some(man), man.buckets,
+        man.schema, keys, touched, Some(man.checks),
+        if (morIdSpec.isEmpty) None else Some(man.idhw))))(_.map { base =>
       val dvStats =
         if (mergedDead.isEmpty) base.stats
         else base.stats.map { case (b, fss) =>
@@ -4470,40 +4425,11 @@ object MergeWriter {
             }
           }
         }
-      try {
-        refCommit(fs, new Path(tablePath), ref,
-          withRefreshedStats(withOverlay(base.copy(stats = dvStats), epoch,
-            written, overlayStats).copy(version = base.version + 1,
-            txns = base.txns ++ txn,
-            idhw = advanceIdhw(base.idhw, morIdSpec, morIdExt),
-            op = opName, opTs = System.currentTimeMillis()), batchSk))
-        return true
-      } catch {
-        case ex: java.io.IOException =>
-          attempt += 1
-          if (attempt > 5) throw ex
-          val cur = refCurrent(fs, new Path(tablePath), ref)
-            .getOrElse(throw ex)
-          // rebase iff nothing this upsert read-modified moved: the
-          // resolved positions and the overlay append are both keyed to
-          // the touched buckets' signatures at scan time
-          val contested = cur.buckets != man.buckets ||
-            cur.schema != man.schema ||
-            (cur.keyCols.nonEmpty && cur.keyCols != keys) ||
-            // the overlay rows were proven under man's constraint set
-            cur.checks != man.checks ||
-            // identity values were reserved against man's high-water
-            (morIdSpec.nonEmpty && cur.idhw != man.idhw) ||
-            touched.exists(b => bucketSig(cur, b) != bucketSig(man, b))
-          if (contested)
-            throw new java.util.ConcurrentModificationException(
-              s"merge: concurrent writer rewrote contested state of " +
-                s"$tablePath (version ${cur.version}) under a merge-on-" +
-                "read upsert — re-run against the new table state")
-          base = cur
-      }
-    }
-    false // unreachable
+      withRefreshedStats(withOverlay(base.copy(stats = dvStats), epoch,
+        written, overlayStats).copy(txns = base.txns ++ txn,
+        idhw = advanceIdhw(base.idhw, morIdSpec, morIdExt)), batchSk)
+    })
+    true
   }
 
   /** MERGE-ON-READ keyed delete (Delta's deletion vectors / Iceberg v2
@@ -4571,10 +4497,15 @@ object MergeWriter {
           bucketEpochs(man, b).exists(e =>
             k.startsWith(s"$e/$BucketCol=$b/")) }
       }.toMap
-    var base = man
-    var attempt = 0
-    while (true) {
-      val stats2 = base.stats.map { case (b, fss) =>
+    // rebase iff nothing this delete read-modified moved: same modulus
+    // and schema, and every touched bucket's signature (pointer + DV
+    // identity) unchanged since the positions were resolved — anything
+    // else means the resolved positions are stale (a rewrite renumbered
+    // rows, a racing DV marked more)
+    commitLoop(tableTarget(fs, new Path(tablePath), ref), "delete",
+      Some(man))(rebaseUnless("delete", tablePath)(contested(_, Some(man),
+        man.buckets, man.schema, Seq.empty, touchedStored, None, None)))(
+      _.map(base => base.copy(stats = base.stats.map { case (b, fss) =>
         relKeysByBucket.get(b).filter(_.nonEmpty) match {
           case Some(dead) =>
             b -> fss.map { f =>
@@ -4585,35 +4516,8 @@ object MergeWriter {
             }
           case None => b -> fss
         }
-      }
-      try {
-        refCommit(fs, new Path(tablePath), ref,
-          base.copy(version = base.version + 1, stats = stats2,
-            op = "delete", opTs = System.currentTimeMillis()))
-        return true
-      } catch {
-        case e: java.io.IOException =>
-          attempt += 1
-          if (attempt > 5) throw e
-          val cur = refCurrent(fs, new Path(tablePath), ref)
-            .getOrElse(throw e)
-          // rebase iff nothing this delete read-modified moved: same
-          // modulus and schema, and every touched bucket's signature
-          // (pointer + DV identity) unchanged since the positions were
-          // resolved — anything else means the resolved positions are
-          // stale (a rewrite renumbered rows, a racing DV marked more)
-          val contested = cur.buckets != man.buckets ||
-            cur.schema != man.schema ||
-            touchedStored.exists(b => bucketSig(cur, b) != bucketSig(man, b))
-          if (contested)
-            throw new java.util.ConcurrentModificationException(
-              s"delete: concurrent writer rewrote contested state of " +
-                s"$tablePath (version ${cur.version}) under a deletion-" +
-                "vector delete — re-run against the new table state")
-          base = cur
-      }
-    }
-    false // unreachable
+      })))
+    true
   }
 
   /** WRITE-ONLY merge-on-read keyed upsert/delete (Iceberg v2's
@@ -4705,10 +4609,14 @@ object MergeWriter {
       else Map.empty[String, Long]
     // 3. one manifest commit: overlays appended, eq-delete records
     //    appended with pre-commit epoch counts, fresh buckets adopt the
-    //    epoch as their base
-    var base = man
-    var attempt = 0
-    while (true) {
+    //    epoch as their base; it rebases iff nothing this upsert depends
+    //    on moved (the batch was validated under man's schema/constraint/
+    //    identity state, the eq-delete scoping was computed against the
+    //    touched buckets' epoch lists)
+    commitLoop(tableTarget(fs, new Path(tablePath), ref), opName, Some(man))(
+      rebaseUnless(opName, tablePath)(contested(_, Some(man), man.buckets,
+        man.schema, keys, touched, Some(man.checks),
+        if (morIdSpec.isEmpty) None else Some(man.idhw))))(_.map { base =>
       // upTo from the PRE-COMMIT base: the overlay appended below takes
       // ordinal upTo, keeping this commit's own rows exempt
       val eqds2 =
@@ -4717,39 +4625,11 @@ object MergeWriter {
           b -> (base.eqds.getOrElse(b, Seq.empty) :+
             EqDel(sidecar, bucketEpochs(base, b).length, incCount + delCount))
         }
-      try {
-        refCommit(fs, new Path(tablePath), ref,
-          withRefreshedStats(withOverlay(base, epoch, written, overlayStats)
-            .copy(version = base.version + 1, eqds = eqds2,
-            txns = base.txns ++ txn,
-            idhw = advanceIdhw(base.idhw, morIdSpec, morIdExt),
-            op = opName, opTs = System.currentTimeMillis()), batchSk))
-        return true
-      } catch {
-        case ex: java.io.IOException =>
-          attempt += 1
-          if (attempt > 5) throw ex
-          val cur = refCurrent(fs, new Path(tablePath), ref)
-            .getOrElse(throw ex)
-          // rebase iff nothing this upsert depends on moved: the batch
-          // was validated under man's schema/constraint/identity state,
-          // and the eq-delete scoping was computed against the touched
-          // buckets' epoch lists
-          val contested = cur.buckets != man.buckets ||
-            cur.schema != man.schema ||
-            (cur.keyCols.nonEmpty && cur.keyCols != keys) ||
-            cur.checks != man.checks ||
-            (morIdSpec.nonEmpty && cur.idhw != man.idhw) ||
-            touched.exists(b => bucketSig(cur, b) != bucketSig(man, b))
-          if (contested)
-            throw new java.util.ConcurrentModificationException(
-              s"$opName: concurrent writer rewrote contested state of " +
-                s"$tablePath (version ${cur.version}) under an equality-" +
-                "delete upsert — re-run against the new table state")
-          base = cur
-      }
-    }
-    false // unreachable
+      withRefreshedStats(withOverlay(base, epoch, written, overlayStats)
+        .copy(eqds = eqds2, txns = base.txns ++ txn,
+          idhw = advanceIdhw(base.idhw, morIdSpec, morIdExt)), batchSk)
+    })
+    true
   }
 
   /** Relative file key of a bucket file — the suffix `_metadata
@@ -5481,7 +5361,11 @@ object MergeWriter {
       s"mergeAdditive: delta must not contain reserved column '$BucketCol'")
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
-    val m = currentManifest(fs, dir)
+    // a pre-manifest table migrates first (its rows are the fold's base)
+    val m = currentManifest(fs, dir).orElse {
+      migrateLegacy(spark, fs, tablePath, keys, buckets)
+      currentManifest(fs, dir)
+    }
     m.foreach(validateKeys(_, keys, "mergeAdditive"))
     if (m.exists(_.txns.get(txn._1).exists(_ >= txn._2))) return // replay
     val nb = m.map(_.buckets).getOrElse(buckets)
@@ -5666,7 +5550,11 @@ object MergeWriter {
       s"createTable: $tablePath already holds a committed graft table")
     fs.mkdirs(dir)
     val clean = stripSchemaIds(schema)
-    commitManifest(fs, dir, Manifest(1L, buckets, Map.empty, Map.empty,
+    // a creation race is single-winner: the loser conflicts
+    commitLoop(tableTarget(fs, dir), "create", None)(_ => Some(
+      s"createTable: a concurrent create committed $tablePath first — " +
+        "re-run against the new table state"))(_ => Some(Manifest(1L,
+      buckets, Map.empty, Map.empty,
       Some(clean.json), keys, clusterBy, Map.empty, bloomBy, bloomItems,
       "create", System.currentTimeMillis(),
       math.max(KeepManifests, retainVersions), math.max(0L, retainMs),
@@ -5681,7 +5569,7 @@ object MergeWriter {
       nextColId = clean.fields.length + 1L,
       deleteVectors = deleteVectors || eqDeletes,
       eqDeletes = eqDeletes,
-      shredCols = shred))
+      shredCols = shred)))
   }
 
   /** Key-count bound under which a CoW rewrite's survivor anti-join
@@ -5801,20 +5689,21 @@ object MergeWriter {
                                    opTs: Long = 0L)
 
   private def readGroupManifest(fs: FileSystem, v: Long,
-                                p: Path): GroupManifest = {
-    val node = readJsonFile(fs, p)
-    val tables = scala.collection.mutable.Map.empty[String, Manifest]
-    node.get("tables").fields().forEachRemaining { t =>
-      tables(t.getKey) = manifestFromNode(t.getValue, v)
+                                p: Path): GroupManifest =
+    cachedManifest(fs, v, p) {
+      val node = readJsonFile(fs, p)
+      val tables = scala.collection.mutable.Map.empty[String, Manifest]
+      node.get("tables").fields().forEachRemaining { t =>
+        tables(t.getKey) = manifestFromNode(t.getValue, v)
+      }
+      val txns = scala.collection.mutable.Map.empty[String, Long]
+      Option(node.get("txns")).foreach(_.fields().forEachRemaining { t =>
+        txns(t.getKey) = t.getValue.asLong()
+      })
+      GroupManifest(v, tables.toMap, txns.toMap,
+        Option(node.get("op")).map(_.asText()).getOrElse(""),
+        Option(node.get("ts")).map(_.asLong()).getOrElse(0L))
     }
-    val txns = scala.collection.mutable.Map.empty[String, Long]
-    Option(node.get("txns")).foreach(_.fields().forEachRemaining { t =>
-      txns(t.getKey) = t.getValue.asLong()
-    })
-    GroupManifest(v, tables.toMap, txns.toMap,
-      Option(node.get("op")).map(_.asText()).getOrElse(""),
-      Option(node.get("ts")).map(_.asLong()).getOrElse(0L))
-  }
 
   private def currentGroupManifest(fs: FileSystem,
                                    dir: Path): Option[GroupManifest] =
@@ -6050,49 +5939,38 @@ object MergeWriter {
     // commit unchanged. A touched member whose pinned state moved means
     // our stages were computed from stale survivors: fail loudly with the
     // protocol's ConcurrentModificationException, never publish them.
-    var base = cur
-    var attempt = 0
-    while (true) {
-      try {
-        commitGroupManifest(fs, dir,
-          GroupManifest(base.map(_.version + 1).getOrElse(1L),
-            base.map(_.tables).getOrElse(Map.empty) ++ staged,
-            base.map(_.txns).getOrElse(Map.empty) ++ txn,
-            "mergeGroup", System.currentTimeMillis()))
-        gcGroup(fs, dir)
-        maybeAutoMaintainGroup(spark, fs, dir, groupPath, staged.keys.toSeq,
-          autoSplitBytesPerBucket, autoCompactEpochs)
-        if (drainEvery > 0 &&
-            txn.exists(t => (t._2 % drainEvery) == (drainEvery - 1)))
-          drainGroupPressure(spark, groupPath, drainOverlayBound,
-            drainEqdBound)
-        return
-      } catch {
-        case e: java.io.IOException =>
-          attempt += 1
-          if (attempt > 5) throw e
-          val newCur = currentGroupManifest(fs, dir).getOrElse(throw e)
-          // the winner may have BEEN this very batch (redelivered twice
-          // concurrently): its ledger entry makes ours a replay
-          if (txn.exists(t => newCur.txns.get(t._1).exists(_ >= t._2)))
-            return
-          // full member SIGNATURE, not epoch pointers alone: a write-
-          // only eq-delete commit appends overlays/eqds without moving
-          // any pointer, and an epochs-only compare would let a raced
-          // rebase clobber it
-          def memberSig(m: Option[Manifest]) =
-            m.map(x => (x.epochs, x.overlays, x.eqds))
-          val contested = staged.keys.filter(n =>
-            memberSig(newCur.tables.get(n)) !=
-              memberSig(cur.flatMap(_.tables.get(n)))).toSeq.sorted
-          if (contested.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"mergeGroup: concurrent writer rewrote contested members " +
-                s"${contested.mkString("{", ",", "}")} of $groupPath " +
-                s"(version ${newCur.version}) — re-run against the new " +
-                "group state")
-          base = Some(newCur)
-      }
+    // Full member SIGNATURE, not epoch pointers alone: a write-only
+    // eq-delete commit appends overlays/eqds without moving any pointer,
+    // and an epochs-only compare would let a raced rebase clobber it.
+    def memberSig(m: Option[Manifest]) =
+      m.map(x => (x.epochs, x.overlays, x.eqds))
+    val committed = commitLoop(groupTarget(fs, dir), "mergeGroup", cur) {
+      newCur =>
+        val contested = staged.keys.filter(n =>
+          memberSig(newCur.tables.get(n)) != memberSig(curTables.get(n)))
+          .toSeq.sorted
+        if (contested.isEmpty) None
+        else Some(s"mergeGroup: concurrent writer rewrote contested " +
+          s"members ${contested.mkString("{", ",", "}")} of $groupPath " +
+          s"(version ${newCur.version}) — re-run against the new group " +
+          "state")
+    } { base =>
+      // the winner may have BEEN this very batch (redelivered twice
+      // concurrently): its ledger entry makes ours a replay
+      if (txn.exists(t => base.exists(_.txns.get(t._1).exists(_ >= t._2))))
+        None
+      else Some(GroupManifest(0L,
+        base.map(_.tables).getOrElse(Map.empty) ++ staged,
+        base.map(_.txns).getOrElse(Map.empty) ++ txn))
+    }
+    if (committed.nonEmpty) {
+      gcGroup(fs, dir)
+      maybeAutoMaintainGroup(spark, fs, dir, groupPath, staged.keys.toSeq,
+        autoSplitBytesPerBucket, autoCompactEpochs)
+      if (drainEvery > 0 &&
+          txn.exists(t => (t._2 % drainEvery) == (drainEvery - 1)))
+        drainGroupPressure(spark, groupPath, drainOverlayBound,
+          drainEqdBound)
     }
   }
 
@@ -6175,17 +6053,17 @@ object MergeWriter {
     (cur, man)
   }
 
-  private def commitGroupOrConflict(fs: FileSystem, dir: Path,
-                                    g: GroupManifest, op: String): Unit =
-    try commitGroupManifest(fs, dir,
-      g.copy(op = op, opTs = System.currentTimeMillis()))
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"$op: lost the version-${g.version} commit race to a " +
-            s"concurrent writer of $dir — re-run against the new group " +
-            "state", e)
-    }
+  /** Publish `cur` with member `name` replaced by `upd` — a member
+    * rewrite derived from ONE observed group version, so any lost race
+    * conflicts.
+    */
+  private def commitMember(fs: FileSystem, dir: Path, op: String,
+                           cur: GroupManifest, upd: Map[String, Manifest])
+      : Unit = {
+    val t = groupTarget(fs, dir)
+    commitLoop(t, op, Some(cur))(lostRace(t, op, cur))(
+      _ => Some(cur.copy(tables = cur.tables ++ upd)))
+  }
 
   /** [[splitBuckets]] for one member of a group: double the member's
     * bucket modulus (same no-exchange `pmod` refinement) and commit the
@@ -6200,9 +6078,7 @@ object MergeWriter {
     val dir = new Path(groupPath)
     val (cur, man) = requireMember(fs, groupPath, name, "splitGroupBuckets")
     val upd = splitEpochsUncommitted(spark, fs, s"$groupPath/$name", man, keys)
-    commitGroupOrConflict(fs, dir,
-      GroupManifest(cur.version + 1, cur.tables + (name -> upd), cur.txns),
-      "splitGroupBuckets")
+    commitMember(fs, dir, "splitGroupBuckets", cur, Map(name -> upd))
     gcGroup(fs, dir)
   }
 
@@ -6216,9 +6092,7 @@ object MergeWriter {
     val dir = new Path(groupPath)
     val (cur, man) = requireMember(fs, groupPath, name, "compactGroupTable")
     val upd = compactEpochsUncommitted(spark, fs, s"$groupPath/$name", man)
-    commitGroupOrConflict(fs, dir,
-      GroupManifest(cur.version + 1, cur.tables + (name -> upd), cur.txns),
-      "compactGroupTable")
+    commitMember(fs, dir, "compactGroupTable", cur, Map(name -> upd))
     gcGroup(fs, dir)
   }
 
@@ -6268,9 +6142,7 @@ object MergeWriter {
       val staged = futs.flatMap(Await.result(_, Duration.Inf))
       if (staged.isEmpty) return
       try {
-        commitGroupOrConflict(fs, dir,
-          GroupManifest(g.version + 1, g.tables ++ staged, g.txns),
-          "drainGroupPressure")
+        commitMember(fs, dir, "drainGroupPressure", g, staged.toMap)
         gcGroup(fs, dir)
       } catch {
         case _: java.util.ConcurrentModificationException => ()
@@ -6294,9 +6166,7 @@ object MergeWriter {
     validateClusterCols(man0, clusterBy)
     val upd = compactEpochsUncommitted(spark, fs, s"$groupPath/$name",
       man0.copy(clusterCols = clusterBy))
-    commitGroupOrConflict(fs, dir,
-      GroupManifest(cur.version + 1, cur.tables + (name -> upd), cur.txns),
-      "clusterGroupTable")
+    commitMember(fs, dir, "clusterGroupTable", cur, Map(name -> upd))
     gcGroup(fs, dir)
   }
 
@@ -6432,29 +6302,17 @@ object MergeWriter {
                         ms: Long = 0L): Unit = {
     val fs = fsFor(spark, groupPath)
     val dir = new Path(groupPath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentGroupManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"setGroupRetention: no committed group manifest at $groupPath")
-        case Some(cur) =>
-          val v = math.max(KeepManifests, versions)
-          val m = math.max(0L, ms)
-          if (cur.tables.values.forall(t =>
-              t.retainVersions == v && t.retainMs == m)) return
-          try {
-            commitGroupManifest(fs, dir, GroupManifest(cur.version + 1,
-              cur.tables.map { case (n, t) =>
-                n -> t.copy(retainVersions = v, retainMs = m) },
-              cur.txns, "retention", System.currentTimeMillis()))
-            gcGroup(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"setGroupRetention: lost the commit race to concurrent writers " +
-        s"of $groupPath on every retry — re-run against the new state")
+    val cur = currentGroupManifest(fs, dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"setGroupRetention: no committed group manifest at $groupPath"))
+    val v = math.max(KeepManifests, versions)
+    val m = math.max(0L, ms)
+    if (commitLoop(groupTarget(fs, dir), "retention", Some(cur))(rebase)(
+        _.filterNot(_.tables.values.forall(t =>
+          t.retainVersions == v && t.retainMs == m))
+          .map(g => g.copy(tables = g.tables.map { case (n, t) =>
+            n -> t.copy(retainVersions = v, retainMs = m) }))).nonEmpty)
+      gcGroup(fs, dir)
   }
 
   /** Group-scope gc: keep the last `max(members' retainVersions,
@@ -6983,13 +6841,13 @@ object MergeWriter {
     * Nothing is visible until the commit rename.
     *
     * OPTIMISTIC CONCURRENCY (Delta's commit protocol, scaled down): a
-    * lost version race does not fail the write outright. The CAS loop
-    * re-reads the current manifest and REBASES — it re-assembles the
-    * staged epoch on top of the winner's manifest — provided none of
-    * ITS buckets (written or dropped) changed signature since `prev`
-    * was read and the schema, modulus, merge keys, CHECK constraints and
-    * identity high-water are unchanged: disjoint-bucket writers then all
-    * succeed, serialized by the version CAS. A bucket this write
+    * lost version race does not fail the write outright. The commit
+    * loop ([[commitLoop]]) re-reads the current manifest and REBASES —
+    * it re-assembles the staged epoch on top of the winner's manifest —
+    * provided nothing [[contested]] checks moved since `prev` was read
+    * (ITS buckets, written or dropped; schema, modulus, merge keys,
+    * CHECK constraints, identity high-water): disjoint-bucket writers
+    * then all succeed, serialized by the version CAS. A bucket this write
     * READ-MODIFIED that the winner also rewrote means the survivors were
     * computed from stale data — that is a genuine data conflict and
     * fails loudly with `ConcurrentModificationException` (the caller
@@ -7016,75 +6874,13 @@ object MergeWriter {
       dropBuckets, clusterCols, bloomCols, bloomN, fpSeed, dvSeed, eqdSeed,
       shredSeed)
     val t = s.target
-    val mine = s.written.toSet ++ dropBuckets
-    var base = prev
-    var attempt = 0
-    while (true) {
-      try {
-        refCommit(fs, new Path(tablePath), ref,
-          assembleManifest(base, s, txn, opName))
-        return
-      } catch {
-        case e: java.io.IOException =>
-          attempt += 1
-          if (attempt > 5) throw e
-          val cur = refCurrent(fs, new Path(tablePath), ref).getOrElse(
-            throw e) // commit failed yet no manifest: surface the original
-          // data conflict iff any bucket THIS write read-modified changed
-          // pointer OR deletion-vector state since it was read, or the
-          // schema moved underneath us (on a CREATION race, "moved" means
-          // the winner created a table of a different schema than the one
-          // being written)
-          val conflicting = mine.exists(b =>
-            bucketSig(cur, b) != bucketSigOpt(prev, b))
-          // nullability-insensitive: the same logical schema serializes
-          // with different nullability by provenance (Seq-derived vs
-          // parquet-read frames)
-          def same(x: Option[String], y: Option[String]): Boolean =
-            (x, y) match {
-              case (Some(a), Some(b)) => a == b ||
-                org.apache.spark.sql.GraftColumnShim.sameTypeIgnoreNullability(
-                  DataType.fromJson(a), DataType.fromJson(b))
-              case (a, b) => a == b
-            }
-          val schemaConflict = !same(cur.schema, prev.fold(t.schema)(_.schema))
-          // a creation race where the winner chose a different modulus is
-          // unrebasable: this write's rows were hashed with `buckets`, so
-          // its bucket ids are meaningless under the winner's layout even
-          // when they happen not to collide — committing them would make
-          // every later pruned read miss rows silently
-          val bucketConflict = cur.buckets != buckets
-          // a creation race where the winner recorded different merge
-          // keys is equally unrebasable: this write's bucket ids were
-          // hashed from ITS key list (see [[Manifest.keyCols]])
-          val keyConflict = cur.keyCols.nonEmpty && cur.keyCols != keys
-          // a concurrent ADD/DROP CONSTRAINT invalidates this write's
-          // enforcement pass (the batch was proven under the OLD set)
-          val checkConflict = cur.checks != t.checks
-          // a concurrent commit that moved the identity high-water may
-          // have assigned values overlapping this batch's reservation
-          val idConflict = s.idSpec.nonEmpty &&
-            cur.idhw != prev.map(_.idhw).getOrElse(Map.empty)
-          if (conflicting || schemaConflict || bucketConflict ||
-              keyConflict || checkConflict || idConflict) {
-            val diff = mine.filter(b =>
-              bucketSig(cur, b) != bucketSigOpt(prev, b))
-            throw new java.util.ConcurrentModificationException(
-              s"merge: concurrent writer rewrote contested buckets " +
-                s"${diff.toSeq.sorted.mkString("{", ",", "}")} of " +
-                s"$tablePath (version ${cur.version}" +
-                s"${if (schemaConflict) ", schema changed" else ""}" +
-                s"${if (bucketConflict) s", bucket count ${cur.buckets} != $buckets"
-                   else ""}" +
-                s"${if (keyConflict) s", merge keys ${cur.keyCols.mkString("(", ",", ")")} != ${keys.mkString("(", ",", ")")}"
-                   else ""}" +
-                s"${if (checkConflict) ", CHECK constraints changed" else ""}" +
-                s"${if (idConflict) ", identity high-water moved" else ""}) — " +
-                "re-run against the new table state")
-          }
-          base = Some(cur)
-      }
-    }
+    commitLoop(tableTarget(fs, new Path(tablePath), ref), opName, prev)(
+      rebaseUnless(opName, tablePath)(contested(_, prev, buckets,
+        prev.fold(t.schema)(_.schema), keys, s.written.toSet ++ dropBuckets,
+        Some(t.checks),
+        if (s.idSpec.isEmpty) None
+        else Some(prev.map(_.idhw).getOrElse(Map.empty)))))(
+      base => Some(assembleManifest(base, s, txn, opName)))
   }
 
   /** SCAN-TO-COMMIT conflict guard for row-level statements (SQL
@@ -7092,13 +6888,13 @@ object MergeWriter {
     * scan PINNED at `expectedVersion`, but the changeset is applied
     * against the manifest read at commit time — a commit landing during
     * the statement's (long) read/join phase would otherwise be silently
-    * clobbered per overlapping key (lost update / write skew). Mirrors
-    * the rebase rule of [[writeEpochAndCommit]]'s CAS loop: the apply
-    * may proceed iff no
-    * TOUCHED bucket's epoch pointer moved since the scanned version and
-    * neither the schema nor the bucket modulus changed — anything else
-    * raises the protocol's `ConcurrentModificationException` ("re-run
-    * against the new table state"). A scanned version that already aged
+    * clobbered per overlapping key (lost update / write skew). Applies
+    * the data writes' rebase rule ([[contested]]) to the scanned
+    * version: the apply may proceed iff no TOUCHED bucket's signature
+    * moved since the scanned version and neither the schema nor the
+    * bucket modulus changed — anything else raises the protocol's
+    * `ConcurrentModificationException` ("re-run against the new table
+    * state"). A scanned version that already aged
     * out of retention cannot be re-validated and conservatively
     * conflicts. Together with the commit CAS (which re-validates from
     * the version read HERE forward) this covers the whole scan→commit
@@ -7118,21 +6914,13 @@ object MergeWriter {
             s"$ev to ${man.version} and version $ev is no longer " +
             "retained — the statement's reads cannot be re-validated; " +
             "re-run against the new table state"))
-      val modulusMoved = scanned.buckets != man.buckets
-      val schemaMoved = scanned.schema != man.schema
-      val moved =
-        if (modulusMoved) touched
-        else touched.filter(b => bucketSig(scanned, b) != bucketSig(man, b))
-      if (modulusMoved || schemaMoved || moved.nonEmpty)
+      contested(man, Some(scanned), scanned.buckets, scanned.schema,
+        Seq.empty, touched, None, None).foreach { why =>
         throw new java.util.ConcurrentModificationException(
           s"$op: a concurrent writer committed to $tablePath between the " +
             s"statement's scan (version $ev) and its write (version " +
-            s"${man.version})" +
-            (if (modulusMoved)
-               s" — bucket modulus ${scanned.buckets} -> ${man.buckets}"
-             else if (schemaMoved) " — schema changed"
-             else s" — contested buckets ${moved.sorted.mkString("{", ",", "}")}") +
-            " — re-run against the new table state")
+            s"${man.version}: $why) — re-run against the new table state")
+      }
     }
 
   /** Keyed DELETE — `MERGE INTO target USING keys ON keys WHEN MATCHED
@@ -7397,8 +7185,9 @@ object MergeWriter {
         rowsPerFile.foreach(n =>
           spark.conf.set("spark.sql.files.maxRecordsPerFile", n.toString))
         val upd = compactEpochsUncommitted(spark, fs, tablePath, man)
-        commitOrConflict(fs, dir, upd.copy(version = man.version + 1),
-          opName)
+        val t = tableTarget(fs, dir)
+        commitLoop(t, opName, Some(man))(lostRace(t, opName, man))(
+          _ => Some(upd))
       } finally if (rowsPerFile.isDefined) prevCap match {
         case Some(v) => spark.conf.set("spark.sql.files.maxRecordsPerFile", v)
         case None => spark.conf.unset("spark.sql.files.maxRecordsPerFile")
@@ -7500,16 +7289,15 @@ object MergeWriter {
       }
       val (epoch, written, fresh) = stageEpoch(spark, fs, tablePath,
         live.reduce(_ unionByName _), man)
-      commitOrConflict(fs, dir, man.copy(
-        version = man.version + 1,
+      val t = tableTarget(fs, dir)
+      commitLoop(t, "compactBuckets", Some(man))(
+        lostRace(t, "compactBuckets", man))(_ => Some(man.copy(
         // rewritten buckets point at the fresh epoch; a fully-dead
         // bucket (all rows DV'd) emits no directory and drops out
         epochs = (man.epochs -- targets) ++ written.map(_ -> epoch),
         overlays = man.overlays -- targets,
         eqds = man.eqds -- targets,
-        stats = (man.stats -- targets) ++ fresh,
-        op = "compact", opTs = System.currentTimeMillis()),
-        "compactBuckets")
+        stats = (man.stats -- targets) ++ fresh)))
       gc(fs, dir)
     }
   }
@@ -7605,8 +7393,9 @@ object MergeWriter {
     val dir = new Path(tablePath)
     currentManifest(fs, dir).foreach { man =>
       val upd = splitEpochsUncommitted(spark, fs, tablePath, man, keys)
-      commitOrConflict(fs, dir, upd.copy(version = man.version + 1),
-        "splitBuckets")
+      val t = tableTarget(fs, dir)
+      commitLoop(t, "splitBuckets", Some(man))(
+        lostRace(t, "splitBuckets", man))(_ => Some(upd))
       gc(fs, dir)
     }
   }

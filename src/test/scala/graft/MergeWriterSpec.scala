@@ -19,6 +19,34 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  /** A pure conditional-PUT commit primitive: no link, no rename — the
+    * object-store shape. A JVM lock stands in for the store's
+    * If-None-Match arbitration; the staged file is IGNORED (body
+    * uploaded directly), proving the protocol never depends on rename
+    * semantics. `failNext` injects one lost put (the store said no,
+    * nothing committed); `loseAll` makes every put lose.
+    */
+  private class ConditionalPut extends MergeWriter.CommitPrimitive {
+    val puts = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var failNext = false
+    @volatile var loseAll = false
+    private val lock = new Object
+    override def putIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
+                             target: org.apache.hadoop.fs.Path,
+                             stage: org.apache.hadoop.fs.Path,
+                             body: Array[Byte]): Boolean = lock.synchronized {
+      puts.incrementAndGet()
+      if (loseAll) false
+      else if (failNext) { failNext = false; false } // injected loss
+      else if (fs.exists(target)) false
+      else {
+        val out = fs.create(target, false)
+        try out.write(body) finally out.close()
+        true
+      }
+    }
+  }
+
   test("merge upserts on the natural key and is idempotent on replay") {
     import spark.implicits._
     val dir = Files.createTempDirectory("merge").toString + "/states"
@@ -337,6 +365,16 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     // root-level legacy partition dirs are gone after migration
     assert(!new java.io.File(dir).listFiles()
       .exists(f => f.getName.startsWith(MergeWriter.BucketCol + "=")))
+
+    // an additive fold migrates too: the legacy rows survive and the
+    // delta folds into them
+    val add = Files.createTempDirectory("legacyadd").toString + "/t"
+    Seq(("a", 1L), ("b", 2L)).toDF("k", "n").write.parquet(add)
+    MergeWriter.mergeAdditive(spark, add, Seq(("a", 5L)).toDF("k", "n"),
+      Seq("k"), Seq("n"), txn = ("app", 1L), buckets = 4)
+    assert(MergeWriter.readTable(spark, add).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      Map("a" -> 6L, "b" -> 2L))
   }
 
   test("splitBuckets doubles the modulus; reads, merges and lookups carry over") {
@@ -1211,28 +1249,7 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("commit primitive: pluggable conditional-put serializes racers") {
     import spark.implicits._
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
     val dir = Files.createTempDirectory("condput").toString + "/t"
-    // a pure conditional-PUT: no link, no rename — the object-store
-    // shape. A JVM lock stands in for the store's If-None-Match
-    // arbitration; the staged file is IGNORED (body uploaded directly),
-    // proving the protocol never depends on rename semantics.
-    class ConditionalPut extends MergeWriter.CommitPrimitive {
-      val puts = new java.util.concurrent.atomic.AtomicInteger(0)
-      @volatile var failNext = false
-      private val lock = new Object
-      override def putIfAbsent(fs: FileSystem, target: HPath, stage: HPath,
-                               body: Array[Byte]): Boolean = lock.synchronized {
-        puts.incrementAndGet()
-        if (failNext) { failNext = false; false } // injected loss
-        else if (fs.exists(target)) false
-        else {
-          val out = fs.create(target, false)
-          try out.write(body) finally out.close()
-          true
-        }
-      }
-    }
     val put = new ConditionalPut
     try {
       MergeWriter.setCommitPrimitive(put)
@@ -2553,5 +2570,156 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
           s"$step: $f")
       }
     }
+  }
+
+  test("commit loop: one lost CAS rebases or conflicts by the entry's " +
+       "rule; a primitive that always loses fails every entry") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val root = Files.createTempDirectory("commitloop").toString
+    val keys = Seq("k")
+    def frame(from: Int, n: Int, v: Long) =
+      (from until from + n).map(i => (s"k$i", v, i)).toDF("k", "v", "w")
+    var nTargets = 0
+    // a fresh 2-bucket table of 20 rows; its txn ledger holds app "app"
+    def table(deleteVectors: Boolean = false,
+              eqDeletes: Boolean = false): String = {
+      nTargets += 1
+      val dir = s"$root/t$nTargets"
+      MergeWriter.merge(spark, dir, frame(0, 20, 1L), keys, buckets = 2,
+        deleteVectors = deleteVectors, eqDeletes = eqDeletes,
+        txn = Some(("app", 1L)))
+      dir
+    }
+    def group(): String = {
+      nTargets += 1
+      val g = s"$root/g$nTargets"
+      MergeWriter.mergeGroup(spark, g, Seq(("m", frame(0, 20, 1L), keys)),
+        buckets = 2)
+      g
+    }
+    // entry, isGroup, history op of a retrying entry (None = the entry
+    // publishes a state derived from ONE version: any loss conflicts),
+    // setup returning the target path, the entry itself
+    case class Entry(name: String, isGroup: Boolean, op: Option[String],
+                     setup: () => String, run: String => Unit)
+    def t(name: String, op: Option[String], setup: () => String = () =>
+        table())(run: String => Unit) = Entry(name, false, op, setup, run)
+    def g(name: String, op: Option[String])(run: String => Unit) =
+      Entry(name, true, op, () => group(), run)
+    val entries = Seq(
+      t("expireTxns", Some("expireTxns"))(
+        MergeWriter.expireTxns(spark, _, Seq("app"))),
+      t("createTag", Some("tag"))(MergeWriter.createTag(spark, _, "t1")),
+      t("dropTag", Some("untag"), () => {
+        val d = table(); MergeWriter.createTag(spark, d, "t1"); d
+      })(MergeWriter.dropTag(spark, _, "t1")),
+      t("addCheckConstraint", Some("addconstraint"))(
+        MergeWriter.addCheckConstraint(spark, _, "c1", "v >= 0")),
+      t("dropCheckConstraint", Some("dropconstraint"), () => {
+        val d = table()
+        MergeWriter.addCheckConstraint(spark, d, "c1", "v >= 0"); d
+      })(MergeWriter.dropCheckConstraint(spark, _, "c1")),
+      t("setRetention", Some("retention"))(
+        MergeWriter.setRetention(spark, _, versions = 3)),
+      t("restoreVersion", Some("restore"), () => {
+        val d = table()
+        MergeWriter.merge(spark, d, frame(0, 2, 2L), keys); d
+      })(d => MergeWriter.restoreVersion(spark, d,
+        MergeWriter.availableVersions(spark, d).head)),
+      t("addColumns", Some("addColumns"))(MergeWriter.addColumns(spark, _,
+        StructType(Seq(StructField("x", StringType, nullable = true))))),
+      t("renameColumn", Some("renameColumn"))(
+        MergeWriter.renameColumn(spark, _, "v", "v2")),
+      t("widenColumn", Some("widenColumn"))(
+        MergeWriter.widenColumn(spark, _, "w", LongType)),
+      t("replaceSchemaMetadata", Some("alterDefault"))(d =>
+        MergeWriter.replaceSchemaMetadata(spark, d,
+          MergeWriter.readTable(spark, d).schema)),
+      t("dropColumn", Some("dropColumn"))(
+        MergeWriter.dropColumn(spark, _, "w")),
+      t("analyzeTable", Some("analyze"))(d => {
+        MergeWriter.analyzeTable(spark, d); ()
+      }),
+      t("txn guard", Some("txn"))(MergeWriter.mergeAdditive(spark, _,
+        frame(0, 0, 0L), keys, Seq("v", "w"), txn = ("add", 1L))),
+      t("merge (copy-on-write)", Some("merge"))(
+        MergeWriter.merge(spark, _, frame(0, 3, 2L), keys)),
+      t("merge (merge-on-read)", Some("merge"),
+        () => table(deleteVectors = true))(
+        MergeWriter.merge(spark, _, frame(0, 3, 2L), keys)),
+      t("merge (equality deletes)", Some("merge"),
+        () => table(eqDeletes = true))(
+        MergeWriter.merge(spark, _, frame(0, 3, 2L), keys)),
+      t("delete (deletion vectors)", Some("delete"),
+        () => table(deleteVectors = true))(MergeWriter.delete(spark, _,
+        Seq("k1", "k2").toDF("k"), keys)),
+      g("mergeGroup", Some("mergeGroup"))(MergeWriter.mergeGroup(spark, _,
+        Seq(("m", frame(0, 3, 2L), keys)))),
+      g("setGroupRetention", Some("retention"))(
+        MergeWriter.setGroupRetention(spark, _, versions = 3)),
+      t("truncateHistory", None)(MergeWriter.truncateHistory(spark, _)),
+      t("buildBloomIndex", None)(
+        MergeWriter.buildBloomIndex(spark, _, Seq("k"))),
+      t("compact", None)(MergeWriter.compact(spark, _)),
+      t("clusterTable", None)(MergeWriter.clusterTable(spark, _, Seq("v"))),
+      t("compactBuckets", None)(
+        MergeWriter.compactBuckets(spark, _, Set(0, 1))),
+      t("splitBuckets", None)(MergeWriter.splitBuckets(spark, _, keys)),
+      t("createBranch", None)(MergeWriter.createBranch(spark, _, "b1")),
+      t("fastForward", None, () => {
+        val d = table()
+        MergeWriter.createBranch(spark, d, "b1")
+        MergeWriter.merge(spark, d, frame(0, 2, 2L), keys, ref = Some("b1"))
+        d
+      })(MergeWriter.fastForward(spark, _, "b1")),
+      t("createTable", None, () => { nTargets += 1; s"$root/c$nTargets" })(
+        MergeWriter.createTable(spark, _, frame(0, 1, 0L).schema, keys,
+          buckets = 2)),
+      g("splitGroupBuckets", None)(
+        MergeWriter.splitGroupBuckets(spark, _, "m", keys)),
+      g("compactGroupTable", None)(
+        MergeWriter.compactGroupTable(spark, _, "m")),
+      g("clusterGroupTable", None)(
+        MergeWriter.clusterGroupTable(spark, _, "m", Seq("v"))))
+    val put = new ConditionalPut
+    try {
+      MergeWriter.setCommitPrimitive(put)
+      entries.foreach { e =>
+        val path = e.setup()
+        def versions(): Seq[Long] =
+          if (e.isGroup) MergeWriter.availableGroupVersions(spark, path)
+          else MergeWriter.availableVersions(spark, path)
+        def lastOp(): String =
+          (if (e.isGroup) MergeWriter.groupHistory(spark, path)
+           else MergeWriter.tableHistory(spark, path))
+            .head().getAs[String]("op")
+        val before = versions()
+        // every CAS loses: the bounded loop gives up with the protocol's
+        // conflict, whatever the entry's rule
+        put.loseAll = true
+        try intercept[java.util.ConcurrentModificationException](e.run(path))
+        finally put.loseAll = false
+        assert(versions() == before, s"${e.name}: moved under loseAll")
+        // one lost CAS: a retrying entry rebases onto the (unchanged)
+        // head and commits once; a derived-from-one-version entry conflicts
+        put.failNext = true
+        e.op match {
+          case Some(op) =>
+            e.run(path)
+            val after = versions()
+            assert(after.last == before.lastOption.getOrElse(0L) + 1,
+              s"${e.name}: ${before} -> ${after}")
+            assert(after == (after.head to after.last),
+              s"${e.name}: non-sequential versions $after")
+            assert(lastOp() == op, s"${e.name}: history op")
+          case None =>
+            intercept[java.util.ConcurrentModificationException](e.run(path))
+            assert(versions() == before, s"${e.name}: moved on a lost CAS")
+        }
+        assert(!put.failNext, s"${e.name}: published without the primitive")
+        put.failNext = false
+      }
+    } finally MergeWriter.setCommitPrimitive(MergeWriter.LinkOrRenameCommit)
   }
 }
