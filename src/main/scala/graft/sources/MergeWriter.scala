@@ -3954,15 +3954,24 @@ object MergeWriter {
     */
   private def maybeAutoCompact(spark: SparkSession, fs: FileSystem, dir: Path,
                                tablePath: String, threshold: Int): Unit =
-    currentManifest(fs, dir).foreach { man =>
-      if (man.epochs.values.toSet.size > threshold)
-        // advisory: losing a commit race to a concurrent writer must not
-        // fail the merge that already committed — a later merge retries
-        try compact(spark, tablePath)
-        catch {
-          case _: java.io.IOException => ()
-          case _: java.util.ConcurrentModificationException => ()
-        }
+    currentManifest(fs, dir).filter(wantsCompact(_, threshold))
+      .foreach(_ => advisory(compact(spark, tablePath)))
+
+  /** The auto-compaction rule of a table or member manifest: more live
+    * epochs than the threshold.
+    */
+  private def wantsCompact(m: Manifest, threshold: Int): Boolean =
+    m.epochs.values.toSet.size > threshold
+
+  /** Run a post-commit maintenance action ADVISORILY: losing its commit
+    * race to a concurrent writer must not fail the write that already
+    * committed — a later write retries.
+    */
+  private def advisory(f: => Unit): Unit =
+    try f
+    catch {
+      case _: java.io.IOException => ()
+      case _: java.util.ConcurrentModificationException => ()
     }
 
   /** GROW-on-write threshold: a merge that leaves any bucket holding
@@ -3988,21 +3997,20 @@ object MergeWriter {
 
   private def maybeAutoSplit(spark: SparkSession, fs: FileSystem, dir: Path,
                              tablePath: String, threshold: Long): Unit =
-    if (threshold > 0) currentManifest(fs, dir).foreach { man =>
-      if (man.keyCols.nonEmpty && man.stats.nonEmpty &&
-          man.buckets < AutoSplitMaxBuckets) {
-        val maxBucketBytes =
-          man.stats.values.map(_.map(_.bytes).sum).maxOption.getOrElse(0L)
-        if (maxBucketBytes > threshold)
-          // advisory, like auto-compaction: a lost race never fails the
-          // merge that already committed — growth retries next merge
-          try splitBuckets(spark, tablePath, man.keyCols)
-          catch {
-            case _: java.io.IOException => ()
-            case _: java.util.ConcurrentModificationException => ()
-          }
-      }
-    }
+    if (threshold > 0)
+      currentManifest(fs, dir).filter(wantsSplit(_, threshold))
+        .foreach(man => advisory(splitBuckets(spark, tablePath, man.keyCols)))
+
+  /** The auto-split rule of a table or member manifest: some bucket holds
+    * more than `threshold` bytes by its recorded file stats, the modulus
+    * is below [[AutoSplitMaxBuckets]] and the merge keys are recorded.
+    * `threshold = 0` never splits.
+    */
+  private def wantsSplit(m: Manifest, threshold: Long): Boolean =
+    threshold > 0 && m.keyCols.nonEmpty && m.stats.nonEmpty &&
+      m.buckets < AutoSplitMaxBuckets &&
+      m.stats.values.map(_.map(_.bytes).sum).maxOption.getOrElse(0L) >
+        threshold
 
   /** Read committed epoch data with the manifest-recorded schema — a
     * zero-job plan step, vs. `mergeSchema=true`'s distributed footer-merge
@@ -4264,372 +4272,227 @@ object MergeWriter {
         stripSchemaIds(a.drop(BucketCol).schema)))
   }
 
+  /** A merge-on-read OVERLAY epoch staged by [[stageOverlay]]: its
+    * written buckets and per-file stats (attributed to the overlay
+    * epoch), plus the per-commit stats read back from its files — the
+    * HLL batch and the identity extremes.
+    */
+  private final case class Overlay(epoch: String, written: Set[Int],
+                                   stats: Map[Int, Seq[FileStat]],
+                                   batchSk: Option[BatchColStats],
+                                   idSpec: Map[String, (Long, Long)],
+                                   idExt: Map[String, Long])
+
   /** A merge-on-read OVERLAY epoch: the batch (order-aligned to the
     * recorded schema, still carrying [[BucketCol]]) written exactly like
     * any epoch — [[prepareRows]] then [[stageEpoch]] under the base's
     * layout — with each file's stats attributed to the overlay epoch
-    * (overlay part-file names collide with base names). No batch, no
-    * epoch: a pure-delete changeset writes none.
+    * (overlay part-file names collide with base names). Its rows fold
+    * into the stored HLL sketches exactly like a CoW epoch's and move the
+    * identity high-water (specs from the DECLARED schema — the incoming
+    * frame never carries the identity metadata), each one narrow scan of
+    * the freshly-written files. No batch, no epoch: a pure-delete
+    * changeset writes none.
     */
   private def stageOverlay(spark: SparkSession, fs: FileSystem, root: String,
                            man: Manifest, rows: Option[DataFrame],
-                           keys: Seq[String])
-      : (String, Set[Int], Map[Int, Seq[FileStat]]) =
-    rows.fold(("", Set.empty[Int], Map.empty[Int, Seq[FileStat]])) { r =>
-      val (epoch, written, stats) = stageEpoch(spark, fs, root,
-        prepareRows(r.drop(BucketCol), man.checks, man.colIds, keys,
-          man.buckets, root), man)
-      (epoch, written.toSet,
-        stats.map { case (b, fss) => b -> fss.map(_.copy(e = epoch)) })
+                           keys: Seq[String]): Overlay =
+    rows.fold(Overlay("", Set.empty, Map.empty, None, Map.empty, Map.empty)) {
+      r =>
+        val (epoch, written, stats) = stageEpoch(spark, fs, root,
+          prepareRows(r.drop(BucketCol), man.checks, man.colIds, keys,
+            man.buckets, root), man)
+        val idSpec = man.schema.fold(Map.empty[String, (Long, Long)])(s =>
+          identitySpecs(DataType.fromJson(s).asInstanceOf[StructType]))
+        Overlay(epoch, written.toSet,
+          stats.map { case (b, fss) => b -> fss.map(_.copy(e = epoch)) },
+          if (man.colSketches.nonEmpty && written.nonEmpty)
+            batchColStats(spark.read.parquet(s"$root/$epoch"),
+              man.colSketches.keySet)
+          else None,
+          idSpec,
+          if (idSpec.nonEmpty && written.nonEmpty)
+            identityExtremes(spark, s"$root/$epoch", idSpec)
+          else Map.empty)
     }
 
-  /** `m` with an overlay epoch from [[stageOverlay]] appended: a written
-    * bucket without a stored pointer adopts it as its BASE, the others
-    * list it as their newest overlay; its file stats join the bucket's.
+  /** `m` with an [[Overlay]] appended and `txn` recorded: a written
+    * bucket without a stored pointer adopts the overlay as its BASE, the
+    * others list it as their newest overlay; its file stats join the
+    * bucket's, its identity extremes move the high-water and its HLL
+    * batch folds into the column stats.
     */
-  private def withOverlay(m: Manifest, epoch: String, written: Set[Int],
-                          overlayStats: Map[Int, Seq[FileStat]]): Manifest = {
-    val (stacked, fresh) = written.partition(m.epochs.contains)
-    m.copy(epochs = m.epochs ++ fresh.map(_ -> epoch),
+  private def withOverlay(m: Manifest, o: Overlay,
+                          txn: Option[(String, Long)]): Manifest = {
+    val (stacked, fresh) = o.written.partition(m.epochs.contains)
+    withRefreshedStats(m.copy(epochs = m.epochs ++ fresh.map(_ -> o.epoch),
       overlays = m.overlays ++ stacked.map(b =>
-        b -> (m.overlays.getOrElse(b, Seq.empty) :+ epoch)),
-      stats = m.stats ++ overlayStats.map { case (b, fss) =>
-        b -> (m.stats.getOrElse(b, Seq.empty) ++ fss) })
+        b -> (m.overlays.getOrElse(b, Seq.empty) :+ o.epoch)),
+      stats = m.stats ++ o.stats.map { case (b, fss) =>
+        b -> (m.stats.getOrElse(b, Seq.empty) ++ fss) },
+      txns = m.txns ++ txn,
+      idhw = advanceIdhw(m.idhw, o.idSpec, o.idExt)), o.batchSk)
   }
 
-  /** MERGE-ON-READ keyed upsert (Iceberg v2's merge-on-read writes:
-    * data-file adds beside position deletes): the incoming batch lands
-    * as ONE overlay epoch — clustered, Bloom'd, fingerprinted and
-    * id-stamped exactly like any epoch — while the replaced keys' OLD
-    * rows die by deletion vector, so no read ever needs key-level
-    * dedupe: the overlay rows are the only live copies. Write I/O is
-    * ∝ the BATCH (plus a KB-scale sidecar + manifest), not ∝ the
-    * touched buckets — at 100 TB with 256 MB buckets, a 1 000-row
-    * trickle upsert scattered over 200 buckets is ~MBs instead of
-    * ~50 GB of rewrite. The price is read-side and bounded exactly
-    * like DV deletes: extra union branches per overlay and row-based
-    * (not columnar) catalog scans while vectors are live, drained by
-    * auto-compaction (any
-    * full bucket rewrite — CoW merge, delete, compact, split —
-    * collapses the bucket's overlays).
-    *
-    * Returns false — the caller falls back to copy-on-write — when the
-    * batch is too large to stay metadata-sized
-    * ([[DvMaxPositionsPerCommit]]), the incoming schema differs from
-    * the recorded one (evolution stays CoW), or a touched stored
-    * bucket lacks per-file stats. Returns true when the upsert
-    * committed.
+  /** The [[contested]] rule of a merge-on-read commit over `man`: the
+    * overlay append and the resolved positions or eq-delete scoping are
+    * keyed to the touched buckets' signatures at scan time, and the rows
+    * were shaped under `man`'s modulus, schema and merge keys; the CHECK
+    * set and the identity high-water count only when the overlay adds
+    * rows.
     */
-  private def morApply(spark: SparkSession, fs: FileSystem,
-                       tablePath: String, man: Manifest,
-                       inc: DataFrame, delKeys: Option[DataFrame],
-                       keys: Seq[String], touched: Seq[Int],
-                       txn: Option[(String, Long)],
-                       opName: String = "merge",
-                       ref: Option[String] = None,
-                       // exact batch sizes when the caller already knows
-                       // them (touchedBucketCounts' sums) — skips the
-                       // limit(cap).count() probe jobs below
-                       incTotalHint: Option[Long] = None,
-                       delTotalHint: Option[Long] = None): Boolean = {
-    if (man.schema.isEmpty) return false
-    val recorded = DataType.fromJson(man.schema.get)
-      .asInstanceOf[StructType]
-    val inc0 = alignToRecorded(inc, recorded).getOrElse(return false)
-    val touchedStored = touched.filter(man.epochs.contains)
-    if (touchedStored.exists(b => man.stats.get(b).forall(_.isEmpty)))
-      return false
-    // cap probe with an early out: a large merge on a deleteVectors
-    // table must not pay full-count Spark jobs just to discover it
-    // belongs on the copy-on-write path — limit(cap+1) bounds the work,
-    // and a count that comes back under the limit is exact (nothing was
-    // truncated), so the counts double as the real sizes below
-    val capProbe = (DvMaxPositionsPerCommit + 1).toInt
-    val incCount = incTotalHint.getOrElse(inc.limit(capProbe).count())
-    if (incCount > DvMaxPositionsPerCommit) return false
-    val delCount = delTotalHint.orElse(
-      delKeys.map(_.limit(capProbe).count())).getOrElse(0L)
-    if (incCount + delCount > DvMaxPositionsPerCommit) return false
-    val doomed = delKeys match {
-      case Some(d) => inc.select(keys.map(col): _*)
-        .union(d.select(keys.map(col): _*)).distinct()
-      case None => inc.select(keys.map(col): _*).distinct()
-    }
-    // 1. positions of the CHANGED keys' current live rows (≤ changeset
-    //    size — keyed-table invariant; already-dead rows stay out via
-    //    the DV-aware read). Upserted keys vacate their old copy;
-    //    deleted keys just end here.
-    val storedPaths = touchedPaths(tablePath, man, touched)
+  private def overlayRule(man: Manifest, keys: Seq[String],
+                          touched: Seq[Int],
+                          o: Overlay): Manifest => Option[String] =
+    contested(_, Some(man), man.buckets, man.schema, keys, touched,
+      if (o.written.isEmpty) None else Some(man.checks),
+      if (o.idSpec.isEmpty) None else Some(man.idhw))
+
+  /** What a physical-policy arm of [[keyedWrite]] made of a write. */
+  private sealed trait Arm
+
+  /** The arm cannot take the write; copy-on-write does. */
+  private case object Declined extends Arm
+
+  /** Provably nothing changes: only the txn anchor is recorded. */
+  private case object Unchanged extends Arm
+
+  /** Files are staged: `step` derives the next manifest on whichever base
+    * the commit lands on, `why` is its [[contested]] rule.
+    */
+  private final case class Staged(step: Option[Manifest] => Option[Manifest],
+                                  why: Manifest => Option[String])
+      extends Arm
+
+  /** The POSITION arm of a deletion-vector table (Delta's deletion
+    * vectors, Iceberg v2's merge-on-read position deletes beside
+    * data-file adds): the upserts land as ONE overlay epoch —
+    * clustered, Bloom'd, fingerprinted and id-stamped exactly like any
+    * epoch — and every changed key's live stored row dies by deletion
+    * vector: one pruned, DV-filtered read of the touched buckets (key
+    * columns plus file metadata) resolves the row positions, ONE `_dv/`
+    * sidecar holds each hit file's FULL (prior ∪ new) dead-position set,
+    * and the next manifest re-points the files' `dv` references, epoch
+    * pointers unmoved. No read ever needs key-level dedupe: the overlay
+    * rows are the only live copies. Write I/O is ∝ the changeset (plus a
+    * KB-scale sidecar and manifest), not ∝ the touched buckets — at 100
+    * TB with 256 MB buckets, a 1 000-row trickle upsert scattered over
+    * 200 buckets is ~MBs instead of ~50 GB of rewrite, and a 100-key
+    * purge (the reference's deleted-item reconciliation, T19, and
+    * right-to-be-forgotten purges) is ~KBs. The price is read-side and
+    * bounded: extra union branches per overlay and row-based catalog
+    * scans while vectors are live ([[readDvAware]]), drained by
+    * auto-compaction — any full bucket rewrite (CoW merge, delete,
+    * compact, split) collapses overlays and purges vectors.
+    *
+    * Declines when the changeset is too large to stay metadata-sized
+    * ([[DvMaxPositionsPerCommit]]), the upserts' schema differs from the
+    * recorded one (evolution stays CoW), or a touched stored bucket lacks
+    * per-file stats (nowhere to hang the reference). Without upserts and
+    * without a live hit the write is [[Unchanged]].
+    */
+  private def positionArm(spark: SparkSession, fs: FileSystem, root: String,
+                          man: Manifest, up: Option[DataFrame],
+                          doomed: DataFrame, keys: Seq[String],
+                          touched: Seq[Int], upN: Long, delN: Long,
+                          txn: Option[(String, Long)]): Arm = {
+    val aligned = up.map(u => man.schema
+      .flatMap(s => alignToRecorded(u,
+        DataType.fromJson(s).asInstanceOf[StructType]))
+      .getOrElse(return Declined))
+    if (upN + delN > DvMaxPositionsPerCommit || touched.exists(b =>
+        man.epochs.contains(b) && man.stats.get(b).forall(_.isEmpty)))
+      return Declined
+    // LIVE rows of the changed keys with their positions: the DV-aware
+    // read keeps already-dead rows out, so the set is ≤ one row per key
+    // (keyed-table invariant) and cap-bounded — which also lets the key
+    // side broadcast, so the probe scan never pays an Exchange (guide
+    // §3.1); the delete keys arrive distinct
+    val paths = touchedPaths(root, man, touched)
     val hits =
-      if (storedPaths.isEmpty) Array.empty[org.apache.spark.sql.Row]
-      // doomed is cap-bounded (checked above) — broadcast it so the
-      // touched-bucket probe scan never pays an Exchange (guide §3.1)
-      else readFiltered(spark, man, tablePath, storedPaths, withPos = true)
-        .join(broadcast(doomed), keys, "left_semi")
-        .select(col("__graft_file"), col("__graft_pos"))
-        .collect()
-    if (incCount == 0 && hits.isEmpty) return true // provable no-op
-    // 2. the overlay epoch (a pure-delete changeset writes none)
-    val (epoch, written, overlayStats) = stageOverlay(spark, fs, tablePath,
-      man, if (incCount == 0) None else Some(inc0), keys)
-    // 3. deletion vectors for the replaced keys' old rows: the sidecar
-    //    entry is each file's FULL (prior ∪ new) dead set, as ever
-    val newDead: Map[String, Array[Long]] = hits.groupBy(_.getString(0))
+      if (paths.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      else readFiltered(spark, man, root, paths, withPos = true)
+        .join(broadcast(if (up.isEmpty) doomed else doomed.distinct()), keys,
+          "left_semi")
+        .select(col("__graft_file"), col("__graft_pos")).collect()
+    if (upN == 0 && hits.isEmpty) return Unchanged
+    val o = stageOverlay(spark, fs, root, man, aligned.filter(_ => upN > 0),
+      keys)
+    val newDead = hits.groupBy(_.getString(0))
       .map { case (f, rs) => f -> rs.map(_.getLong(1)) }
+    val prior = dvPositions(fs, root,
+      dvFileRefs(man).filter { case (k, _) => newDead.contains(k) })
+    val dead: Map[String, Array[Long]] = newDead.map { case (k, ps) =>
+      k -> (prior.getOrElse(k, Array.empty[Long]) ++ ps).distinct.sorted }
+    // sidecar first, manifest last — a failed commit leaves an
+    // unreferenced sidecar for gc's age guard
     val sidecar = "dv-" + UUID.randomUUID() + ".json"
-    val mergedDead: Map[String, Array[Long]] =
-      if (newDead.isEmpty) Map.empty
-      else {
-        val priorRefs = dvFileRefs(man).filter { case (k, _) =>
-          newDead.contains(k) }
-        val priorPos = dvPositions(fs, tablePath, priorRefs)
-        newDead.map { case (k, ps) =>
-          k -> (priorPos.getOrElse(k, Array.empty[Long]) ++ ps)
-            .distinct.sorted
-        }
-      }
-    if (mergedDead.nonEmpty) writeDvSidecar(fs, tablePath, sidecar,
-      mergedDead)
-    // incremental stats: the overlay epoch's rows fold into the stored
-    // HLL sketches exactly like a CoW epoch's (one narrow scan of the
-    // freshly-written overlay files)
-    val batchSk =
-      if (man.colSketches.nonEmpty && written.nonEmpty)
-        batchColStats(spark.read.parquet(s"$tablePath/$epoch"),
-          man.colSketches.keySet)
-      else None
-    // identity high-water from the overlay files (same cost shape);
-    // specs come from the DECLARED schema — the incoming frame never
-    // carries the identity metadata
-    val morIdSpec = identitySpecs(recorded)
-    val morIdExt =
-      if (morIdSpec.nonEmpty && written.nonEmpty)
-        identityExtremes(spark, s"$tablePath/$epoch", morIdSpec)
-      else Map.empty[String, Long]
-    // 4. one manifest commit: overlays appended, DVs re-pointed, fresh
-    //    buckets (no stored pointer yet) adopt the epoch as their BASE;
-    //    it rebases iff nothing this upsert read-modified moved (the
-    //    resolved positions and the overlay append are keyed to the
-    //    touched buckets' signatures at scan time)
-    commitLoop(tableTarget(fs, new Path(tablePath), ref), opName, Some(man))(
-      rebaseUnless(opName, tablePath)(contested(_, Some(man), man.buckets,
-        man.schema, keys, touched, Some(man.checks),
-        if (morIdSpec.isEmpty) None else Some(man.idhw))))(_.map { base =>
-      val dvStats =
-        if (mergedDead.isEmpty) base.stats
-        else base.stats.map { case (b, fss) =>
-          b -> fss.map { f =>
-            mergedDead.get(dvRelKey(fileEpoch(base, b, f), b, f.name)) match {
-              case Some(ps) => f.copy(dv = sidecar, dvn = ps.length.toLong)
-              case None => f
-            }
-          }
-        }
-      withRefreshedStats(withOverlay(base.copy(stats = dvStats), epoch,
-        written, overlayStats).copy(txns = base.txns ++ txn,
-        idhw = advanceIdhw(base.idhw, morIdSpec, morIdExt)), batchSk)
-    })
-    true
+    if (dead.nonEmpty) writeDvSidecar(fs, root, sidecar, dead)
+    Staged(_.map(base => withOverlay(base.copy(stats = base.stats.map {
+      case (b, fss) => b -> fss.map(f =>
+        dead.get(dvRelKey(fileEpoch(base, b, f), b, f.name))
+          .fold(f)(ps => f.copy(dv = sidecar, dvn = ps.length.toLong)))
+    }), o, txn)), overlayRule(man, keys, touched, o))
   }
 
-  /** MERGE-ON-READ keyed delete (Delta's deletion vectors / Iceberg v2
-    * position deletes, on this protocol): resolve the doomed keys' LIVE
-    * row positions (one pruned, DV-filtered read of the touched buckets
-    * — reads only key columns plus file metadata, writes nothing bucket-
-    * sized), stage ONE `_dv/` sidecar holding each touched file's full
-    * dead-position set, and commit the next manifest version with the
-    * files' `dv` references updated — epoch pointers unmoved, write I/O
-    * ∝ deleted rows instead of ∝ touched-bucket bytes. At 100 TB with
-    * 256 MB buckets, a 100-key purge spread over 100 buckets is ~KBs of
-    * sidecar instead of ~25 GB of rewrite — the reference's deleted-item
-    * reconciliation (T19) and right-to-be-forgotten purges are exactly
-    * this shape. Readers filter dead positions through [[readDvAware]];
-    * compaction purges (fresh stats carry no `dv`), and commits racing a
-    * DV delete conflict through [[bucketSig]] (pointer + DV identity).
-    *
-    * Returns false — caller falls back to the copy-on-write rewrite —
-    * when the delete is too large to stay metadata-sized
-    * ([[DvMaxPositionsPerCommit]]) or a touched bucket lacks per-file
-    * stats (nowhere to hang the reference). Returns true when the
-    * delete committed OR proved a no-op (no stored row matches).
-    */
-  private def dvDelete(spark: SparkSession, fs: FileSystem,
-                       tablePath: String, man: Manifest,
-                       del: DataFrame, keys: Seq[String],
-                       touched: Seq[Int],
-                       ref: Option[String] = None,
-                       delTotalHint: Option[Long] = None): Boolean = {
-    val touchedStored = touched.filter(man.epochs.contains)
-    if (touchedStored.isEmpty) return true
-    if (touchedStored.exists(b => man.stats.get(b).forall(_.isEmpty)))
-      return false
-    if (delTotalHint.getOrElse(del.count()) > DvMaxPositionsPerCommit)
-      return false
-    val paths = touchedPaths(tablePath, man, touched)
-    // LIVE rows matching the doomed keys, with physical positions: the
-    // DV-aware read keeps already-dead rows out, so the collected set is
-    // ≤ one row per doomed key (keyed-table invariant) — bounded by the
-    // cap checked above
-    // del is cap-bounded (checked above) — broadcast it so the probe
-    // scan of the touched buckets never pays an Exchange (guide §3.1)
-    val hits = readFiltered(spark, man, tablePath, paths, withPos = true)
-      .join(broadcast(del.drop(BucketCol)), keys, "left_semi")
-      .select(col("__graft_file"), col("__graft_pos"))
-      .collect()
-    if (hits.isEmpty) return true
-    val newDead: Map[String, Array[Long]] = hits.groupBy(_.getString(0))
-      .map { case (f, rs) => f -> rs.map(_.getLong(1)) }
-    // the sidecar entry carries the file's FULL (old ∪ new) dead set, so
-    // each file keeps exactly one live sidecar reference
-    val priorRefs = dvFileRefs(man).filter { case (k, _) =>
-      newDead.contains(k) }
-    val priorPos = dvPositions(fs, tablePath, priorRefs)
-    val mergedDead: Map[String, Array[Long]] = newDead.map { case (k, ps) =>
-      k -> (priorPos.getOrElse(k, Array.empty[Long]) ++ ps).distinct.sorted
-    }
-    val sidecar = "dv-" + UUID.randomUUID() + ".json"
-    // sidecar first, manifest last — the protocol's normal dance; a
-    // failed commit leaves an unreferenced sidecar for gc's age guard
-    writeDvSidecar(fs, tablePath, sidecar, mergedDead)
-    val relKeysByBucket: Map[Int, Map[String, Array[Long]]] =
-      touchedStored.map { b =>
-        b -> mergedDead.filter { case (k, _) =>
-          bucketEpochs(man, b).exists(e =>
-            k.startsWith(s"$e/$BucketCol=$b/")) }
-      }.toMap
-    // rebase iff nothing this delete read-modified moved: same modulus
-    // and schema, and every touched bucket's signature (pointer + DV
-    // identity) unchanged since the positions were resolved — anything
-    // else means the resolved positions are stale (a rewrite renumbered
-    // rows, a racing DV marked more)
-    commitLoop(tableTarget(fs, new Path(tablePath), ref), "delete",
-      Some(man))(rebaseUnless("delete", tablePath)(contested(_, Some(man),
-        man.buckets, man.schema, Seq.empty, touchedStored, None, None)))(
-      _.map(base => base.copy(stats = base.stats.map { case (b, fss) =>
-        relKeysByBucket.get(b).filter(_.nonEmpty) match {
-          case Some(dead) =>
-            b -> fss.map { f =>
-              dead.get(dvRelKey(fileEpoch(base, b, f), b, f.name)) match {
-                case Some(ps) => f.copy(dv = sidecar, dvn = ps.length.toLong)
-                case None => f
-              }
-            }
-          case None => b -> fss
-        }
-      })))
-    true
-  }
-
-  /** WRITE-ONLY merge-on-read keyed upsert/delete (Iceberg v2's
-    * EQUALITY DELETES beside data-file adds): the incoming batch lands
-    * as one overlay epoch exactly like [[morApply]], but the changed
-    * keys' old rows die by a DOOMED-KEY sidecar instead of resolved
-    * positions — the write path performs NO read of stored data at
-    * all. This is the trickle-CDC shape at 100 TB: an at-least-once
-    * queue feeding keyed upserts (the reference's SQS-fed state loads,
+  /** The WRITE-ONLY arm of an equality-delete table (Iceberg v2's
+    * EQUALITY DELETES beside data-file adds): the upserts land as one
+    * overlay epoch exactly like [[positionArm]]'s, but the changed keys'
+    * old rows die by a DOOMED-KEY sidecar instead of resolved positions —
+    * the write performs NO read of stored data at all. This is the
+    * trickle-CDC shape at 100 TB: an at-least-once queue feeding keyed
+    * upserts (the reference's SQS-fed state loads,
     * `serverless.yml:400-407`) pays ∝ its batch per trigger with zero
-    * probe I/O. The cost moves to the read side, bounded like DVs:
-    * format reads anti-join the doomed keys away ([[readFiltered]]),
-    * the native catalog scan resolves them to row positions at plan
-    * time ([[eqdDeadByAbsPath]]), and MoR pressure compaction purges.
+    * probe I/O. The cost moves to the read side, bounded like DVs: format
+    * reads anti-join the doomed keys away ([[readFiltered]]), the native
+    * catalog scan resolves them to row positions at plan time
+    * ([[eqdDeadByAbsPath]]), and MoR pressure compaction purges. The
+    * staged state serves both commit targets — a table's CAS and a group
+    * member's stage (the group-manifest CAS stays the one commit point,
+    * so cross-member atomicity is untouched while each member's write
+    * I/O drops to ∝ its batch).
     *
     * Scoping (Iceberg's sequence-number rule): the sidecar applies ONLY
     * to epochs live BEFORE this commit (`EqDel.upTo` = the bucket's
-    * live-epoch count at commit), so the commit's own overlay rows —
-    * the doomed keys' replacements — survive, and stacked eq-delete
-    * upserts leave exactly one live copy per key with no read-side
-    * key dedupe.
+    * live-epoch count at commit), so the commit's own overlay rows — the
+    * doomed keys' replacements — survive, and stacked eq-delete upserts
+    * leave exactly one live copy per key with no read-side key dedupe.
+    * `n` records the changeset bound (pressure accounting), not an exact
+    * distinct count — counting would cost one more job.
     *
-    * Returns false — caller falls back to copy-on-write — when the
-    * batch exceeds the per-commit key cap or the incoming schema moved
-    * (evolution stays CoW); unlike [[morApply]], missing per-file stats
-    * don't matter (nothing hangs on files). Returns true when the
-    * commit landed or the call proved a no-op.
+    * Declines when the changeset exceeds the per-commit key cap, the
+    * upserts' schema moved (evolution stays CoW), or a touched stored
+    * bucket lacks per-file stats (the catalog scan's plan-time
+    * resolution enumerates an eq-delete's affected files FROM the stats
+    * records — an unlisted file would serve its doomed rows unfiltered).
     */
-  private def eqdApply(spark: SparkSession, fs: FileSystem,
-                       tablePath: String, man: Manifest,
-                       incOpt: Option[DataFrame], delKeys: Option[DataFrame],
-                       keys: Seq[String], touched: Seq[Int],
-                       txn: Option[(String, Long)],
-                       opName: String = "merge",
-                       ref: Option[String] = None,
-                       // exact batch sizes when already known (the
-                       // touchedBucketCounts sums) — no re-count jobs
-                       incTotalHint: Option[Long] = None,
-                       delTotalHint: Option[Long] = None): Boolean = {
-    if (man.schema.isEmpty) return false
-    val recorded = DataType.fromJson(man.schema.get).asInstanceOf[StructType]
-    val inc0opt: Option[DataFrame] =
-      incOpt.map(alignToRecorded(_, recorded).getOrElse(return false))
-    val capProbe = (DvMaxPositionsPerCommit + 1).toInt
-    val incCount = incTotalHint.getOrElse(
-      incOpt.fold(0L)(_.limit(capProbe).count()))
-    if (incCount > DvMaxPositionsPerCommit) return false
-    val delCount = delTotalHint.orElse(
-      delKeys.map(_.limit(capProbe).count())).getOrElse(0L)
-    if (incCount + delCount > DvMaxPositionsPerCommit) return false
-    val touchedStored = touched.filter(man.epochs.contains)
-    // a touched bucket without per-file stats falls back to CoW: the
-    // catalog scan's plan-time resolution enumerates an eq-delete's
-    // affected files FROM the stats records — an unlisted file would
-    // serve its doomed rows unfiltered (morApply's guard, same reason)
-    if (touchedStored.exists(b => man.stats.get(b).forall(_.isEmpty)))
-      return false
-    // nothing to insert and nothing stored to delete from: provable
-    // no-op — but an exactly-once consumer's anchor must still advance
-    // (the empty-changeset rule merge()/applyChanges() follow), or a
-    // redelivered window re-applies forever
-    if (incCount == 0 && (delCount == 0 || touchedStored.isEmpty)) {
-      txn.foreach(t => commitTxnGuard(fs, new Path(tablePath), t, ref))
-      return true
-    }
-    val doomed = (inc0opt.map(_.select(keys.map(col): _*)).toSeq ++
-      delKeys.map(_.select(keys.map(col): _*)).toSeq)
-      .reduce(_ union _).distinct()
-    // 1. the overlay epoch (a pure-delete changeset writes none)
-    val (epoch, written, overlayStats) = stageOverlay(spark, fs, tablePath,
-      man, if (incCount == 0) None else inc0opt, keys)
-    // 2. the doomed-key sidecar (skipped when no touched bucket stores
-    //    anything — nothing to delete from). Sidecar first, manifest
-    //    last; a failed commit leaves an orphan for gc's age guard.
-    //    `n` records the batch bound (pressure accounting), not an
-    //    exact distinct count — counting would cost one more job.
+  private def eqdArm(spark: SparkSession, fs: FileSystem, root: String,
+                     man: Manifest, up: Option[DataFrame], doomed: DataFrame,
+                     keys: Seq[String], touched: Seq[Int], upN: Long,
+                     delN: Long, txn: Option[(String, Long)]): Arm = {
+    val recorded = DataType.fromJson(man.schema.getOrElse(return Declined))
+      .asInstanceOf[StructType]
+    val aligned =
+      up.map(alignToRecorded(_, recorded).getOrElse(return Declined))
+    val stored = touched.filter(man.epochs.contains)
+    if (upN + delN > DvMaxPositionsPerCommit ||
+        stored.exists(b => man.stats.get(b).forall(_.isEmpty)))
+      return Declined
+    val o = stageOverlay(spark, fs, root, man, aligned.filter(_ => upN > 0),
+      keys)
+    // the doomed-key sidecar, skipped when no touched bucket stores
+    // anything (nothing to delete from); sidecar first, manifest last
     val sidecar = "eqd-" + UUID.randomUUID()
-    if (touchedStored.nonEmpty)
-      writeEqdSidecar(spark, tablePath, sidecar, doomed, man.colIds)
-    val batchSk =
-      if (man.colSketches.nonEmpty && written.nonEmpty)
-        batchColStats(spark.read.parquet(s"$tablePath/$epoch"),
-          man.colSketches.keySet)
-      else None
-    val morIdSpec = identitySpecs(recorded)
-    val morIdExt =
-      if (morIdSpec.nonEmpty && written.nonEmpty)
-        identityExtremes(spark, s"$tablePath/$epoch", morIdSpec)
-      else Map.empty[String, Long]
-    // 3. one manifest commit: overlays appended, eq-delete records
-    //    appended with pre-commit epoch counts, fresh buckets adopt the
-    //    epoch as their base; it rebases iff nothing this upsert depends
-    //    on moved (the batch was validated under man's schema/constraint/
-    //    identity state, the eq-delete scoping was computed against the
-    //    touched buckets' epoch lists)
-    commitLoop(tableTarget(fs, new Path(tablePath), ref), opName, Some(man))(
-      rebaseUnless(opName, tablePath)(contested(_, Some(man), man.buckets,
-        man.schema, keys, touched, Some(man.checks),
-        if (morIdSpec.isEmpty) None else Some(man.idhw))))(_.map { base =>
-      // upTo from the PRE-COMMIT base: the overlay appended below takes
-      // ordinal upTo, keeping this commit's own rows exempt
-      val eqds2 =
-        if (touchedStored.isEmpty) base.eqds
-        else base.eqds ++ touched.filter(base.epochs.contains).map { b =>
-          b -> (base.eqds.getOrElse(b, Seq.empty) :+
-            EqDel(sidecar, bucketEpochs(base, b).length, incCount + delCount))
-        }
-      withRefreshedStats(withOverlay(base, epoch, written, overlayStats)
-        .copy(eqds = eqds2, txns = base.txns ++ txn,
-          idhw = advanceIdhw(base.idhw, morIdSpec, morIdExt)), batchSk)
-    })
-    true
+    if (stored.nonEmpty)
+      writeEqdSidecar(spark, root, sidecar, doomed.distinct(), man.colIds)
+    // upTo from the PRE-COMMIT base: the overlay appended after it takes
+    // ordinal upTo, keeping this commit's own rows exempt
+    Staged(_.map { base =>
+      val eqds = base.eqds ++ stored.map(b => b ->
+        (base.eqds.getOrElse(b, Seq.empty) :+
+          EqDel(sidecar, bucketEpochs(base, b).length, upN + delN)))
+      withOverlay(base.copy(eqds = eqds), o, txn)
+    }, overlayRule(man, keys, touched, o))
   }
 
   /** Relative file key of a bucket file — the suffix `_metadata
@@ -5128,28 +4991,301 @@ object MergeWriter {
     }
 
   /** Migrate a pre-manifest table ([[legacyData]]) with one full rewrite
-    * into the manifest layout, so every later write is bucket-local; a
-    * no-op once a manifest exists. The read uses mergeSchema to merge
-    * heterogeneous legacy footers (files written across an additive
-    * evolution) — it runs once per table, so the O(files) footer-job
-    * cost argument does not apply. The root-level legacy files are
-    * reclaimed by the caller's post-commit gc (or any later one, should
-    * the process die first).
+    * into the manifest layout, so every later write is bucket-local; the
+    * caller runs it only when no manifest exists, and gets the migrated
+    * manifest back (None when there is nothing to migrate). The read
+    * uses mergeSchema to merge heterogeneous legacy footers (files
+    * written across an additive evolution) — it runs once per table, so
+    * the O(files) footer-job cost argument does not apply. The root-level
+    * legacy files are reclaimed by the caller's post-commit gc (or any
+    * later one, should the process die first).
     */
   private def migrateLegacy(spark: SparkSession, fs: FileSystem,
                             tablePath: String, keys: Seq[String],
-                            buckets: Int,
-                            clusterBy: Seq[String] = Seq.empty,
-                            bloomBy: Seq[String] = Seq.empty,
-                            bloomItems: Long = DefaultBloomItems): Unit = {
+                            buckets: Int, clusterBy: Seq[String],
+                            bloomBy: Seq[String],
+                            bloomItems: Long): Option[Manifest] = {
     val dir = new Path(tablePath)
-    if (currentManifest(fs, dir).isEmpty && legacyData(fs, dir))
+    if (!legacyData(fs, dir)) None
+    else {
       writeEpochAndCommit(spark, fs, tablePath,
         spark.read.option("mergeSchema", "true").parquet(tablePath)
           .drop(BucketCol),
         keys, buckets, None, clusterCols = clusterBy, bloomCols = bloomBy,
         bloomN = bloomItems)
+      currentManifest(fs, dir)
+    }
   }
+
+  // ==== THE KEYED-WRITE PIPELINE ==========================================
+
+  /** How a copy-on-write keyed write combines its incoming rows with the
+    * stored rows of the touched buckets.
+    */
+  private sealed trait Combine
+
+  /** Upserts replace their keys' stored rows and deleted keys' rows end
+    * ([[merge]], [[delete]], [[applyChanges]], group members). `evolve`
+    * is ADDITIVE schema evolution (Delta mergeSchema): a column present
+    * on only one side null-fills on the other, so old rows read NULL in
+    * newly-added columns; renames and type changes are out of scope — a
+    * type conflict fails loudly in the union.
+    */
+  private final case class Replace(evolve: Boolean = false) extends Combine
+
+  /** Matched keys add `addCols` (SUM), new keys insert ([[mergeAdditive]]). */
+  private final case class Fold(addCols: Seq[String]) extends Combine
+
+  /** The newest `versionCol` per key wins; on version ties the stored
+    * row outranks the incoming one ([[mergeVersioned]]).
+    */
+  private final case class Newest(versionCol: String) extends Combine
+
+  /** Where a keyed write commits: a table's main lineage or one of its
+    * branches, or a group member whose staged state [[mergeGroup]]
+    * publishes in its one group-manifest CAS.
+    */
+  private sealed trait KeyedTarget { def root: String }
+  private final case class ToTable(root: String, ref: Option[String] = None)
+      extends KeyedTarget
+  private final case class ToMember(root: String, state: Option[Manifest])
+      extends KeyedTarget
+
+  /** One keyed write as its public entry point states it. `entry` names
+    * the entry point in argument errors; `op` names it in the commit
+    * history, key checks and conflict messages. `upserts` replace or
+    * fold into their keys; `deletes` name keys whose rows end. `unique`
+    * names the statement whose duplicate-key guard fuses into the probe;
+    * `declared` runs identity assignment and generated-column compute on
+    * the upserts (`Some(recomputeGenerated)`). The upserts create a
+    * missing table unless `creates` is off. The layout and policy fields
+    * seed only a table the write creates; `splitBytes` and
+    * `compactEpochs` drive the post-commit maintenance.
+    */
+  private final case class KeyedWrite(
+      entry: String, op: String, target: KeyedTarget, keys: Seq[String],
+      upserts: Option[DataFrame], deletes: Option[DataFrame],
+      combine: Combine,
+      txn: Option[(String, Long)] = None,
+      expectedVersion: Option[Long] = None,
+      unique: Option[String] = None,
+      declared: Option[Boolean] = None,
+      creates: Boolean = true,
+      buckets: Int = 64,
+      clusterBy: Seq[String] = Seq.empty,
+      bloomBy: Seq[String] = Seq.empty,
+      bloomItems: Long = DefaultBloomItems,
+      fingerprint: Boolean = false,
+      dvSeed: Boolean = false,
+      eqdSeed: Boolean = false,
+      splitBytes: Long = AutoSplitBytesPerBucket,
+      compactEpochs: Int = AutoCompactEpochs)
+
+  /** THE keyed-write pipeline. Every keyed write — [[merge]],
+    * [[mergeAdditive]], [[mergeVersioned]], [[delete]], [[applyChanges]]
+    * and a [[mergeGroup]] member's stage — runs these stages once:
+    *   1. prologue: argument checks, the branch check, pre-manifest
+    *      migration, the base manifest and its recorded keys, the txn
+    *      replay skip;
+    *   2. the upserts and the delete keys bucketed and persisted once;
+    *   3. one labeled probe per frame ([[touchedCounts]]): the touched
+    *      buckets and their exact row counts;
+    *   4. the empty/no-op rule — no touched bucket, or no upserts and no
+    *      touched stored bucket: nothing is written and no table created
+    *      (streaming sinks deliver empty early batches), but an existing
+    *      table still records the txn anchor, else a redelivery WITH
+    *      rows would apply; then the scan-to-commit guard
+    *      ([[requireScanCurrent]]) and the duplicate-key guard;
+    *   5. policy dispatch for a replacing, non-evolving write: an
+    *      equality-delete table takes [[eqdArm]], any other
+    *      deletion-vector table [[positionArm]] (tables only); a
+    *      declining arm, every other table and every folding, versioned
+    *      or evolving write take copy-on-write;
+    *   6. copy-on-write: read the touched stored buckets, anti-join the
+    *      changed keys, apply the [[Combine]] step and stage the rewrite
+    *      ([[stageRewrite]], then [[assembleManifest]] per commit attempt);
+    *   7. commit ([[publish]]): a table through [[commitLoop]], on its
+    *      branch if any; a group member returns its next state;
+    *   8. post-commit maintenance after a main-lineage table write
+    *      (branch staging defers it to the publish; a group runs its own
+    *      after the group CAS).
+    * Returns a member's staged state (its pinned state when nothing
+    * changed), None for a table.
+    */
+  private def keyedWrite(spark: SparkSession,
+                         w: KeyedWrite): Option[Manifest] = {
+    val (keys, root) = (w.keys, w.target.root)
+    require(keys.nonEmpty, s"${w.entry} requires at least one key column")
+    // the pipeline owns these names: silently withColumn-replacing a
+    // caller's column of the same name would corrupt its data
+    val reserved = w.combine match {
+      case _: Newest => Seq("__pri", "__vrn", BucketCol)
+      case _ => Seq(BucketCol)
+    }
+    w.upserts.foreach { u =>
+      reserved.foreach(c => require(!u.columns.contains(c),
+        s"${w.entry}: incoming frame must not contain reserved column '$c'"))
+      requireBloomCols(w.entry, u.schema, w.bloomBy)
+    }
+    val fs = fsFor(spark, root)
+    val dir = new Path(root)
+    val (ref, member) = w.target match {
+      case ToTable(_, r) => (r, false)
+      case _: ToMember => (None, true)
+    }
+    ref.foreach { b =>
+      requireBranchName(w.entry, b)
+      require(branchHead(fs, dir, b).isDefined,
+        s"${w.entry}: no branch '$b' on $root — createBranch first")
+    }
+    // a pre-manifest table migrates first: its rows are the write's base
+    val base = w.target match {
+      case ToMember(_, st) => st
+      case _ => refCurrent(fs, dir, ref).orElse(
+        if (ref.isDefined) None
+        else migrateLegacy(spark, fs, root, keys, w.buckets, w.clusterBy,
+          w.bloomBy, w.bloomItems))
+    }
+    base.foreach(validateKeys(_, keys, w.op))
+    if (base.isEmpty && !w.creates)
+      throw new IllegalStateException(
+        s"${w.entry}: $root is not a manifest table")
+    // keyed writes are replay-IDEMPOTENT by construction; the txn makes a
+    // redelivered batch a zero-I/O skip (and an additive one exact)
+    if ((base.isEmpty && w.upserts.isEmpty) ||
+        w.txn.exists(t => base.exists(_.txns.get(t._1).exists(_ >= t._2))))
+      return if (member) base else None
+    val nb = base.map(_.buckets).getOrElse(w.buckets)
+    def bucketed(rows: DataFrame): DataFrame =
+      rows.withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(nb)))
+        .persist()
+    // IDENTITY assignment + GENERATED-column compute precede bucketing:
+    // an assigned or computed value may BE a merge key, and its bucket
+    // must derive from the FINAL value
+    val up = w.upserts.map(u => bucketed(w.declared.fold(u)(re =>
+      applyDeclaredColumns(u, base, root, recomputeGenerated = re))))
+    val del = w.deletes.map(d =>
+      bucketed(d.select(keys.map(col): _*).distinct()))
+    try {
+      val (upCounts, dup) = up.fold((Map.empty[Int, Long], false))(
+        touchedCounts(_, keys, unique = w.unique.isDefined))
+      val delCounts = del.fold(Map.empty[Int, Long])(
+        touchedCounts(_, keys, unique = false)._1)
+      val touched =
+        (upCounts.keys ++ delCounts.keys).toIndexedSeq.distinct.sorted
+      val (upN, delN) = (upCounts.values.sum, delCounts.values.sum)
+      def unchanged(): Option[Manifest] =
+        if (member) base
+        else {
+          // a branch-targeted anchor lands on the branch lineage
+          if (base.isDefined) w.txn.foreach(commitTxnGuard(fs, dir, _, ref))
+          None
+        }
+      if (touched.isEmpty) return unchanged()
+      base.foreach(requireScanCurrent(fs, root, _, w.expectedVersion,
+        touched, w.op, ref))
+      if (dup) requireUniqueKeys(up.get, keys, w.unique.get)
+      val stored =
+        base.fold(Seq.empty[Int])(m => touched.filter(m.epochs.contains))
+      if (upN == 0 && stored.isEmpty) return unchanged()
+      // every changed key vacates its stored row: upserted keys come
+      // back from the upserts, deleted keys just end here
+      val doomed = (up.toSeq ++ del).map(_.select(keys.map(col): _*))
+        .reduce(_ union _)
+      val arm = base match {
+        case Some(man) if man.deleteVectors && w.combine == Replace() =>
+          if (man.eqDeletes) labeled(spark, "graft.eqd-apply") {
+            eqdArm(spark, fs, root, man, up, doomed, keys, touched, upN,
+              delN, w.txn)
+          } else if (!member) labeled(spark, "graft.mor-apply") {
+            positionArm(spark, fs, root, man, up, doomed, keys, touched, upN,
+              delN, w.txn)
+          } else Declined
+        case _ => Declined
+      }
+      val result = arm match {
+        case Unchanged => unchanged()
+        case s: Staged => publish(fs, w.target, w.op, base, s)
+        case Declined =>
+          val paths =
+            base.fold(Seq.empty[String])(touchedPaths(root, _, touched))
+          val kept =
+            if (paths.isEmpty) None
+            else Some(readWithSchema(spark, base.get, root, paths))
+          val in = up.map(_.drop(BucketCol))
+          val rows = w.combine match {
+            case Replace(evolve) =>
+              val survivors = kept.map(_.join(
+                antiKeySide(doomed, keys, upN + delN), keys, "left_anti"))
+              (survivors, in) match {
+                case (Some(sv), Some(i)) if evolve =>
+                  sv.unionByName(i, allowMissingColumns = true)
+                case (Some(sv), Some(i)) =>
+                  sv.unionByName(i.select(sv.columns.map(col).toIndexedSeq: _*))
+                case (sv, i) => sv.orElse(i).get
+              }
+            case Fold(addCols) =>
+              val cols = (keys ++ addCols).map(col)
+              kept.fold(in.get)(_.select(cols: _*)
+                .unionByName(in.get.select(cols: _*))
+                .groupBy(keys.map(col): _*)
+                .agg(sum(addCols.head).as(addCols.head),
+                  addCols.tail.map(c => sum(c).as(c)): _*))
+            case Newest(versionCol) =>
+              newestPerKey(kept.fold(in.get)(ex =>
+                ex.withColumn("__pri", lit(0)).unionByName(
+                  in.get.select(ex.columns.map(col).toIndexedSeq: _*)
+                    .withColumn("__pri", lit(1)))),
+                keys, versionCol, pri = kept.map(_ => "__pri"))
+          }
+          // a write that can empty a bucket drops its stored pointer (the
+          // partitioned write emits no directory for an emptied bucket)
+          val s = stageRewrite(spark, fs, root, rows, keys, nb, base,
+            dropBuckets = if (del.isDefined) stored.toSet else Set.empty,
+            clusterCols = base.map(_.clusterCols).getOrElse(w.clusterBy),
+            bloomCols = base.map(_.bloomCols).getOrElse(w.bloomBy),
+            bloomN = w.bloomItems, fpSeed = w.fingerprint, dvSeed = w.dvSeed,
+            eqdSeed = w.eqdSeed)
+          publish(fs, w.target, w.op, base,
+            rewriteStage(s, base, keys, w.txn, w.op))
+      }
+      if (!member && ref.isEmpty)
+        maintainAfterWrite(spark, fs, root, w.splitBytes, w.compactEpochs)
+      result
+    } finally { (up ++ del).foreach(_.unpersist()) }
+  }
+
+  /** Commit a staged keyed write to its target: a table through
+    * [[commitLoop]] from the version the write read, rebasing under the
+    * staged [[contested]] rule (on its branch, if any); a group member
+    * returns its next state for [[mergeGroup]]'s group CAS.
+    */
+  private def publish(fs: FileSystem, target: KeyedTarget, op: String,
+                      read: Option[Manifest], s: Staged): Option[Manifest] =
+    target match {
+      case _: ToMember => s.step(read)
+      case ToTable(root, ref) =>
+        commitLoop(tableTarget(fs, new Path(root), ref), op, read)(
+          rebaseUnless(op, root)(s.why))(s.step)
+        None
+    }
+
+  /** A declared Bloom column must exist in the incoming schema with a
+    * Bloom-able type: bloomBy applies at table CREATION (like clusterBy),
+    * and a typo'd or float-typed column would otherwise silently record
+    * filters no probe can ever use.
+    */
+  private def requireBloomCols(op: String, schema: StructType,
+                               bloomBy: Seq[String]): Unit =
+    bloomBy.foreach { c =>
+      val f = schema.fields.find(_.name == c)
+      require(f.isDefined, s"$op: bloomBy column '$c' is not in the " +
+        s"incoming schema ${schema.fieldNames.mkString("(", ",", ")")}")
+      require(bloomPutKind(f.get.dataType).isDefined,
+        s"$op: bloomBy column '$c' has unsupported type " +
+          s"${f.get.dataType.simpleString} (supported: integral, date, " +
+          "timestamp, string)")
+    }
 
   /** MERGE: rows in `incoming` replace existing rows with the same key;
     * all other existing rows survive. Equivalent to
@@ -5198,134 +5334,14 @@ object MergeWriter {
             // SAME persisted rows the write consumes, it is sound for
             // non-deterministic sources without an extra pin.
             assertUnique: Option[String] = None): Unit = {
-    require(keys.nonEmpty, "merge requires at least one key column")
-    require(!incoming.columns.contains(BucketCol),
-      s"merge: incoming frame must not contain reserved column '$BucketCol'")
-    // bloomBy applies at table CREATION (like clusterBy); validate the
-    // declared columns NOW — a typo'd or float-typed bloom column would
-    // otherwise silently record filters no probe can ever use
-    bloomBy.foreach { c =>
-      val f = incoming.schema.fields.find(_.name == c)
-      require(f.isDefined, s"merge: bloomBy column '$c' is not in the " +
-        s"incoming schema ${incoming.columns.mkString("(", ",", ")")}")
-      require(bloomPutKind(f.get.dataType).isDefined,
-        s"merge: bloomBy column '$c' has unsupported type " +
-          s"${f.get.dataType.simpleString} (supported: integral, date, " +
-          "timestamp, string)")
-    }
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    ref.foreach { b =>
-      requireBranchName("merge", b)
-      require(branchHead(fs, dir, b).isDefined,
-        s"merge: no branch '$b' on $tablePath — createBranch first")
-    }
-    if (ref.isEmpty)
-      migrateLegacy(spark, fs, tablePath, keys, buckets, clusterBy, bloomBy,
-        bloomItems)
-    val m = refCurrent(fs, dir, ref)
-    m.foreach(validateKeys(_, keys, "merge"))
-    // keyed merge is replay-IDEMPOTENT by construction, so the optional
-    // txn id is belt-and-braces for streaming sinks: it makes a
-    // redelivered batch a zero-I/O skip instead of a no-op rewrite
-    if (txn.exists(t => m.exists(_.txns.get(t._1).exists(_ >= t._2)))) return
-    // clusterBy applies at table CREATION (like `buckets`); an existing
-    // table keeps its recorded clustering
-    val cluster = m.map(_.clusterCols).getOrElse(clusterBy)
-    val nb = m.map(_.buckets).getOrElse(buckets)
-    // IDENTITY assignment + GENERATED-column compute/validate precede
-    // bucketing: an assigned or computed value may BE a merge key, and
-    // its bucket must derive from the FINAL value
-    val incomingAssigned = applyDeclaredColumns(incoming, m, tablePath)
-    val inc = incomingAssigned
-      .withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(nb)))
-      .persist()
-    try {
-      // ONE bounded metadata job (≤ `nb` rows) answers both "is the batch
-      // empty" and "which buckets are touched" — merging zero rows is a
-      // no-op and must not CREATE the table (streaming append sinks
-      // routinely deliver empty early batches). With `assertUnique` the
-      // same job additionally proves per-key uniqueness (per-bucket max
-      // multiplicity ≤ 1): keys hash into one bucket, so a duplicate is
-      // always bucket-local.
-      val touchedCounts: Map[Int, Long] = assertUnique match {
-        case Some(stmt) =>
-          val (counts, dup) = touchedCountsUnique(inc, keys)
-          if (dup) requireUniqueKeys(inc, keys, stmt) // throws with key detail
-          counts
-        case None => touchedBucketCounts(inc)
-      }
-      val touched = touchedCounts.keys.toIndexedSeq.sorted
-      if (touched.isEmpty) {
-        // empty batches never CREATE a table, but on an existing table a
-        // txn-carrying empty batch still records its guard (else a
-        // redelivery WITH rows would re-apply) — mergeAdditive's rule;
-        // a branch-targeted guard lands on the branch lineage (and
-        // publishes to main with the rest of the staged ledger)
-        txn.foreach(t => if (m.isDefined) commitTxnGuard(fs, dir, t, ref))
-        return
-      }
-      m match {
-        case None =>
-          writeEpochAndCommit(spark, fs, tablePath, inc.drop(BucketCol),
-            keys, nb, None, txn, clusterCols = cluster, bloomCols = bloomBy,
-            bloomN = bloomItems, fpSeed = fingerprint,
-            dvSeed = deleteVectors || eqDeletes,
-            eqdSeed = eqDeletes)
-        case Some(man) =>
-          // MERGE-ON-READ fast path (deleteVectors tables, small batch):
-          // the incoming rows land as ONE overlay epoch, the replaced
-          // keys' old positions die by deletion vector — write I/O
-          // ∝ the batch, not the touched buckets. morApply returns
-          // false (fall through to copy-on-write) when the batch is too
-          // large to stay metadata-sized, the schema moved, or stats
-          // are missing — same dispatch shape as delete()/applyChanges().
-          // eqDeletes tables take the WRITE-ONLY path (doomed-key
-          // sidecar, no probe read); plain deleteVectors tables resolve
-          // positions; both fall through to copy-on-write on cap/schema
-          if (!(man.deleteVectors && !evolveSchema &&
-                (if (man.eqDeletes)
-                  labeled(spark, "graft.eqd-apply") {
-                    eqdApply(spark, fs, tablePath, man, Some(inc), None, keys,
-                      touched, txn, ref = ref,
-                      incTotalHint = Some(touchedCounts.values.sum))
-                  }
-                else labeled(spark, "graft.mor-apply") {
-                  morApply(spark, fs, tablePath, man, inc, None, keys,
-                    touched, txn, ref = ref,
-                    incTotalHint = Some(touchedCounts.values.sum))
-                }))) {
-            val existingPaths = touchedPaths(tablePath, man, touched)
-            val survivors =
-              if (existingPaths.isEmpty) None
-              else Some(readWithSchema(spark, man, tablePath, existingPaths)
-                .join(antiKeySide(inc, keys, touchedCounts.values.sum), keys,
-                  "left_anti"))
-            val merged = survivors match {
-              case None => inc.drop(BucketCol)
-              case Some(sv) if evolveSchema =>
-                // ADDITIVE schema evolution (Delta mergeSchema): a column
-                // present on only one side null-fills on the other, so
-                // old rows read NULL in newly-added columns. Renames and
-                // type changes are out of scope — a type conflict fails
-                // loudly in the union.
-                sv.unionByName(inc.drop(BucketCol),
-                  allowMissingColumns = true)
-              case Some(sv) =>
-                sv.unionByName(
-                  inc.select(sv.columns.map(col).toIndexedSeq: _*))
-            }
-            writeEpochAndCommit(spark, fs, tablePath, merged, keys, nb,
-              Some(man), txn, clusterCols = cluster, fpSeed = fingerprint,
-              ref = ref)
-          }
-      }
-      // branch staging defers maintenance to the publish: gc would
-      // need the branch refs anyway, and compaction/split churn on a
-      // short-lived staging lineage is wasted work
-      if (ref.isEmpty) maintainAfterWrite(spark, fs, tablePath,
-        autoSplitBytesPerBucket, autoCompactEpochs)
-    } finally { inc.unpersist(); () }
+    keyedWrite(spark, KeyedWrite("merge", "merge", ToTable(tablePath, ref),
+      keys, Some(incoming), None, Replace(evolveSchema), txn = txn,
+      unique = assertUnique, declared = Some(false), buckets = buckets,
+      clusterBy = clusterBy, bloomBy = bloomBy, bloomItems = bloomItems,
+      fingerprint = fingerprint, dvSeed = deleteVectors || eqDeletes,
+      eqdSeed = eqDeletes, splitBytes = autoSplitBytesPerBucket,
+      compactEpochs = autoCompactEpochs))
+    ()
   }
 
   /** Exactly-once ADDITIVE merge — incremental rollup maintenance: the
@@ -5352,51 +5368,15 @@ object MergeWriter {
                     txn: (String, Long), buckets: Int = 64,
                     autoCompactEpochs: Int = AutoCompactEpochs,
                     autoSplitBytesPerBucket: Long = AutoSplitBytesPerBucket): Unit = {
-    require(keys.nonEmpty, "mergeAdditive requires at least one key column")
     require(addCols.nonEmpty, "mergeAdditive requires additive columns")
     require(delta.columns.sorted.sameElements((keys ++ addCols).sorted),
       s"mergeAdditive: delta must carry exactly keys ++ addCols " +
         s"(got ${delta.columns.mkString(",")})")
-    require(!delta.columns.contains(BucketCol),
-      s"mergeAdditive: delta must not contain reserved column '$BucketCol'")
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    // a pre-manifest table migrates first (its rows are the fold's base)
-    val m = currentManifest(fs, dir).orElse {
-      migrateLegacy(spark, fs, tablePath, keys, buckets)
-      currentManifest(fs, dir)
-    }
-    m.foreach(validateKeys(_, keys, "mergeAdditive"))
-    if (m.exists(_.txns.get(txn._1).exists(_ >= txn._2))) return // replay
-    val nb = m.map(_.buckets).getOrElse(buckets)
-    val inc = delta
-      .withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(nb)))
-      .persist()
-    try {
-      val touched = touchedBuckets(inc)
-      if (touched.isEmpty) {
-        // an empty batch is applied by definition — but its txn must
-        // still be recorded, or a redelivery with rows would double-apply
-        if (m.isDefined) commitTxnGuard(fs, dir, txn)
-        return
-      }
-      val cols = (keys ++ addCols).map(col)
-      val folded = m match {
-        case None => inc.drop(BucketCol)
-        case Some(man) =>
-          val existingPaths = touchedPaths(tablePath, man, touched)
-          if (existingPaths.isEmpty) inc.drop(BucketCol)
-          else readWithSchema(spark, man, tablePath, existingPaths).select(cols: _*)
-            .unionByName(inc.drop(BucketCol).select(cols: _*))
-            .groupBy(keys.map(col): _*)
-            .agg(sum(addCols.head).as(addCols.head),
-              addCols.tail.map(c => sum(c).as(c)): _*)
-      }
-      writeEpochAndCommit(spark, fs, tablePath, folded, keys, nb, m, Some(txn),
-        opName = "mergeAdditive")
-      maintainAfterWrite(spark, fs, tablePath, autoSplitBytesPerBucket,
-        autoCompactEpochs)
-    } finally { inc.unpersist(); () }
+    keyedWrite(spark, KeyedWrite("mergeAdditive", "mergeAdditive",
+      ToTable(tablePath), keys, Some(delta), None, Fold(addCols),
+      txn = Some(txn), buckets = buckets, splitBytes = autoSplitBytesPerBucket,
+      compactEpochs = autoCompactEpochs))
+    ()
   }
 
   /** Atomic full replace (`INSERT OVERWRITE` / Delta's
@@ -5586,44 +5566,35 @@ object MergeWriter {
     if (total <= BroadcastKeyMax) broadcast(kf) else kf
   }
 
-  /** One bounded metadata job (≤ buckets rows) yielding the touched
-    * buckets WITH their batch row counts — the counts ride along for
-    * free, so the DV/eqd cap probes downstream never pay a second
-    * `limit(cap).count()` pass over the batch (guide §1.2: don't
-    * compute things twice).
+  /** THE touched-bucket probe of a keyed write: one bounded metadata job
+    * (≤ buckets rows, under the `graft.touched` label) yielding the
+    * touched buckets WITH their exact batch row counts — an empty batch
+    * yields none, and the counts feed the arms' caps and the broadcast
+    * bound without a second pass over the batch (guide §1.2). With
+    * `unique` the same job proves per-key uniqueness: the per-bucket agg
+    * also tracks the max per-key multiplicity (keys hash into one bucket,
+    * so a duplicate is always bucket-local), and only a detected
+    * duplicate pays [[requireUniqueKeys]]' detailed error pass. Because
+    * the check reads the SAME persisted rows the write consumes, it is
+    * sound for non-deterministic sources.
     */
-  private def touchedBucketCounts(inc: DataFrame): Map[Int, Long] =
+  private def touchedCounts(inc: DataFrame, keys: Seq[String],
+                            unique: Boolean): (Map[Int, Long], Boolean) =
     labeled(inc.sparkSession, "graft.touched") {
-      inc.groupBy(col(BucketCol)).count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      if (!unique)
+        (inc.groupBy(col(BucketCol)).count().collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap, false)
+      else {
+        val per = inc.groupBy((col(BucketCol) +: keys.map(col)): _*)
+          .agg(count(lit(1)).as("__graft_kn"))
+          .groupBy(col(BucketCol))
+          .agg(max(col("__graft_kn")).as("__graft_mx"),
+            sum(col("__graft_kn")).as("__graft_n"))
+          .collect()
+        (per.map(r => r.getInt(0) -> r.getLong(2)).toMap,
+          per.exists(_.getLong(1) > 1L))
+      }
     }
-
-  /** The touched-bucket set of a bucketed incoming frame, sorted — one
-    * bounded metadata job (≤ bucket-count rows; empty batch → empty
-    * seq), so emptiness and pruning don't pay two scans.
-    */
-  private def touchedBuckets(inc: DataFrame): IndexedSeq[Int] =
-    touchedBucketCounts(inc).keys.toIndexedSeq.sorted
-
-  /** [[touchedBucketCounts]] with the statement-level duplicate-key
-    * guard FUSED in: the per-bucket agg also tracks the max per-key
-    * multiplicity (keys hash into one bucket, so a duplicate is always
-    * bucket-local). Returns the counts and whether some key repeats —
-    * only then does the caller pay [[requireUniqueKeys]]' detailed
-    * error pass. Because the check reads the SAME persisted rows the
-    * write consumes, it is sound for non-deterministic sources.
-    */
-  private def touchedCountsUnique(inc: DataFrame, keys: Seq[String])
-      : (Map[Int, Long], Boolean) = {
-    val per = inc.groupBy((col(BucketCol) +: keys.map(col)): _*)
-      .agg(count(lit(1)).as("__graft_kn"))
-      .groupBy(col(BucketCol))
-      .agg(max(col("__graft_kn")).as("__graft_mx"),
-        sum(col("__graft_kn")).as("__graft_n"))
-      .collect()
-    (per.map(r => r.getInt(0) -> r.getLong(2)).toMap,
-      per.exists(_.getLong(1) > 1L))
-  }
 
   /** Label the Spark jobs an engine phase submits (guide §1.5) so the
     * UI/profilers attribute them; thread-local, restores the caller's
@@ -5730,132 +5701,6 @@ object MergeWriter {
       new Path(dir, f"$GroupPrefix${g.version}%016d.json"), body)
   }
 
-  /** Stage one member table's merged state WITHOUT committing: write the
-    * merged epoch under the member root and return the member's updated
-    * manifest state for the caller to commit (in the group manifest's
-    * single rename). Same keyed-replace semantics and touched-bucket
-    * pruning as [[merge]]; an empty batch stages nothing and returns the
-    * state unchanged.
-    */
-  private def stageMergeInto(spark: SparkSession, fs: FileSystem,
-                             tableRoot: String, st: Option[Manifest],
-                             incoming: DataFrame, keys: Seq[String],
-                             buckets: Int,
-                             clusterBy: Seq[String] = Seq.empty,
-                             evolveSchema: Boolean = false,
-                             bloomBy: Seq[String] = Seq.empty,
-                             bloomItems: Long = DefaultBloomItems,
-                             // seeds apply at member CREATION only (like
-                             // clusterBy); an existing member keeps its
-                             // recorded flags
-                             eqdSeed: Boolean = false)
-      : Option[Manifest] = {
-    require(keys.nonEmpty, "mergeGroup requires at least one key column")
-    require(!incoming.columns.contains(BucketCol),
-      s"mergeGroup: incoming frame must not contain reserved column '$BucketCol'")
-    st.foreach(validateKeys(_, keys, "mergeGroup"))
-    bloomBy.foreach { c =>
-      val f = incoming.schema.fields.find(_.name == c)
-      require(f.isDefined && bloomPutKind(f.get.dataType).isDefined,
-        s"mergeGroup: bloomBy column '$c' missing or of unsupported type")
-    }
-    val nb = st.map(_.buckets).getOrElse(buckets)
-    val inc = incoming
-      .withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(nb)))
-      .persist()
-    try {
-      val touchedCounts = touchedBucketCounts(inc)
-      val touched = touchedCounts.keys.toIndexedSeq.sorted
-      if (touched.isEmpty) return st
-      // WRITE-ONLY staging for eqDeletes members (eqdApply at group
-      // scope): the batch lands as one overlay epoch plus a doomed-key
-      // sidecar, no survivor read — falls back to the CoW rewrite below
-      // when the batch is too big, a touched stored bucket lacks stats,
-      // or the schema moved. The group-manifest CAS stays the one
-      // commit point either way.
-      st.filter(_.eqDeletes).foreach { man =>
-        stageEqdInto(spark, fs, tableRoot, man, inc, keys, touched,
-          incTotalHint = Some(touchedCounts.values.sum))
-          .foreach(staged => return Some(staged))
-      }
-      val merged = st match {
-        case None => inc.drop(BucketCol)
-        case Some(man) =>
-          val existingPaths = touchedPaths(tableRoot, man, touched)
-          if (existingPaths.isEmpty) inc.drop(BucketCol)
-          else {
-            val sv = readWithSchema(spark, man, tableRoot, existingPaths)
-              .join(antiKeySide(inc, keys, touchedCounts.values.sum), keys,
-                "left_anti")
-            // ADDITIVE schema evolution, same semantics as [[merge]]'s
-            // evolveSchema: untouched rows null-fill the new columns
-            if (evolveSchema)
-              sv.unionByName(inc.drop(BucketCol), allowMissingColumns = true)
-            else
-              sv.unionByName(inc.select(sv.columns.map(col).toIndexedSeq: _*))
-          }
-      }
-      // the table commit's staging and assembly at member scope, minus
-      // the CAS (the group manifest is the commit point). clusterBy and
-      // bloomBy apply at member CREATION (like `buckets`): an existing
-      // member keeps its recorded layout, empty included
-      val staged = stageRewrite(spark, fs, tableRoot, merged, keys, nb, st,
-        clusterCols = st.map(_.clusterCols).getOrElse(clusterBy),
-        bloomCols = st.map(_.bloomCols).getOrElse(bloomBy),
-        bloomN = bloomItems, dvSeed = eqdSeed, eqdSeed = eqdSeed)
-      Some(assembleManifest(st, staged, None, "mergeGroup"))
-    } finally { inc.unpersist(); () }
-  }
-
-  /** [[eqdApply]]'s write-only staging at GROUP-member scope: the batch
-    * lands as one overlay epoch plus a doomed-key sidecar under the
-    * member root, and the member's UNCOMMITTED manifest state is
-    * returned for the group commit to publish — the group-manifest CAS
-    * stays the one commit point, exactly like the CoW staging, so the
-    * cross-member atomicity (vecs + pairs + bands flip together) is
-    * untouched while each member's write I/O drops to ∝ its batch.
-    * Returns None — the caller falls back to the CoW rewrite — when the
-    * batch exceeds [[DvMaxPositionsPerCommit]], a touched stored bucket
-    * has no per-file stats (plan-time resolution enumerates affected
-    * files from them), the schema moved, or the member declares
-    * identity columns (their assignment runs on the single-table path
-    * only).
-    */
-  private def stageEqdInto(spark: SparkSession, fs: FileSystem,
-                           tableRoot: String, man: Manifest,
-                           inc: DataFrame, keys: Seq[String],
-                           touched: Seq[Int],
-                           incTotalHint: Option[Long] = None)
-      : Option[Manifest] = {
-    if (man.schema.isEmpty) return None
-    val recorded = DataType.fromJson(man.schema.get).asInstanceOf[StructType]
-    if (identitySpecs(recorded).nonEmpty) return None
-    val reordered = alignToRecorded(inc, recorded).getOrElse(return None)
-    val capProbe = (DvMaxPositionsPerCommit + 1).toInt
-    val incCount = incTotalHint.getOrElse(
-      reordered.limit(capProbe).count())
-    if (incCount > DvMaxPositionsPerCommit) return None
-    val touchedStored = touched.filter(man.epochs.contains)
-    if (touchedStored.exists(b => man.stats.get(b).forall(_.isEmpty)))
-      return None
-    val (epoch, written, overlayStats) =
-      stageOverlay(spark, fs, tableRoot, man, Some(reordered), keys)
-    // doomed-key sidecar, skipped when no touched bucket stores
-    // anything; upTo from the PRE-COMMIT state keeps this batch's own
-    // overlay exempt (eqdApply's sequence-number scoping)
-    val sidecar = "eqd-" + UUID.randomUUID()
-    if (touchedStored.nonEmpty)
-      writeEqdSidecar(spark, tableRoot, sidecar,
-        reordered.select(keys.map(col): _*).distinct(), man.colIds)
-    val eqds2 =
-      if (touchedStored.isEmpty) man.eqds
-      else man.eqds ++ touchedStored.map { b =>
-        b -> (man.eqds.getOrElse(b, Seq.empty) :+
-          EqDel(sidecar, bucketEpochs(man, b).length, incCount))
-      }
-    Some(withOverlay(man, epoch, written, overlayStats).copy(eqds = eqds2))
-  }
-
   /** MERGE into several member tables of one group and make ALL of them
     * visible in a single atomic commit — the cross-table transaction
     * [[mergeAll]] explicitly lacks. Each `(name, rows, keys)` member gets
@@ -5923,11 +5768,16 @@ object MergeWriter {
       implicit val ec: ExecutionContext = ExecutionContext.global
       val futs = merges.map { case (name, rows, keys) => Future {
         labeled(spark, s"graft.stage:$name") {
-          stageMergeInto(spark, fs, s"$groupPath/$name", curTables.get(name),
-            rows, keys, buckets, clusterBy.getOrElse(name, Seq.empty),
-            evolveSchema, bloomBy.getOrElse(name, Seq.empty), bloomItems,
-            eqdSeed = eqDeletes.contains(name))
-            .map(name -> _)
+          // clusterBy, bloomBy and the eqDeletes seed apply at member
+          // CREATION (like `buckets`): an existing member keeps its
+          // recorded layout and policy
+          keyedWrite(spark, KeyedWrite("mergeGroup", "mergeGroup",
+            ToMember(s"$groupPath/$name", curTables.get(name)), keys,
+            Some(rows), None, Replace(evolveSchema), buckets = buckets,
+            clusterBy = clusterBy.getOrElse(name, Seq.empty),
+            bloomBy = bloomBy.getOrElse(name, Seq.empty),
+            bloomItems = bloomItems, dvSeed = eqDeletes.contains(name),
+            eqdSeed = eqDeletes.contains(name))).map(name -> _)
         }
       } }
       futs.flatMap(Await.result(_, Duration.Inf)).toMap
@@ -5985,10 +5835,13 @@ object MergeWriter {
       currentMember(spark, groupPath, name, "readGroupTable"))
 
   /** Post-commit auto-maintenance for the members a group load touched
-    * — [[maybeAutoSplit]] and [[maybeAutoCompact]] at member scope, the
-    * same metadata-only decisions from the member's manifest stats and
-    * epoch count. Advisory: a lost race never fails the load that
-    * already committed (growth retries on the next load).
+    * — the table tail's metadata-only rules at member scope: split
+    * ([[wantsSplit]]), else compact on epoch count ([[wantsCompact]]) or
+    * merge-on-read pressure ([[morPressure]]: write-only eq-delete
+    * members stack overlays and eq-delete records WITHOUT moving base
+    * pointers, so the epoch count alone would never drain them; the
+    * member rewrite purges both). Advisory: a lost race never fails the
+    * load that already committed (growth retries on the next load).
     */
   private def maybeAutoMaintainGroup(spark: SparkSession, fs: FileSystem,
                                      dir: Path, groupPath: String,
@@ -5998,30 +5851,11 @@ object MergeWriter {
     currentGroupManifest(fs, dir).foreach { g =>
       touched.foreach { name =>
         g.tables.get(name).foreach { m =>
-          val maxBucketBytes =
-            m.stats.values.map(_.map(_.bytes).sum).maxOption.getOrElse(0L)
-          // merge-on-read pressure (write-only eq-delete members):
-          // overlays and eq-delete records stack WITHOUT moving base
-          // pointers, so the epoch-count trigger alone would never
-          // drain them — apply maybeAutoCompactMor's bounds at member
-          // scope (the member rewrite purges overlays + eqds)
-          val overlayEntries = m.overlays.valuesIterator.map(_.size).sum
-          val eqdEntries = m.eqds.valuesIterator.map(_.size).sum
-          val eqdKeysTotal = m.eqds.valuesIterator
-            .flatMap(_.iterator.map(_.n)).sum
-          try {
-            if (splitThreshold > 0 && m.keyCols.nonEmpty &&
-                m.stats.nonEmpty && m.buckets < AutoSplitMaxBuckets &&
-                maxBucketBytes > splitThreshold)
+          advisory {
+            if (wantsSplit(m, splitThreshold))
               splitGroupBuckets(spark, groupPath, name, m.keyCols)
-            else if (m.epochs.values.toSet.size > compactThreshold ||
-                overlayEntries >= DvAutoCompactFiles ||
-                eqdEntries >= DvAutoCompactFiles ||
-                eqdKeysTotal >= DvMaxPositionsPerCommit * 4)
+            else if (wantsCompact(m, compactThreshold) || morPressure(m))
               compactGroupTable(spark, groupPath, name)
-          } catch {
-            case _: java.io.IOException => ()
-            case _: java.util.ConcurrentModificationException => ()
           }
         }
       }
@@ -6404,10 +6238,10 @@ object MergeWriter {
                                              rows: DataFrame,
                                              keys: Seq[String],
                                              buckets: Int): Unit = {
-    val fs = fsFor(spark, groupPath)
-    val cur = currentGroupManifest(fs, new Path(groupPath))
-    stageMergeInto(spark, fs, s"$groupPath/$name",
-      cur.flatMap(_.tables.get(name)), rows, keys, buckets)
+    val cur = currentGroupManifest(fsFor(spark, groupPath), new Path(groupPath))
+    keyedWrite(spark, KeyedWrite("mergeGroup", "mergeGroup",
+      ToMember(s"$groupPath/$name", cur.flatMap(_.tables.get(name))), keys,
+      Some(rows), None, Replace(), buckets = buckets))
     ()
   }
 
@@ -6441,55 +6275,13 @@ object MergeWriter {
                      buckets: Int = 64,
                      autoCompactEpochs: Int = AutoCompactEpochs,
                      autoSplitBytesPerBucket: Long = AutoSplitBytesPerBucket): Unit = {
-    require(keys.nonEmpty, "merge requires at least one key column")
     require(incoming.columns.contains(versionCol),
       s"mergeVersioned: incoming frame lacks version column '$versionCol'")
-    // the merge machinery owns these names; silently withColumn-replacing
-    // a caller's column of the same name would corrupt its data (the
-    // saltedJoin collision class) — fail loudly instead
-    Seq("__pri", "__vrn", BucketCol).foreach(c =>
-      require(!incoming.columns.contains(c),
-        s"mergeVersioned: incoming frame must not contain reserved column '$c'"))
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    migrateLegacy(spark, fs, tablePath, keys, buckets)
-    val m = currentManifest(fs, dir)
-    m.foreach(validateKeys(_, keys, "mergeVersioned"))
-    val nb = m.map(_.buckets).getOrElse(buckets)
-    val inc = incoming
-      .withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(nb)))
-      .persist()
-    try {
-      val touched = touchedBuckets(inc)
-      if (touched.isEmpty) return
-      m match {
-        case None =>
-          // a fresh table has no stored versions to guard; intra-batch
-          // duplicates still resolve newest-first
-          writeEpochAndCommit(spark, fs, tablePath,
-            newestPerKey(inc.drop(BucketCol), keys, versionCol, pri = None),
-            keys, nb, None, opName = "mergeVersioned")
-        case Some(man) =>
-          val existingPaths = touchedPaths(tablePath, man, touched)
-          val existing =
-            if (existingPaths.isEmpty) None
-            else Some(readWithSchema(spark, man, tablePath, existingPaths))
-          // one frame, newest version per key wins; on version ties the
-          // stored row (__pri 0) outranks the incoming one
-          val all = existing match {
-            case None => inc.drop(BucketCol).withColumn("__pri", lit(1))
-            case Some(ex) =>
-              val incCols = ex.columns.map(col).toIndexedSeq
-              ex.withColumn("__pri", lit(0))
-                .unionByName(inc.select(incCols: _*).withColumn("__pri", lit(1)))
-          }
-          writeEpochAndCommit(spark, fs, tablePath,
-            newestPerKey(all.drop(BucketCol), keys, versionCol, pri = Some("__pri")),
-            keys, nb, Some(man), opName = "mergeVersioned")
-      }
-      maintainAfterWrite(spark, fs, tablePath, autoSplitBytesPerBucket,
-        autoCompactEpochs)
-    } finally { inc.unpersist(); () }
+    keyedWrite(spark, KeyedWrite("mergeVersioned", "mergeVersioned",
+      ToTable(tablePath), keys, Some(incoming), None, Newest(versionCol),
+      buckets = buckets, splitBytes = autoSplitBytesPerBucket,
+      compactEpochs = autoCompactEpochs))
+    ()
   }
 
   /** Newest row per key: window on the bucketed key set ordered by version
@@ -6778,9 +6570,9 @@ object MergeWriter {
   }
 
   /** The next manifest of a staged rewrite over `base` — the one
-    * assembly behind every table commit ([[writeEpochAndCommit]], once
-    * per CAS attempt) and every group member's staged state
-    * ([[stageMergeInto]]). Written buckets point at the new epoch and
+    * assembly behind every copy-on-write table commit (once per CAS
+    * attempt) and every group member's copy-on-write stage
+    * ([[rewriteStage]]). Written buckets point at the new epoch and
     * take its fresh stats; dropped buckets lose pointer and stats; both
     * shed their merge-on-read overlays and equality deletes (the
     * survivor read folded the one in and filtered the other out).
@@ -6873,14 +6665,26 @@ object MergeWriter {
     val s = stageRewrite(spark, fs, tablePath, rows, keys, buckets, prev,
       dropBuckets, clusterCols, bloomCols, bloomN, fpSeed, dvSeed, eqdSeed,
       shredSeed)
+    publish(fs, ToTable(tablePath, ref), opName, prev,
+      rewriteStage(s, prev, keys, txn, opName))
+    ()
+  }
+
+  /** The commit of a staged rewrite over `prev`: the step re-assembles it
+    * on whichever base wins ([[assembleManifest]]); the rule rebases
+    * unless [[contested]] names the modulus, the schema, the merge keys,
+    * the CHECK set, the identity high-water (when values were reserved)
+    * or a written or dropped bucket that moved since `prev`.
+    */
+  private def rewriteStage(s: StagedRewrite, prev: Option[Manifest],
+                           keys: Seq[String], txn: Option[(String, Long)],
+                           op: String): Staged = {
     val t = s.target
-    commitLoop(tableTarget(fs, new Path(tablePath), ref), opName, prev)(
-      rebaseUnless(opName, tablePath)(contested(_, prev, buckets,
-        prev.fold(t.schema)(_.schema), keys, s.written.toSet ++ dropBuckets,
-        Some(t.checks),
+    Staged(base => Some(assembleManifest(base, s, txn, op)),
+      contested(_, prev, t.buckets, prev.fold(t.schema)(_.schema), keys,
+        s.written.toSet ++ s.dropBuckets, Some(t.checks),
         if (s.idSpec.isEmpty) None
-        else Some(prev.map(_.idhw).getOrElse(Map.empty)))))(
-      base => Some(assembleManifest(base, s, txn, opName)))
+        else Some(prev.map(_.idhw).getOrElse(Map.empty))))
   }
 
   /** SCAN-TO-COMMIT conflict guard for row-level statements (SQL
@@ -6940,57 +6744,12 @@ object MergeWriter {
              autoCompactEpochs: Int = AutoCompactEpochs,
              expectedVersion: Option[Long] = None,
              ref: Option[String] = None): Unit = {
-    require(keys.nonEmpty, "delete requires at least one key column")
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    ref.foreach { b =>
-      requireBranchName("delete", b)
-      require(branchHead(fs, dir, b).isDefined,
-        s"delete: no branch '$b' on $tablePath — createBranch first")
-    }
-    if (ref.isEmpty) migrateLegacy(spark, fs, tablePath, keys, buckets = 64)
-    refCurrent(fs, dir, ref).foreach { man =>
-      validateKeys(man, keys, "delete")
-      val del = keysToDelete.select(keys.map(col): _*).distinct()
-        .withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(man.buckets)))
-        .persist()
-      try {
-        val touchedCounts = touchedBucketCounts(del)
-        val touched = touchedCounts.keys.toIndexedSeq.sorted
-        requireScanCurrent(fs, tablePath, man, expectedVersion, touched,
-          "delete", ref)
-        val existingPaths = touchedPaths(tablePath, man, touched)
-        // no stored bucket holds any of these keys — nothing to rewrite,
-        // and committing a no-change version would just churn gc
-        if (existingPaths.isEmpty) return
-        val delTotal = touchedCounts.values.sum
-        // DELETION-VECTOR fast path (opt-in policy): commit per-file
-        // dead positions instead of rewriting the touched buckets —
-        // write I/O ∝ deleted rows. Falls back to the rewrite when the
-        // delete is too large to stay metadata-sized (or stats are
-        // missing) — correct either way.
-        if (!(man.deleteVectors &&
-              (if (man.eqDeletes)
-                // write-only blind delete: the doomed keys commit as an
-                // equality-delete sidecar, no position-resolving read
-                eqdApply(spark, fs, tablePath, man, None, Some(del), keys,
-                  touched, None, "delete", ref,
-                  delTotalHint = Some(touchedCounts.values.sum))
-              else dvDelete(spark, fs, tablePath, man, del, keys, touched,
-                ref, delTotalHint = Some(touchedCounts.values.sum))))) {
-          val survivors = readWithSchema(spark, man, tablePath, existingPaths)
-            .join(antiKeySide(del.drop(BucketCol), keys, delTotal), keys,
-              "left_anti")
-          val touchedStored = touched.filter(man.epochs.contains).toSet
-          writeEpochAndCommit(spark, fs, tablePath, survivors, keys,
-            man.buckets, Some(man), dropBuckets = touchedStored,
-            opName = "delete", ref = ref)
-        }
-        // a delete only shrinks buckets: no split
-        if (ref.isEmpty)
-          maintainAfterWrite(spark, fs, tablePath, 0L, autoCompactEpochs)
-      } finally { del.unpersist(); () }
-    }
+    // a delete only shrinks buckets: no split
+    keyedWrite(spark, KeyedWrite("delete", "delete", ToTable(tablePath, ref),
+      keys, None, Some(keysToDelete), Replace(),
+      expectedVersion = expectedVersion, splitBytes = 0L,
+      compactEpochs = autoCompactEpochs))
+    ()
   }
 
   /** Apply a MIXED changeset — upserts and deletes — in ONE manifest
@@ -7019,88 +6778,20 @@ object MergeWriter {
                    // is skipped whole; the ledger entry rides the same
                    // atomic commit as the changes it describes
                    txn: Option[(String, Long)] = None): Unit = {
-    require(keys.nonEmpty, "applyChanges requires at least one key column")
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    val man = refCurrent(fs, dir, ref).getOrElse(
-      throw new IllegalStateException(
-        s"applyChanges: $tablePath is not a manifest table"))
-    validateKeys(man, keys, opName)
-    if (txn.exists(t => man.txns.get(t._1).exists(_ >= t._2)))
-      return // replay: the whole changeset already applied
-    val nb = man.buckets
     // IDENTITY assignment precedes bucketing (a MERGE's NOT-MATCHED
     // INSERT action may supply NULL for an identity column); GENERATED
     // columns are RECOMPUTED, not validated — an UPDATE that moved a
     // source column carries the OLD generated value along, which is
     // derivation input gone stale, never a user assertion (Delta's
-    // row-level semantics; the INSERT path keeps validating)
-    val up = applyDeclaredColumns(upserts, Some(man), tablePath,
-      recomputeGenerated = true)
-      .withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(nb)))
-      .persist()
-    val del = deleteKeys.select(keys.map(col): _*).distinct()
-      .withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(nb)))
-      .persist()
-    try {
-      // the unique-key guard FUSED into the upserts' touched-buckets
-      // job — saves one full pass over the changeset per statement
-      val (upCounts, upDup) = touchedCountsUnique(up, keys)
-      val delCounts = touchedBucketCounts(del)
-      val touched =
-        (upCounts.keys ++ delCounts.keys).toIndexedSeq.distinct.sorted
-      if (touched.isEmpty) {
-        // an empty changeset is applied by definition, but its txn must
-        // still be recorded (mergeAdditive's rule: a redelivery WITH
-        // rows would re-apply)
-        txn.foreach(t => commitTxnGuard(fs, dir, t, ref))
-        return
-      }
-      requireScanCurrent(fs, tablePath, man, expectedVersion, touched,
-        opName, ref)
-      // SQL's cardinality check only guards MATCHED rows, so a MERGE
-      // whose NOT-MATCHED clause fires twice for one source key would
-      // smuggle a duplicate past it
-      if (upDup) requireUniqueKeys(up, keys, opName) // throws with key detail
-      // MERGE-ON-READ fast path (deleteVectors tables, small changeset):
-      // the upserts land as one overlay epoch, the changed keys' old
-      // rows die by deletion vector — a SQL UPDATE/MERGE then writes
-      // ∝ its changeset, never ∝ the touched buckets
-      if (!(man.deleteVectors &&
-            (if (man.eqDeletes)
-              eqdApply(spark, fs, tablePath, man, Some(up), Some(del), keys,
-                touched, txn, opName, ref,
-                incTotalHint = Some(upCounts.values.sum),
-                delTotalHint = Some(delCounts.values.sum))
-            else morApply(spark, fs, tablePath, man, up, Some(del), keys,
-              touched, txn, opName, ref,
-              incTotalHint = Some(upCounts.values.sum),
-              delTotalHint = Some(delCounts.values.sum))))) {
-        val existingPaths = touchedPaths(tablePath, man, touched)
-        // every changed key vacates its stored row: upserted keys get
-        // re-inserted from `up`, deleted keys just end here
-        val gone0 = up.select(keys.map(col): _*)
-          .union(del.select(keys.map(col): _*)).distinct()
-        val goneTotal = upCounts.values.sum + delCounts.values.sum
-        val gone =
-          if (goneTotal <= BroadcastKeyMax) broadcast(gone0) else gone0
-        val survivors =
-          if (existingPaths.isEmpty) None
-          else Some(readWithSchema(spark, man, tablePath, existingPaths)
-            .join(gone, keys, "left_anti"))
-        val merged = survivors match {
-          case None => up.drop(BucketCol)
-          case Some(sv) =>
-            sv.unionByName(up.select(sv.columns.map(col).toIndexedSeq: _*))
-        }
-        val touchedStored = touched.filter(man.epochs.contains).toSet
-        writeEpochAndCommit(spark, fs, tablePath, merged, keys, nb,
-          Some(man), txn, dropBuckets = touchedStored, opName = opName,
-          ref = ref)
-      }
-      if (ref.isEmpty) maintainAfterWrite(spark, fs, tablePath,
-        AutoSplitBytesPerBucket, autoCompactEpochs)
-    } finally { up.unpersist(); del.unpersist(); () }
+    // row-level semantics; the INSERT path keeps validating). The
+    // unique-key guard fuses into the upserts' probe: SQL's cardinality
+    // check only guards MATCHED rows.
+    keyedWrite(spark, KeyedWrite("applyChanges", opName,
+      ToTable(tablePath, ref), keys, Some(upserts), Some(deleteKeys),
+      Replace(), txn = txn, expectedVersion = expectedVersion,
+      unique = Some(opName), declared = Some(true), creates = false,
+      compactEpochs = autoCompactEpochs))
+    ()
   }
 
   /** Compact a merge-maintained table: rewrite every live bucket into ONE
@@ -7302,13 +6993,6 @@ object MergeWriter {
     }
   }
 
-  /** Advisory merge-on-read pressure drain: when DV'd files or overlay
-    * entries pile past [[DvAutoCompactFiles]], rewrite ONLY the
-    * pressured buckets ([[compactBuckets]]) — never the whole table
-    * (at 100 TB a full rewrite for a few hot buckets would be the
-    * cluster's main load). Advisory like auto-compaction: a lost race
-    * never fails the commit that already landed.
-    */
   /** Post-commit maintenance of a single-table write: gc, then the
     * advisory auto-split, auto-compaction and merge-on-read drain, each
     * deciding from the just-committed manifest. `splitBytes = 0` never
@@ -7325,6 +7009,13 @@ object MergeWriter {
       maybeAutoCompactMor(spark, fs, dir, tablePath)
     }
 
+  /** Advisory merge-on-read pressure drain: when DV'd files or overlay
+    * entries pile past [[DvAutoCompactFiles]] ([[morPressure]]), rewrite
+    * ONLY the pressured buckets ([[compactBuckets]]) — never the whole
+    * table (at 100 TB a full rewrite for a few hot buckets would be the
+    * cluster's main load). Advisory like auto-compaction: a lost race
+    * never fails the commit that already landed.
+    */
   private def maybeAutoCompactMor(spark: SparkSession, fs: FileSystem,
                                   dir: Path, tablePath: String): Unit =
     currentManifest(fs, dir).foreach { man =>
@@ -7333,34 +7024,28 @@ object MergeWriter {
           man.eqds.get(b).exists(_.nonEmpty) ||
           man.stats.getOrElse(b, Seq.empty).exists(_.dv.nonEmpty)
       }.toSet
-      val dvFiles = man.stats.valuesIterator
-        .map(_.count(_.dv.nonEmpty)).sum
-      val overlayEntries = man.overlays.valuesIterator.map(_.size).sum
-      // equality-delete pressure: entry count bounds the read-side
-      // anti-join branch count, total doomed keys bound the broadcast
-      // (and the catalog scan's plan-time resolution probe)
-      val eqdEntries = man.eqds.valuesIterator.map(_.size).sum
-      val eqdKeysTotal = man.eqds.valuesIterator
-        .flatMap(_.iterator.map(_.n)).sum
-      // total DEAD POSITIONS pressure too: per-file dead sets are
-      // cumulative across commits (prior ∪ new), so a few files can
-      // carry far more positions than the per-commit cap — bounding
-      // only the FILE count would let the read-side skip arrays (and
-      // the serialized reader factory) grow without limit
-      val dvPositionsTotal = man.stats.valuesIterator
-        .flatMap(_.iterator.map(_.dvn)).sum
-      if (pressured.nonEmpty &&
-          (dvFiles >= DvAutoCompactFiles ||
-            overlayEntries >= DvAutoCompactFiles ||
-            eqdEntries >= DvAutoCompactFiles ||
-            dvPositionsTotal >= DvMaxPositionsPerCommit * 4 ||
-            eqdKeysTotal >= DvMaxPositionsPerCommit * 4))
-        try compactBuckets(spark, tablePath, pressured)
-        catch {
-          case _: java.io.IOException => ()
-          case _: java.util.ConcurrentModificationException => ()
-        }
+      if (pressured.nonEmpty && morPressure(man))
+        advisory(compactBuckets(spark, tablePath, pressured))
     }
+
+  /** The merge-on-read drain rule of a table or member manifest. Counts
+    * bound the read side: DV'd files, overlay entries and equality-delete
+    * entries are union or anti-join branches of every read; total doomed
+    * keys bound the eq-delete broadcast (and the catalog scan's plan-time
+    * resolution probe); total DEAD POSITIONS bound the read-side skip
+    * arrays — per-file dead sets are cumulative across commits (prior ∪
+    * new), so a few files can carry far more positions than the
+    * per-commit cap.
+    */
+  private def morPressure(m: Manifest): Boolean =
+    m.stats.valuesIterator.map(_.count(_.dv.nonEmpty)).sum >=
+      DvAutoCompactFiles ||
+    m.overlays.valuesIterator.map(_.size).sum >= DvAutoCompactFiles ||
+    m.eqds.valuesIterator.map(_.size).sum >= DvAutoCompactFiles ||
+    m.stats.valuesIterator.flatMap(_.iterator.map(_.dvn)).sum >=
+      DvMaxPositionsPerCommit * 4 ||
+    m.eqds.valuesIterator.flatMap(_.iterator.map(_.n)).sum >=
+      DvMaxPositionsPerCommit * 4
 
   /** Double a table's bucket count IN PLACE — the growth path past the
     * creation-time modulus (the last structural scale limit of a

@@ -228,4 +228,26 @@ class BranchWapSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(gone.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND") ||
       gone.getMessage.contains("branch"), s"got: $gone")
   }
+
+  test("every keyed write to a branch that does not exist fails with " +
+       "the same createBranch-first error") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("wapnob").toString + "/t"
+    MergeWriter.merge(spark, dir, Seq((1L, "a")).toDF("id", "s"),
+      Seq("id"), buckets = 2)
+    val rows = Seq((2L, "b")).toDF("id", "s")
+    val gone = Seq(1L).toDF("id")
+    Seq[(String, () => Unit)](
+      "merge" -> (() => MergeWriter.merge(spark, dir, rows, Seq("id"),
+        ref = Some("nosuch"))),
+      "delete" -> (() => MergeWriter.delete(spark, dir, gone, Seq("id"),
+        ref = Some("nosuch"))),
+      "applyChanges" -> (() => MergeWriter.applyChanges(spark, dir, rows,
+        gone, Seq("id"), ref = Some("nosuch")))).foreach { case (op, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("no branch 'nosuch'") &&
+        e.getMessage.contains("createBranch first"), s"$op: $e")
+    }
+    assert(MergeWriter.readTable(spark, dir).count() == 1)
+  }
 }

@@ -128,30 +128,35 @@ class EqualityDeletesSpec extends AnyFunSuite with BeforeAndAfterAll
        "records its txn anchor — a redelivery with rows is skipped") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("eqdnp").toString + "/t"
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("body", StringType), StructField("grp", IntegerType)))
-    MergeWriter.createTable(spark, dir, schema, Seq("id"), buckets = 4,
-      deleteVectors = true, eqDeletes = true)
-    val emptyUps = Seq.empty[(Long, String, Int)].toDF("id", "body", "grp")
-    // batch 1: a tombstone for a key never stored — provable no-op, but
-    // the exactly-once anchor MUST advance
-    MergeWriter.applyChanges(spark, dir, emptyUps, Seq(5L).toDF("id"),
-      Seq("id"), txn = Some(("eqd-noop-app", 1L)))
-    // redelivery of batch 1 WITH rows (at-least-once transport): the
-    // recorded anchor must make it a skip, not a second application
-    MergeWriter.applyChanges(spark, dir,
-      Seq((5L, "late", 1)).toDF("id", "body", "grp"),
-      spark.emptyDataset[Long].toDF("id"), Seq("id"),
-      txn = Some(("eqd-noop-app", 1L)))
-    assert(MergeWriter.readTable(spark, dir).count() == 0,
-      "replayed batch at the recorded version must be skipped whole")
-    // the next batch id applies normally
-    MergeWriter.applyChanges(spark, dir,
-      Seq((6L, "real", 1)).toDF("id", "body", "grp"),
-      spark.emptyDataset[Long].toDF("id"), Seq("id"),
-      txn = Some(("eqd-noop-app", 2L)))
-    assert(MergeWriter.readTable(spark, dir).count() == 1)
+    // every write policy records the anchor: (policy, deleteVectors,
+    // eqDeletes)
+    Seq(("copy-on-write", false, false), ("deleteVectors", true, false),
+        ("eqDeletes", true, true)).foreach { case (policy, dvs, eqds) =>
+      val dir = Files.createTempDirectory("eqdnp").toString + "/t"
+      MergeWriter.createTable(spark, dir, schema, Seq("id"), buckets = 4,
+        deleteVectors = dvs, eqDeletes = eqds)
+      val emptyUps = Seq.empty[(Long, String, Int)].toDF("id", "body", "grp")
+      // batch 1: a tombstone for a key never stored — provable no-op,
+      // but the exactly-once anchor MUST advance
+      MergeWriter.applyChanges(spark, dir, emptyUps, Seq(5L).toDF("id"),
+        Seq("id"), txn = Some(("noop-app", 1L)))
+      // redelivery of batch 1 WITH rows (at-least-once transport): the
+      // recorded anchor must make it a skip, not a second application
+      MergeWriter.applyChanges(spark, dir,
+        Seq((5L, "late", 1)).toDF("id", "body", "grp"),
+        spark.emptyDataset[Long].toDF("id"), Seq("id"),
+        txn = Some(("noop-app", 1L)))
+      assert(MergeWriter.readTable(spark, dir).count() == 0,
+        s"$policy: replayed batch at the recorded version must be skipped")
+      // the next batch id applies normally
+      MergeWriter.applyChanges(spark, dir,
+        Seq((6L, "real", 1)).toDF("id", "body", "grp"),
+        spark.emptyDataset[Long].toDF("id"), Seq("id"),
+        txn = Some(("noop-app", 2L)))
+      assert(MergeWriter.readTable(spark, dir).count() == 1, policy)
+    }
   }
 
   test("eq-delete resolution is cached per version: the second scan of " +

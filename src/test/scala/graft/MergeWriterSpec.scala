@@ -2504,19 +2504,34 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       MergeWriter.merge(spark, dir, frame(b), keys)
       m ++ b
     }
+    def delete(dir: String)(m: Model): Model = {
+      MergeWriter.delete(spark, dir, Seq("k3", "k31", "k44").toDF("k"), keys)
+      m -- Seq("k3", "k31", "k44")
+    }
+    def changes(dir: String)(m: Model): Model = {
+      val up = batch(40, 10, 3L)
+      MergeWriter.applyChanges(spark, dir, frame(up),
+        Seq("k0", "k1").toDF("k"), keys)
+      m -- Seq("k0", "k1") ++ up
+    }
+    // group members: the step's table is "$grp/<member>"; the first
+    // batch creates the member, the next upserts into it
+    val grp = s"$root/grp"
+    def member(dir: String): Option[String] =
+      Some(dir.stripPrefix(grp + "/")).filter(_ => dir.startsWith(grp + "/"))
+    def group(name: String, eqds: Boolean)(m: Model): Model = {
+      val b = if (m.isEmpty) batch(0, 40, 1L) else batch(35, 10, 2L)
+      MergeWriter.mergeGroup(spark, grp, Seq((name, frame(b), keys)),
+        buckets = 4, eqDeletes = if (eqds) Set(name) else Set.empty)
+      m ++ b
+    }
     // (step, table, the write and the model it leaves, lands an overlay)
     val steps: Seq[(String, String, Model => Model, Boolean)] = Seq(
       ("merge creates", cow, _ => create(cow, dvs = false, eqds = false),
         false),
       ("merge rewrites", cow, upsert(cow), false),
-      ("delete", cow, { m =>
-        MergeWriter.delete(spark, cow, Seq("k3", "k31", "k44").toDF("k"), keys)
-        m -- Seq("k3", "k31", "k44") }, false),
-      ("applyChanges", cow, { m =>
-        val up = batch(40, 10, 3L)
-        MergeWriter.applyChanges(spark, cow, frame(up),
-          Seq("k0", "k1").toDF("k"), keys)
-        m -- Seq("k0", "k1") ++ up }, false),
+      ("delete", cow, delete(cow), false),
+      ("applyChanges", cow, changes(cow), false),
       ("mergeVersioned", cow, { m =>
         val b = batch(10, 5, 9L) ++ batch(45, 10, 0L)
         MergeWriter.mergeVersioned(spark, cow, frame(b), keys, "v")
@@ -2534,9 +2549,21 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("merge creates (deleteVectors)", dv,
         _ => create(dv, dvs = true, eqds = false), false),
       ("merge overlays (deleteVectors)", dv, upsert(dv), true),
+      ("delete (deleteVectors)", dv, delete(dv), true),
+      ("applyChanges (deleteVectors)", dv, changes(dv), true),
       ("merge creates (eqDeletes)", eqd,
         _ => create(eqd, dvs = true, eqds = true), false),
       ("merge overlays (eqDeletes)", eqd, upsert(eqd), true),
+      ("delete (eqDeletes)", eqd, delete(eqd), true),
+      ("applyChanges (eqDeletes)", eqd, changes(eqd), true),
+      // a member's flag: the group manifest carries equality deletes
+      ("mergeGroup creates", s"$grp/cow", group("cow", eqds = false), false),
+      ("mergeGroup rewrites", s"$grp/cow", group("cow", eqds = false),
+        false),
+      ("mergeGroup creates (eqDeletes)", s"$grp/eqd",
+        group("eqd", eqds = true), false),
+      ("mergeGroup overlays (eqDeletes)", s"$grp/eqd",
+        group("eqd", eqds = true), true),
       ("mergeAdditive", add, { _ =>
         MergeWriter.createTable(spark, add,
           org.apache.spark.sql.types.StructType.fromDDL(
@@ -2558,16 +2585,24 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     steps.foreach { case (step, dir, write, overlay) =>
       val m = write(models.getOrElse(dir, Map.empty))
       models(dir) = m
-      val got = MergeWriter.readTable(spark, dir).collect()
+      val got = member(dir).fold(MergeWriter.readTable(spark, dir))(
+        MergeWriter.readGroupTable(spark, grp, _)).collect()
         .map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap
       assert(got == m, step)
-      val files = MergeWriter.tableFiles(spark, dir).collect()
-      assert(files.nonEmpty, step)
-      assert(files.exists(_.getAs[Boolean]("overlay")) == overlay, step)
-      files.foreach { f =>
-        assert(f.getAs[Boolean]("fingerprinted") && !f.isNullAt(
-          f.fieldIndex("rows")) && f.getAs[Int]("stats_cols") > 0,
-          s"$step: $f")
+      if (member(dir).isDefined) {
+        val g = new java.io.File(grp).listFiles().map(_.getName)
+          .filter(_.startsWith("_group-manifest-")).max
+        assert(new String(Files.readAllBytes(new java.io.File(grp, g)
+          .toPath), "UTF-8").contains("\"eqds\":") == overlay, step)
+      } else {
+        val files = MergeWriter.tableFiles(spark, dir).collect()
+        assert(files.nonEmpty, step)
+        assert(files.exists(_.getAs[Boolean]("overlay")) == overlay, step)
+        files.foreach { f =>
+          assert(f.getAs[Boolean]("fingerprinted") && !f.isNullAt(
+            f.fieldIndex("rows")) && f.getAs[Int]("stats_cols") > 0,
+            s"$step: $f")
+        }
       }
     }
   }
