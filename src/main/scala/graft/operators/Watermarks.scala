@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.jdk.CollectionConverters._
 import graft.sources.MergeWriter
 
 /** Incremental-scan checkpointing (§2.5): the per-datasource high-water
@@ -17,52 +21,107 @@ import graft.sources.MergeWriter
   */
 object Watermarks {
 
-  /** `nextRunStartFrom` per datasource for one processed batch:
-    * max(updated). One map-side-combinable aggregation.
-    */
-  def nextRunStartFrom(batch: DataFrame, datasource: Column, updated: Column): DataFrame =
-    batch.groupBy(datasource.as("datasource_id"))
-      .agg(max(updated).as("next_run_start_from"))
-
   /** Merge a processed batch's high-water marks into the checkpoint table,
     * monotonically: a datasource's stored mark only ever increases
     * (greatest of stored and observed), new datasources are inserted.
+    * One job folds each partition's maxima (no shuffle), the driver folds
+    * those (at most [[MaxMarks]] datasources) and then the pinned stored
+    * marks, all under Spark's own ordering of the mark type, and only the
+    * datasources whose mark moved are merged — a stale or replayed batch
+    * commits nothing.
     */
   def advance(spark: SparkSession, checkpointPath: String, batch: DataFrame,
               datasource: Column, updated: Column, buckets: Int = 8): Unit = {
-    val observed = nextRunStartFrom(batch, datasource, updated)
     val fs = new org.apache.hadoop.fs.Path(checkpointPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
+    val stored =
       if (fs.exists(new org.apache.hadoop.fs.Path(checkpointPath)))
-        MergeWriter.readTable(spark, checkpointPath).unionByName(observed)
-          .groupBy(col("datasource_id"))
-          .agg(max(col("next_run_start_from")).as("next_run_start_from"))
-      else observed
-    MergeWriter.merge(spark, checkpointPath, merged, Seq("datasource_id"), buckets)
+        Some(pinnedMarks(spark, checkpointPath))
+      else None
+    // observations in the stored types, so one ordering compares both
+    val obs0 = batch.select(datasource.as("datasource_id"),
+      updated.as("next_run_start_from"))
+    val obs = stored.fold(obs0) { case (_, schema) =>
+      obs0.select(schema.fields.map(f => col(f.name).cast(f.dataType)
+        .as(f.name)).toIndexedSeq: _*)
+    }
+    val markType = obs.schema("next_run_start_from").dataType
+    val partial = MergeWriter.labeled(spark, "graft.watermark-observe") {
+      obs.rdd.mapPartitions(rows => Iterator.single(
+        foldMarks(rows.map(r => r.get(0) -> r.get(1)), markType))).collect()
+    }
+    val seen = foldMarks(partial.iterator.flatMap(_.iterator), markType)
+    val marks = stored.fold(Map.empty[Any, Any])(_._1
+      .map(r => r.get(0) -> r.get(1)).toMap)
+    val later = after(markType)
+    val moved = seen.collect {
+      case (ds, mark) if later(mark, marks.get(ds)) => Row(ds, mark)
+    }.toSeq
+    if (moved.nonEmpty)
+      MergeWriter.merge(spark, checkpointPath,
+        spark.createDataFrame(moved.asJava, obs.schema),
+        Seq("datasource_id"), buckets)
   }
 
-  /** Current marks as a local map — the checkpoint dim is metadata-sized
-    * (one row per datasource), and pinning it locally keeps a later
-    * incremental filter stable across subsequent [[advance]] writes (a lazy
-    * re-read of the checkpoint path would see the post-advance marks).
+  /** Does `mark` move a datasource past `current`? An unknown datasource
+    * always moves; otherwise, as `max()` ignores NULLs, a NULL mark never
+    * moves a stored one and a NULL stored mark yields to any mark.
     */
+  private def after(t: DataType): (Any, Option[Any]) => Boolean = {
+    val internal = CatalystTypeConverters.createToCatalystConverter(t)
+    val ord = TypeUtils.getInterpretedOrdering(t)
+    (mark, current) => current.forall(c => mark != null &&
+      (c == null || ord.gt(internal(mark), internal(c))))
+  }
+
+  /** The greatest mark per datasource of `marks`, failing past
+    * [[MaxMarks]] datasources (a data-scale misuse) before it can exhaust
+    * memory.
+    */
+  private def foldMarks(marks: Iterator[(Any, Any)],
+                        t: DataType): Map[Any, Any] = {
+    val later = after(t)
+    marks.foldLeft(Map.empty[Any, Any]) { case (acc, (ds, mark)) =>
+      if (!later(mark, acc.get(ds))) acc
+      else {
+        require(acc.size < MaxMarks || acc.contains(ds),
+          s"Watermarks.advance: the batch has > $MaxMarks datasources — " +
+            "the checkpoint holds one mark per datasource")
+        acc.updated(ds, mark)
+      }
+    }
+  }
+
   /** Hard ceiling on the checkpoint dim pinned by [[currentMarks]]: the
     * table has one row per DATASOURCE — anything past this is a misuse on a
     * data-scale frame, which must fail loudly, not OOM the driver.
     */
   val MaxMarks = 1000000
 
+  /** Current marks as a local map — the checkpoint dim is metadata-sized
+    * (one row per datasource), and pinning it locally keeps a later
+    * incremental filter stable across subsequent [[advance]] writes (a lazy
+    * re-read of the checkpoint path would see the post-advance marks).
+    */
   def currentMarks(spark: SparkSession, checkpointPath: String): DataFrame = {
+    val (rows, schema) = pinnedMarks(spark, checkpointPath)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** The checkpoint's rows collected to the driver with their schema. */
+  private def pinnedMarks(spark: SparkSession,
+                          checkpointPath: String): (Array[Row], StructType) = {
     val t = MergeWriter.readTable(spark, checkpointPath)
       .select(col("datasource_id"), col("next_run_start_from"))
     // limit-then-collect: the guard trips on the (bounded) prefix instead
     // of pulling an unbounded frame into driver memory first
-    val rows = t.limit(MaxMarks + 1).collect()
+    val rows = MergeWriter.labeled(spark, "graft.watermark-read")(
+      t.limit(MaxMarks + 1).collect())
     require(rows.length <= MaxMarks,
-      s"currentMarks pins the checkpoint dim locally (one row per datasource); " +
-        s"$checkpointPath has > $MaxMarks rows — not a checkpoint table")
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), t.schema)
+      s"currentMarks pins the checkpoint dim locally (one row per " +
+        s"datasource); $checkpointPath has > $MaxMarks rows — not a " +
+        "checkpoint table")
+    (rows, t.schema)
   }
 
   /** The incremental scan: rows strictly after each datasource's stored

@@ -1571,10 +1571,9 @@ private[sources] class GraftCatalogWriteBuilder(spark: SparkSession,
             "graft catalog: INSERT OVERWRITE cannot target a staging " +
               "branch — stage upserts, publish, then overwrite main")
           if (uniqueCheckRows.isEmpty && !(replace || overwrite))
-            // common path: the duplicate-key guard fuses into merge's
-            // touched-buckets job (one pass over the persisted batch,
-            // no separate source scan — and the guarded rows ARE the
-            // written rows, deterministic or not)
+            // common path: the duplicate-key guard runs over merge's
+            // staged batch (no separate source scan — and the guarded
+            // rows ARE the written rows, deterministic or not)
             MergeWriter.merge(spark, tablePath, data, keys, ref = branch,
               assertUnique = Some("INSERT"))
           else GraftCatalog.guardUniqueKeys(data, keys, "INSERT",

@@ -5055,7 +5055,8 @@ object MergeWriter {
     * the entry point in argument errors; `op` names it in the commit
     * history, key checks and conflict messages. `upserts` replace or
     * fold into their keys; `deletes` name keys whose rows end. `unique`
-    * names the statement whose duplicate-key guard fuses into the probe;
+    * names the statement whose duplicate-key guard runs over the staged
+    * upserts;
     * `declared` runs identity assignment and generated-column compute on
     * the upserts (`Some(recomputeGenerated)`). The upserts create a
     * missing table unless `creates` is off. The layout and policy fields
@@ -5087,9 +5088,15 @@ object MergeWriter {
     *   1. prologue: argument checks, the branch check, pre-manifest
     *      migration, the base manifest and its recorded keys, the txn
     *      replay skip;
-    *   2. the upserts and the delete keys bucketed and persisted once;
-    *   3. one labeled probe per frame ([[touchedCounts]]): the touched
-    *      buckets and their exact row counts;
+    *   2. the upserts and the delete keys bucketed and staged once
+    *      ([[stageKeyed]]): one `graft.touched` job per frame
+    *      materializes its rows and counts them per bucket;
+    *   3. every later query plans over the staged rows' flat leaf,
+    *      never over the input's lineage: the duplicate-key guard, the
+    *      arms, the anti-join key side, the union and the epoch write.
+    *      The staged rows are released on every exit — commit, no-op,
+    *      failure; nothing persists a frame carrying the input's
+    *      lineage and then runs several queries over it;
     *   4. the empty/no-op rule — no touched bucket, or no upserts and no
     *      touched stored bucket: nothing is written and no table created
     *      (streaming sinks deliver empty early batches), but an existing
@@ -5156,21 +5163,24 @@ object MergeWriter {
         w.txn.exists(t => base.exists(_.txns.get(t._1).exists(_ >= t._2))))
       return if (member) base else None
     val nb = base.map(_.buckets).getOrElse(w.buckets)
-    def bucketed(rows: DataFrame): DataFrame =
-      rows.withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(nb)))
-        .persist()
-    // IDENTITY assignment + GENERATED-column compute precede bucketing:
-    // an assigned or computed value may BE a merge key, and its bucket
-    // must derive from the FINAL value
-    val up = w.upserts.map(u => bucketed(w.declared.fold(u)(re =>
-      applyDeclaredColumns(u, base, root, recomputeGenerated = re))))
-    val del = w.deletes.map(d =>
-      bucketed(d.select(keys.map(col): _*).distinct()))
+    val held = scala.collection.mutable.ListBuffer.empty[Staging]
+    def staged(rows: DataFrame): Staging = {
+      val s = stageKeyed(
+        rows.withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(nb))))
+      held += s
+      s
+    }
     try {
-      val (upCounts, dup) = up.fold((Map.empty[Int, Long], false))(
-        touchedCounts(_, keys, unique = w.unique.isDefined))
-      val delCounts = del.fold(Map.empty[Int, Long])(
-        touchedCounts(_, keys, unique = false)._1)
+      // IDENTITY assignment + GENERATED-column compute precede bucketing:
+      // an assigned or computed value may BE a merge key, and its bucket
+      // must derive from the FINAL value
+      val upS = w.upserts.map(u => staged(w.declared.fold(u)(re =>
+        applyDeclaredColumns(u, base, root, recomputeGenerated = re))))
+      val delS = w.deletes.map(d =>
+        staged(d.select(keys.map(col): _*).distinct()))
+      val (up, del) = (upS.map(_.rows), delS.map(_.rows))
+      val upCounts = upS.fold(Map.empty[Int, Long])(_.counts)
+      val delCounts = delS.fold(Map.empty[Int, Long])(_.counts)
       val touched =
         (upCounts.keys ++ delCounts.keys).toIndexedSeq.distinct.sorted
       val (upN, delN) = (upCounts.values.sum, delCounts.values.sum)
@@ -5184,7 +5194,8 @@ object MergeWriter {
       if (touched.isEmpty) return unchanged()
       base.foreach(requireScanCurrent(fs, root, _, w.expectedVersion,
         touched, w.op, ref))
-      if (dup) requireUniqueKeys(up.get, keys, w.unique.get)
+      for (u <- up; stmt <- w.unique)
+        labeled(spark, "graft.touched")(requireUniqueKeys(u, keys, stmt))
       val stored =
         base.fold(Seq.empty[Int])(m => touched.filter(m.epochs.contains))
       if (upN == 0 && stored.isEmpty) return unchanged()
@@ -5252,7 +5263,7 @@ object MergeWriter {
       if (!member && ref.isEmpty)
         maintainAfterWrite(spark, fs, root, w.splitBytes, w.compactEpochs)
       result
-    } finally { (up ++ del).foreach(_.unpersist()) }
+    } finally held.foreach(_.release())
   }
 
   /** Commit a staged keyed write to its target: a table through
@@ -5325,14 +5336,12 @@ object MergeWriter {
             // branch head, the commit lands on the branch lineage, and
             // main's state/history are untouched until [[fastForward]]
             ref: Option[String] = None,
-            // statement-level duplicate-key guard FUSED into the
-            // touched-buckets job (one pass over the persisted batch
-            // instead of guardUniqueKeys' separate source scan): the
-            // per-bucket agg also tracks the max per-key multiplicity,
-            // and only a detected duplicate pays the detailed
-            // requireUniqueKeys error pass. Because the check reads the
-            // SAME persisted rows the write consumes, it is sound for
-            // non-deterministic sources without an extra pin.
+            // statement-level duplicate-key guard over the STAGED batch
+            // (one key-narrow aggregate over the rows the stager already
+            // materialized, instead of guardUniqueKeys' separate source
+            // scan). Because the check reads the SAME staged rows the
+            // write consumes, it is sound for non-deterministic sources
+            // without an extra pin.
             assertUnique: Option[String] = None): Unit = {
     keyedWrite(spark, KeyedWrite("merge", "merge", ToTable(tablePath, ref),
       keys, Some(incoming), None, Replace(evolveSchema), txn = txn,
@@ -5560,47 +5569,62 @@ object MergeWriter {
     */
   private val BroadcastKeyMax: Long = 1L << 20
 
+  /** The changed keys as the survivor anti-join's build side. `total`
+    * counts them with repeats, so the broadcast bound holds without a
+    * `distinct` — an anti-join only tests membership, and a `distinct`
+    * would cost the write one more shuffle job.
+    */
   private def antiKeySide(inc: DataFrame, keys: Seq[String],
                           total: Long): DataFrame = {
-    val kf = inc.select(keys.map(col): _*).distinct()
+    val kf = inc.select(keys.map(col): _*)
     if (total <= BroadcastKeyMax) broadcast(kf) else kf
   }
 
-  /** THE touched-bucket probe of a keyed write: one bounded metadata job
-    * (≤ buckets rows, under the `graft.touched` label) yielding the
-    * touched buckets WITH their exact batch row counts — an empty batch
-    * yields none, and the counts feed the arms' caps and the broadcast
-    * bound without a second pass over the batch (guide §1.2). With
-    * `unique` the same job proves per-key uniqueness: the per-bucket agg
-    * also tracks the max per-key multiplicity (keys hash into one bucket,
-    * so a duplicate is always bucket-local), and only a detected
-    * duplicate pays [[requireUniqueKeys]]' detailed error pass. Because
-    * the check reads the SAME persisted rows the write consumes, it is
-    * sound for non-deterministic sources.
+  /** A keyed write's input after [[stageKeyed]]: `rows` plans as one
+    * leaf over the materialized rows, `counts` holds the exact row count
+    * of every touched bucket, and `release` frees the rows.
     */
-  private def touchedCounts(inc: DataFrame, keys: Seq[String],
-                            unique: Boolean): (Map[Int, Long], Boolean) =
-    labeled(inc.sparkSession, "graft.touched") {
-      if (!unique)
-        (inc.groupBy(col(BucketCol)).count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap, false)
-      else {
-        val per = inc.groupBy((col(BucketCol) +: keys.map(col)): _*)
-          .agg(count(lit(1)).as("__graft_kn"))
-          .groupBy(col(BucketCol))
-          .agg(max(col("__graft_kn")).as("__graft_mx"),
-            sum(col("__graft_kn")).as("__graft_n"))
-          .collect()
-        (per.map(r => r.getInt(0) -> r.getLong(2)).toMap,
-          per.exists(_.getLong(1) > 1L))
+  private final case class Staging(rows: DataFrame, counts: Map[Int, Long],
+                                   release: () => Unit)
+
+  /** THE stager of a keyed write: ONE job under the `graft.touched`
+    * label materializes the bucketed input as a local checkpoint and, in
+    * the same pass, counts its rows per bucket (a local input, already
+    * folded into driver-side rows at planning, is counted in place with
+    * no job). An empty batch touches
+    * no bucket, and the exact counts feed the arms' caps and the
+    * broadcast bound without a second pass (guide §1.2). Every later
+    * query of the write — the duplicate-key guard, both merge-on-read
+    * arms, the anti-join key side, the copy-on-write union and the epoch
+    * write — plans over a flat scan of the staged rows instead of
+    * re-analyzing and re-rendering the input's lineage at each AQE
+    * re-plan; and because they all read the SAME rows, a
+    * non-deterministic input is evaluated once (a lost block fails the
+    * write, it never re-runs the input). The rows spill to disk like a
+    * persist; the caller frees them through [[Staging.release]].
+    */
+  private def stageKeyed(bucketed: DataFrame): Staging = {
+    val spark = bucketed.sparkSession
+    val ord = bucketed.schema.fieldIndex(BucketCol)
+    val (rows, parts, release) = labeled(spark, "graft.touched") {
+      org.apache.spark.sql.GraftColumnShim.stageOnce(bucketed) { it =>
+        val n = scala.collection.mutable.HashMap.empty[Int, Long]
+        it.foreach { r =>
+          val b = r.getInt(ord)
+          n(b) = n.getOrElse(b, 0L) + 1L
+        }
+        n.toMap
       }
     }
+    Staging(rows, parts.flatten.groupMapReduce(_._1)(_._2)(_ + _), release)
+  }
 
   /** Label the Spark jobs an engine phase submits (guide §1.5) so the
     * UI/profilers attribute them; thread-local, restores the caller's
     * description on exit. Zero semantic effect.
     */
-  private def labeled[A](spark: SparkSession, label: String)(f: => A): A = {
+  private[graft] def labeled[A](spark: SparkSession, label: String)(
+      f: => A): A = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(label)
@@ -6784,7 +6808,7 @@ object MergeWriter {
     // source column carries the OLD generated value along, which is
     // derivation input gone stale, never a user assertion (Delta's
     // row-level semantics; the INSERT path keeps validating). The
-    // unique-key guard fuses into the upserts' probe: SQL's cardinality
+    // unique-key guard runs over the staged upserts: SQL's cardinality
     // check only guards MATCHED rows.
     keyedWrite(spark, KeyedWrite("applyChanges", opName,
       ToTable(tablePath, ref), keys, Some(upserts), Some(deleteKeys),

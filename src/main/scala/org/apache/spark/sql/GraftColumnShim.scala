@@ -17,6 +17,48 @@ object GraftColumnShim {
   def catalystTree(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter.apply(c.node)
 
+  /** Materialize `df` ONCE as a local checkpoint and fold each
+    * partition's rows through `summarize` in the SAME job: the
+    * `localCheckpoint(eager = true)` action (one SQL execution, rows kept
+    * MEMORY_AND_DISK, lineage truncated so a lost block fails loudly
+    * instead of silently re-running the input) with its materializing
+    * pass doing useful work. Returns a frame whose logical plan is one
+    * leaf over the materialized rows (`Dataset.ofRows` and
+    * `LogicalRDD.fromDataset` are `private[sql]`), the per-partition
+    * summaries, and the release of the rows. A failed job releases them
+    * before rethrowing. The release goes straight to
+    * `SparkContext.unpersistRDD` (`private[spark]`): `RDD.unpersist`
+    * WARNs on every locally checkpointed RDD, and a staged input is
+    * released by design once its consumer is done. An input the
+    * optimizer already folded into driver-side rows (a local relation,
+    * its projections evaluated once) is already such a leaf: it is
+    * summarized in place, with no job and nothing to release.
+    */
+  def stageOnce[U: scala.reflect.ClassTag](df: DataFrame)(
+      summarize: Iterator[catalyst.InternalRow] => U)
+      : (DataFrame, Array[U], () => Unit) = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val qe = ds.queryExecution
+    qe.optimizedPlan match {
+      case l: catalyst.plans.logical.LocalRelation if !l.isStreaming =>
+        return (classic.Dataset.ofRows(ds.sparkSession, l),
+          Array(summarize(l.data.iterator)), () => ())
+      case _ =>
+    }
+    execution.SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      val rows = qe.executedPlan.execute().map(_.copy())
+      rows.localCheckpoint()
+      val release = () => rows.sparkContext.unpersistRDD(rows.id,
+        blocking = false)
+      val parts =
+        try rows.sparkContext.runJob(rows, summarize)
+        catch { case e: Throwable => release(); throw e }
+      (classic.Dataset.ofRows(ds.sparkSession,
+        execution.LogicalRDD.fromDataset(rows, ds, isStreaming = false)),
+        parts, release)
+    }
+  }
+
   /** Stable session identifier (`sessionUUID` is `private[sql]`). */
   def sessionUUID(s: SparkSession): String = s match {
     case c: classic.SparkSession => c.sessionUUID

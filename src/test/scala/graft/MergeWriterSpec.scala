@@ -2757,4 +2757,173 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     } finally MergeWriter.setCommitPrimitive(MergeWriter.LinkOrRenameCommit)
   }
+
+  test("a keyed write evaluates its input's lineage once and plans no later query over it") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    // the marker bumps the accumulator once per evaluated input row and
+    // names itself in every plan that carries the input's lineage
+    val evals = spark.sparkContext.longAccumulator("lineage-evals")
+    val marker = udf((k: String) => { evals.add(1L); k })
+      .asNondeterministic().withName("lineage_marker")
+    def tagged(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("k", marker(col("k")))
+    val root = Files.createTempDirectory("staged").toString
+    var n = 0
+    def table(kind: String, additive: Boolean = false): String = {
+      n += 1
+      val d = s"$root/$kind$n"
+      val rows = (0 until 20).map(i => (s"k$i", i.toLong, 1L))
+        .toDF("k", "v", "ver")
+      MergeWriter.merge(spark, d,
+        if (additive) rows.select("k", "v") else rows, Seq("k"), buckets = 4,
+        deleteVectors = kind == "dv", eqDeletes = kind == "eqd")
+      d
+    }
+    def group(kind: String): String = {
+      n += 1
+      val g = s"$root/g-$kind$n"
+      MergeWriter.mergeGroup(spark, g, Seq(("m", (0 until 20)
+        .map(i => (s"k$i", i.toLong, 1L)).toDF("k", "v", "ver"), Seq("k"))),
+        buckets = 4, eqDeletes = if (kind == "eqd") Set("m") else Set.empty)
+      g
+    }
+    // 20 upserts (half of them overlap the stored keys), 5 delete keys;
+    // shuffled range frames, since the optimizer folds a projection over
+    // a local Seq into a constant at planning time
+    def key = concat(lit("k"), col("id").cast("string")).as("k")
+    val ups = spark.range(10, 30).repartition(3)
+      .select(key, (col("id") * 10).as("v"), lit(2L).as("ver"))
+    val dels = spark.range(0, 5).repartition(2).select(key)
+    val cases: Seq[(String, () => String, String => Unit, Long)] =
+      Seq("cow", "dv", "eqd").flatMap { kind => Seq[(String, () => String,
+          String => Unit, Long)](
+        (s"merge/$kind", () => table(kind),
+          MergeWriter.merge(spark, _, tagged(ups), Seq("k")), 20L),
+        (s"delete/$kind", () => table(kind),
+          MergeWriter.delete(spark, _, tagged(dels), Seq("k")), 5L),
+        (s"applyChanges/$kind", () => table(kind),
+          MergeWriter.applyChanges(spark, _, tagged(ups), tagged(dels),
+            Seq("k")), 25L),
+        (s"mergeAdditive/$kind", () => table(kind, additive = true),
+          MergeWriter.mergeAdditive(spark, _, tagged(ups.select("k", "v")),
+            Seq("k"), Seq("v"), txn = ("app", 1L)), 20L),
+        (s"mergeVersioned/$kind", () => table(kind),
+          MergeWriter.mergeVersioned(spark, _, tagged(ups), Seq("k"), "ver"),
+          20L))
+      } ++ Seq("cow", "eqd").map { kind =>
+        // group members have no position-vector arm: copy-on-write or eqd
+        (s"mergeGroup/$kind", () => group(kind), (g: String) =>
+          MergeWriter.mergeGroup(spark, g, Seq(("m", tagged(ups), Seq("k"))),
+            buckets = 4,
+            eqDeletes = if (kind == "eqd") Set("m") else Set.empty), 20L)
+      } :+ {
+        // a local frame is folded into driver-side rows once, at planning:
+        // the stager takes those rows as they are, with no job
+        val local = (10 until 30).map(i => (s"k$i", i * 10L, 2L))
+          .toDF("k", "v", "ver")
+        ("merge/local", () => table("cow"), (d: String) =>
+          MergeWriter.merge(spark, d, tagged(local), Seq("k")), 20L)
+      }
+    val heard = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        heard.add(funcName -> qe.executedPlan.toString.contains("lineage_marker"))
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    cases.foreach { case (name, setup, write, inputRows) =>
+      val target = setup()
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      heard.clear()
+      evals.reset()
+      spark.listenerManager.register(listener)
+      try write(target)
+      finally {
+        org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+      assert(evals.value == inputRows,
+        s"$name: the input's lineage ran ${evals.value} row evaluations " +
+          s"for $inputRows input rows")
+      val queries = heard.asScala.toSeq
+      assert(name.endsWith("/local") ||
+        queries.exists { case (f, m) => f == "localCheckpoint" && m },
+        s"$name: no staging query over the input: $queries")
+      val late = queries.filter { case (f, m) => m && f != "localCheckpoint" }
+      assert(late.isEmpty,
+        s"$name: queries after staging plan the input's lineage: $late")
+    }
+  }
+
+  test("a keyed write releases its staged rows whether it commits, skips or fails") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("release").toString
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // shuffled range frames take the staging job (a local Seq frame is
+    // staged in place); the delete keys below are local
+    def rows(from: Int, until: Int) = spark.range(from, until).repartition(2)
+      .select(concat(lit("k"), col("id").cast("string")).as("k"),
+        col("id").as("v"))
+    var n = 0
+    def table(deleteVectors: Boolean = false): String = {
+      n += 1
+      val d = s"$root/t$n"
+      MergeWriter.merge(spark, d, rows(0, 1), Seq("k"), buckets = 64,
+        deleteVectors = deleteVectors)
+      d
+    }
+    // a key whose bucket stores nothing: deleting it touches no stored
+    // bucket, so the write stages its keys and then records nothing
+    val storedBucket = Seq("k0").toDF("k")
+      .select(pmod(hash(col("k")), lit(64))).as[Int].head()
+    val elsewhere = (1 until 1000).map(i => s"x$i").find(k => Seq(k).toDF("k")
+      .select(pmod(hash(col("k")), lit(64))).as[Int].head() != storedBucket).get
+    val nullKey = rows(0, 2).withColumn("k",
+      when(col("v") === 1L, lit(null).cast("string")).otherwise(col("k")))
+    val cases: Seq[(String, () => Unit)] = Seq(
+      "merge commits" -> (() =>
+        MergeWriter.merge(spark, table(), rows(0, 10), Seq("k"))),
+      "merge-on-read merge commits" -> (() =>
+        MergeWriter.merge(spark, table(deleteVectors = true), rows(0, 10),
+          Seq("k"))),
+      "delete commits" -> (() =>
+        MergeWriter.delete(spark, table(), Seq("k0").toDF("k"), Seq("k"))),
+      "applyChanges commits" -> (() =>
+        MergeWriter.applyChanges(spark, table(), rows(5, 10),
+          Seq("k0").toDF("k"), Seq("k"))),
+      "an empty batch skips" -> (() =>
+        MergeWriter.merge(spark, table(), rows(0, 0), Seq("k"))),
+      "a replayed txn skips" -> (() => {
+        val d = table()
+        MergeWriter.mergeAdditive(spark, d, rows(0, 3), Seq("k"), Seq("v"),
+          txn = ("app", 1L))
+        MergeWriter.mergeAdditive(spark, d, rows(0, 3), Seq("k"), Seq("v"),
+          txn = ("app", 1L))
+      }),
+      "a delete touching no stored bucket skips" -> (() =>
+        MergeWriter.delete(spark, table(), Seq(elsewhere).toDF("k"),
+          Seq("k"))),
+      "a merge-on-read delete of an absent key skips" -> (() =>
+        MergeWriter.delete(spark, table(deleteVectors = true),
+          Seq(elsewhere).toDF("k"), Seq("k"))),
+      "a NULL merge key fails" -> (() =>
+        intercept[Exception](MergeWriter.merge(spark, table(), nullKey,
+          Seq("k")))),
+      "a duplicate key under assertUnique fails" -> (() =>
+        intercept[IllegalArgumentException](MergeWriter.merge(spark, table(),
+          rows(0, 3).union(rows(1, 2)), Seq("k"),
+          assertUnique = Some("INSERT")))))
+    cases.foreach { case (name, write) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      write()
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$name: left persisted RDDs $left behind")
+      assert(cache.isEmpty, s"$name: left a cached frame behind")
+    }
+  }
 }

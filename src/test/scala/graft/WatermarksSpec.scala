@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Watermarks
+import graft.sources.MergeWriter
 
 class WatermarksSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -36,6 +37,37 @@ class WatermarksSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => r.getString(0) -> r.getTimestamp(1)).toMap
     assert(marks == Map("ds1" -> ts("2024-01-20 00:00:00"),
       "ds2" -> ts("2024-01-12 00:00:00")))
+  }
+
+  test("advance merges only moved marks: a stale replay commits nothing; " +
+       "string, timestamp and timestamp_ntz marks fold monotonically") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("wmfold").toString
+    Seq("string", "timestamp", "timestamp_ntz").foreach { t =>
+      val path = s"$root/$t"
+      def advance(marks: (String, String)*): Unit =
+        Watermarks.advance(spark, path, marks.toDF("ds", "u")
+          .select(col("ds"), col("u").cast(t).as("updated")),
+          col("ds"), col("updated"))
+      def marks(): Map[String, String] = Watermarks.currentMarks(spark, path)
+        .select(col("datasource_id"), col("next_run_start_from").cast("string"))
+        .as[(String, String)].collect().toMap
+      def versions() = MergeWriter.availableVersions(spark, path)
+      advance("a" -> "2024-01-10 00:00:00", "b" -> "2024-01-12 00:00:00")
+      val v1 = versions()
+      // a stale replay (a older, b equal) and an empty batch move no mark
+      advance("a" -> "2024-01-09 00:00:00", "b" -> "2024-01-12 00:00:00")
+      advance()
+      assert(versions() == v1, s"$t: a batch that moved no mark committed")
+      // one mark moves, one is stale, one datasource is new: one commit
+      advance("a" -> "2024-01-20 00:00:00", "b" -> "2024-01-11 00:00:00",
+        "c" -> "2024-01-01 00:00:00")
+      assert(versions().last == v1.last + 1, s"$t: ${versions()} after $v1")
+      assert(marks() == Map("a" -> "2024-01-20 00:00:00",
+        "b" -> "2024-01-12 00:00:00", "c" -> "2024-01-01 00:00:00"), t)
+      assert(Watermarks.currentMarks(spark, path)
+        .schema("next_run_start_from").dataType.typeName == t)
+    }
   }
 
   test("incremental passes only rows after each datasource's mark") {
