@@ -24,11 +24,10 @@ object Watermarks {
   /** Merge a processed batch's high-water marks into the checkpoint table,
     * monotonically: a datasource's stored mark only ever increases
     * (greatest of stored and observed), new datasources are inserted.
-    * One job folds each partition's maxima (no shuffle), the driver folds
-    * those (at most [[MaxMarks]] datasources) and then the pinned stored
-    * marks, all under Spark's own ordering of the mark type, and only the
-    * datasources whose mark moved are merged — a stale or replayed batch
-    * commits nothing.
+    * The batch's maxima (at most [[MaxMarks]] datasources) are compared
+    * in the driver with the pinned stored marks under Spark's own
+    * ordering of the mark type, and only the datasources whose mark moved
+    * are merged — a stale or replayed batch commits nothing.
     */
   def advance(spark: SparkSession, checkpointPath: String, batch: DataFrame,
               datasource: Column, updated: Column, buckets: Int = 8): Unit = {
@@ -45,18 +44,17 @@ object Watermarks {
       obs0.select(schema.fields.map(f => col(f.name).cast(f.dataType)
         .as(f.name)).toIndexedSeq: _*)
     }
-    val markType = obs.schema("next_run_start_from").dataType
-    val partial = MergeWriter.labeled(spark, "graft.watermark-observe") {
-      obs.rdd.mapPartitions(rows => Iterator.single(
-        foldMarks(rows.map(r => r.get(0) -> r.get(1)), markType))).collect()
-    }
-    val seen = foldMarks(partial.iterator.flatMap(_.iterator), markType)
+    val seen = MergeWriter.labeled(spark, "graft.watermark-observe")(
+      obs.groupBy(col("datasource_id"))
+        .agg(max(col("next_run_start_from")).as("next_run_start_from"))
+        .limit(MaxMarks + 1).collect())
+    require(seen.length <= MaxMarks,
+      s"Watermarks.advance: the batch has > $MaxMarks datasources — " +
+        "the checkpoint holds one mark per datasource")
     val marks = stored.fold(Map.empty[Any, Any])(_._1
       .map(r => r.get(0) -> r.get(1)).toMap)
-    val later = after(markType)
-    val moved = seen.collect {
-      case (ds, mark) if later(mark, marks.get(ds)) => Row(ds, mark)
-    }.toSeq
+    val later = after(obs.schema("next_run_start_from").dataType)
+    val moved = seen.filter(r => later(r.get(1), marks.get(r.get(0)))).toSeq
     if (moved.nonEmpty)
       MergeWriter.merge(spark, checkpointPath,
         spark.createDataFrame(moved.asJava, obs.schema),
@@ -72,24 +70,6 @@ object Watermarks {
     val ord = TypeUtils.getInterpretedOrdering(t)
     (mark, current) => current.forall(c => mark != null &&
       (c == null || ord.gt(internal(mark), internal(c))))
-  }
-
-  /** The greatest mark per datasource of `marks`, failing past
-    * [[MaxMarks]] datasources (a data-scale misuse) before it can exhaust
-    * memory.
-    */
-  private def foldMarks(marks: Iterator[(Any, Any)],
-                        t: DataType): Map[Any, Any] = {
-    val later = after(t)
-    marks.foldLeft(Map.empty[Any, Any]) { case (acc, (ds, mark)) =>
-      if (!later(mark, acc.get(ds))) acc
-      else {
-        require(acc.size < MaxMarks || acc.contains(ds),
-          s"Watermarks.advance: the batch has > $MaxMarks datasources — " +
-            "the checkpoint holds one mark per datasource")
-        acc.updated(ds, mark)
-      }
-    }
   }
 
   /** Hard ceiling on the checkpoint dim pinned by [[currentMarks]]: the

@@ -5589,9 +5589,7 @@ object MergeWriter {
 
   /** THE stager of a keyed write: ONE job under the `graft.touched`
     * label materializes the bucketed input as a local checkpoint and, in
-    * the same pass, counts its rows per bucket (a local input, already
-    * folded into driver-side rows at planning, is counted in place with
-    * no job). An empty batch touches
+    * the same pass, counts its rows per bucket. An empty batch touches
     * no bucket, and the exact counts feed the arms' caps and the
     * broadcast bound without a second pass (guide §1.2). Every later
     * query of the write — the duplicate-key guard, both merge-on-read

@@ -29,22 +29,13 @@ object GraftColumnShim {
     * before rethrowing. The release goes straight to
     * `SparkContext.unpersistRDD` (`private[spark]`): `RDD.unpersist`
     * WARNs on every locally checkpointed RDD, and a staged input is
-    * released by design once its consumer is done. An input the
-    * optimizer already folded into driver-side rows (a local relation,
-    * its projections evaluated once) is already such a leaf: it is
-    * summarized in place, with no job and nothing to release.
+    * released by design once its consumer is done.
     */
   def stageOnce[U: scala.reflect.ClassTag](df: DataFrame)(
       summarize: Iterator[catalyst.InternalRow] => U)
       : (DataFrame, Array[U], () => Unit) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val qe = ds.queryExecution
-    qe.optimizedPlan match {
-      case l: catalyst.plans.logical.LocalRelation if !l.isStreaming =>
-        return (classic.Dataset.ofRows(ds.sparkSession, l),
-          Array(summarize(l.data.iterator)), () => ())
-      case _ =>
-    }
     execution.SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
       val rows = qe.executedPlan.execute().map(_.copy())
       rows.localCheckpoint()
