@@ -1565,7 +1565,7 @@ private[sources] class GraftCatalogWriteBuilder(spark: SparkSession,
             if (idKeys.isEmpty) None
             else Some(idKeys.map(col(_).isNotNull).reduce(_ && _))
           // guard + write through one combinator: deterministic sources
-          // recompute key-narrow, non-deterministic ones pin one persist
+          // recompute key-narrow, non-deterministic ones are staged once
           // so the guarded rows ARE the written rows
           require(branch.isEmpty || !(replace || overwrite),
             "graft catalog: INSERT OVERWRITE cannot target a staging " +
@@ -2264,13 +2264,15 @@ object GraftCatalog {
     * so the guard and the write see the SAME rows. A DETERMINISTIC
     * source recomputes for the guard pass — its groupBy touches only
     * the key columns, so column pruning keeps the extra pass key-narrow
-    * (persisting would spill the statement's FULL rows, at 100 TB a
-    * table-sized cache, just to save that narrow scan). A source whose
+    * (staging would materialize the statement's FULL rows, at 100 TB a
+    * table-sized copy, just to save that narrow scan). A source whose
     * plan carries any non-deterministic expression (rand(), a
     * non-stable limit, an impure UDF) CANNOT be safely recomputed — the
     * guarded pass and the written pass could differ, letting duplicates
     * slip past the guard or spuriously rejecting a clean source — so it
-    * is pinned with one persist for the statement's duration.
+    * is staged once ([[MergeWriter.withStaged]]) for the statement's
+    * duration: a lost staged block fails the statement instead of
+    * re-running the source.
     */
   private[sources] def guardUniqueKeys(data: DataFrame, keys: Seq[String],
                                        stmt: String,
@@ -2280,22 +2282,14 @@ object GraftCatalog {
                                        // are each assigned fresh values
                                        checkOnly: Option[Column] = None)
                                       (write: DataFrame => Unit): Unit = {
-    val nonDeterministic = data
-      .asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-      .queryExecution.analyzed
-      .exists(p => p.expressions.exists(e => e.exists(!_.deterministic)))
-    def checkFrame(d: DataFrame): DataFrame =
-      checkOnly.fold(d)(d.filter)
-    if (!nonDeterministic) {
-      MergeWriter.requireUniqueKeys(checkFrame(data), keys, stmt)
-      write(data)
-    } else {
-      val pinned = data.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        MergeWriter.requireUniqueKeys(checkFrame(pinned), keys, stmt)
-        write(pinned)
-      } finally { pinned.unpersist(); () }
+    def guarded(rows: DataFrame): Unit = {
+      MergeWriter.requireUniqueKeys(checkOnly.fold(rows)(rows.filter), keys,
+        stmt)
+      write(rows)
+    }
+    if (MergeWriter.deterministic(data)) guarded(data)
+    else MergeWriter.withStaged("graft.unique-guard", data) { (rows, _) =>
+      guarded(rows)
     }
   }
 

@@ -508,6 +508,20 @@ object MaterializedViews {
     }
   }
 
+  /** The dims that moved since the MV's txn ledger `txns` last anchored
+    * them: (dim, anchored version — -1 when never anchored — current
+    * version). The one rule [[refresh]] folds by and [[status]]
+    * reports.
+    */
+  private def movedSince(spark: SparkSession, d: MvDef,
+                         txns: Map[String, Long]): Seq[(MvDim, Long, Long)] =
+    d.dims.flatMap { x =>
+      val cur = MergeWriter.pinManifest(spark, x.path, None, None)
+        .map(_.version).getOrElse(-1L)
+      val anchored = txns.getOrElse(dimTxnApp(x.path), -1L)
+      if (anchored == cur) None else Some((x, anchored, cur))
+    }
+
   /** INCREMENTAL DIM MAINTENANCE: fold a moved dim's own change feed
     * instead of re-evaluating the whole view. A changed dim row can
     * only perturb the fact groups holding its JOIN KEY, so the refresh
@@ -548,36 +562,30 @@ object MaterializedViews {
         !MergeWriter.availableVersions(spark, x.path).contains(a) })
       return false
     // per moved dim: the DISTINCT changed join-key values off its feed
-    // (key-col joins ride plain; non-key join cols as old_/new_ images).
-    // Built INSIDE the try so the finally unpersists whatever got
-    // persisted even when a later dim's validation exits early.
-    val changedKeys = scala.collection.mutable.Map[String, DataFrame]()
-    try {
-      moved.foreach { case (x, a, c) =>
-        val dimKeys = MergeWriter.pinManifest(spark, x.path, None, None)
-          .map(_.keyCols).getOrElse(Seq.empty)
-        if (dimKeys.isEmpty) return false
-        // compare EVERY non-key dim column: an empty compare list is a
-        // presence-only diff, which would miss attribute UPDATEs — and
-        // over-inclusion (a changed column the view never reads) only
-        // re-aggregates groups to the same values. Dims are small by
-        // contract; the feed is bucket-pruned regardless.
-        val keyIsJoin = dimKeys.exists(_.equalsIgnoreCase(x.dimCol))
-        val nonKey = currentSchema(spark, x.path).fieldNames
-          .filterNot(cn => dimKeys.exists(_.equalsIgnoreCase(cn))).toSeq
-        val feed = MergeWriter.changeFeed(spark, x.path, a, c, dimKeys,
-          nonKey)
-        val ck =
-          if (keyIsJoin) feed.select(col(x.dimCol).as("__ck"))
-          else feed.select(col(s"old_${x.dimCol}").as("__ck"))
-            .unionByName(feed.select(col(s"new_${x.dimCol}").as("__ck")))
-        changedKeys(x.path) =
-          ck.where(col("__ck").isNotNull).distinct().persist()
-      }
-      if (changedKeys.valuesIterator.exists(
-          _.limit((MaxIncrementalGroups + 1).toInt).count() >
-            MaxIncrementalGroups))
-        return false
+    // (key-col joins ride plain; non-key join cols as old_/new_ images)
+    val keyFrames: Seq[(MvDim, DataFrame)] = moved.map { case (x, a, c) =>
+      val dimKeys = MergeWriter.pinManifest(spark, x.path, None, None)
+        .map(_.keyCols).getOrElse(Seq.empty)
+      if (dimKeys.isEmpty) return false
+      // compare EVERY non-key dim column: an empty compare list is a
+      // presence-only diff, which would miss attribute UPDATEs — and
+      // over-inclusion (a changed column the view never reads) only
+      // re-aggregates groups to the same values. Dims are small by
+      // contract; the feed is bucket-pruned regardless.
+      val keyIsJoin = dimKeys.exists(_.equalsIgnoreCase(x.dimCol))
+      val nonKey = currentSchema(spark, x.path).fieldNames
+        .filterNot(cn => dimKeys.exists(_.equalsIgnoreCase(cn))).toSeq
+      val feed = MergeWriter.changeFeed(spark, x.path, a, c, dimKeys,
+        nonKey)
+      val ck =
+        if (keyIsJoin) feed.select(col(x.dimCol).as("__ck"))
+        else feed.select(col(s"old_${x.dimCol}").as("__ck"))
+          .unionByName(feed.select(col(s"new_${x.dimCol}").as("__ck")))
+      (x, ck.where(col("__ck").isNotNull).distinct())
+    }
+    // past the checks: `changedKeys` maps each moved dim to its staged
+    // distinct changed join keys and their count
+    def fold(changedKeys: Map[String, (DataFrame, Long)]): Boolean = {
       val srcAtFrom = MergeWriter.readTableVersion(spark, d.source,
         srcFrom)
       val srcFields = srcAtFrom.schema.fieldNames
@@ -587,11 +595,10 @@ object MaterializedViews {
       // shape); bigger churns restrict by broadcast semi-join instead
       val PointKeyMax = 1024
       val keyLits: Map[String, Option[Seq[Any]]] =
-        moved.map { case (x, _, _) =>
-          val head = changedKeys(x.path).limit(PointKeyMax + 1).collect()
-          x.path -> (if (head.length <= PointKeyMax)
-            Some(head.toSeq.map(_.get(0))) else None)
-        }.toMap
+        changedKeys.map { case (p, (rows, n)) =>
+          p -> (if (n > PointKeyMax) None
+            else Some(rows.collect().toSeq.map(_.get(0))))
+        }
       def dimsAt(old: Boolean): Seq[(DataFrame, MvDim)] = d.dims.map { x =>
         val df = moved.find(_._1.path == x.path) match {
           case Some((_, a, _)) if old =>
@@ -606,6 +613,7 @@ object MaterializedViews {
       // by that side)
       def groupsVia(x: MvDim, dims: Seq[(DataFrame, MvDim)])
           : DataFrame = {
+        val keysOf = changedKeys(x.path)._1
         val inSource = srcFields.exists(_.equalsIgnoreCase(x.srcCol))
         if (inSource) {
           val restricted = keyLits(x.path) match {
@@ -614,7 +622,7 @@ object MaterializedViews {
             case Some(vs) if vs.isEmpty => srcAtFrom.where(lit(false))
             case Some(vs) => MergeWriter.readTableVersionWhere(spark,
               d.source, srcFrom, Seq(MergeWriter.ColumnIn(x.srcCol, vs)))
-            case None => srcAtFrom.join(broadcast(changedKeys(x.path)
+            case None => srcAtFrom.join(broadcast(keysOf
                 .select(col("__ck").as(x.srcCol))),
               Seq(x.srcCol), "left_semi")
           }
@@ -623,44 +631,56 @@ object MaterializedViews {
         } else {
           // the join key comes from an EARLIER dim: restrict post-join
           preAgg(srcAtFrom, dims, d.whereSql, None)
-            .join(broadcast(changedKeys(x.path)),
-              col(x.srcCol) === col("__ck"), "left_semi")
+            .join(broadcast(keysOf), col(x.srcCol) === col("__ck"),
+              "left_semi")
             .select(d.groupCols.map(col): _*).distinct()
         }
       }
       val affected = moved.map(_._1).flatMap(x =>
           Seq(groupsVia(x, dimsAt(old = true)),
             groupsVia(x, dimsAt(old = false))))
-        .reduce(_ unionByName _).distinct().persist()
-      try {
-        val probe = affected.limit((MaxIncrementalGroups + 1).toInt)
-          .count()
-        if (probe > MaxIncrementalGroups) return false
-        if (probe == 0L) {
+        .reduce(_ unionByName _).distinct()
+      // staged once: the re-aggregation's restriction and the vanished-
+      // group anti-join both read it, and its count is the cap check
+      MergeWriter.withStaged("graft.mv-dim", affected) { (affected, n) =>
+        if (n > MaxIncrementalGroups) false
+        else if (n == 0L) {
           // the churned dim keys touch no contributing group (absent
           // from the source / outside the WHERE) — just re-pin
           moved.foreach { case (x, _, c) =>
             MergeWriter.recordTxn(spark, mvPath, (dimTxnApp(x.path), c)) }
-          return true
+          true
+        } else {
+          val mvSchema = currentSchema(spark, mvPath)
+          val recomputed = evaluate(srcAtFrom, dimsAt(old = false),
+            d.groupCols, d.aggs, d.whereSql, restrictTo = Some(affected))
+          val cast = recomputed.select((d.groupCols.map(col) ++
+            d.aggs.map(a =>
+              col(a.alias).cast(mvSchema(a.alias).dataType).as(a.alias))): _*)
+          val dels = affected.join(
+            cast.select(d.groupCols.map(col): _*), d.groupCols, "left_anti")
+          val (x0, _, c0) = moved.head
+          MergeWriter.applyChanges(spark, mvPath, cast, dels, d.groupCols,
+            opName = "refresh_mv_dim", txn = Some((dimTxnApp(x0.path), c0)))
+          moved.tail.foreach { case (x, _, c) =>
+            MergeWriter.recordTxn(spark, mvPath, (dimTxnApp(x.path), c)) }
+          true
         }
-        val mvSchema = currentSchema(spark, mvPath)
-        val recomputed = evaluate(srcAtFrom, dimsAt(old = false),
-          d.groupCols, d.aggs, d.whereSql, restrictTo = Some(affected))
-        val cast = recomputed.select((d.groupCols.map(col) ++
-          d.aggs.map(a =>
-            col(a.alias).cast(mvSchema(a.alias).dataType).as(a.alias))): _*)
-        val dels = affected.join(
-          cast.select(d.groupCols.map(col): _*), d.groupCols, "left_anti")
-        val (x0, _, c0) = moved.head
-        MergeWriter.applyChanges(spark, mvPath, cast, dels, d.groupCols,
-          opName = "refresh_mv_dim", txn = Some((dimTxnApp(x0.path), c0)))
-        moved.tail.foreach { case (x, _, c) =>
-          MergeWriter.recordTxn(spark, mvPath, (dimTxnApp(x.path), c)) }
-        true
-      } finally { affected.unpersist(); () }
-    } finally {
-      changedKeys.valuesIterator.foreach { df => df.unpersist(); () }
+      }
     }
+    // each dim's changed keys are staged once (the point-key collect
+    // and the per-side restrictions read them); a churn past the cap
+    // stops before staging the next dim
+    def staged(rest: Seq[(MvDim, DataFrame)],
+               acc: Map[String, (DataFrame, Long)]): Boolean = rest match {
+      case (x, ck) +: more =>
+        MergeWriter.withStaged("graft.mv-dim", ck) { (rows, n) =>
+          n <= MaxIncrementalGroups &&
+            staged(more, acc + (x.path -> ((rows, n))))
+        }
+      case _ => fold(acc)
+    }
+    staged(keyFrames, Map.empty)
   }
 
   /** Incremental refresh: advance the MV to the source's head off the
@@ -668,6 +688,14 @@ object MaterializedViews {
     * marks a full re-evaluation (retention fallback, dim moved, or
     * group-cap overflow) — or None when already fresh. Replay-safe:
     * the txn ledger skips an already-folded window.
+    *
+    * Every frame the refresh reads more than once is staged once
+    * ([[MergeWriter.withStaged]]) and released on every exit: the
+    * delta (`graft.mv-delta`, the one query that reads the source's
+    * change feed), the fold (`graft.mv-fold`), and a moved dim's
+    * changed keys and affected groups (`graft.mv-dim`). The staging
+    * passes' counts answer the empty / incremental / over-cap and
+    * re-scan questions — no separate probe query runs.
     */
   def refresh(spark: SparkSession, mvPath: String): Option[(Long, Long)] = {
     val d = readDef(spark, mvPath)
@@ -693,12 +721,7 @@ object MaterializedViews {
     // re-evaluation only when the dim window aged out or the churn
     // passed the cap. Checked even when the source is fresh: the view
     // must track the dim too.
-    val movedDims: Seq[(MvDim, Long, Long)] = d.dims.flatMap { x =>
-      val cur = MergeWriter.pinManifest(spark, x.path, None, None)
-        .map(_.version).getOrElse(-1L)
-      val anchored = mvMan.txns.getOrElse(dimTxnApp(x.path), -1L)
-      if (anchored == cur) None else Some((x, anchored, cur))
-    }
+    val movedDims = movedSince(spark, d, mvMan.txns)
     val dimFolded =
       if (movedDims.isEmpty) false
       else if (dimIncremental(spark, mvPath, d, from, movedDims)) true
@@ -728,13 +751,14 @@ object MaterializedViews {
     val needed = (d.groupCols ++ d.aggs.map(_.col).filter(_.nonEmpty) ++
       whereCols ++ d.dims.map(_.srcCol))
       .distinct.filter(inSrc).filterNot(keys.contains)
-    // persisted: the ±1-signed union below builds an OLD-image side and
-    // a NEW-image side over this one feed — without the cache each side
-    // re-runs the two-sided snapshot diff (the refresh's single most
-    // expensive computation). The feed is change-proportional by the
-    // bucket-pruned diff contract, never corpus-proportional.
+    // the ±1-signed union below builds an OLD-image side and a NEW-image
+    // side over this one feed, inside the ONE query that stages the
+    // delta. Not staged on its own: the optimizer plans each side's op
+    // filter into a one-sided outer join that broadcasts the other
+    // snapshot (no shuffle), so a feed staging job would cost more than
+    // the second read of the changed files it saves
     val feed = MergeWriter.changeFeed(spark, d.source, from, to, keys,
-      needed).persist()
+      needed)
     val dimP = dimFrames(spark, d)
     // ±1-signed contribution images: old for update/delete, new for
     // update/insert, each side joined to the (now-pinned) dims and
@@ -768,14 +792,13 @@ object MaterializedViews {
           max(when(col("__sign") === -1, col(a.col))).as(s"__del_${a.alias}"))
       }
     }
-    // persisted: the emptiness probe, the point-read keying and the
-    // fold all consume it — without the cache each would recompute the
-    // full feed diff
-    val delta = signed.groupBy(d.groupCols.map(col): _*)
-      .agg(deltaAggs.head, deltaAggs.tail: _*).persist()
-    try {
-      refreshWithDelta(spark, mvPath, d, delta, from, to)
-    } finally { delta.unpersist(); feed.unpersist(); () }
+    // staged once: the point read's keys and the fold read it, and its
+    // group count answers 0 / incremental / over the cap
+    MergeWriter.withStaged("graft.mv-delta",
+        signed.groupBy(d.groupCols.map(col): _*)
+          .agg(deltaAggs.head, deltaAggs.tail: _*)) { (delta, groups) =>
+      refreshWithDelta(spark, mvPath, d, delta, groups, from, to)
+    }
   }
 
   /** Touched-group cap: past it the point-read keying (a bounded
@@ -783,21 +806,25 @@ object MaterializedViews {
     * re-evaluates fully instead — for a churn that big the full
     * evaluation is competitive anyway.
     */
-  private val MaxIncrementalGroups = 100000L
+  private[graft] val MaxIncrementalGroups = 100000L
 
+  /** Fold the staged `delta` (`groups` rows, one per touched group) into
+    * the MV. An empty delta only moves the anchor; past
+    * [[MaxIncrementalGroups]] the MV re-evaluates fully; otherwise the
+    * fold of the touched groups' stored rows is staged once and commits
+    * as one mixed change set.
+    */
   private def refreshWithDelta(spark: SparkSession, mvPath: String,
-                               d: MvDef, delta: DataFrame,
+                               d: MvDef, delta: DataFrame, groups: Long,
                                from: Long, to: Long): Option[(Long, Long)] = {
-    // bounded size probe: 0 / incremental / too-big in one job
-    val probe = delta.limit((MaxIncrementalGroups + 1).toInt).count()
     // an advanced source version with an empty contribution (e.g. a
     // churn outside the WHERE) must still move the anchor, or every
     // later refresh re-diffs the same window
-    if (probe == 0L) {
+    if (groups == 0L) {
       MergeWriter.recordTxn(spark, mvPath, (txnApp(d.source), to))
       return Some((from, to))
     }
-    if (probe > MaxIncrementalGroups) {
+    if (groups > MaxIncrementalGroups) {
       fullReeval(spark, mvPath, d, to, atomic = true)
       return Some((-1L, to))
     }
@@ -840,38 +867,37 @@ object MaterializedViews {
       else col(s"__d___del_${a.alias}") >= col(a.alias)
       col(a.alias).isNotNull && col(s"__d___del_${a.alias}").isNotNull && cmp
     }.reduceOption(_ || _).getOrElse(lit(false))
-    // persisted: `folded` embeds the MV point read and the full_outer
-    // fold, and THREE consumers evaluate it (the rescan probe, the
-    // upsert side and the delete side inside applyChanges) — without
-    // the cache each re-runs the point-read + join. Bounded by the
-    // touched-group cap, so the cache is metadata-sized by contract.
-    val folded = joined.select((foldCols :+
-      rescanPred.as("__graft_rescan")): _*).persist()
-    try {
-      val live = folded.where(col(starAlias) > 0)
-      val ups0 = live.where(!col("__graft_rescan")).drop("__graft_rescan")
+    // `folded` embeds the MV point read and the full_outer fold and is
+    // read by the upsert side, the delete side and the re-scan keys:
+    // staged once, bounded by the touched-group cap. The flag marks the
+    // LIVE groups whose extremum must re-scan, and its count from the
+    // staging pass spares the common refresh (no extremum retracted) a
+    // source scan for an empty semi-join.
+    val fold = joined.select((foldCols :+ rescanPred.as("__graft_rescan")): _*)
+      .withColumn("__graft_rescan",
+        col("__graft_rescan") && col(starAlias) > 0)
+    MergeWriter.withStaged("graft.mv-fold", fold,
+        flag = Some("__graft_rescan")) { (folded, rescans) =>
+      val ups0 = folded.where(col(starAlias) > 0 && !col("__graft_rescan"))
+        .drop("__graft_rescan")
       val dels = folded.where(col(starAlias) <= 0)
         .select(d.groupCols.map(col): _*)
-      // extremum re-scan: exactly the flagged live groups re-aggregate
-      // from the source in one restricted, column-pruned pass (their
+      // extremum re-scan: exactly the flagged groups re-aggregate from
+      // the source in one restricted, column-pruned pass (their
       // count/sum recompute too — exact either way)
-      val rescanKeys = live.where(col("__graft_rescan"))
-        .select(d.groupCols.map(col): _*)
-      // one cheap emptiness probe first: the common refresh retracts no
-      // extremum, and must not pay a source scan for an empty semi-join
       val ups =
-        if (minmax.isEmpty || rescanKeys.limit(1).count() == 0L) ups0
+        if (rescans == 0L) ups0
         else {
           val rescan = evaluate(MergeWriter.readTable(spark, d.source),
             dimFrames(spark, d), d.groupCols, d.aggs, d.whereSql,
-            restrictTo = Some(rescanKeys))
+            restrictTo = Some(folded.where(col("__graft_rescan"))))
           val cast = rescan.select((d.groupCols.map(col) ++ d.aggs.map(a =>
             col(a.alias).cast(mvSchema(a.alias).dataType).as(a.alias))): _*)
           ups0.unionByName(cast)
         }
       MergeWriter.applyChanges(spark, mvPath, ups, dels, d.groupCols,
         opName = "refresh_mv", txn = Some((txnApp(d.source), to)))
-    } finally { folded.unpersist(); () }
+    }
     Some((from, to))
   }
 
@@ -887,11 +913,7 @@ object MaterializedViews {
         s"mv_status: $mvPath lost its manifest"))
     val srcV = MergeWriter.pinManifest(spark, d.source, None, None)
       .map(_.version).getOrElse(-1L)
-    val dimMoved = d.dims.exists { x =>
-      val cur = MergeWriter.pinManifest(spark, x.path, None, None)
-        .map(_.version).getOrElse(-1L)
-      !mvMan.txns.get(dimTxnApp(x.path)).contains(cur)
-    }
+    val dimMoved = movedSince(spark, d, mvMan.txns).nonEmpty
     // agree with refresh: a ledger MISSING the source anchor means the
     // create never completed (or the ledger was lost) — report
     // refreshed-through -1 (never "fresh") instead of trusting

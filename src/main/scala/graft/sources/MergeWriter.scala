@@ -2034,21 +2034,10 @@ object MergeWriter {
     // a frame ONCE (localCheckpoint materializes the rows and truncates
     // the lineage, so both passes — and the epoch write after — read
     // the same materialized partitions); deterministic plans skip the
-    // cost, mirroring guardUniqueKeys' pinning rule.
-    val df = {
-      val analyzed = df0
-        .asInstanceOf[org.apache.spark.sql.classic.Dataset[
-          org.apache.spark.sql.Row]]
-        .queryExecution.analyzed
-      // Expression.exists does not descend into SubqueryExpression
-      // inner plans, so scan the (recursively collected) subquery
-      // plans too — a rand() hiding inside an IN/EXISTS subquery
-      // re-sizes partitions between the two passes just as well
-      val nonDeterministic = (analyzed +: analyzed.subqueriesAll)
-        .exists(_.exists(p =>
-          p.expressions.exists(e => e.exists(!_.deterministic))))
-      if (nonDeterministic) df0.localCheckpoint(eager = true) else df0
-    }
+    // cost, mirroring guardUniqueKeys' pinning rule. A rand() hiding
+    // inside an IN/EXISTS subquery re-sizes partitions just as well.
+    val df =
+      if (deterministic(df0)) df0 else df0.localCheckpoint(eager = true)
     // ONE narrow job over the batch: per-partition row totals (the
     // reservation sizes) and per-column NULL counts (the skip signal)
     val perPart = df.select(present.map(col): _*).rdd
@@ -5617,6 +5606,36 @@ object MergeWriter {
     Staging(rows, parts.flatten.groupMapReduce(_._1)(_._2)(_ + _), release)
   }
 
+  /** Stage a frame that several queries read ONCE, under `label`: one
+    * job materializes it as a lineage-free leaf
+    * ([[org.apache.spark.sql.GraftColumnShim.stageOnce]]) and counts its
+    * rows in the same pass — only the rows whose boolean column `flag`
+    * holds, when one is named. `use` gets the leaf and the count, and
+    * the rows are released when it returns or throws. The keyed
+    * stager ([[stageKeyed]]) counts per bucket instead.
+    */
+  private[sources] def withStaged[A](label: String, df: DataFrame,
+                                     flag: Option[String] = None)(
+      use: (DataFrame, Long) => A): A = {
+    val ord = flag.fold(-1)(df.schema.fieldIndex)
+    val (rows, counts, release) = labeled(df.sparkSession, label) {
+      org.apache.spark.sql.GraftColumnShim.stageOnce(df) { it =>
+        it.count(r => ord < 0 || (!r.isNullAt(ord) && r.getBoolean(ord)))
+          .toLong
+      }
+    }
+    try use(rows, counts.sum) finally release()
+  }
+
+  /** Whether `df`'s plan is free of non-deterministic expressions —
+    * subqueries included (a subquery expression is deterministic only
+    * when its plan is). A non-deterministic input read twice may yield
+    * different rows each time.
+    */
+  private[sources] def deterministic(df: DataFrame): Boolean =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[
+      org.apache.spark.sql.Row]].queryExecution.analyzed.deterministic
+
   /** Label the Spark jobs an engine phase submits (guide §1.5) so the
     * UI/profilers attribute them; thread-local, restores the caller's
     * description on exit. Zero semantic effect.
@@ -8081,48 +8100,24 @@ object MergeWriter {
     currentManifest(fs, new Path(tablePath)).map(_.epochs).getOrElse(Map.empty)
   }
 
-  /** Apply a [[changeFeed]] to a REPLICA table: upsert the feed's
-    * inserts/updates (their `new_*` images) and delete its deletes —
-    * the incremental-consumer loop of a 100 TB table (sync a replica,
-    * feed a downstream index) reading change volume, never the corpus.
-    * Applying the same feed twice is idempotent (keyed merge + keyed
-    * delete), so at-least-once driving loops are safe; `fromVersion`
-    * must be the consumer's last-applied cursor and both versions must
-    * still be retained (aged-out cursors fail loudly via
-    * [[readTableVersion]] instead of silently skipping changes — the
-    * consumer then re-seeds from a full [[readTable]] snapshot).
-    */
-  def applyChangeFeed(spark: SparkSession, sourcePath: String,
-                      replicaPath: String, fromVersion: Long,
-                      toVersion: Long, keys: Seq[String],
-                      compareCols: Seq[String], buckets: Int = 64): Unit = {
-    val feed = changeFeed(spark, sourcePath, fromVersion, toVersion, keys,
-      compareCols).persist()
-    try {
-      val upserts = feed.filter(col("op").isin("insert", "update"))
-        .select(keys.map(col) ++
-          compareCols.map(c => col(s"new_$c").as(c)): _*)
-      merge(spark, replicaPath, upserts, keys, buckets)
-      val deletes = feed.filter(col("op") === "delete")
-        .select(keys.map(col): _*)
-      delete(spark, replicaPath, deletes, keys)
-    } finally { feed.unpersist(); () }
-  }
-
-  /** The complete incremental-consumer loop over [[applyChangeFeed]],
-    * with a crash-safe persisted cursor: first call seeds the replica
-    * from the source's latest pinned snapshot; every later call applies
-    * each retained source version past the cursor, advancing the cursor
-    * file after each step. The cursor is written AFTER the apply, so a
-    * crash between them redelivers one feed — harmless, because feed
-    * application is idempotent (keyed merge + keyed delete): the loop
-    * is exactly-once in EFFECT under at-least-once execution. Liveness
+  /** The incremental-consumer loop over [[changeFeed]] — sync a
+    * replica, feed a downstream index — reading change volume, never
+    * the corpus, with a crash-safe persisted cursor: first call seeds
+    * the replica from the source's latest pinned snapshot; every later
+    * call applies each retained source version past the cursor as ONE
+    * keyed commit (the feed's inserts/updates upsert their `new_*`
+    * images and its deletes remove their keys together, so no reader
+    * sees a version half-applied), advancing the cursor file after each
+    * step. The cursor is written AFTER the apply, so a crash between
+    * them redelivers one feed — harmless, because applying a feed is
+    * idempotent (keyed upsert + keyed delete): the loop is exactly-once
+    * in EFFECT under at-least-once execution. Liveness
     * contract: the consumer must sync within the source's retained
     * window ([[KeepManifests]] versions — under the default 2, at least
     * once per source commit; Delta's CDF has the same retention-bound
-    * contract). A cursor that has aged out fails loudly (via
-    * [[readTableVersion]]) instead of silently skipping changes —
-    * re-seed by deleting the cursor file. Returns the new cursor.
+    * contract). A cursor that has aged out fails loudly (the feed's
+    * [[pinManifest]]) instead of silently skipping changes — re-seed by
+    * deleting the cursor file. Returns the new cursor.
     */
   def syncReplica(spark: SparkSession, sourcePath: String,
                   replicaPath: String, keys: Seq[String],
@@ -8164,13 +8159,24 @@ object MergeWriter {
         writeCursor(seed)
         seed
     }
-    val end = sourceVersions.filter(_ > start).foldLeft(start) { (c, v) =>
-      applyChangeFeed(spark, sourcePath, replicaPath, c, v, keys,
-        compareCols, buckets)
+    sourceVersions.filter(_ > start).foldLeft(start) { (c, v) =>
+      // the feed is read twice (upserts, deletes): staged once. The
+      // write may create the replica — a seed from an empty snapshot
+      // commits nothing
+      withStaged("graft.sync-feed",
+          changeFeed(spark, sourcePath, c, v, keys, compareCols)) {
+        (feed, n) =>
+          if (n > 0) keyedWrite(spark, KeyedWrite("syncReplica", "sync",
+            ToTable(replicaPath), keys,
+            Some(feed.filter(col("op").isin("insert", "update"))
+              .select(keys.map(col) ++
+                compareCols.map(x => col(s"new_$x").as(x)): _*)),
+            Some(feed.filter(col("op") === "delete")), Replace(),
+            buckets = buckets))
+      }
       writeCursor(v)
       v
     }
-    end
   }
 
   /** L1/L3 — the custom-field load's transactional shape

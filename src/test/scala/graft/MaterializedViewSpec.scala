@@ -3,8 +3,14 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.{MaterializedViews, MergeWriter}
 
 /** Declarative materialized views with incremental refresh: the
   * defining GROUP BY query is recorded once, the MV is a first-class
@@ -12,7 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * exactly-once, change-proportional, with group liveness (a vanished
   * group leaves the view) and predicate flips handled on both sides.
   */
-class MaterializedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MaterializedViewSpec extends AnyFunSuite with BeforeAndAfterAll
+    with AdaptiveSparkPlanHelper {
 
   private lazy val wh = Files.createTempDirectory("gmv-wh").toString
 
@@ -114,10 +121,15 @@ class MaterializedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
     // but the anchor must advance or every refresh re-diffs it
     spark.sql("INSERT INTO gmv.ns.st VALUES (50, 'z', -5)")
     assert(!status().getBoolean(3), "stale after a source commit")
+    def files() = spark.sql("SELECT * FROM gmv.ns.stmv.files")
+      .collect().toSet
+    val filesBefore = files()
     spark.sql("CALL gmv.system.refresh_mv(view => 'ns.stmv')")
     val st = status()
     assert(st.getBoolean(3),
       s"anchor must advance past a no-contribution window: $st")
+    assert(files() == filesBefore,
+      "a window that contributes nothing writes no data file")
     assert(mvRows("gmv.ns.stmv") == expected("gmv.ns.st"))
   }
 
@@ -505,5 +517,147 @@ class MaterializedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().head.getString(0)
     assert(s.contains("fully re-evaluated"), s)
     assert(mvRows("gmv.ns.rtmv") == expected("gmv.ns.rt"))
+  }
+
+  /** Runs `f` and checks that it left no staged or cached frame behind. */
+  private def releasesAll[A](what: String)(f: => A): A = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = f
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"$what: left persisted RDDs $left behind")
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty, s"$what: left a cached frame")
+    out
+  }
+
+  /** One row per group of `SELECT grp, COUNT(*), SUM(v) ... WHERE v >= 0
+    * GROUP BY grp` over a table path, and the MV's rows at a path.
+    */
+  private def expectedAt(src: String): Set[(String, Long, Long)] =
+    MergeWriter.readTable(spark, src).where(col("v") >= 0).groupBy("grp")
+      .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"),
+        org.apache.spark.sql.functions.sum("v").as("sv"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+  private def mvRowsAt(mv: String): Set[(String, Long, Long)] =
+    MergeWriter.readTable(spark, mv).select("grp", "n", "sv").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+
+  test("a refresh reads the source's change feed in exactly one query") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("gmv-once").toString
+    val src = s"$root/facts"
+    val mv = s"$root/rollup"
+    MergeWriter.merge(spark, src, (0L until 20L)
+      .map(i => (i, s"g${i % 3}", i)).toDF("id", "grp", "v"), Seq("id"),
+      buckets = 4)
+    MaterializedViews.create(spark, mv, src, "facts", "SELECT grp, " +
+      "COUNT(*) AS n, SUM(v) AS sv FROM facts WHERE v >= 0 GROUP BY grp",
+      buckets = 4)
+    // one source version holding an insert, an update and a delete
+    MergeWriter.applyChanges(spark, src,
+      Seq((100L, "g1", 5L), (3L, "g2", 7L)).toDF("id", "grp", "v"),
+      Seq(4L).toDF("id"), Seq("id"))
+    // a cached relation's plan counts: a query over a cached feed or
+    // delta re-plans the feed's lineage
+    def scansSource(p: SparkPlan): Boolean = collectWithSubqueries(p) {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.toString.contains(src))
+      case m: InMemoryTableScanExec => scansSource(m.relation.cachedPlan)
+    }.contains(true)
+    val heard = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        heard.add(funcName -> scansSource(qe.executedPlan))
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val window =
+      try MaterializedViews.refresh(spark, mv)
+      finally {
+        org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    assert(window.exists(_._1 >= 0), s"incremental refresh expected: $window")
+    val queries = heard.asScala.toSeq
+    assert(queries.count(_._2) == 1,
+      s"the source's files are read by ${queries.count(_._2)} queries: " +
+        queries)
+    assert(mvRowsAt(mv) == expectedAt(src))
+  }
+
+  test("the touched-group cap: a delta of exactly the cap folds " +
+       "incrementally, cap + 1 falls back to ONE full re-evaluation") {
+    val cap = MaterializedViews.MaxIncrementalGroups
+    val root = Files.createTempDirectory("gmv-cap").toString
+    val src = s"$root/src"
+    val mv = s"$root/mv"
+    // one group per row: the refresh's delta has one row per new id
+    def rows(from: Long, until: Long) = spark.range(from, until)
+      .select(col("id"), col("id").cast("string").as("grp"), lit(1L).as("v"))
+    MergeWriter.merge(spark, src, rows(-1L, 0L), Seq("id"), buckets = 4)
+    MaterializedViews.create(spark, mv, src, "src", "SELECT grp, " +
+      "COUNT(*) AS n, SUM(v) AS sv FROM src WHERE v >= 0 GROUP BY grp",
+      buckets = 4)
+    def head() = MergeWriter.availableVersions(spark, mv).last
+    MergeWriter.merge(spark, src, rows(0L, cap), Seq("id"))
+    val atCap = releasesAll("a delta at the cap")(
+      MaterializedViews.refresh(spark, mv))
+    assert(atCap.exists(_._1 >= 0), s"folds incrementally: $atCap")
+    assert(mvRowsAt(mv) == expectedAt(src))
+    MergeWriter.merge(spark, src, rows(cap, 2 * cap + 1), Seq("id"))
+    val before = head()
+    val overCap = releasesAll("a delta over the cap")(
+      MaterializedViews.refresh(spark, mv))
+    assert(overCap.exists(_._1 == -1L), s"re-evaluates fully: $overCap")
+    assert(head() == before + 1, "exactly one commit for the fallback")
+    assert(mvRowsAt(mv) == expectedAt(src))
+  }
+
+  test("a refresh releases every staged frame on each of its exits") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("gmv-release").toString
+    val src = s"$root/src"
+    val mv = s"$root/mv"
+    MergeWriter.merge(spark, src, Seq((1L, "a", 1L), (2L, "b", 2L))
+      .toDF("id", "grp", "v"), Seq("id"), buckets = 2)
+    MaterializedViews.create(spark, mv, src, "src", "SELECT grp, " +
+      "COUNT(*) AS n, SUM(v) AS sv FROM src WHERE v >= 0 GROUP BY grp",
+      buckets = 2)
+    def put(rows: (Long, String, Long)*): Unit =
+      MergeWriter.merge(spark, src, rows.toDF("id", "grp", "v"), Seq("id"))
+    put((3L, "a", 3L))
+    assert(releasesAll("an incremental fold")(
+      MaterializedViews.refresh(spark, mv)).exists(_._1 >= 0))
+    put((4L, "z", -4L))
+    assert(releasesAll("an empty window")(
+      MaterializedViews.refresh(spark, mv)).exists(_._1 >= 0))
+    assert(mvRowsAt(mv) == expectedAt(src))
+    // a NULL group cannot be an MV key: the refresh fails after staging
+    put((5L, null, 5L))
+    releasesAll("a failed refresh")(
+      intercept[Exception](MaterializedViews.refresh(spark, mv)))
+    // a moved dim folds its own change feed
+    val fact = s"$root/fact"
+    val dim = s"$root/dim"
+    val dimMv = s"$root/dimmv"
+    MergeWriter.merge(spark, fact, Seq((1L, "t1"), (2L, "t2"), (3L, "t1"))
+      .toDF("id", "tk"), Seq("id"), buckets = 2)
+    MergeWriter.merge(spark, dim, Seq(("t1", "x"), ("t2", "y"))
+      .toDF("tk", "category"), Seq("tk"), buckets = 2)
+    MaterializedViews.create(spark, dimMv, fact, "fact", "SELECT category, " +
+      "COUNT(*) AS n FROM fact JOIN dim ON tk = tk GROUP BY category",
+      buckets = 2, dims = Seq((dim, "dim")))
+    MergeWriter.merge(spark, dim, Seq(("t2", "x")).toDF("tk", "category"),
+      Seq("tk"))
+    val w = releasesAll("a dim fold")(MaterializedViews.refresh(spark, dimMv))
+    assert(w.isDefined && !w.exists(_._1 == -1L), s"dim fold expected: $w")
+    assert(MergeWriter.readTable(spark, dimMv).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet == Set(("x", 3L)))
   }
 }

@@ -1870,8 +1870,18 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(c2 > c15)
     assert(state(rep) == state(src))
     assert(state(rep) == Map("A" -> 2, "C" -> 2))
+    // a source version holding an upsert AND a delete reaches the
+    // replica as ONE commit: no reader sees it half-applied
+    MergeWriter.applyChanges(spark, src, Seq(("D", 3)).toDF("k", "v"),
+      Seq("A").toDF("k"), Seq("k"))
+    val repHead = MergeWriter.availableVersions(spark, rep).last
+    val c3 = MergeWriter.syncReplica(spark, src, rep, Seq("k"), Seq("v"))
+    assert(c3 > c2)
+    assert(MergeWriter.availableVersions(spark, rep).last == repHead + 1,
+      "one source version must add exactly one replica version")
+    assert(state(rep) == Map("C" -> 2, "D" -> 3))
     // idle call: cursor unchanged, state unchanged
-    assert(MergeWriter.syncReplica(spark, src, rep, Seq("k"), Seq("v")) == c2)
+    assert(MergeWriter.syncReplica(spark, src, rep, Seq("k"), Seq("v")) == c3)
     // crash-before-cursor-write simulation: wind the cursor back ONE
     // version (the realistic redelivery window); the redelivered feed
     // must re-apply harmlessly
@@ -1882,9 +1892,9 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       val out = fs.create(cf, true)
       out.write(v.toString.getBytes("UTF-8")); out.close()
     }
-    setCursor(c2 - 1)
-    assert(MergeWriter.syncReplica(spark, src, rep, Seq("k"), Seq("v")) == c2)
-    assert(state(rep) == Map("A" -> 2, "C" -> 2))
+    setCursor(c3 - 1)
+    assert(MergeWriter.syncReplica(spark, src, rep, Seq("k"), Seq("v")) == c3)
+    assert(state(rep) == Map("C" -> 2, "D" -> 3))
     // a cursor that aged OUT of the retained window fails loudly (the
     // consumer must re-seed) — never silently skips the lost changes
     setCursor(c1)
