@@ -846,9 +846,10 @@ object SparkEntry {
     }),
 
     // E2 + A10: context-membership refresh — stale membership written, then
-    // a refresh overwrites only the touched context partitions (upsert +
-    // anti-delete in one shot); the query returns the table READ BACK from
-    // disk, so the dynamic-partition-overwrite semantics are what's checked.
+    // a refresh replaces only the touched contexts (a keyed replace on the
+    // context: every incoming row of a context survives, its stale rows
+    // go — upsert + anti-delete in one commit); the query returns the
+    // table READ BACK, so the replace semantics are what's checked.
     "q39_membership_refresh" -> ((s, dir) => {
       val o = Tables.orders(s, dir)
       val path = scratchDir("graft-cwim") + "/cwim"
@@ -859,13 +860,14 @@ object SparkEntry {
         .unionByName(o.filter(pmod(col("o_orderkey"), lit(97)) === 0)
           .select(col("o_orderkey").as("work_item_id"),
             lit("legacy").as("context_id")))
-      sources.MergeWriter.overwritePartitions(path, stale, "context_id")
+      sources.MergeWriter.merge(s, path, stale, Seq("context_id"))
       val fresh = o.filter(col("o_orderpriority").isin(refreshed: _*) &&
           col("o_totalprice") > 150000)
         .select(col("o_orderkey").as("work_item_id"),
           col("o_orderpriority").as("context_id"))
-      sources.MergeWriter.overwritePartitions(path, fresh, "context_id")
-      s.read.parquet(path).select(col("context_id"), col("work_item_id"))
+      sources.MergeWriter.merge(s, path, fresh, Seq("context_id"))
+      sources.MergeWriter.readTable(s, path)
+        .select(col("context_id"), col("work_item_id"))
     }),
 
     // Multimodal: binary payload column + deterministic feature kernel
@@ -1897,22 +1899,23 @@ object SparkEntry {
     // the full card→workflow map; round 2 re-scans workflows 1-2 through
     // graft-kbz — the 3-column projection flips the compiled params to
     // the membership mode, the workflow membership is pushed — applies a
-    // type remap, and overwrites ONLY the touched workflow partitions.
+    // type remap, and replaces ONLY the touched workflows (a keyed replace
+    // on the workflow).
     // The read-back proves the upsert + anti-delete semantics.
     "q85_kbz_membership_refresh" -> ((s, dir) => {
       val drop = scratchDir("graft-kbz-m")
       kbzCardsJson(s, dir).write.mode("overwrite").text(drop)
       val tbl = scratchDir("graft-kbz-cwim") + "/maps"
       def scan() = s.read.format("graft-kbz").option("path", drop).load()
-      sources.MergeWriter.overwritePartitions(tbl,
+      sources.MergeWriter.merge(s, tbl,
         scan().select(col("card_id"), col("workflow_id"), col("type_id")),
-        "workflow_id")
-      sources.MergeWriter.overwritePartitions(tbl,
+        Seq("workflow_id"))
+      sources.MergeWriter.merge(s, tbl,
         scan().filter(col("workflow_id").isin(1L, 2L))
           .select(col("card_id"), col("workflow_id"),
             (col("type_id") + 10).as("type_id")),
-        "workflow_id")
-      s.read.parquet(tbl).select(col("card_id"),
+        Seq("workflow_id"))
+      sources.MergeWriter.readTable(s, tbl).select(col("card_id"),
         col("workflow_id").cast("long").as("workflow_id"), col("type_id"))
     }),
 

@@ -773,7 +773,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   /** The maintenance verbs as SQL stored procedures (Iceberg's
     * `CALL catalog.system.rewrite_data_files` shape on Spark's DSv2
     * ProcedureCatalog): compact, cluster (the OPTIMIZE ZORDER
-    * retrofit), vacuum, set_retention, truncate_history, expire_txns,
+    * retrofit), vacuum, upgrade, set_retention, truncate_history, expire_txns,
     * split_buckets, build_bloom_index — so the ENTIRE operational
     * surface is reachable from pure SQL, not just the DataFrame API.
     * Each returns one `status` row.
@@ -905,6 +905,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           val p = tablePathOf(in.getUTF8String(0).toString)
           MergeWriter.vacuum(spark, p, in.getLong(1))
           s"vacuumed $p"
+        }
+      },
+      new Proc("upgrade", "rewrite a table below the manifest protocol " +
+          "floor (no recorded schema or field ids) at the floor",
+        Array(inParam("table", SType))) {
+        override protected def exec(in: org.apache.spark.sql.catalyst.InternalRow) = {
+          val p = tablePathOf(in.getUTF8String(0).toString)
+          MergeWriter.upgrade(spark, p)
+          s"upgraded $p"
         }
       },
       new Proc("set_retention", "per-table retention policy: keep " +
@@ -1556,11 +1565,8 @@ private[sources] class GraftCatalogWriteBuilder(spark: SparkSession,
           // sentinel each receive a fresh UNIQUE value downstream, so
           // the statement-level duplicate-key check must not treat the
           // sentinels as one colliding key
-          val idKeys = man.flatMap(_.schema)
-            .map(sch => MergeWriter.identitySpecs(
-              org.apache.spark.sql.types.DataType.fromJson(sch)
-                .asInstanceOf[StructType]).keySet.intersect(keys.toSet))
-            .getOrElse(Set.empty)
+          val idKeys = man.fold(Set.empty[String])(m =>
+            MergeWriter.identitySpecs(m.struct).keySet.intersect(keys.toSet))
           val uniqueCheckRows: Option[Column] =
             if (idKeys.isEmpty) None
             else Some(idKeys.map(col(_).isNotNull).reduce(_ && _))
@@ -1691,7 +1697,7 @@ private[sources] class GraftStreamableParquetScan(
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
 
-  if (man.colIds.nonEmpty) MergeWriter.ensureFieldIdRead(p.sparkSession)
+  MergeWriter.ensureFieldIdRead(p.sparkSession)
 
   // ---- NATIVE DELETION-VECTOR READS -------------------------------
   // A version with live DVs stays on THIS scan (pruning, SPJ, runtime

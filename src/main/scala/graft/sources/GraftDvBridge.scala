@@ -69,8 +69,7 @@ private[sources] object GraftDvBridge {
   def frame(spark: SparkSession, tablePath: String,
             man: MergeWriter.Manifest,
             preds: Seq[MergeWriter.ColumnPredicate]): DataFrame = {
-    val buckets = GraftFileIndex.keyBuckets(man,
-      MergeWriter.indexSchema(spark, tablePath, man), preds)
+    val buckets = GraftFileIndex.keyBuckets(man, man.struct, preds)
     val pinned = buckets.fold(man)(bs => man.copy(
       epochs = man.epochs.filter { case (b, _) => bs(b) },
       stats = man.stats.filter { case (b, _) => bs(b) },

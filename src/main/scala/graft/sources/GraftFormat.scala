@@ -112,7 +112,7 @@ class GraftDataSource extends RelationProvider with DataSourceRegister
                               parameters: Map[String, String]): BaseRelation = {
     val spark = sqlContext.sparkSession
     val (man, dataPath) = pin(spark, parameters, pathOf(parameters))
-    val dataSchema = MergeWriter.indexSchema(spark, dataPath, man)
+    val dataSchema = man.struct
     // a pinned version with live deletion vectors cannot be served by
     // the native parquet file scan (dead rows would resurrect) — route
     // through the DV-aware storage read; pushed filters still prune
@@ -138,7 +138,7 @@ class GraftDataSource extends RelationProvider with DataSourceRegister
             .asInstanceOf[org.apache.spark.rdd.RDD[Row]]
         }
       }
-    if (man.colIds.nonEmpty) MergeWriter.ensureFieldIdRead(spark)
+    MergeWriter.ensureFieldIdRead(spark)
     // mainHead marks an UNPINNED plain-table read (no versionAsOf /
     // timestampAsOf / branch / member): the only relation shape the MV
     // rewrite may substitute — a pinned or branch lineage must never
@@ -149,12 +149,10 @@ class GraftDataSource extends RelationProvider with DataSourceRegister
     HadoopFsRelation(new GraftFileIndex(spark, dataPath, man,
         mainHead = mainHead),
       new StructType(), dataSchema, None,
-      // id-stamped tables read through a format that restamps the
-      // physical read schemas with the table's field ids (rename-proof
-      // column matching) while the relation schema — and every output
-      // attribute — stays id-free
-      if (man.colIds.isEmpty) new ParquetFileFormat
-      else new GraftParquetFileFormat(man.colIds),
+      // a format that restamps the physical read schemas with the
+      // table's field ids (rename-proof column matching) while the
+      // relation schema — and every output attribute — stays id-free
+      new GraftParquetFileFormat(man.colIds),
       parameters)(spark)
   }
 
@@ -289,7 +287,7 @@ class GraftDataSource extends RelationProvider with DataSourceRegister
          (Option[Long], Long) => org.apache.spark.sql.DataFrame) = {
     val path = pathOf(parameters)
     val (man, dataPath) = pin(spark, parameters, path)
-    val tableSchema = MergeWriter.indexSchema(spark, dataPath, man)
+    val tableSchema = man.struct
     val keys = csv(parameters, "keys").getOrElse(man.keyCols)
     require(keys.nonEmpty,
       s"graft streaming: $path records no merge keys and no 'keys' option " +
@@ -499,8 +497,7 @@ class GraftFileIndex private[sources] (
 
   override def sizeInBytes: Long = allFiles.map(_._2).sum
 
-  private lazy val dataSchema: StructType =
-    MergeWriter.indexSchema(spark, tablePath, man)
+  private lazy val dataSchema: StructType = man.struct
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression])

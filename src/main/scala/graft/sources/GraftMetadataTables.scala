@@ -222,10 +222,7 @@ private[sources] class GraftChangesTable(spark: SparkSession,
     man.keyCols
   }
 
-  // derived once per loadTable (schema() is called repeatedly during
-  // resolution, and indexSchema reconstructs the typed schema each time)
-  private lazy val idxSchema: StructType =
-    MergeWriter.indexSchema(spark, tablePath, man)
+  private lazy val idxSchema: StructType = man.struct
 
   private lazy val compareCols: Seq[String] =
     idxSchema.fieldNames.toSeq.filterNot(keys.contains)

@@ -346,7 +346,7 @@ object MaterializedViews {
     */
   private def currentSchema(spark: SparkSession, path: String): StructType =
     MergeWriter.pinManifest(spark, path, None, None)
-      .map(MergeWriter.indexSchema(spark, path, _))
+      .map(_.struct)
       .getOrElse(MergeWriter.readTable(spark, path).schema)
 
   private def dimFrames(spark: SparkSession,

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, MetadataBuilder,
   StructField, StructType}
 
-/** Keyed upsert ("MERGE") and partition-overwrite writers over parquet
+/** Keyed upsert ("MERGE") writers over parquet
   * table directories — the Spark-side equivalent of the reference's
   * transactional Sequelize loads:
   *
@@ -21,9 +21,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType, MetadataBuilder,
   *    flomatikaSnapshotDate)` (`snapshot_load_processor_aurora.ts:25-70`,
   *    `full_ddl.sql:1197`) — the natural key makes at-least-once delivery
   *    idempotent;
-  *  - A10 context-membership refresh = per-partition overwrite
+  *  - A10 context-membership refresh = a keyed replace on the context
   *    (`context_workitem_map_processor_aurora.ts:129-224`: bulk upsert +
-  *    anti-delete ≡ replace the partition).
+  *    anti-delete ≡ replace every row of a touched context).
   *
   * On a lakehouse deployment these become `MERGE INTO` on Delta/Iceberg;
   * this writer reproduces the semantics — INCLUDING table-atomic commit —
@@ -113,9 +113,10 @@ object MergeWriter {
     * in a path designed to be O(touched buckets). Old epoch files written
     * before an additive evolution are narrower than the stored schema;
     * the parquet reader null-fills the missing columns, which is exactly
-    * the evolution semantics. `None` only for pre-schema manifests
-    * (backward compat) — those fall back to a footer merge once and are
-    * upgraded by their next commit.
+    * the evolution semantics. REQUIRED: with the field ids
+    * ([[Manifest.colIds]]) it is the protocol floor — a manifest missing
+    * either fails to parse ([[manifestFromNode]]), and [[upgrade]] is
+    * the one way up.
     */
   /** `keyCols` is the table's merge-key column list, recorded IN ORDER at
     * creation: `hash(keys…)` is order-sensitive, so a caller passing the
@@ -123,9 +124,9 @@ object MergeWriter {
     * hash future merges won't compute — bucket pruning silently misses
     * rows and keyed-replace leaves stale duplicates behind. Every keyed
     * entry point validates its supplied keys against the recorded list
-    * and fails loudly on mismatch. Empty only for pre-keyCols manifests
-    * (backward compat) — those accept the caller's keys once and record
-    * them at their next commit.
+    * and fails loudly on mismatch. Not part of the protocol floor:
+    * empty for a keyless table, which accepts the caller's keys once and
+    * records them at its next keyed commit.
     */
   /** Per-data-file column statistics, recorded in the manifest at epoch
     * write (Delta's per-file stats / Iceberg's manifest column metrics,
@@ -217,7 +218,7 @@ object MergeWriter {
   private[sources] case class Manifest(version: Long, buckets: Int,
                                        epochs: Map[Int, String],
                                        txns: Map[String, Long] = Map.empty,
-                                       schema: Option[String] = None,
+                                       schema: String,
                                        keyCols: Seq[String] = Seq.empty,
                                        clusterCols: Seq[String] = Seq.empty,
                                        stats: Map[Int, Seq[FileStat]] = Map.empty,
@@ -252,18 +253,15 @@ object MergeWriter {
                                        // RENAME/DROP COLUMN be METADATA-
                                        // ONLY (immutable files keep
                                        // their old names; readers match
-                                       // by id). Empty ⇔ the table
-                                       // predates id stamping: its live
-                                       // files carry no ids, so renames
-                                       // are rejected until a full
-                                       // rewrite migrates it.
-                                       colIds: Map[String, Long] = Map.empty,
+                                       // by id). REQUIRED with `schema`
+                                       // (the protocol floor): every
+                                       // table is stamped at creation.
+                                       colIds: Map[String, Long],
                                        // next id to assign — NEVER reused
                                        // after a drop, so a re-added
                                        // column of the same name cannot
-                                       // resurrect dropped data. 0 ⇔ not
-                                       // id-stamped.
-                                       nextColId: Long = 0L,
+                                       // resurrect dropped data.
+                                       nextColId: Long,
                                        // DELETION-VECTOR policy (opt-in
                                        // at creation, like fingerprint):
                                        // when true, a small keyed delete
@@ -471,7 +469,11 @@ object MergeWriter {
                                        // per-file min/max + Bloom
                                        // skipping. See [[ShredSpec]].
                                        shredCols: Seq[ShredSpec] =
-                                         Seq.empty)
+                                         Seq.empty) {
+    /** The recorded schema, parsed. */
+    lazy val struct: StructType =
+      DataType.fromJson(schema).asInstanceOf[StructType]
+  }
 
   /** One equality-delete record of a bucket (see [[Manifest.eqds]]):
     * `sidecar` names a parquet directory under `_eqd/` holding the
@@ -771,17 +773,30 @@ object MergeWriter {
       b.result()
     }.getOrElse(Map.empty)
 
+  /** THE PROTOCOL FLOOR: a table manifest (or a group member) records
+    * its schema and its field-id map. Everything below it — pre-schema,
+    * pre-field-id — is refused at parse; [[upgrade]] rewrites it.
+    */
+  private def atFloor(node: com.fasterxml.jackson.databind.JsonNode): Boolean =
+    node.has("schema") && node.has("cids")
+
+  /** The refusal of a table below the protocol floor. */
+  private def belowFloor(where: String, what: String): IllegalStateException =
+    new IllegalStateException(s"$where: $what is below the manifest " +
+      "protocol floor — rewrite it with CALL <catalog>.system.upgrade(" +
+      "table => '...') or MergeWriter.upgrade(spark, path, keys)")
+
   private def manifestFromNode(node: com.fasterxml.jackson.databind.JsonNode,
-                               version: Long): Manifest = {
+                               version: Long, where: String): Manifest = {
+    if (!atFloor(node)) throw belowFloor(where,
+      s"manifest version $version (no recorded schema or field ids)")
     val epochs = parseEpochsNode(node.get("epochs"))
     val txns = scala.collection.mutable.Map.empty[String, Long]
     // absent in pre-txn manifests — backward compatible
     Option(node.get("txns")).foreach(_.fields().forEachRemaining { t =>
       txns(t.getKey) = t.getValue.asLong()
     })
-    // absent in pre-schema manifests — backward compatible
-    val schema = Option(node.get("schema")).map(_.asText())
-    // absent in pre-keyCols manifests — backward compatible
+    // absent when empty (`keys` on a keyless table)
     def strArr(field: String): Seq[String] =
       Option(node.get(field)).map { arr =>
         (0 until arr.size()).map(arr.get(_).asText())
@@ -795,7 +810,7 @@ object MergeWriter {
     // absent in pre-stats manifests — backward compatible
     val stats = parseStatsNode(node.get("stats"))
     Manifest(version, node.get("buckets").asInt(), epochs, txns.toMap,
-      schema, strArr("keys"), strArr("cluster"), stats,
+      node.get("schema").asText(), strArr("keys"), strArr("cluster"), stats,
       // absent in pre-bloom manifests — backward compatible
       strArr("bloomcols"),
       Option(node.get("bloomn")).map(_.asLong()).getOrElse(DefaultBloomItems),
@@ -810,13 +825,13 @@ object MergeWriter {
       // absent in pre-enforcement manifests — those epochs carry no
       // NULL-key proof, so the flag correctly reads false
       Option(node.get("kchk")).exists(_.asBoolean()),
-      // absent in pre-field-id manifests — those tables stay name-world
-      Option(node.get("cids")).map { n =>
+      {
         val b = Map.newBuilder[String, Long]
-        n.fields().forEachRemaining(e => b += e.getKey -> e.getValue.asLong())
+        node.get("cids").fields()
+          .forEachRemaining(e => b += e.getKey -> e.getValue.asLong())
         b.result()
-      }.getOrElse(Map.empty),
-      Option(node.get("ncid")).map(_.asLong()).getOrElse(0L),
+      },
+      node.get("ncid").asLong(),
       // absent in pre-deletion-vector manifests — backward compatible
       Option(node.get("dvs")).exists(_.asBoolean()),
       // absent in pre-ANALYZE manifests — backward compatible
@@ -911,7 +926,7 @@ object MergeWriter {
   private def readManifestUncached(fs: FileSystem, version: Long,
                                    p: Path): Manifest = {
     val node = readJsonFile(fs, p)
-    val base = manifestFromNode(node, version)
+    val base = manifestFromNode(node, version, p.getParent.toString)
     Option(node.get("segs")) match {
       case None => base
       case Some(arr) =>
@@ -998,7 +1013,7 @@ object MergeWriter {
         jsonStr(a) + ":" + v
       }.mkString(","))
       .append("}")
-      .append(m.schema.map(s => ",\"schema\":" + jsonStr(s)).getOrElse(""))
+      .append(",\"schema\":").append(jsonStr(m.schema))
       .append(if (m.keyCols.nonEmpty)
         ",\"keys\":[" + m.keyCols.map(jsonStr).mkString(",") + "]" else "")
       .append(if (m.clusterCols.nonEmpty)
@@ -1030,11 +1045,9 @@ object MergeWriter {
           jsonStr(t) + ":" + v }.mkString(",") + "}")
       .append(if (m.overlays.isEmpty) "" else
         ",\"ovl\":" + ovlJsonObj(m.overlays))
-      .append(if (m.colIds.nonEmpty)
-        ",\"cids\":{" + m.colIds.toSeq.sortBy(_._1).map { case (c, id) =>
-          jsonStr(c) + ":" + id }.mkString(",") + "}" +
-          ",\"ncid\":" + m.nextColId
-        else "")
+      .append(",\"cids\":{" + m.colIds.toSeq.sortBy(_._1).map {
+        case (c, id) => jsonStr(c) + ":" + id }.mkString(",") + "}" +
+        ",\"ncid\":" + m.nextColId)
       .append(if (m.stats.nonEmpty) ",\"stats\":" + statsJsonObj(m.stats)
         else "")
       .append(if (m.branchBase < 0L) "" else ",\"bbase\":" + m.branchBase)
@@ -1526,17 +1539,17 @@ object MergeWriter {
     * [[OrphanRetentionMs]] — a young unreferenced epoch may be a
     * concurrent writer mid-commit), stale staging files, and any
     * root-level pre-manifest leftovers (a manifest existing means
-    * migration committed — the legacy files are dead weight even if the
-    * migrating process crashed before its own cleanup). Crash-safe —
+    * [[upgrade]] committed — the legacy files are dead weight even if
+    * the upgrading process crashed before its own cleanup). Crash-safe —
     * anything missed is collected by a later merge.
     */
   private def gc(fs: FileSystem, dir: Path,
                  orphanRetentionMs: Long = OrphanRetentionMs): Unit = {
     val manifests = manifestFiles(fs, dir)
     // no manifest ⇒ not (yet) a protocol table: the root-level part- files
-    // ARE the data of a legacy pre-manifest table, not migration leftovers.
-    // The sweep below must only run once a commit proves migration happened
-    // — otherwise vacuum() on an unmigrated table would destroy it.
+    // ARE the data of a legacy pre-manifest table, not upgrade leftovers.
+    // The sweep below must only run once a commit proves the upgrade
+    // happened — otherwise vacuum() on a legacy table would destroy it.
     if (manifests.isEmpty) return
     // retention policy lives in the CURRENT manifest: keep the last
     // max(retainVersions, KeepManifests) versions, plus any version
@@ -1923,7 +1936,7 @@ object MergeWriter {
     require(!man0.checks.contains(name),
       s"addCheckConstraint: constraint '$name' already exists on " +
         s"$tablePath as CHECK (${man0.checks(name)}) — drop it first")
-    val schema = indexSchema(spark, tablePath, man0)
+    val schema = man0.struct
     val names = schema.fieldNames.map(_.toLowerCase).toSet
     // qualified references (`t.price`) lose their qualifier HERE, so
     // the stored predicate binds to the table's own attributes on
@@ -2187,9 +2200,7 @@ object MergeWriter {
                                    tablePath: String,
                                    recomputeGenerated: Boolean = false)
       : DataFrame = {
-    val declared = man.flatMap(_.schema)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
-      .getOrElse(df.schema)
+    val declared = man.fold(df.schema)(_.struct)
     val idSpec = identitySpecs(declared)
     val genSpec = generatedSpecs(declared)
     // a direct API merge that OMITS a declared identity/generated
@@ -2481,11 +2492,7 @@ object MergeWriter {
       throw new IllegalArgumentException(
         s"addColumns: no committed graft table at $tablePath"))
     if (editTable(fs, dir, "addColumns", man0) { man =>
-      val cur = man.schema.map(s =>
-        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-        throw new IllegalStateException(
-          s"addColumns: $tablePath records no schema (pre-schema " +
-            "manifest) — run one merge first"))
+      val cur = man.struct
       cols.fields.foreach { f =>
         require(!cur.fieldNames.contains(f.name),
           s"addColumns: column '${f.name}' already exists")
@@ -2495,16 +2502,13 @@ object MergeWriter {
       }
       val next = StructType(cur.fields ++ stripSchemaIds(
         StructType(cols.fields)).fields)
-      // an id-stamped table assigns each added column a FRESH field
-      // id (never a reused one — see [[Manifest.nextColId]])
-      val (cids, ncid) =
-        if (man.nextColId > 0L) {
-          var n = man.nextColId
-          (man.colIds ++ cols.fields.map { f =>
-            f.name -> { val v = n; n += 1; v }
-          }, n)
-        } else (man.colIds, man.nextColId)
-      Some(man.copy(schema = Some(next.json), colIds = cids, nextColId = ncid))
+      // each added column takes a FRESH field id (never a reused one —
+      // see [[Manifest.nextColId]])
+      var n = man.nextColId
+      val cids = man.colIds ++ cols.fields.map { f =>
+        f.name -> { val v = n; n += 1; v }
+      }
+      Some(man.copy(schema = next.json, colIds = cids, nextColId = n))
     }) gc(fs, dir)
   }
 
@@ -2518,11 +2522,9 @@ object MergeWriter {
     * same atomic commit: the recorded schema, merge keys, cluster
     * entries (z-order composites included), and the per-file min/max/
     * null-count stats keys (so data skipping on the renamed column keeps
-    * pruning old files). Restrictions, each failing loudly: the table
-    * must be id-stamped (tables created before field-id stamping carry
-    * no ids in their files — migrate with a full rewrite: REPLACE TABLE
-    * / `overwriteTable`), the new name must be free (case-insensitive —
-    * SQL resolution is), and Bloom columns cannot be renamed (their
+    * pruning old files). Restrictions, each failing loudly: the new
+    * name must be free (case-insensitive — SQL resolution is), and
+    * Bloom columns cannot be renamed (their
     * per-epoch sidecars are name-keyed files shared with retained
     * versions; drop the bloom index first).
     */
@@ -2534,16 +2536,7 @@ object MergeWriter {
       throw new IllegalArgumentException(
         s"renameColumn: no committed graft table at $tablePath"))
     if (editTable(fs, dir, "renameColumn", man0) { man =>
-      val cur = man.schema.map(s =>
-        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-        throw new IllegalStateException(
-          s"renameColumn: $tablePath records no schema (pre-schema " +
-            "manifest) — run one merge first"))
-      require(man.nextColId > 0L,
-        s"renameColumn: $tablePath predates field-id stamping — its " +
-          "files carry no column ids to match the renamed column by. " +
-          "Migrate with a full rewrite (REPLACE TABLE / overwrite), " +
-          "which stamps ids, then rename.")
+      val cur = man.struct
       require(cur.fieldNames.contains(from),
         s"renameColumn: no column '$from' in $tablePath " +
           s"(columns: ${cur.fieldNames.mkString(", ")})")
@@ -2593,7 +2586,7 @@ object MergeWriter {
           maxs = f.maxs.map { case (c, v) => re(c) -> v },
           nulls = f.nulls.map { case (c, v) => re(c) -> v }))
       }
-      Some(man.copy(schema = Some(next.json),
+      Some(man.copy(schema = next.json,
         keyCols = man.keyCols.map(re),
         clusterCols = man.clusterCols.map(reCluster),
         stats = stats2,
@@ -2651,11 +2644,7 @@ object MergeWriter {
       throw new IllegalArgumentException(
         s"widenColumn: no committed graft table at $tablePath"))
     if (editTable(fs, dir, "widenColumn", man0) { man =>
-      val cur = man.schema.map(s =>
-        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-        throw new IllegalStateException(
-          s"widenColumn: $tablePath records no schema (pre-schema " +
-            "manifest) — run one merge first"))
+      val cur = man.struct
       val f = cur.fields.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(
           s"widenColumn: no column '$name' in $tablePath " +
@@ -2677,7 +2666,7 @@ object MergeWriter {
             "without the bloom index first")
         val next = StructType(cur.fields.map(x =>
           if (x.name == name) x.copy(dataType = to) else x))
-        Some(man.copy(schema = Some(next.json)))
+        Some(man.copy(schema = next.json))
       }
     }) gc(fs, dir)
   }
@@ -2696,10 +2685,7 @@ object MergeWriter {
       throw new IllegalArgumentException(
         s"replaceSchemaMetadata: no committed graft table at $tablePath"))
     if (editTable(fs, dir, "alterDefault", man0) { man =>
-      val cur = man.schema.map(s =>
-        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-        throw new IllegalStateException(
-          s"replaceSchemaMetadata: $tablePath records no schema"))
+      val cur = man.struct
       require(cur.fieldNames.toSeq == next.fieldNames.toSeq,
         s"replaceSchemaMetadata: column set must not change " +
           s"(${cur.fieldNames.mkString(",")} vs " +
@@ -2708,7 +2694,7 @@ object MergeWriter {
         .map(f => f.name -> f.metadata).toMap
       val merged = StructType(cur.fields.map(f =>
         f.copy(metadata = metaByName(f.name))))
-      Some(man.copy(schema = Some(merged.json)))
+      Some(man.copy(schema = merged.json))
     }) gc(fs, dir)
   }
 
@@ -2720,9 +2706,8 @@ object MergeWriter {
     * name later reads NULL for pre-drop rows instead of resurrecting
     * the dropped data; the column's stats keys leave the manifest in
     * the same commit (a re-added namesake must not inherit stale
-    * min/max and skip wrongly). Refuses, loudly: non-id-stamped tables
-    * (the name is the only identity their files have), merge-key /
-    * cluster / Bloom columns (load-bearing for layout), and the last
+    * min/max and skip wrongly). Refuses, loudly: merge-key / cluster /
+    * Bloom columns (load-bearing for layout), and the last
     * non-key column (a keyed table with no compared column has no
     * diffable content).
     */
@@ -2734,15 +2719,7 @@ object MergeWriter {
       throw new IllegalArgumentException(
         s"dropColumn: no committed graft table at $tablePath"))
     if (editTable(fs, dir, "dropColumn", man0) { man =>
-      val cur = man.schema.map(s =>
-        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-        throw new IllegalStateException(
-          s"dropColumn: $tablePath records no schema (pre-schema " +
-            "manifest) — run one merge first"))
-      require(man.nextColId > 0L,
-        s"dropColumn: $tablePath predates field-id stamping — " +
-          "migrate with a full rewrite (REPLACE TABLE / overwrite) " +
-          "first")
+      val cur = man.struct
       require(cur.fieldNames.contains(name),
         s"dropColumn: no column '$name' in $tablePath " +
           s"(columns: ${cur.fieldNames.mkString(", ")})")
@@ -2784,7 +2761,7 @@ object MergeWriter {
           maxs = f.maxs - name -- droppedShredKeys,
           nulls = f.nulls - name -- droppedShredKeys))
       }
-      Some(man.copy(schema = Some(next.json), stats = stats2,
+      Some(man.copy(schema = next.json, stats = stats2,
         colIds = man.colIds - name,
         colStats = man.colStats - name,
         colSketches = man.colSketches - name,
@@ -2806,9 +2783,7 @@ object MergeWriter {
       case Some(m) =>
         Seq((m.version, m.buckets,
           (m.epochs.values.toSet ++ m.overlays.values.flatten).size,
-          m.schema.map(s => DataType.fromJson(s).asInstanceOf[StructType]
-            .toDDL).getOrElse(""),
-          retained.mkString(","), m.txns.size,
+          m.struct.toDDL, retained.mkString(","), m.txns.size,
           // from manifest stats alone — no listing (0/0 pre-stats)
           m.stats.values.map(_.size).sum,
           m.stats.values.flatMap(_.map(_.bytes)).sum,
@@ -2991,7 +2966,7 @@ object MergeWriter {
     val man0 = currentManifest(fs, dir).getOrElse(
       throw new IllegalArgumentException(
         s"analyzeTable: $tablePath holds no committed graft table"))
-    val schema = indexSchema(spark, tablePath, man0)
+    val schema = man0.struct
     def eligible(dt: DataType): Boolean = dt match {
       case _: NumericType | DateType | TimestampType | TimestampNTZType |
            StringType | BinaryType | BooleanType => true
@@ -3701,7 +3676,7 @@ object MergeWriter {
   private def writeBloomSidecar(spark: SparkSession, fs: FileSystem,
                                 epochRoot: String, bloomCols: Seq[String],
                                 bloomItems: Long,
-                                schemaJson: Option[String],
+                                full: StructType,
                                 // shred declarations ride the sidecar
                                 // too: their hidden columns exist
                                 // physically in this epoch's files but
@@ -3710,22 +3685,15 @@ object MergeWriter {
                                 // declaration, not the schema
                                 shred: Seq[ShredSpec] = Seq.empty): Unit = {
     import org.apache.spark.util.sketch.BloomFilter
-    val full = schemaJson.map(s =>
-      DataType.fromJson(s).asInstanceOf[StructType])
     val shredKinds: Seq[(String, DataType)] = shred
       .map(s => (shredColName(s), s.dataType))
       .filter { case (_, dt) => bloomPutKind(dt).isDefined }
-    val base = full match {
-      case Some(s) =>
-        val sub = StructType(
-          s.fields.filter(f => bloomCols.contains(f.name)) ++
-            shredKinds.map { case (n, dt) =>
-              org.apache.spark.sql.types.StructField(n, dt) })
-        if (sub.isEmpty) return
-        spark.read.schema(sub).parquet(epochRoot)
-      case None => // legacy pre-schema manifest: one bounded footer merge
-        spark.read.option("mergeSchema", "true").parquet(epochRoot)
-    }
+    val sub = StructType(
+      full.fields.filter(f => bloomCols.contains(f.name)) ++
+        shredKinds.map { case (n, dt) =>
+          org.apache.spark.sql.types.StructField(n, dt) })
+    if (sub.isEmpty) return
+    val base = spark.read.schema(sub).parquet(epochRoot)
     val kinds: Seq[(String, DataType)] = bloomCols.flatMap { c =>
       base.schema.fields.find(_.name == c)
         .filter(f => bloomPutKind(f.dataType).isDefined)
@@ -3843,10 +3811,7 @@ object MergeWriter {
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
     currentManifest(fs, dir).foreach { man =>
-      val schema = man.schema.map(s =>
-        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-        throw new IllegalStateException(
-          s"buildShredIndex: $tablePath records no schema"))
+      val schema = man.struct
       val shred = parseShredProperty(entries, stripSchemaIds(schema))
       validateShred(stripSchemaIds(schema), shred, "buildShredIndex")
       // canonical identity: DDL spelling differences ('STRING' vs
@@ -3878,10 +3843,8 @@ object MergeWriter {
         s"buildBloomIndex: table already declares Bloom columns " +
           s"${man.bloomCols.mkString("(", ",", ")")} — drop/recreate the " +
           "table to change the declaration")
-      val schema = man.schema.map(s =>
-        DataType.fromJson(s).asInstanceOf[StructType])
       bloomBy.foreach { c =>
-        val f = schema.flatMap(_.fields.find(_.name == c))
+        val f = man.struct.fields.find(_.name == c)
         require(f.isDefined && bloomPutKind(f.get.dataType).isDefined,
           s"buildBloomIndex: column '$c' missing or of unsupported type")
       }
@@ -3891,7 +3854,7 @@ object MergeWriter {
         .foreach { e =>
           if (!fs.exists(new Path(s"$tablePath/$e", BloomSidecar)))
             writeBloomSidecar(spark, fs, s"$tablePath/$e", bloomBy,
-              bloomItems, man.schema)
+              bloomItems, man.struct)
         }
       val t = tableTarget(fs, dir)
       commitLoop(t, "buildBloomIndex", Some(man))(
@@ -4003,26 +3966,17 @@ object MergeWriter {
 
   /** Read committed epoch data with the manifest-recorded schema — a
     * zero-job plan step, vs. `mergeSchema=true`'s distributed footer-merge
-    * (O(files) tasks on EVERY read of EVERY table). Pre-schema manifests
-    * (legacy) fall back to the footer merge once; their next commit
-    * records the schema.
+    * (O(files) tasks on EVERY read of EVERY table). The reader gets the
+    * id-annotated schema so files written under since-renamed column
+    * names still match. INTERNAL frames keep the id metadata (a
+    * compaction/split rewrite must re-write it); the public read surface
+    * strips via stripFrame.
     */
   private def readPlain(spark: SparkSession, m: Manifest,
-                        paths: Seq[String]): DataFrame =
-    m.schema match {
-      case Some(s) =>
-        val sch = DataType.fromJson(s).asInstanceOf[StructType]
-        if (m.colIds.nonEmpty) {
-          // id-stamped table: hand the reader the id-annotated schema so
-          // files written under since-renamed column names still match.
-          // INTERNAL frames keep the id metadata (a compaction/split
-          // rewrite must re-write it); the public read surface strips
-          // via stripFrame.
-          ensureFieldIdRead(spark)
-          spark.read.schema(stampSchema(sch, m.colIds)).parquet(paths: _*)
-        } else spark.read.schema(sch).parquet(paths: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
+                        paths: Seq[String]): DataFrame = {
+    ensureFieldIdRead(spark)
+    spark.read.schema(stampSchema(m.struct, m.colIds)).parquet(paths: _*)
+  }
 
   // ---- deletion vectors (merge-on-read deletes) ----------------------------
 
@@ -4099,16 +4053,11 @@ object MergeWriter {
     */
   private def eqdKeysDf(spark: SparkSession, root: String, m: Manifest,
                         sidecars: Seq[String]): DataFrame = {
-    val full = DataType.fromJson(m.schema.getOrElse(
-      throw new IllegalStateException(
-        "equality deletes require a recorded schema"))).asInstanceOf[StructType]
-    val keySchema = StructType(m.keyCols.map(k => full(full.fieldIndex(k))))
+    val keySchema = StructType(m.keyCols.map(k => m.struct(k)))
     val paths = sidecars.distinct.sorted.map(s => s"$root/$EqDirName/$s")
-    if (m.colIds.nonEmpty) {
-      ensureFieldIdRead(spark)
-      stripFrame(spark.read.schema(stampSchema(keySchema, m.colIds))
-        .parquet(paths: _*))
-    } else spark.read.schema(keySchema).parquet(paths: _*)
+    ensureFieldIdRead(spark)
+    stripFrame(spark.read.schema(stampSchema(keySchema, m.colIds))
+      .parquet(paths: _*))
   }
 
   /** Stage an equality-delete sidecar: the doomed key tuples written as
@@ -4120,8 +4069,7 @@ object MergeWriter {
   private def writeEqdSidecar(spark: SparkSession, root: String,
                               name: String, doomed: DataFrame,
                               colIds: Map[String, Long]): Unit = {
-    val stamped = if (colIds.isEmpty) doomed else stampFrame(doomed, colIds)
-    stamped.coalesce(1).write.mode(SaveMode.ErrorIfExists)
+    stampFrame(doomed, colIds).coalesce(1).write.mode(SaveMode.ErrorIfExists)
       .parquet(s"$root/$EqDirName/$name")
   }
 
@@ -4194,16 +4142,13 @@ object MergeWriter {
     * identity high-water, when it reserved identity values.
     */
   private def contested(cur: Manifest, read: Option[Manifest], buckets: Int,
-                        schema: Option[String], keys: Seq[String],
+                        schema: String, keys: Seq[String],
                         touched: Iterable[Int],
                         checks: Option[Map[String, String]],
                         idhw: Option[Map[String, Long]]): Option[String] = {
-    val sameSchema = (cur.schema, schema) match {
-      case (Some(a), Some(b)) => a == b ||
-        org.apache.spark.sql.GraftColumnShim.sameTypeIgnoreNullability(
-          DataType.fromJson(a), DataType.fromJson(b))
-      case (a, b) => a == b
-    }
+    val sameSchema = cur.schema == schema ||
+      org.apache.spark.sql.GraftColumnShim.sameTypeIgnoreNullability(
+        cur.struct, DataType.fromJson(schema))
     val moved = touched.filter(b => bucketSig(cur, b) != bucketSigOpt(read, b))
     val why = Seq(
       (cur.buckets != buckets) -> s"bucket count ${cur.buckets} != $buckets",
@@ -4291,8 +4236,7 @@ object MergeWriter {
         val (epoch, written, stats) = stageEpoch(spark, fs, root,
           prepareRows(r.drop(BucketCol), man.checks, man.colIds, keys,
             man.buckets, root), man)
-        val idSpec = man.schema.fold(Map.empty[String, (Long, Long)])(s =>
-          identitySpecs(DataType.fromJson(s).asInstanceOf[StructType]))
+        val idSpec = identitySpecs(man.struct)
         Overlay(epoch, written.toSet,
           stats.map { case (b, fss) => b -> fss.map(_.copy(e = epoch)) },
           if (man.colSketches.nonEmpty && written.nonEmpty)
@@ -4385,10 +4329,8 @@ object MergeWriter {
                           doomed: DataFrame, keys: Seq[String],
                           touched: Seq[Int], upN: Long, delN: Long,
                           txn: Option[(String, Long)]): Arm = {
-    val aligned = up.map(u => man.schema
-      .flatMap(s => alignToRecorded(u,
-        DataType.fromJson(s).asInstanceOf[StructType]))
-      .getOrElse(return Declined))
+    val aligned =
+      up.map(alignToRecorded(_, man.struct).getOrElse(return Declined))
     if (upN + delN > DvMaxPositionsPerCommit || touched.exists(b =>
         man.epochs.contains(b) && man.stats.get(b).forall(_.isEmpty)))
       return Declined
@@ -4459,10 +4401,8 @@ object MergeWriter {
                      man: Manifest, up: Option[DataFrame], doomed: DataFrame,
                      keys: Seq[String], touched: Seq[Int], upN: Long,
                      delN: Long, txn: Option[(String, Long)]): Arm = {
-    val recorded = DataType.fromJson(man.schema.getOrElse(return Declined))
-      .asInstanceOf[StructType]
     val aligned =
-      up.map(alignToRecorded(_, recorded).getOrElse(return Declined))
+      up.map(alignToRecorded(_, man.struct).getOrElse(return Declined))
     val stored = touched.filter(man.epochs.contains)
     if (upN + delN > DvMaxPositionsPerCommit ||
         stored.exists(b => man.stats.get(b).forall(_.isEmpty)))
@@ -4705,13 +4645,9 @@ object MergeWriter {
       }.filter { case (_, _, abs) => keep.forall(_.contains(abs)) }
     eqdProbedFiles.addAndGet(cands.size.toLong)
     if (cands.isEmpty) return Map.empty
-    val full = DataType.fromJson(m.schema.getOrElse(
-      throw new IllegalStateException(
-        "equality deletes require a recorded schema"))).asInstanceOf[StructType]
-    val keySchema = StructType(m.keyCols.map(k => full(full.fieldIndex(k))))
+    ensureFieldIdRead(spark)
     val readSchema =
-      if (m.colIds.isEmpty) keySchema
-      else { ensureFieldIdRead(spark); stampSchema(keySchema, m.colIds) }
+      stampSchema(StructType(m.keyCols.map(k => m.struct(k))), m.colIds)
     val absByRel = cands.map { case (_, rel, abs) => rel -> abs }.toMap
     // ONE probe job over all affected files, the per-file scoping
     // folded into broadcast joins (no per-sidecar-set job fan-out):
@@ -4782,8 +4718,7 @@ object MergeWriter {
     */
   private def readDvAware(spark: SparkSession, m: Manifest, root: String,
                           paths: Seq[String], withPos: Boolean): DataFrame = {
-    val refs = if (m.schema.isEmpty) Map.empty[String, FileStat]
-               else dvFileRefs(m)
+    val refs = dvFileRefs(m)
     def posCols(df: DataFrame): DataFrame =
       if (!withPos) df
       else df
@@ -4831,9 +4766,8 @@ object MergeWriter {
 
   /** Read committed epoch data with the manifest-recorded schema — a
     * zero-job plan step, vs. `mergeSchema=true`'s distributed footer-merge
-    * (O(files) tasks on EVERY read of EVERY table). Pre-schema manifests
-    * (legacy) fall back to the footer merge once; their next commit
-    * records the schema. DV-bearing manifests route through the
+    * (O(files) tasks on EVERY read of EVERY table). DV-bearing manifests
+    * route through the
     * deletion-vector filter ([[readDvAware]]) — dead rows are invisible
     * to every read built on this core (snapshots, point lookups, range
     * reads, feeds, compaction/split survivor reads).
@@ -4902,9 +4836,7 @@ object MergeWriter {
     */
   private[sources] def stampSchema(s: StructType,
                                    ids: Map[String, Long]): StructType =
-    if (ids.isEmpty) s
-    else StructType(s.fields.map(f =>
-      ids.get(f.name).fold(f)(withFieldId(f, _))))
+    StructType(s.fields.map(f => ids.get(f.name).fold(f)(withFieldId(f, _))))
 
   /** Stamp a frame's columns with the table's field ids (one zero-cost
     * metadata projection) so the epoch write records them in the file
@@ -4912,8 +4844,7 @@ object MergeWriter {
     * stray id metadata they carried in from another table's read.
     */
   private def stampFrame(df: DataFrame, ids: Map[String, Long]): DataFrame =
-    if (ids.isEmpty) df
-    else df.select(df.schema.fields.map { f =>
+    df.select(df.schema.fields.map { f =>
       val mb = new MetadataBuilder().withMetadata(f.metadata)
         .remove(FieldIdKey)
       ids.get(f.name).foreach(mb.putLong(FieldIdKey, _))
@@ -4951,23 +4882,19 @@ object MergeWriter {
   /** Rename a frame read at one manifest's schema into another
     * manifest's column names by SHARED FIELD ID (the old side of a
     * change feed that spans a rename), dropping columns whose id the
-    * target no longer carries. Identity when either side is not
-    * id-stamped.
+    * target no longer carries.
     */
   private def alignToIds(df: DataFrame, from: Manifest,
-                         to: Manifest): DataFrame =
-    if (from.colIds.isEmpty || to.colIds.isEmpty) df
-    else {
-      val toNameById = to.colIds.map { case (n, id) => id -> n }
-      val picks = df.schema.fields.toIndexedSeq.flatMap { f =>
-        from.colIds.get(f.name) match {
-          case Some(id) => toNameById.get(id)
-            .map(nn => col(f.name).as(nn, f.metadata)) // dropped id: omit
-          case None => Some(col(f.name))
-        }
+                         to: Manifest): DataFrame = {
+    val toNameById = to.colIds.map { case (n, id) => id -> n }
+    df.select(df.schema.fields.toIndexedSeq.flatMap { f =>
+      from.colIds.get(f.name) match {
+        case Some(id) => toNameById.get(id)
+          .map(nn => col(f.name).as(nn, f.metadata)) // dropped id: omit
+        case None => Some(col(f.name))
       }
-      df.select(picks: _*)
-    }
+    }: _*)
+  }
 
   /** Table-root contents that predate the manifest protocol (a plain or
     * `__bucket=`-partitioned parquet table).
@@ -4979,31 +4906,66 @@ object MergeWriter {
         (!st.isDirectory && n.startsWith("part-"))
     }
 
-  /** Migrate a pre-manifest table ([[legacyData]]) with one full rewrite
-    * into the manifest layout, so every later write is bucket-local; the
-    * caller runs it only when no manifest exists, and gets the migrated
-    * manifest back (None when there is nothing to migrate). The read
-    * uses mergeSchema to merge heterogeneous legacy footers (files
-    * written across an additive evolution) — it runs once per table, so
-    * the O(files) footer-job cost argument does not apply. The root-level
-    * legacy files are reclaimed by the caller's post-commit gc (or any
-    * later one, should the process die first).
+  /** Rewrite a table below the protocol floor ([[atFloor]]) at the
+    * floor: pre-manifest parquet data ([[legacyData]]) or a head
+    * manifest that records no schema or no field ids. ONE full rewrite
+    * through [[writeEpochAndCommit]]: a missing schema comes from a
+    * single footer-merged read (`mergeSchema` — it runs once per table,
+    * so the O(files) footer-job cost argument does not apply) of the
+    * root's files or of the head's pinned epochs, and the commit records
+    * it and stamps field ids (a head that already carries a schema or
+    * ids keeps them). The
+    * rest of the head's state (txn ledger, retention, layout) rides
+    * forward. Versions below the floor cannot be read, so their
+    * manifests go. A table at the floor is left alone; `keys` defaults
+    * to the recorded merge keys.
     */
-  private def migrateLegacy(spark: SparkSession, fs: FileSystem,
-                            tablePath: String, keys: Seq[String],
-                            buckets: Int, clusterBy: Seq[String],
-                            bloomBy: Seq[String],
-                            bloomItems: Long): Option[Manifest] = {
+  def upgrade(spark: SparkSession, tablePath: String,
+              keys: Seq[String] = Seq.empty): Unit = {
+    val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
-    if (!legacyData(fs, dir)) None
-    else {
-      writeEpochAndCommit(spark, fs, tablePath,
-        spark.read.option("mergeSchema", "true").parquet(tablePath)
-          .drop(BucketCol),
-        keys, buckets, None, clusterCols = clusterBy, bloomCols = bloomBy,
-        bloomN = bloomItems)
-      currentManifest(fs, dir)
+    val nodes = manifestFiles(fs, dir).map { case (v, p) =>
+      (v, p, readJsonFile(fs, p)) }
+    val below = nodes.filterNot(n => atFloor(n._3))
+    if (nodes.nonEmpty && below.isEmpty) return
+    def footerMerged(paths: Seq[String]): DataFrame =
+      spark.read.option("mergeSchema", "true").parquet(paths: _*)
+        .drop(BucketCol)
+    def keysOr(recorded: Seq[String]): Seq[String] = {
+      val ks = if (recorded.nonEmpty) recorded else keys
+      require(ks.nonEmpty && (keys.isEmpty || keys == ks),
+        s"upgrade: name the merge keys of $tablePath (recorded: " +
+          s"${recorded.mkString(",")}; given: ${keys.mkString(",")})")
+      ks
     }
+    nodes.lastOption match {
+      case None =>
+        require(legacyData(fs, dir),
+          s"upgrade: $tablePath holds neither a manifest nor parquet data")
+        writeEpochAndCommit(spark, fs, tablePath, footerMerged(Seq(tablePath)),
+          keysOr(Seq.empty), 64, None, opName = "upgrade")
+      case Some((v, p, node)) if !atFloor(node) =>
+        require(!node.has("segs"), s"upgrade: $p is a segmented manifest")
+        val o = node.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        val (ep, ovl) = (parseEpochsNode(o.get("epochs")),
+          parseOvlNode(o.get("ovl")))
+        val paths = ep.keys.toSeq.sorted.flatMap(b =>
+          (ep(b) +: ovl.getOrElse(b, Seq.empty)).map(bucketPath(tablePath, _, b)))
+        // a recorded schema stays: it carries the declared column order,
+        // nullability and defaults that no footer holds
+        if (!o.has("schema"))
+          o.put("schema", stripSchemaIds(footerMerged(paths).schema).json)
+        if (!o.has("cids")) { o.putObject("cids"); o.put("ncid", 1L) }
+        val prev = manifestFromNode(o, v, tablePath)
+        // the pinned rows through the DV/eq-delete-aware core
+        writeEpochAndCommit(spark, fs, tablePath,
+          readWithSchema(spark, prev, tablePath, paths), keysOr(prev.keyCols),
+          prev.buckets, Some(prev), dropBuckets = prev.epochs.keySet,
+          opName = "upgrade")
+      case _ => // head at the floor: an earlier upgrade's leftovers
+    }
+    below.foreach(n => fs.delete(n._2, false))
+    gc(fs, dir)
   }
 
   // ==== THE KEYED-WRITE PIPELINE ==========================================
@@ -5134,14 +5096,12 @@ object MergeWriter {
       require(branchHead(fs, dir, b).isDefined,
         s"${w.entry}: no branch '$b' on $root — createBranch first")
     }
-    // a pre-manifest table migrates first: its rows are the write's base
     val base = w.target match {
       case ToMember(_, st) => st
-      case _ => refCurrent(fs, dir, ref).orElse(
-        if (ref.isDefined) None
-        else migrateLegacy(spark, fs, root, keys, w.buckets, w.clusterBy,
-          w.bloomBy, w.bloomItems))
+      case _ => refCurrent(fs, dir, ref)
     }
+    if (base.isEmpty && legacyData(fs, dir))
+      throw belowFloor(s"${w.entry}: $root", "its pre-manifest parquet data")
     base.foreach(validateKeys(_, keys, w.op))
     if (base.isEmpty && !w.creates)
       throw new IllegalStateException(
@@ -5533,7 +5493,7 @@ object MergeWriter {
       s"createTable: a concurrent create committed $tablePath first — " +
         "re-run against the new table state"))(_ => Some(Manifest(1L,
       buckets, Map.empty, Map.empty,
-      Some(clean.json), keys, clusterBy, Map.empty, bloomBy, bloomItems,
+      clean.json, keys, clusterBy, Map.empty, bloomBy, bloomItems,
       "create", System.currentTimeMillis(),
       math.max(KeepManifests, retainVersions), math.max(0L, retainMs),
       fingerprint,
@@ -5706,7 +5666,8 @@ object MergeWriter {
       val node = readJsonFile(fs, p)
       val tables = scala.collection.mutable.Map.empty[String, Manifest]
       node.get("tables").fields().forEachRemaining { t =>
-        tables(t.getKey) = manifestFromNode(t.getValue, v)
+        tables(t.getKey) = manifestFromNode(t.getValue, v,
+          s"${p.getParent}/${t.getKey} (group member)")
       }
       val txns = scala.collection.mutable.Map.empty[String, Long]
       Option(node.get("txns")).foreach(_.fields().forEachRemaining { t =>
@@ -6025,35 +5986,6 @@ object MergeWriter {
     }
   }
 
-  /** [[clusterTable]] for a GROUP member: rewrite the member's live
-    * data under a new cluster spec inside one group commit — the same
-    * retrofit, with the group's cross-table atomicity (lifecycle
-    * parity: members split, compact, evolve and now re-cluster like
-    * standalone tables).
-    */
-  def clusterGroupTable(spark: SparkSession, groupPath: String,
-                        name: String, clusterBy: Seq[String]): Unit = {
-    require(clusterBy.nonEmpty,
-      "clusterGroupTable: give at least one cluster column")
-    val fs = fsFor(spark, groupPath)
-    val dir = new Path(groupPath)
-    val (cur, man0) = requireMember(fs, groupPath, name, "clusterGroupTable")
-    validateClusterCols(man0, clusterBy)
-    val upd = compactEpochsUncommitted(spark, fs, s"$groupPath/$name",
-      man0.copy(clusterCols = clusterBy))
-    commitMember(fs, dir, "clusterGroupTable", cur, Map(name -> upd))
-    gcGroup(fs, dir)
-  }
-
-  /** Committed group versions still retained on disk (ascending) — the
-    * group's readable time-travel range, exactly [[availableVersions]]
-    * at group scope.
-    */
-  def availableGroupVersions(spark: SparkSession,
-                             groupPath: String): Seq[Long] =
-    manifestFiles(fsFor(spark, groupPath), new Path(groupPath), GroupPrefix)
-      .map(_._1)
-
   /** Time travel for a group member: read it AS OF a retained committed
     * GROUP version — the pin is group-wide, so reading several members
     * at the same version yields the mutually-consistent state that
@@ -6067,82 +5999,6 @@ object MergeWriter {
                             name: String, version: Long): DataFrame =
     scanPinned(spark, s"$groupPath/$name",
       pinGroupMember(spark, groupPath, name, Some(version), None).get)
-
-  /** Operational introspection for groups ([[describeTable]] at group
-    * scope): one row per member with the group's current version, the
-    * member's bucket modulus, live epoch count, recorded schema DDL,
-    * data file count and total bytes (from the manifest's per-file
-    * stats — no listing), plus the group txn-ledger size.
-    */
-  def describeGroup(spark: SparkSession, groupPath: String): DataFrame = {
-    import spark.implicits._
-    val fs = fsFor(spark, groupPath)
-    currentGroupManifest(fs, new Path(groupPath)) match {
-      case Some(g) =>
-        g.tables.toSeq.sortBy(_._1).map { case (name, m) =>
-          (g.version, name, m.buckets, m.epochs.values.toSet.size,
-            m.schema.map(s => DataType.fromJson(s).asInstanceOf[StructType]
-              .toDDL).getOrElse(""),
-            m.stats.values.map(_.size).sum,
-            m.stats.values.flatMap(_.map(_.bytes)).sum,
-            g.txns.size)
-        }.toDF("version", "member", "buckets", "live_epochs", "schema_ddl",
-          "n_files", "total_bytes", "n_txns")
-      case None =>
-        Seq.empty[(Long, String, Int, Int, String, Int, Long, Int)]
-          .toDF("version", "member", "buckets", "live_epochs", "schema_ddl",
-            "n_files", "total_bytes", "n_txns")
-    }
-  }
-
-  /** [[tableHistory]] at group scope: one row per retained GROUP
-    * version — the committing operation, its wall-clock time, member
-    * count and total file count/bytes across members. Newest first.
-    */
-  def groupHistory(spark: SparkSession, groupPath: String): DataFrame = {
-    import spark.implicits._
-    val fs = fsFor(spark, groupPath)
-    manifestFiles(fs, new Path(groupPath), GroupPrefix).reverse
-      .map { case (v, p) => readGroupManifest(fs, v, p) }
-      .map { g =>
-        (g.version, if (g.op.isEmpty) null else g.op,
-          if (g.opTs == 0L) null else new java.sql.Timestamp(g.opTs),
-          g.tables.size,
-          g.tables.values.map(_.stats.values.map(_.size).sum).sum,
-          g.tables.values
-            .map(_.stats.values.flatMap(_.map(_.bytes)).sum).sum,
-          g.txns.size)
-      }
-      .toDF("version", "op", "commit_ts", "n_members", "n_files",
-        "total_bytes", "n_txns")
-  }
-
-  /** [[readTableRange]] for a group member: file-granular data skipping
-    * over the member's manifest stats (record clustering at member
-    * creation via `mergeGroup(clusterBy = Map(name -> cols))`), plus
-    * the exact residual filter — results equal
-    * `readGroupTable(...).filter(range)` always.
-    */
-  def readGroupTableRange(spark: SparkSession, groupPath: String,
-                          name: String, column: String,
-                          lower: Option[Any] = None,
-                          upper: Option[Any] = None): DataFrame =
-    readPinnedWhere(spark, s"$groupPath/$name",
-      currentMember(spark, groupPath, name, "readGroupTableRange"),
-      Seq(ColumnRange(column, lower, upper)))
-
-  /** [[readTableWhere]] for a group member: the AND of ranges and
-    * IN-lists against the member's state pinned in the current group
-    * manifest, with the same stats + Bloom file skipping.
-    */
-  def readGroupTableWhere(spark: SparkSession, groupPath: String,
-                          name: String,
-                          ranges: Seq[ColumnPredicate]): DataFrame = {
-    require(ranges.nonEmpty,
-      "readGroupTableWhere requires at least one predicate")
-    readPinnedWhere(spark, s"$groupPath/$name",
-      currentMember(spark, groupPath, name, "readGroupTableWhere"), ranges)
-  }
 
   /** Change feed for a group member between two retained GROUP versions
     * ([[changeFeed]] at group scope): because the pin is group-wide,
@@ -6163,55 +6019,17 @@ object MergeWriter {
       memberAt(fromVersion), memberAt(toVersion), keys, compareCols)
   }
 
-  /** Group-wide retention policy (the group analogue of
-    * [[setRetention]]): stamped onto EVERY member manifest in one
-    * atomic group commit, honored by [[gcGroup]] as the max over
-    * members — group versions are retained as a UNIT because members
-    * commit together, so a per-member policy would be a fiction. Lets
-    * a lagging member-tail CDC consumer ([[changeFeedGroup]], the
-    * `member` streaming option) stall across several group commits and
-    * still resume.
-    */
-  def setGroupRetention(spark: SparkSession, groupPath: String,
-                        versions: Int = KeepManifests,
-                        ms: Long = 0L): Unit = {
-    val fs = fsFor(spark, groupPath)
-    val dir = new Path(groupPath)
-    val cur = currentGroupManifest(fs, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"setGroupRetention: no committed group manifest at $groupPath"))
-    val v = math.max(KeepManifests, versions)
-    val m = math.max(0L, ms)
-    if (commitLoop(groupTarget(fs, dir), "retention", Some(cur))(rebase)(
-        _.filterNot(_.tables.values.forall(t =>
-          t.retainVersions == v && t.retainMs == m))
-          .map(g => g.copy(tables = g.tables.map { case (n, t) =>
-            n -> t.copy(retainVersions = v, retainMs = m) }))).nonEmpty)
-      gcGroup(fs, dir)
-  }
-
-  /** Group-scope gc: keep the last `max(members' retainVersions,
-    * KeepManifests)` group manifests plus any younger than the members'
-    * max `retainMs` (the group analogue of [[gc]]'s policy honor); per
-    * member, reclaim epochs no kept manifest references (age-guarded
-    * like [[gc]]), plus aged staging files at the group root.
+  /** Group-scope gc: keep the last [[KeepManifests]] group manifests
+    * (group versions retire as a unit); per member, reclaim epochs no
+    * kept manifest references (age-guarded like [[gc]]), plus aged
+    * staging files at the group root.
     */
   private def gcGroup(fs: FileSystem, dir: Path,
                       orphanRetentionMs: Long = OrphanRetentionMs): Unit = {
     val manifests = manifestFiles(fs, dir, GroupPrefix)
     if (manifests.isEmpty) return
-    val cur = manifests.last match { case (v, p) => readGroupManifest(fs, v, p) }
-    val keepCount = math.max(KeepManifests,
-      (cur.tables.values.map(_.retainVersions) ++ Seq(KeepManifests)).max)
-    val retainMs = (cur.tables.values.map(_.retainMs) ++ Seq(0L)).max
-    val (dropByCount, keepByCount) = manifests.splitAt(
-      math.max(0, manifests.size - keepCount))
-    val ageCut = System.currentTimeMillis() - retainMs
-    val (keptByAge, drop) =
-      if (retainMs <= 0L) (Seq.empty, dropByCount)
-      else dropByCount.partition { case (_, p) =>
-        fs.getFileStatus(p).getModificationTime >= ageCut }
-    val keep = keptByAge ++ keepByCount
+    val (drop, keep) =
+      manifests.splitAt(math.max(0, manifests.size - KeepManifests))
     drop.foreach { case (_, p) => fs.delete(p, false) }
     val keptManifests = keep.map { case (v, p) =>
       readGroupManifest(fs, v, p).tables }
@@ -6362,22 +6180,17 @@ object MergeWriter {
     * time from identity instead).
     */
   private def fileFingerprints(spark: SparkSession, epochRoot: String,
-                               schema: Option[String],
-                               ids: Map[String, Long] = Map.empty)
+                               schema: StructType,
+                               ids: Map[String, Long])
       : Map[(Int, String), String] = {
-    val df = schema.map { s =>
-      val sch = DataType.fromJson(s).asInstanceOf[StructType]
-        .add(BucketCol, IntegerType)
-      spark.read.schema(sch).parquet(epochRoot)
-    }.getOrElse(spark.read.option("mergeSchema", "true").parquet(epochRoot))
-    // fingerprint identity is SCHEMA-SIGNED; on an id-stamped table the
-    // signature (and the fold order) uses the stable field ids, so a
-    // RENAME does not orphan every recorded fingerprint — pairings keep
-    // dropping unchanged files across the rename boundary
-    val dataCols0 = df.columns.filterNot(_ == BucketCol)
-    val dataCols =
-      if (ids.isEmpty) dataCols0.sorted
-      else dataCols0.sortBy(c => ids.get(c).map(_.toString).getOrElse(c))
+    val df = spark.read.schema(schema.add(BucketCol, IntegerType))
+      .parquet(epochRoot)
+    // fingerprint identity is SCHEMA-SIGNED; the signature (and the fold
+    // order) uses the stable field ids, so a RENAME does not orphan every
+    // recorded fingerprint — pairings keep dropping unchanged files
+    // across the rename boundary
+    val dataCols = df.columns.filterNot(_ == BucketCol)
+      .sortBy(c => ids.get(c).map(_.toString).getOrElse(c))
     def sigName(c: String): String =
       ids.get(c).map(id => s"#$id").getOrElse(c)
     val sig = java.util.UUID.nameUUIDFromBytes(
@@ -6446,29 +6259,28 @@ object MergeWriter {
     // one pass over the written epoch, O(written data)
     val stats =
       if (lay.fingerprint && written.nonEmpty) {
-        val fps = fileFingerprints(spark, dir, lay.schema, lay.colIds)
+        val fps = fileFingerprints(spark, dir, lay.struct, lay.colIds)
         stats0.map { case (b, fss) =>
           b -> fss.map(f => f.copy(fp = fps.getOrElse((b, f.name), "")))
         }
       } else stats0
     if ((lay.bloomCols.nonEmpty || lay.shredCols.nonEmpty) && written.nonEmpty)
       writeBloomSidecar(spark, fs, dir, lay.bloomCols, lay.bloomItems,
-        lay.schema, lay.shredCols)
+        lay.struct, lay.shredCols)
     (epoch, written, stats)
   }
 
   /** Incoming rows made writable — the one preparation every incoming-
     * row writer applies before [[stageEpoch]]: the recorded CHECK
     * constraints fused into the write's own pass (a violating row fails
-    * the statement before anything commits), field ids stamped (or stray
-    * ids from another table's read stripped), and the bucket column
+    * the statement before anything commits), field ids stamped (stray
+    * ids from another table's read replaced), and the bucket column
     * derived under the NULL-key assertion of [[bucketExprChecked]].
     */
   private def prepareRows(rows: DataFrame, checks: Map[String, String],
                           colIds: Map[String, Long], keys: Seq[String],
                           buckets: Int, tablePath: String): DataFrame = {
-    val checked = enforceChecks(rows, checks, tablePath)
-    (if (colIds.isEmpty) stripFrame(checked) else stampFrame(checked, colIds))
+    stampFrame(enforceChecks(rows, checks, tablePath), colIds)
       .withColumn(BucketCol, bucketExprChecked(keys, buckets))
   }
 
@@ -6516,25 +6328,20 @@ object MergeWriter {
     // table's declared defaults — without this, one merge would erase
     // them
     val declaredMeta: Map[String, org.apache.spark.sql.types.Metadata] =
-      prev.flatMap(_.schema).map(s =>
-        DataType.fromJson(s).asInstanceOf[StructType].fields
-          .filter(_.metadata != org.apache.spark.sql.types.Metadata.empty)
-          .map(f => f.name -> f.metadata).toMap).getOrElse(Map.empty)
+      prev.map(_.struct.fields
+        .filter(_.metadata != org.apache.spark.sql.types.Metadata.empty)
+        .map(f => f.name -> f.metadata).toMap).getOrElse(Map.empty)
     // a commit must never NARROW declared nullability: the written
     // frame's non-nullness is provenance noise (an identity assignment
     // or a Seq-derived source), while the DECLARED nullable admits the
     // NULL sentinels and old epochs' stored NULLs
     val declaredNullable: Set[String] =
-      prev.flatMap(_.schema).map(s =>
-        DataType.fromJson(s).asInstanceOf[StructType].fields
-          .filter(_.nullable).map(_.name).toSet).getOrElse(Set.empty)
-    // FIELD-ID stamping (see [[Manifest.colIds]]): an id-stamped table
+      prev.map(_.struct.fields.filter(_.nullable).map(_.name).toSet)
+        .getOrElse(Set.empty)
+    // FIELD-ID stamping (see [[Manifest.colIds]]): an existing table
     // carries each column's id forward by name and assigns FRESH ids to
-    // evolved columns; a table this commit creates — or fully replaces
-    // (no pre-existing epoch pointer survives: truncating overwrite /
-    // relayout, which is also the LEGACY MIGRATION path) — is stamped
-    // from scratch; a legacy table with surviving old files stays
-    // name-world (those files carry no ids to match).
+    // evolved columns; a table this commit creates is stamped from
+    // scratch.
     val cleanSchema0 = stripSchemaIds(rows.schema)
     // the COMMITTED schema keeps the DECLARED column order (evolved
     // columns append): the written frame's order is provenance noise —
@@ -6542,9 +6349,7 @@ object MergeWriter {
     // table's SQL column order (files read by name/field-id, so
     // physical order never matters)
     val declaredOrder: Map[String, Int] =
-      prev.flatMap(_.schema).map(s =>
-        DataType.fromJson(s).asInstanceOf[StructType].fieldNames
-          .zipWithIndex.toMap).getOrElse(Map.empty)
+      prev.map(_.struct.fieldNames.zipWithIndex.toMap).getOrElse(Map.empty)
     val orderedFields =
       if (declaredOrder.isEmpty) cleanSchema0.fields
       else cleanSchema0.fields.sortBy(f =>
@@ -6557,26 +6362,16 @@ object MergeWriter {
                 else f0
         declaredMeta.get(f.name).fold(f)(m => f.copy(metadata = m))
       })
-    val replacesAll = prev.forall(p => (p.epochs.keySet -- dropBuckets).isEmpty)
-    val (colIds, nextColId) =
-      prev.filter(_.nextColId > 0L) match {
-        case Some(p) =>
-          var n = p.nextColId
-          val ids = cleanSchema.fields.map { f =>
-            f.name -> p.colIds.getOrElse(f.name, { val v = n; n += 1; v })
-          }.toMap
-          (ids, n)
-        case None if prev.isEmpty || replacesAll =>
-          (cleanSchema.fields.zipWithIndex
-            .map { case (f, i) => f.name -> (i + 1L) }.toMap,
-            cleanSchema.fields.length + 1L)
-        case None => (Map.empty[String, Long], 0L)
-      }
+    var nextColId = prev.fold(1L)(_.nextColId)
+    val colIds = cleanSchema.fields.map { f =>
+      f.name -> prev.flatMap(_.colIds.get(f.name))
+        .getOrElse { val v = nextColId; nextColId += 1; v }
+    }.toMap
     // an existing table's recorded layout always applies (shred
     // declarations and fingerprinting included); the params only seed
     // table creation, like `buckets`
     val target = Manifest(0L, buckets, Map.empty,
-      schema = Some(cleanSchema.json), keyCols = keys,
+      schema = cleanSchema.json, keyCols = keys,
       clusterCols = prev.map(_.clusterCols).filter(_.nonEmpty)
         .getOrElse(clusterCols),
       bloomCols = prev.map(_.bloomCols).filter(_.nonEmpty)
@@ -6932,19 +6727,17 @@ object MergeWriter {
     * schema — a typo'd retrofit would otherwise silently record a spec
     * no later stats collection or skip can use.
     */
-  private def validateClusterCols(man: Manifest, cols: Seq[String]): Unit =
-    man.schema.foreach { s =>
-      val names = DataType.fromJson(s).asInstanceOf[StructType]
-        .fieldNames.toSet
-      val referenced = cols.flatMap { c =>
-        val i = c.indexOf(':')
-        if (i < 0) Seq(c)
-        else c.substring(i + 1).split(",").map(_.trim).toSeq
-      }
-      referenced.foreach(c => require(names.contains(c),
-        s"cluster: column '$c' is not in the table schema " +
-          names.toSeq.sorted.mkString("(", ",", ")")))
+  private def validateClusterCols(man: Manifest, cols: Seq[String]): Unit = {
+    val names = man.struct.fieldNames.toSet
+    val referenced = cols.flatMap { c =>
+      val i = c.indexOf(':')
+      if (i < 0) Seq(c)
+      else c.substring(i + 1).split(",").map(_.trim).toSeq
     }
+    referenced.foreach(c => require(names.contains(c),
+      s"cluster: column '$c' is not in the table schema " +
+        names.toSeq.sorted.mkString("(", ",", ")")))
+  }
 
   /** [[compact]]'s epoch rewrite WITHOUT a commit: write every live
     * bucket into one fresh epoch under `tableRoot` and return the
@@ -6959,14 +6752,12 @@ object MergeWriter {
     // read each live epoch WITH its physical bucket column (partition
     // discovery over the epoch root typed by the stored schema +
     // BucketCol), keeping only the buckets the manifest assigns to it
-    // id-stamped tables read by field id (pre-rename files keep their
-    // old column names) and the rewrite re-records the ids verbatim —
-    // the read frame's id metadata flows through union/sort into the
-    // new files' footers
-    if (man.colIds.nonEmpty) ensureFieldIdRead(spark)
-    val epochSchema = man.schema.map(s =>
-      stampSchema(DataType.fromJson(s).asInstanceOf[StructType], man.colIds)
-        .add(BucketCol, IntegerType))
+    // read by field id (pre-rename files keep their old column names)
+    // and the rewrite re-records the ids verbatim — the read frame's id
+    // metadata flows through union/sort into the new files' footers
+    ensureFieldIdRead(spark)
+    val epochSchema =
+      stampSchema(man.struct, man.colIds).add(BucketCol, IntegerType)
     val live: Iterable[DataFrame] =
       if (hasLiveDvs(man) || hasLiveEqds(man) || man.overlays.nonEmpty)
         // deletion vectors or merge-on-read overlays present: read each
@@ -6982,9 +6773,7 @@ object MergeWriter {
         }
       else man.epochs.groupBy(_._2)
         .map { case (e, m) =>
-          epochSchema.fold(
-            spark.read.option("mergeSchema", "true").parquet(s"$tableRoot/$e"))(
-            sch => spark.read.schema(sch).parquet(s"$tableRoot/$e"))
+          spark.read.schema(epochSchema).parquet(s"$tableRoot/$e")
             .filter(col(BucketCol).isin(m.keys.toSeq: _*))
         }
     val (epoch, written, stats) = stageEpoch(spark, fs, tableRoot,
@@ -7013,7 +6802,7 @@ object MergeWriter {
     currentManifest(fs, dir).foreach { man =>
       val targets = buckets.filter(man.epochs.contains)
       if (targets.isEmpty) return
-      if (man.colIds.nonEmpty) ensureFieldIdRead(spark)
+      ensureFieldIdRead(spark)
       val live = targets.toSeq.sorted.map { b =>
         readWithSchema(spark, man, tablePath,
           bucketDirPaths(tablePath, man, b))
@@ -7257,14 +7046,12 @@ object MergeWriter {
                                    keys: Seq[String], op: String): DataFrame = {
     val fs = fsFor(spark, tableRoot)
     validateKeys(man, keys, op)
-    // no persist: the returned frame is LAZY, and the wanted side is
-    // lookup-sized by contract — recomputing it inside the semi-join
-    // is cheaper than a cache outliving this call
     val w = wanted.select(keys.map(col): _*).distinct()
       .withColumn(BucketCol,
         pmod(hash(keys.map(col): _*), lit(man.buckets)))
-    // ONE bounded collect (lookup-sized by contract) serves both the
-    // touched-bucket set and per-key file skipping below
+    // ONE bounded collect (lookup-sized by contract) serves the
+    // touched-bucket set, per-key file skipping below, and the final
+    // semi-join as a local relation — the wanted lineage runs once
     val wantedRows = w.collect()
     val keyTypes = w.schema.fields.take(keys.size).map(_.dataType)
     val byBucket = wantedRows.groupBy(_.getInt(keys.size))
@@ -7305,7 +7092,8 @@ object MergeWriter {
     scanPinned(spark, tableRoot, man, buckets = Some(byBucket.keySet),
       keep = b => Some(f => byBucket(b).exists(
         tupleCouldBeIn(fileEpoch(man, b, f), b, f, _))))
-      .join(w.drop(BucketCol), keys, "left_semi")
+      .join(spark.createDataFrame(java.util.Arrays.asList(wantedRows: _*),
+        w.schema).drop(BucketCol), keys, "left_semi")
   }
 
   /** Range read with DATA SKIPPING (Delta's file-stats skipping /
@@ -7437,13 +7225,11 @@ object MergeWriter {
   private def fileKeepFns(fs: FileSystem, tableRoot: String, man: Manifest,
                           ranges: Seq[ColumnPredicate])
       : Seq[(String, Int, FileStat) => Boolean] = {
-    val schema = man.schema.map(s =>
-      DataType.fromJson(s).asInstanceOf[StructType])
     // hidden shred columns aren't in the table schema — their probe
     // type comes from the declaration
     val shredTypes = shredTypesOf(man)
     def colType(c: String) =
-      schema.flatMap(_.fields.find(_.name == c)).map(_.dataType)
+      man.struct.fields.find(_.name == c).map(_.dataType)
         .orElse(shredTypes.get(c))
     val sidecars = scala.collection.mutable.Map
       .empty[String, Map[String, Map[String, Array[Byte]]]]
@@ -7522,17 +7308,14 @@ object MergeWriter {
     }
 
   /** The typed empty frame of a read whose files were all pruned: the
-    * pinned schema (footer-merged for a legacy pre-schema manifest) as
-    * a file scan reports it — every column nullable — so an empty
-    * answer has exactly the schema a non-empty one would.
+    * pinned schema as a file scan reports it — every column nullable —
+    * so an empty answer has exactly the schema a non-empty one would.
     */
-  private def emptyFrame(spark: SparkSession, root: String,
-                         man: Manifest): DataFrame =
-    if (man.schema.isEmpty && man.epochs.isEmpty) spark.emptyDataFrame
-    else spark.createDataFrame(
+  private def emptyFrame(spark: SparkSession, man: Manifest): DataFrame =
+    spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.GraftColumnShim.asNullable(
-        stripSchemaIds(indexSchema(spark, root, man))))
+        stripSchemaIds(man.struct)))
 
   /** Step two of every storage read: scan a PINNED manifest (see
     * [[pinManifest]] / [[pinGroupMember]]). Selects the files
@@ -7552,7 +7335,7 @@ object MergeWriter {
       case (b, None) => bucketDirPaths(root, man, b)
     }
     val base =
-      if (paths.isEmpty) emptyFrame(spark, root, man)
+      if (paths.isEmpty) emptyFrame(spark, man)
       else stripFrame(readWithSchema(spark, man, root, paths))
     residual.foldLeft(base)(applyPredicate)
   }
@@ -7633,10 +7416,8 @@ object MergeWriter {
     currentManifest(fs, new Path(tablePath)) match {
       case None => scanFallback()
       case Some(man) =>
-        val schema = man.schema.map(s =>
-          DataType.fromJson(s).asInstanceOf[StructType])
         val statsPerBucket = man.epochs.keys.toSeq.map(man.stats.get)
-        if (schema.isEmpty || statsPerBucket.exists(_.isEmpty))
+        if (statsPerBucket.exists(_.isEmpty))
           return scanFallback()
         val files = statsPerBucket.flatMap(_.get)
         if (files.exists(_.rows < 0)) return scanFallback()
@@ -7650,7 +7431,7 @@ object MergeWriter {
         // cannot answer counts at all while any record is live
         if (hasLiveEqds(man)) return scanFallback()
         val colTypes = minMaxCols.map(c =>
-          schema.get.fields.find(_.name == c).map(_.dataType))
+          man.struct.fields.find(_.name == c).map(_.dataType))
         if (colTypes.exists(_.isEmpty)) return scanFallback()
         // empty table (truncating overwrite / delete-all left zero files):
         // SQL's answer is cnt=0 with NULL min/max — still metadata-only
@@ -7825,7 +7606,7 @@ object MergeWriter {
     currentGroupManifest(fsFor(spark, groupPath), new Path(groupPath))
       .map(_.version)
 
-  /** The SQL-catalog-facing schema: [[indexSchema]] with merge keys
+  /** The SQL-catalog-facing schema: the recorded schema with merge keys
     * surfaced NOT NULL (the write side enforces it — see
     * `bucketExprChecked` — and Spark's row-level DML requires
     * non-nullable row-id attributes). ONE definition shared by the
@@ -7840,7 +7621,7 @@ object MergeWriter {
     */
   private[sources] def sqlSchema(spark: SparkSession, tablePath: String,
                                  man: Manifest): StructType = {
-    val s = indexSchema(spark, tablePath, man)
+    val s = man.struct
     if (man.keyCols.isEmpty || !man.keysChecked) s
     else StructType(s.fields.map(f =>
       // identity MERGE KEYS are reported NOT NULL like any key: Spark's
@@ -7853,18 +7634,6 @@ object MergeWriter {
       // stay nullable-sentinel and fully SQL-usable.
       if (man.keyCols.contains(f.name)) f.copy(nullable = false) else f))
   }
-
-  /** The pinned manifest's data schema — recorded at commit for every
-    * post-evolution table; a legacy manifest without one falls back to
-    * a one-off parquet footer merge over its epochs.
-    */
-  private[sources] def indexSchema(spark: SparkSession, tablePath: String,
-                                   man: Manifest): StructType =
-    man.schema.map(s => DataType.fromJson(s).asInstanceOf[StructType])
-      .getOrElse {
-        val paths = allDirPaths(tablePath, man)
-        spark.read.option("mergeSchema", "true").parquet(paths: _*).schema
-      }
 
   /** The key-hash bucket a fully-specified key tuple lands in — the
     * DRIVER-SIDE evaluation of the write path's
@@ -7960,13 +7729,9 @@ object MergeWriter {
     // incremental-consumer contract at 100 TB (Delta's CDF reads
     // recorded change files for the same reason). A bucket-modulus
     // change (split) moves every pointer, which correctly degrades to
-    // the full diff; a side without a recorded schema can't build a
-    // typed empty frame, so it reads fully (rare legacy case, still
-    // exact).
-    val sameModulus = mFrom.buckets == mTo.buckets
-    val bothSchemas = mFrom.schema.isDefined && mTo.schema.isDefined
+    // the full diff.
     val (oldDf, newDf) =
-      if (sameModulus && bothSchemas) {
+      if (mFrom.buckets == mTo.buckets) {
         // "changed" compares the full bucket SIGNATURE (epoch pointer +
         // deletion-vector identity): a DV delete changes a bucket's
         // logical rows without moving its pointer, and skipping it would
@@ -8025,7 +7790,7 @@ object MergeWriter {
         (side(mFrom, b => drops.get(b).map(_._1).getOrElse(Set.empty)),
           side(mTo, b => drops.get(b).map(_._2).getOrElse(Set.empty)))
       } else {
-        // modulus/schema mismatch: full two-sided diff straight from
+        // modulus mismatch: full two-sided diff straight from
         // the manifests (no path-level version resolution needed)
         (scanPinned(spark, dataPath, mFrom), scanPinned(spark, dataPath, mTo))
       }
@@ -8033,8 +7798,7 @@ object MergeWriter {
     // column names (Delta CDF's column-mapping behavior): both sides
     // align to the current manifest by shared field id, so `keys` /
     // `compareCols` — callers pass current names — resolve on both
-    // frames; columns since dropped vanish from the feed. Identity for
-    // name-world tables.
+    // frames; columns since dropped vanish from the feed.
     val cur = currentManifest(fsFor(spark, dataPath), new Path(dataPath))
       .getOrElse(mTo)
     val oldAligned = alignToIds(oldDf, mFrom, cur)
@@ -8047,36 +7811,21 @@ object MergeWriter {
     // to old versions either fails resolution on an added column or
     // serves narrow-typed rows under the wide schema the metadata table
     // / CDC stream declared from the current manifest.
-    def conform(df: DataFrame): DataFrame = cur.schema match {
-      case Some(sj) =>
-        val cs = stripSchemaIds(DataType.fromJson(sj).asInstanceOf[StructType])
-        val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
-        if (cs.length == df.schema.length &&
-            cs.fields.forall(f => have.get(f.name).contains(f.dataType))) df
-        else df.select(cs.fields.toIndexedSeq.map { f =>
-          have.get(f.name) match {
-            case Some(t) if t == f.dataType => col(f.name)
-            case Some(_) => col(f.name).cast(f.dataType).as(f.name)
-            case None => lit(null).cast(f.dataType).as(f.name)
-          }
-        }: _*)
-      case None => df
+    val cs = stripSchemaIds(cur.struct)
+    def conform(df: DataFrame): DataFrame = {
+      val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
+      if (cs.length == df.schema.length &&
+          cs.fields.forall(f => have.get(f.name).contains(f.dataType))) df
+      else df.select(cs.fields.toIndexedSeq.map { f =>
+        have.get(f.name) match {
+          case Some(t) if t == f.dataType => col(f.name)
+          case Some(_) => col(f.name).cast(f.dataType).as(f.name)
+          case None => lit(null).cast(f.dataType).as(f.name)
+        }
+      }: _*)
     }
-    val oldC = conform(oldAligned)
-    val newC = conform(newAligned)
-    // legacy fallback (no recorded current schema): align the old side's
-    // types to the new side's — the wide side of a widening
-    def castTo(df: DataFrame, target: DataFrame): DataFrame = {
-      val want = target.schema.fields.map(x => x.name -> x.dataType).toMap
-      if (df.schema.fields.forall(x => want.get(x.name).forall(_ == x.dataType)))
-        df
-      else df.select(df.schema.fields.map { x =>
-        want.get(x.name).filter(_ != x.dataType)
-          .fold(col(x.name))(t => col(x.name).cast(t).as(x.name))
-      }.toIndexedSeq: _*)
-    }
-    graft.operators.Reconcile.snapshotDiff(castTo(oldC, newC),
-      newC, keys, compareCols)
+    graft.operators.Reconcile.snapshotDiff(conform(oldAligned),
+      conform(newAligned), keys, compareCols)
   }
 
   /** Test hook: replay the commit path of a table-creation race LOSER —
@@ -8190,16 +7939,4 @@ object MergeWriter {
                        incoming: DataFrame): Unit =
     merge(spark, tablePath,
       incoming.dropDuplicates("workItemId", "name", "value"), Seq("workItemId"))
-
-  /** A10: rebuild membership per context and overwrite only the touched
-    * partitions (dynamic partition overwrite ≡ the reference's
-    * upsert + anti-delete in one transaction).
-    */
-  def overwritePartitions(tablePath: String, incoming: DataFrame,
-                          partitionCol: String): Unit =
-    incoming.write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
-      .parquet(tablePath)
 }

@@ -15,8 +15,9 @@ import graft.sources.MergeWriter
   * that keep their old names. Covers the DataFrame surface, the SQL
   * catalog (`ALTER TABLE ... RENAME/DROP COLUMN`), stats-key migration
   * (pruning keeps working on the renamed column), no-resurrection on
-  * re-add, change feeds spanning a rename, compaction, and the legacy
-  * (pre-id) rejection + full-rewrite migration path.
+  * re-add, change feeds spanning a rename, compaction, and the refusal
+  * of manifests below the protocol floor (no field ids, no schema) until
+  * `upgrade` rewrites them.
   */
 class ColumnIdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -260,35 +261,82 @@ class ColumnIdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("DROP TABLE gcid.ns.w")
   }
 
-  test("legacy (pre-id) table: rename refused; full rewrite migrates") {
+  /** Rewrite the newest manifest of `dir` without `field`. */
+  private def stripField(dir: String, field: String): Unit = {
+    val manifest = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("_manifest-")).maxBy(_.getName)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.readTree(manifest)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(node.has(field))
+    node.remove(field)
+    mapper.writeValue(manifest, node)
+  }
+
+  test("legacy (pre-id) table: refused until upgrade; the rename is then metadata-only") {
     import spark.implicits._
     val dir = tmp("cid-legacy")
     MergeWriter.merge(spark, dir,
       (0L until 10L).map(i => (i, i)).toDF("id", "v"), Seq("id"),
       buckets = 2)
     // simulate a pre-field-id manifest: strip the id map
-    val d = new java.io.File(dir)
-    val manifest = d.listFiles().filter(_.getName.startsWith("_manifest-"))
-      .maxBy(_.getName)
-    val body = new String(
-      java.nio.file.Files.readAllBytes(manifest.toPath), "UTF-8")
-    assert(body.contains("\"cids\""))
-    java.nio.file.Files.write(manifest.toPath,
-      body.replaceAll(",\"cids\":\\{[^}]*\\},\"ncid\":[0-9]+", "")
-        .getBytes("UTF-8"))
-    val e = intercept[IllegalArgumentException] {
+    stripField(dir, "cids")
+    stripField(dir, "ncid")
+    val e = intercept[IllegalStateException](MergeWriter.readTable(spark, dir))
+    assert(e.getMessage.contains("system.upgrade"), e.getMessage)
+    intercept[IllegalStateException] {
       MergeWriter.renameColumn(spark, dir, "v", "w")
     }
-    assert(e.getMessage.contains("field-id"))
-    // the documented migration: a truncating overwrite stamps ids...
-    MergeWriter.overwriteTable(spark, dir,
-      (0L until 10L).map(i => (i, i)).toDF("id", "v"), Seq("id"))
+    // the one way up: a full rewrite that stamps ids...
+    MergeWriter.upgrade(spark, dir)
+    val files = MergeWriter.readTable(spark, dir).inputFiles.toSet
     // ... after which the rename is metadata-only as usual
     MergeWriter.renameColumn(spark, dir, "v", "w")
+    assert(MergeWriter.readTable(spark, dir).inputFiles.toSet == files,
+      "rename must not rewrite any data file")
     assert(MergeWriter.readTable(spark, dir).columns.toSeq ==
       Seq("id", "w"))
     assert(MergeWriter.readTable(spark, dir)
       .agg(sum("w")).collect().head.getLong(0) == 45L)
+  }
+
+  test("a manifest with its schema stripped fails loudly; CALL upgrade restores it with identical rows") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gcid.ns")
+    spark.sql("CREATE TABLE gcid.ns.up (id BIGINT, v STRING) " +
+      "TBLPROPERTIES ('keys'='id', 'buckets'='2')")
+    spark.sql("INSERT INTO gcid.ns.up SELECT id, CONCAT('v', id) FROM range(20)")
+    spark.sql("DELETE FROM gcid.ns.up WHERE id < 3")
+    val dir = s"$wh/ns/up"
+    def rows(): Set[(Long, String)] = MergeWriter.readTable(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val before = rows()
+    stripField(dir, "schema")
+    val e = intercept[IllegalStateException](rows())
+    assert(e.getMessage.contains("system.upgrade"), e.getMessage)
+    spark.sql("CALL gcid.system.upgrade(table => 'ns.up')")
+    assert(rows() == before)
+    assert(spark.table("gcid.ns.up").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet == before)
+    assert(spark.table("gcid.ns.up").columns.toSeq == Seq("id", "v"))
+    spark.sql("DROP TABLE gcid.ns.up")
+  }
+
+  test("upgrade keeps a recorded schema: a column added after the data survives") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gcid.ns")
+    spark.sql("CREATE TABLE gcid.ns.dflt (id BIGINT, v STRING) " +
+      "TBLPROPERTIES ('keys'='id', 'buckets'='2')")
+    spark.sql("INSERT INTO gcid.ns.dflt VALUES (1, 'x'), (2, 'y')")
+    // metadata-only: no data file holds the column, only the schema does
+    spark.sql("ALTER TABLE gcid.ns.dflt ADD COLUMNS (region STRING DEFAULT 'emea')")
+    val dir = s"$wh/ns/dflt"
+    stripField(dir, "cids")
+    stripField(dir, "ncid")
+    spark.sql("CALL gcid.system.upgrade(table => 'ns.dflt')")
+    spark.sql("INSERT INTO gcid.ns.dflt (id, v) VALUES (3, 'z')")
+    assert(spark.sql("SELECT id, v, region FROM gcid.ns.dflt ORDER BY id")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      .toSeq == Seq((1L, "x", "emea"), (2L, "y", "emea"), (3L, "z", "emea")))
+    spark.sql("DROP TABLE gcid.ns.dflt")
   }
 
   test("catalog scan output attrs stay id-free (ids reach only the reader)") {

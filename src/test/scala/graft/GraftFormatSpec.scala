@@ -15,7 +15,8 @@ import graft.sources.MergeWriter
   * prune files via the per-file min/max stats and Bloom sidecars, and
   * `readStream.format("graft")` tails the change feed.
   */
-class GraftFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraftFormatSpec extends AnyFunSuite with BeforeAndAfterAll
+    with ManifestSpecHelpers {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -347,7 +348,7 @@ class GraftFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(states.where(col("id") === 2L).as[(Long, String)]
       .collect().toSeq == Seq((2L, "done")))
     // group versionAsOf pins BOTH the member state and its siblings
-    val v1 = MergeWriter.availableGroupVersions(spark, dir).head
+    val v1 = groupVersions(dir).head
     val pinned = spark.read.format("graft").option("member", "states")
       .option("versionAsOf", v1.toString).load(dir)
     assert(pinned.as[(Long, String)].collect().toSet ==

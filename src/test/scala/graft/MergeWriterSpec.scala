@@ -8,7 +8,8 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.MergeWriter
 
-class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll
+    with ManifestSpecHelpers {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -18,6 +19,16 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
+
+  /** The data files a `format("graft")` scan opens after file skipping. */
+  private def openedFiles(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.flatMap(_.inputRDD.partitions.toSeq.flatMap {
+      case p: org.apache.spark.sql.execution.datasources.FilePartition =>
+        p.files.map(_.filePath.toString).toSeq
+      case _ => Seq.empty
+    }).toSet
 
   /** A pure conditional-PUT commit primitive: no link, no rename — the
     * object-store shape. A JVM lock stands in for the store's
@@ -350,28 +361,39 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows == Map("k1" -> 1, "k2" -> 2, "k3" -> 3, "k4" -> 4))
   }
 
-  test("a legacy pre-manifest table is migrated on first merge") {
+  test("a legacy pre-manifest table is refused by a merge until upgrade rewrites it") {
     import spark.implicits._
     val dir = Files.createTempDirectory("legacy").toString + "/t"
     // old layout: __bucket= partition dirs at the table root
     (0 until 8).map(i => (s"k$i", i)).toDF("k", "v")
       .withColumn(MergeWriter.BucketCol, pmod(hash(col("k")), lit(4)))
       .write.partitionBy(MergeWriter.BucketCol).parquet(dir)
+    val refused = intercept[IllegalStateException] {
+      MergeWriter.merge(spark, dir, Seq(("k0", 100)).toDF("k", "v"),
+        Seq("k"), buckets = 4)
+    }
+    assert(refused.getMessage.contains("system.upgrade"), refused.getMessage)
+    MergeWriter.upgrade(spark, dir, Seq("k"))
     MergeWriter.merge(spark, dir, Seq(("k0", 100)).toDF("k", "v"),
       Seq("k"), buckets = 4)
     val rows = MergeWriter.readTable(spark, dir).collect()
       .map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(rows.size == 8 && rows("k0") == 100 && rows("k7") == 7)
-    // root-level legacy partition dirs are gone after migration
+    // root-level legacy partition dirs are gone after the upgrade
     assert(!new java.io.File(dir).listFiles()
       .exists(f => f.getName.startsWith(MergeWriter.BucketCol + "=")))
 
-    // an additive fold migrates too: the legacy rows survive and the
-    // delta folds into them
+    // an additive fold is refused too; after the upgrade the legacy rows
+    // survive and the delta folds into them
     val add = Files.createTempDirectory("legacyadd").toString + "/t"
     Seq(("a", 1L), ("b", 2L)).toDF("k", "n").write.parquet(add)
-    MergeWriter.mergeAdditive(spark, add, Seq(("a", 5L)).toDF("k", "n"),
-      Seq("k"), Seq("n"), txn = ("app", 1L), buckets = 4)
+    def fold(): Unit = MergeWriter.mergeAdditive(spark, add,
+      Seq(("a", 5L)).toDF("k", "n"), Seq("k"), Seq("n"), txn = ("app", 1L),
+      buckets = 4)
+    assert(intercept[IllegalStateException](fold()).getMessage
+      .contains("system.upgrade"))
+    MergeWriter.upgrade(spark, add, Seq("k"))
+    fold()
     assert(MergeWriter.readTable(spark, add).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("a" -> 6L, "b" -> 2L))
@@ -1000,16 +1022,16 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => r.getLong(0) -> r.getString(1)).toMap == Map(2L -> "keep"))
   }
 
-  test("overwritePartitions replaces only touched partitions") {
+  test("a keyed replace on the partition column replaces only touched partitions") {
     import spark.implicits._
     val dir = Files.createTempDirectory("cwim").toString + "/cwim"
     val v1 = Seq(("ctx1", "A"), ("ctx1", "B"), ("ctx2", "C"))
       .toDF("contextId", "workItemId")
-    MergeWriter.overwritePartitions(dir, v1, "contextId")
+    MergeWriter.merge(spark, dir, v1, Seq("contextId"))
     // refresh ctx1 membership: B dropped, D added; ctx2 untouched
     val v2 = Seq(("ctx1", "A"), ("ctx1", "D")).toDF("contextId", "workItemId")
-    MergeWriter.overwritePartitions(dir, v2, "contextId")
-    val out = spark.read.parquet(dir).collect()
+    MergeWriter.merge(spark, dir, v2, Seq("contextId"))
+    val out = MergeWriter.readTable(spark, dir).collect()
       .map(r => (r.getAs[String]("contextId"), r.getAs[String]("workItemId"))).toSet
     assert(out == Set(("ctx1", "A"), ("ctx1", "D"), ("ctx2", "C")))
   }
@@ -1124,7 +1146,7 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
   }
 
-  test("group retention: a lagging member consumer survives 3+ commits") {
+  test("group retention: gcGroup keeps the last KeepManifests versions; a member pin inside them reads and feeds") {
     import spark.implicits._
     val grp = Files.createTempDirectory("grpretain").toString + "/g"
     def commitRound(i: Int): Unit = MergeWriter.mergeGroup(spark, grp, Seq(
@@ -1132,26 +1154,22 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("fields", Seq((i.toLong, i)).toDF("id", "n"), Seq("id"))),
       buckets = 2)
     commitRound(1); commitRound(2); commitRound(3)
-    // default: only KeepManifests group versions retained
+    // only KeepManifests group versions are retained
+    assert(groupVersions(grp).size == MergeWriter.KeepManifests)
     intercept[IllegalArgumentException] {
       MergeWriter.readGroupTableVersion(spark, grp, "states", 1L)
     }
-    MergeWriter.setGroupRetention(spark, grp, versions = 6)
-    val v0 = MergeWriter.availableGroupVersions(spark, grp).last
-    commitRound(4); commitRound(5); commitRound(6); commitRound(7)
-    // the consumer lagged FOUR commits; its pinned version still reads
+    // a consumer one commit behind still reads its pinned version...
+    val v0 = groupVersions(grp).head
     assert(MergeWriter.readGroupTableVersion(spark, grp, "states", v0)
-      .count() == 3)
-    // and the member change feed across the whole lag is the four rows
-    val latest = MergeWriter.availableGroupVersions(spark, grp).last
-    val feedDf = MergeWriter.changeFeedGroup(spark, grp, "states", v0,
-      latest, Seq("id"), Seq("st"))
-    val feed = feedDf.collect()
+      .count() == 2)
+    // ...and the member change feed up to the head is the one new row
+    val feed = MergeWriter.changeFeedGroup(spark, grp, "states", v0,
+      groupVersions(grp).last, Seq("id"), Seq("st")).collect()
     assert(feed.map(r => (r.getAs[Long]("id"), r.getAs[String]("op")))
-      .toSet == (4 to 7).map(i => (i.toLong, "insert")).toSet)
-    // lowering reclaims on the next commit's gc
-    MergeWriter.setGroupRetention(spark, grp, versions = 2)
-    commitRound(8)
+      .toSet == Set((3L, "insert")))
+    // the next commit's gc reclaims the pin
+    commitRound(4)
     intercept[IllegalArgumentException] {
       MergeWriter.readGroupTableVersion(spark, grp, "states", v0)
     }
@@ -1165,12 +1183,11 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("states", seed, Seq("id")),
       ("fields", (0 until 64).map(i => (i.toLong, i)).toDF("id", "n"),
         Seq("id"))), buckets = 8)
-    MergeWriter.setGroupRetention(spark, grp, versions = 4)
-    val v1 = MergeWriter.availableGroupVersions(spark, grp).last
+    val v1 = groupVersions(grp).last
     // one-key change → ONE changed bucket out of 8
     MergeWriter.mergeGroup(spark, grp, Seq(
       ("states", Seq((7L, 999)).toDF("id", "st"), Seq("id"))))
-    val v2 = MergeWriter.availableGroupVersions(spark, grp).last
+    val v2 = groupVersions(grp).last
     val feed = MergeWriter.changeFeedGroup(spark, grp, "states", v1, v2,
       Seq("id"), Seq("st"))
     assert(feed.collect().map(r =>
@@ -1182,32 +1199,6 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(feed.inputFiles.length <= 2 * allFiles / 8 + 1,
       s"member feed read ${feed.inputFiles.length} of $allFiles files — " +
         "expected one changed bucket per side")
-  }
-
-  test("clusterGroupTable retrofits a member inside one group commit") {
-    import spark.implicits._
-    val grp = Files.createTempDirectory("grpretro").toString + "/g"
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "256")
-    try {
-      val states = (0 until 4096).map(i => (i.toLong, i % 7))
-        .toDF("id", "step")
-      val fields = (0 until 512).map(i => (i.toLong, s"f$i")).toDF("id", "v")
-      // UNCLUSTERED members
-      MergeWriter.mergeGroup(spark, grp, Seq(
-        ("states", states, Seq("id")), ("fields", fields, Seq("id"))),
-        buckets = 2)
-      def opened(): Int = MergeWriter.readGroupTableRange(spark, grp,
-        "states", "id", Some(1000L), Some(1499L)).inputFiles.length
-      val all = MergeWriter.readGroupTable(spark, grp, "states")
-        .inputFiles.length
-      assert(all >= 16 && opened() == all)
-      MergeWriter.clusterGroupTable(spark, grp, "states", Seq("id"))
-      assert(opened() <= all / 4,
-        s"retrofitted member range read opened ${opened()} of $all")
-      // content exact, sibling member untouched
-      assert(MergeWriter.readGroupTable(spark, grp, "states").count() == 4096)
-      assert(MergeWriter.readGroupTable(spark, grp, "fields").count() == 512)
-    } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
   }
 
   test("fingerprints: a one-key change diffs files, not the whole bucket") {
@@ -1695,7 +1686,7 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("fields", Seq(("A", n.toLong)).toDF("k", "n"), Seq("k"))),
       buckets = 4)
     load(1); load(2)
-    val versions = MergeWriter.availableGroupVersions(spark, grp)
+    val versions = groupVersions(grp)
     assert(versions.size == MergeWriter.KeepManifests)
     val v1 = versions.head
     // the pin is GROUP-wide: both members AS OF v1 show the same L1
@@ -1728,15 +1719,15 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
         clusterBy = Map("snapshots" -> Seq("snapshotDate")))
       val lo = java.sql.Date.valueOf("2024-01-20")
       val hi = java.sql.Date.valueOf("2024-01-29")
-      val pruned = MergeWriter.readGroupTableRange(spark, grp, "snapshots",
-        "snapshotDate", Some(lo), Some(hi))
+      val member = spark.read.format("graft").option("member", "snapshots")
+        .load(grp)
+      val pruned = member.filter(col("snapshotDate").between(lit(lo), lit(hi)))
       val full = MergeWriter.readGroupTable(spark, grp, "snapshots")
         .filter(col("snapshotDate").between(lit(lo), lit(hi)))
       assert(pruned.collect().map(_.toSeq).toSet ==
         full.collect().map(_.toSeq).toSet)
-      val opened = pruned.inputFiles.length
-      val all = MergeWriter.readGroupTable(spark, grp, "snapshots")
-        .inputFiles.length
+      val opened = openedFiles(pruned).size
+      val all = openedFiles(member).size
       assert(opened < all, s"no member files skipped ($opened of $all)")
     } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
   }
@@ -1759,15 +1750,15 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       // a second group commit must keep untouched buckets' sidecars live
       MergeWriter.mergeGroup(spark, grp,
         Seq(("snapshots", snaps(150, 1000), Seq("k", "snapshotDate"))))
-      val probe = MergeWriter.readGroupTableRange(spark, grp, "snapshots",
-        "k", Some("item#7"), Some("item#7"))
+      val member = spark.read.format("graft").option("member", "snapshots")
+        .load(grp)
+      val probe = member.filter(col("k") === "item#7")
       val full = MergeWriter.readGroupTable(spark, grp, "snapshots")
         .filter(col("k") === "item#7")
       assert(probe.collect().map(_.toSeq).toSet ==
         full.collect().map(_.toSeq).toSet)
-      val opened = probe.inputFiles.toSet
-      val all = MergeWriter.readGroupTable(spark, grp, "snapshots")
-        .inputFiles.toSet
+      val opened = openedFiles(probe)
+      val all = openedFiles(member)
       assert(all.size >= 8, s"test setup: expected many files, got ${all.size}")
       assert(opened.size * 2 < all.size,
         s"group bloom skipped nothing (${opened.size} of ${all.size})")
@@ -1903,7 +1894,7 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("describeGroup and changeFeedGroup report consistent member state") {
+  test("changeFeedGroup reports a member's changes between two group versions") {
     import spark.implicits._
     val grp = Files.createTempDirectory("grpdesc").toString + "/load"
     def load(rows: Seq[(String, String)], fields: Seq[(String, Long)]): Unit =
@@ -1912,13 +1903,8 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
         ("fields", fields.toDF("k", "n"), Seq("k"))), buckets = 4)
     load(Seq("A" -> "s1", "B" -> "s1"), Seq("A" -> 1L, "B" -> 1L))
     load(Seq("A" -> "s2", "C" -> "s2"), Seq("A" -> 2L))
-    val d = MergeWriter.describeGroup(spark, grp).collect()
-      .map(r => r.getAs[String]("member") ->
-        (r.getAs[Int]("buckets"), r.getAs[Long]("total_bytes"))).toMap
-    assert(d.keySet == Set("states", "fields"))
-    assert(d("states")._1 == 4 && d("states")._2 > 0)
-
-    val versions = MergeWriter.availableGroupVersions(spark, grp)
+    assert(MergeWriter.groupMemberBuckets(spark, grp, "states") == 4)
+    val versions = groupVersions(grp)
     val diff = MergeWriter.changeFeedGroup(spark, grp, "states",
       versions.head, versions.last, Seq("k"), Seq("v")).collect()
       .map(r => (r.getAs[String]("k"), r.getAs[String]("op"))).toMap
@@ -2102,18 +2088,6 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
   }
 
-  test("groupHistory reports op and commit time per retained group version") {
-    import spark.implicits._
-    val grp = Files.createTempDirectory("grphist").toString + "/load"
-    MergeWriter.mergeGroup(spark, grp,
-      Seq(("states", Seq((1L, "a")).toDF("id", "v"), Seq("id"))), buckets = 2)
-    MergeWriter.compactGroupTable(spark, grp, "states")
-    val h = MergeWriter.groupHistory(spark, grp).collect()
-    assert(h.map(_.getAs[String]("op")).toSeq ==
-      Seq("compactGroupTable", "mergeGroup"))
-    assert(h.forall(_.getAs[java.sql.Timestamp]("commit_ts") != null))
-  }
-
   test("tableHistory reports op and commit time over the retained window") {
     import spark.implicits._
     val dir = Files.createTempDirectory("hist").toString + "/t"
@@ -2207,34 +2181,6 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
         .inputFiles.toSet
       assert(pinned.inputFiles.toSet.size < allPinned.size,
         "no skipping on the pinned version")
-    } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-  }
-
-  test("readGroupTableWhere conjunction over a member") {
-    import spark.implicits._
-    val grp = Files.createTempDirectory("grpwhere").toString + "/load"
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "50")
-    try {
-      val d0 = java.time.LocalDate.of(2024, 1, 1)
-      val snaps = (0 until 600).map { i =>
-        (s"item#${i % 299}", java.sql.Date.valueOf(d0.plusDays(i / 10)), i)
-      }.toDF("k", "snapshotDate", "rev")
-      MergeWriter.mergeGroup(spark, grp,
-        Seq(("snapshots", snaps, Seq("k", "snapshotDate"))), buckets = 4,
-        clusterBy = Map("snapshots" -> Seq("snapshotDate")),
-        bloomBy = Map("snapshots" -> Seq("k")), bloomItems = 500)
-      val got = MergeWriter.readGroupTableWhere(spark, grp, "snapshots", Seq(
-        MergeWriter.ColumnIn("k", Seq("item#7", "item#123")),
-        MergeWriter.ColumnRange("snapshotDate",
-          Some(java.sql.Date.valueOf("2024-01-01")),
-          Some(java.sql.Date.valueOf("2024-01-31")))))
-      val full = MergeWriter.readGroupTable(spark, grp, "snapshots")
-        .filter(col("k").isin("item#7", "item#123") &&
-          col("snapshotDate").between(lit("2024-01-01"), lit("2024-01-31")))
-      assert(got.collect().map(_.toSeq).toSet ==
-        full.collect().map(_.toSeq).toSet)
-      assert(got.inputFiles.length <
-        MergeWriter.readGroupTable(spark, grp, "snapshots").inputFiles.length)
     } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
   }
 
@@ -2433,7 +2379,7 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
         buckets = 4, clusterBy = Map(member -> Seq("snapshotDate")),
         bloomBy = Map(member -> Seq("k")), bloomItems = 500)
       val v0 = MergeWriter.availableVersions(spark, dir).max
-      val g0 = MergeWriter.availableGroupVersions(spark, grp).max
+      val g0 = groupVersions(grp).max
       Thread.sleep(20)
       val between = System.currentTimeMillis()
       Thread.sleep(20)
@@ -2470,10 +2416,6 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
             preds), old.filter(cond), true),
           ("keys", MergeWriter.readKeys(spark, dir, wanted, keys),
             cur.filter(cond), true),
-          ("group range", MergeWriter.readGroupTableRange(spark, grp, member,
-            "snapshotDate", Some(d), Some(d)), cur.filter(onDay), true),
-          ("group where", MergeWriter.readGroupTableWhere(spark, grp, member,
-            preds), cur.filter(cond), true),
           ("group keys", MergeWriter.readGroupKeys(spark, grp, member, wanted,
             keys), cur.filter(cond), true))
         variants.foreach { case (name, got, want, prunes) =>
@@ -2701,8 +2643,6 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
         Seq("k1", "k2").toDF("k"), keys)),
       g("mergeGroup", Some("mergeGroup"))(MergeWriter.mergeGroup(spark, _,
         Seq(("m", frame(0, 3, 2L), keys)))),
-      g("setGroupRetention", Some("retention"))(
-        MergeWriter.setGroupRetention(spark, _, versions = 3)),
       t("truncateHistory", None)(MergeWriter.truncateHistory(spark, _)),
       t("buildBloomIndex", None)(
         MergeWriter.buildBloomIndex(spark, _, Seq("k"))),
@@ -2724,21 +2664,18 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       g("splitGroupBuckets", None)(
         MergeWriter.splitGroupBuckets(spark, _, "m", keys)),
       g("compactGroupTable", None)(
-        MergeWriter.compactGroupTable(spark, _, "m")),
-      g("clusterGroupTable", None)(
-        MergeWriter.clusterGroupTable(spark, _, "m", Seq("v"))))
+        MergeWriter.compactGroupTable(spark, _, "m")))
     val put = new ConditionalPut
     try {
       MergeWriter.setCommitPrimitive(put)
       entries.foreach { e =>
         val path = e.setup()
         def versions(): Seq[Long] =
-          if (e.isGroup) MergeWriter.availableGroupVersions(spark, path)
+          if (e.isGroup) groupVersions(path)
           else MergeWriter.availableVersions(spark, path)
         def lastOp(): String =
-          (if (e.isGroup) MergeWriter.groupHistory(spark, path)
-           else MergeWriter.tableHistory(spark, path))
-            .head().getAs[String]("op")
+          if (e.isGroup) groupOp(path)
+          else MergeWriter.tableHistory(spark, path).head().getAs[String]("op")
         val before = versions()
         // every CAS loses: the bounded loop gives up with the protocol's
         // conflict, whatever the entry's rule
@@ -2867,6 +2804,46 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(late.isEmpty,
         s"$name: queries after staging plan the input's lineage: $late")
     }
+  }
+
+  test("readKeys runs the lineage of its wanted frame once") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("keysonce").toString + "/t"
+    MergeWriter.merge(spark, dir,
+      (0 until 20).map(i => (s"k$i", i.toLong)).toDF("k", "v"), Seq("k"),
+      buckets = 4)
+    // the marker counts its evaluations and names itself in every
+    // analyzed plan that carries the wanted lineage (an aggregate)
+    val evals = spark.sparkContext.longAccumulator("wanted-evals")
+    val marker = udf((k: String) => { evals.add(1L); k })
+      .asNondeterministic().withName("wanted_marker")
+    val wanted = spark.range(0, 12).repartition(3)
+      .groupBy((col("id") % 6).as("g")).count()
+      .select(marker(concat(lit("k"), col("g").cast("string"))).as("k"))
+    val heard = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        if (qe.analyzed.toString.contains("wanted_marker")) heard.add(funcName)
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val got = try MergeWriter.readKeys(spark, dir, wanted, Seq("k")).collect()
+      finally {
+        org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    assert(got.map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      (0 until 6).map(i => s"k$i" -> i.toLong).toMap)
+    assert(evals.value == 6L,
+      s"the wanted lineage ran ${evals.value} evaluations for 6 keys")
+    assert(heard.asScala.toSeq == Seq("collect"),
+      s"queries that plan the wanted lineage: ${heard.asScala.toSeq}")
   }
 
   test("a keyed write releases its staged rows whether it commits, skips or fails") {
