@@ -648,7 +648,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         // what they read before (Delta's semantics)
         val man = MergeWriter.pinManifest(spark, dir.toString, None, None)
           .getOrElse(throw new NoSuchTableException(ident))
-        val cur = MergeWriter.sqlSchema(spark, dir.toString, man)
+        val cur = MergeWriter.sqlSchema(man)
         val next = org.apache.spark.sql.GraftColumnShim
           .applySchemaChanges(cur, Seq(ud))
         MergeWriter.replaceSchemaMetadata(spark, dir.toString, next)
@@ -1401,7 +1401,7 @@ class GraftSqlTable(spark: SparkSession, tablePath: String,
     * runtime null checks instead of rejecting the plan.
     */
   override def schema(): StructType =
-    MergeWriter.sqlSchema(spark, tablePath, man)
+    MergeWriter.sqlSchema(man)
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,

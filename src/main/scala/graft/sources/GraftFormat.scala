@@ -497,8 +497,6 @@ class GraftFileIndex private[sources] (
 
   override def sizeInBytes: Long = allFiles.map(_._2).sum
 
-  private lazy val dataSchema: StructType = man.struct
-
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression])
       : Seq[PartitionDirectory] = {
@@ -515,7 +513,7 @@ class GraftFileIndex private[sources] (
     val preds = dataFilters
       .map(GraftFileIndex.rewriteShredRefs(man, _, rewriteStrict))
       .flatMap(GraftFileIndex.toPredicates)
-    val buckets = GraftFileIndex.keyBuckets(man, dataSchema, preds)
+    val buckets = GraftFileIndex.keyBuckets(man, man.struct, preds)
     val files =
       if (preds.isEmpty && buckets.isEmpty) allFiles
       else MergeWriter.indexCandidateFiles(spark, tablePath, man, preds,

@@ -222,13 +222,11 @@ private[sources] class GraftChangesTable(spark: SparkSession,
     man.keyCols
   }
 
-  private lazy val idxSchema: StructType = man.struct
-
   private lazy val compareCols: Seq[String] =
-    idxSchema.fieldNames.toSeq.filterNot(keys.contains)
+    man.struct.fieldNames.toSeq.filterNot(keys.contains)
 
   private lazy val cdc: StructType =
-    GraftStreamCore.cdcSchema(idxSchema, keys, compareCols,
+    GraftStreamCore.cdcSchema(man.struct, keys, compareCols,
       withVersion = true)
 
   override def name(): String = tableName

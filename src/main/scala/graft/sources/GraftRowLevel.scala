@@ -83,7 +83,7 @@ private[sources] class GraftRowLevelOperation(
     // scan MUST NOT see (a MERGE matching a deleted key would wrongly
     // take the MATCHED branch).
     new GraftTableScanBuilder(spark, tablePath, man,
-      MergeWriter.sqlSchema(spark, tablePath, man), options,
+      MergeWriter.sqlSchema(man), options,
       streamable = false)
   }
 

@@ -7619,8 +7619,7 @@ object MergeWriter {
     * nullable keys (and therefore no SQL row-level DML) until a full
     * rewrite (INSERT OVERWRITE / REPLACE TABLE) re-certifies it.
     */
-  private[sources] def sqlSchema(spark: SparkSession, tablePath: String,
-                                 man: Manifest): StructType = {
+  private[sources] def sqlSchema(man: Manifest): StructType = {
     val s = man.struct
     if (man.keyCols.isEmpty || !man.keysChecked) s
     else StructType(s.fields.map(f =>
