@@ -18,6 +18,13 @@ planner stacks short, and `jfr print` shows 5 frames unless told otherwise):
 
 `--since`/`--until` bound the window in seconds after the first sample of
 the dump (any thread), so a benchmark's set-up can be left out.
+
+For an etlbench run's timed phase, take the figures from the run's artifact
+(`etlbench/results/<workload>-seed<seed>-trace<t>.json`). The first sample
+comes at JVM start, the input generator runs before the session and is
+left out of `setup_s`, and the timed phase follows set-up. So pass
+`--since <generator_ms / 1000 + setup_s>` and
+`--until <generator_ms / 1000 + setup_s + timed_s>`.
 """
 
 import argparse

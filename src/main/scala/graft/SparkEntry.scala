@@ -6045,7 +6045,7 @@ object SparkEntry {
   private def pqOracleSql(subspaces: Int, subDim: Int, seedCount: Int,
                           nQueries: Int, k: Int,
                           ivfProbes: Option[Int] = None,
-                          verifyEvery: Int = 1): String = {
+                          verifyEvery: Int): String = {
     def lloyd(src: String, cIn: String, aOut: String, mOut: String,
               cOut: String) =
       s"""$aOut AS (

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
 import graft.model._
 
 /** The E1 pipeline: raw Jira-shaped work items → revision stream → event
@@ -10,9 +11,12 @@ import graft.model._
   *
   * The reference runs this per item inside a Lambda consuming SQS
   * (`src/jiracloud/process/revision_processor.ts`); here the whole table is
-  * one declarative job: an explode, a groupByKey kernel, two window passes —
-  * the only shuffles are the per-item key (high cardinality) and the
-  * revision window.
+  * one declarative job. The changelog explode reads each document in one
+  * narrow pass (no shuffle: every value it derives comes from the
+  * document's own arrays); the event-date kernel's per-item key and the
+  * snapshots' revision window are the only shuffles. Each pipeline step is
+  * one projection (`select`), so the analyzer sees a handful of nodes per
+  * step instead of one per derived column.
   */
 object RevisionPipeline {
 
@@ -23,8 +27,16 @@ object RevisionPipeline {
     * plus flag-removal markers (`Flagged` with empty to/toString), plus the
     * synthesized revision-0 pair (initial status from the first state
     * change's `from`, else the current status; initial assignee from the
-    * first assignee change's `fromString`). Rows with empty statusId or
-    * statusName are dropped (`:494-498`).
+    * first assignee change's `fromString`). "First" orders a document's
+    * changes by changedDate, nulls first, ties in document order; it
+    * counts only non-null values, each pick on its own. Every document
+    * yields its own revision-0 pair, also when two share a key. Rows with
+    * empty statusId or statusName are dropped (`:494-498`).
+    *
+    * Plan: two narrow branches over `raw`, unioned — the rev-0 pair (one
+    * fold over the document's `histories`, then one explode of a
+    * two-element array) and the changes (explode, one filter, one
+    * projection). No shuffle, window or join.
     *
     * Expected input schema (FIXTURES.md §1): `key`, `fields{created,
     * status{id,name}, assignee{displayName}, ...}`,
@@ -34,107 +46,100 @@ object RevisionPipeline {
   def explodeChangelog(raw: DataFrame,
                        blockedReasonFieldId: Option[String] = None,
                        discardedReasonFieldId: Option[String] = None): DataFrame = {
-    val hist = raw.select(
-      col("key").as("workItemId"),
-      col("fields.created").as("createdDate"),
-      col("fields.status.id").as("currentStatusId"),
-      col("fields.status.name").as("currentStatusName"),
-      explode_outer(col("changelog.histories")).as("h"))
-    val items = hist.select(
-      col("workItemId"), col("createdDate"),
-      col("currentStatusId"), col("currentStatusName"),
-      col("h.id").as("historyId"),
-      to_timestamp(col("h.created")).cast("timestamp_ntz").as("changedDate"),
-      explode_outer(col("h.items")).as("it"))
+    val changedAt = (created: Column) => to_timestamp(created).cast("timestamp_ntz")
+    val nonEmpty = (c: Column) => c.isNotNull && c =!= ""
+    val emptyOrNull = (c: Column) => c.isNull || c === ""
+    val nullStr = lit(null).cast("string")
 
-    val field = col("it.field")
-    val fieldId = col("it.fieldId")
-    val toId = col("it.to")
-    val toStr = col("it").getField("toString")
-    val nonEmpty = (c: org.apache.spark.sql.Column) => c.isNotNull && c =!= ""
-
-    val isBlocked = blockedReasonFieldId.map(id => fieldId === id).getOrElse(lit(false))
-    val isDiscarded = discardedReasonFieldId.map(id => fieldId === id).getOrElse(lit(false))
-
+    // one changelog item's classification (`:358-438`); `it` is a column
+    // or a lambda variable of the item struct
+    def isBlocked(it: Column) = blockedReasonFieldId.fold(lit(false))(it("fieldId") === _)
+    def isDiscarded(it: Column) = discardedReasonFieldId.fold(lit(false))(it("fieldId") === _)
     // flag-removal marker (`:358-380`): Flagged with empty to/toString
-    val flagRemoved = items
-      .filter(field === "Flagged" &&
-        (toId.isNull || toId === "") && (toStr.isNull || toStr === ""))
-      .select(col("workItemId"), col("historyId"), col("changedDate"),
-        lit("flagged").as("statusId"), lit("flagged").as("statusName"),
-        lit("flagged").as("statusText"),
-        col("it.from").as("from"), col("it.fromString").as("fromString"),
-        col("historyId").as("revision"), lit("flagged").as("type"),
-        lit(null).cast("string").as("assignee"),
-        lit(null).cast("string").as("blockedReason"),
-        lit(null).cast("string").as("discardedReason"),
-        lit(false).as("flagged"))
+    def isRemoval(it: Column) =
+      it("field") === "Flagged" && emptyOrNull(it("to")) && emptyOrNull(it("toString"))
+    // tracked field change with non-empty targets (`:381-438`); never a
+    // removal, so `isRemoval` is false on every tracked row
+    def isTracked(it: Column) = nonEmpty(it("to")) && nonEmpty(it("toString")) &&
+      (it("field") === "status" || it("field") === "assignee" ||
+        it("field") === "Flagged" || isBlocked(it) || isDiscarded(it))
 
-    // tracked field changes with non-empty targets (`:381-438`)
-    val tracked = items
-      .filter(nonEmpty(toId) && nonEmpty(toStr) &&
-        (field === "status" || field === "assignee" || field === "Flagged" ||
-          isBlocked || isDiscarded))
+    // revision-0 inputs (`:442-492`), folded over the document's own
+    // histories: per pick the earliest non-null value, where a candidate
+    // replaces the held one only if its changedDate sorts strictly first
+    // (nulls first), so ties keep document order. `at` carries the current
+    // history's changedDate into the item fold.
+    val itemType = raw.schema("changelog").dataType.asInstanceOf[StructType]("histories")
+      .dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]("items")
+      .dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    val noTime = lit(null).cast("timestamp_ntz")
+    def none(field: String) = struct(lit(false).as("set"), noTime.as("at"),
+      lit(null).cast(itemType(field).dataType).as("v"))
+    def pick(held: Column, at: Column, candidate: Column, v: Column) =
+      when(candidate && v.isNotNull && (!held("set") ||
+          (held("at").isNotNull && (at.isNull || at < held("at")))),
+        struct(lit(true).as("set"), at.as("at"), v.as("v")))
+        .otherwise(held)
+    val fold = (acc: Column, it: Column) => {
+      val isState = isTracked(it) && it("field") === "status"
+      val isAssignee = isTracked(it) && it("field") === "assignee"
+      struct(acc("at").as("at"),
+        pick(acc("from"), acc("at"), isState, it("from")).as("from"),
+        pick(acc("fromString"), acc("at"), isState, it("fromString")).as("fromString"),
+        pick(acc("assignee"), acc("at"), isAssignee, it("fromString")).as("assignee"))
+    }
+    val firsts = aggregate(col("changelog.histories"),
+      struct(noTime.as("at"), none("from").as("from"),
+        none("fromString").as("fromString"), none("fromString").as("assignee")),
+      (acc, h) => coalesce(
+        aggregate(h("items"), acc.withField("at", changedAt(h("created"))), fold), acc))
+
+    val rev0Row = (tpe: String, assignee: Column) => struct(
+      col("workItemId"), lit("0").as("historyId"), col("createdDate").as("changedDate"),
+      col("statusId"), col("statusName"), col("statusName").as("statusText"),
+      col("statusId").as("from"), lit("").as("fromString"), lit("0").as("revision"),
+      lit(tpe).as("type"), assignee.as("assignee"), nullStr.as("blockedReason"),
+      nullStr.as("discardedReason"), lit(false).as("flagged"))
+    val rev0 = raw
+      .select(col("key").as("workItemId"),
+        changedAt(col("fields.created")).as("createdDate"),
+        col("fields.status.id").as("curId"), col("fields.status.name").as("curName"),
+        firsts.as("firsts"))
+      .select(col("workItemId"), col("createdDate"),
+        coalesce(col("firsts.from.v"), col("curId")).as("statusId"),
+        coalesce(col("firsts.fromString.v"), col("curName")).as("statusName"),
+        col("firsts.assignee.v").as("firstAssignee"))
+      .filter(nonEmpty(col("statusId")) && nonEmpty(col("statusName")))
+      .select(inline(array(rev0Row("state_change", nullStr),
+        rev0Row("assignee_change", col("firstAssignee")))))
+
+    val it = col("it")
+    val field = it("field")
+    val toStr = it("toString")
+    val removal = isRemoval(it)
+    val changes = raw
+      .select(col("key").as("workItemId"), explode(col("changelog.histories")).as("h"))
+      .select(col("workItemId"), col("h.id").as("historyId"),
+        changedAt(col("h.created")).as("changedDate"), explode(col("h.items")).as("it"))
+      .filter(removal || isTracked(it))
       .select(col("workItemId"), col("historyId"), col("changedDate"),
-        toId.as("statusId"), toStr.as("statusName"),
-        when(field === "status", toStr).otherwise(lit("")).as("statusText"),
-        col("it.from").as("from"), col("it.fromString").as("fromString"),
+        when(removal, lit("flagged")).otherwise(it("to")).as("statusId"),
+        when(removal, lit("flagged")).otherwise(toStr).as("statusName"),
+        when(removal, lit("flagged")).when(field === "status", toStr)
+          .otherwise(lit("")).as("statusText"),
+        it("from").as("from"), it("fromString").as("fromString"),
         col("historyId").as("revision"),
         when(field === "status", "state_change")
           .when(field === "Flagged", "flagged")
           .when(field === "assignee", "assignee_change")
-          .when(isBlocked, "blocked_reason")
-          .when(isDiscarded, "discarded_reason").as("type"),
+          .when(isBlocked(it), "blocked_reason")
+          .when(isDiscarded(it), "discarded_reason").as("type"),
         when(field === "assignee", toStr).as("assignee"),
-        when(isBlocked, toStr).as("blockedReason"),
-        when(isDiscarded, toStr).as("discardedReason"),
-        (field === "Flagged").as("flagged"))
+        when(!removal && isBlocked(it), toStr).as("blockedReason"),
+        when(!removal && isDiscarded(it), toStr).as("discardedReason"),
+        (field === "Flagged" && !removal).as("flagged"))
 
-    val changes = tracked.unionByName(flagRemoved)
-
-    // revision-0 synthesis (`:442-492`): initial status = first state
-    // change's `from` (by changedDate), falling back to the current status;
-    // initial assignee = first assignee change's `fromString`.
-    val wState = Window.partitionBy(col("workItemId"))
-      .orderBy(col("changedDate")).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val firsts = changes
-      .withColumn("__initFrom", first(
-        when(col("type") === "state_change", col("from")), ignoreNulls = true).over(wState))
-      .withColumn("__initFromString", first(
-        when(col("type") === "state_change", col("fromString")), ignoreNulls = true).over(wState))
-      .withColumn("__firstAssignee", first(
-        when(col("type") === "assignee_change", col("fromString")), ignoreNulls = true).over(wState))
-      .groupBy(col("workItemId"))
-      .agg(first(col("__initFrom")).as("initFrom"),
-        first(col("__initFromString")).as("initFromString"),
-        first(col("__firstAssignee")).as("firstAssignee"))
-
-    val base = raw.select(
-      col("key").as("workItemId"),
-      to_timestamp(col("fields.created")).cast("timestamp_ntz").as("createdDate"),
-      col("fields.status.id").as("curId"), col("fields.status.name").as("curName"))
-      .join(firsts, Seq("workItemId"), "left")
-      .select(col("workItemId"), col("createdDate"),
-        coalesce(col("initFrom"), col("curId")).as("statusId"),
-        coalesce(col("initFromString"), col("curName")).as("statusName"),
-        col("firstAssignee"))
-
-    val rev0State = base.select(col("workItemId"), lit("0").as("historyId"),
-      col("createdDate").as("changedDate"), col("statusId"), col("statusName"),
-      col("statusName").as("statusText"), col("statusId").as("from"),
-      lit("").as("fromString"), lit("0").as("revision"),
-      lit("state_change").as("type"), lit(null).cast("string").as("assignee"),
-      lit(null).cast("string").as("blockedReason"),
-      lit(null).cast("string").as("discardedReason"), lit(false).as("flagged"))
-    val rev0Assignee = rev0State
-      .withColumn("type", lit("assignee_change"))
-      .drop("assignee")
-      .join(base.select(col("workItemId"), col("firstAssignee").as("assignee")), "workItemId")
-
-    rev0State.unionByName(rev0Assignee.select(rev0State.columns.map(col).toIndexedSeq: _*))
-      .unionByName(changes)
-      .filter(col("statusId").isNotNull && col("statusId") =!= "" &&
-        col("statusName").isNotNull && col("statusName") =!= "")
+    rev0.unionByName(changes)
   }
 
   /** Event dates per item from the state-change revisions only
@@ -186,29 +191,26 @@ object RevisionPipeline {
         col("delayedRevision")),
       Seq("workItemId"), "left")
 
+    val isState = col("type") === "state_change"
+    val stateOrder = when(isState, col("stateOrder")).otherwise(lit(-999))
     val joined = withDates
       .join(broadcast(steps),
-        col("type") === "state_change" &&
-          col("statusId") === col("__sid") && col("statusName") === col("__sname"),
+        isState && col("statusId") === col("__sid") && col("statusName") === col("__sname"),
         "left")
-      .withColumn("stateOrder",
-        when(col("type") === "state_change", col("stateOrder")).otherwise(lit(-999)))
-      .withColumn("stateType",
-        when(col("type") === "state_change", col("stateType")).otherwise(lit("not applicable")))
-      .withColumn("stepCategory",
+      .select(withDates.columns.map(col).toIndexedSeq ++ Seq(
+        stateOrder.as("stateOrder"),
+        when(isState, col("stateType")).otherwise(lit("not applicable")).as("stateType"),
         when(col("type") =!= "state_change", lit("not applicable"))
-          .otherwise(stepCategoryCol(col("stateOrder"),
-            b.arrivalPointOrder, b.commitmentPointOrder, b.departurePointOrder)))
-      .withColumn("stateCategory",
+          .otherwise(stepCategoryCol(stateOrder,
+            b.arrivalPointOrder, b.commitmentPointOrder, b.departurePointOrder))
+          .as("stepCategory"),
         when(col("arrival").isNull || col("changedDate") < col("arrival"), "preceding")
           .when(col("commitment").isNull || col("changedDate") < col("commitment"), "proposed")
           .when(col("departure").isNull || col("changedDate") < col("departure"), "inprogress")
-          .otherwise("completed"))
-      .withColumn("isDelayed",
-        col("delayedRevision").isNotNull &&
-          col("revision").cast("int") >= col("delayedRevision"))
-      .withColumn("flomatikaSnapshotDate", col("changedDate"))
-      .drop("__sid", "__sname")
+          .otherwise("completed").as("stateCategory"),
+        (col("delayedRevision").isNotNull &&
+          col("revision").cast("int") >= col("delayedRevision")).as("isDelayed"),
+        col("changedDate").as("flomatikaSnapshotDate")): _*)
 
     // ---- T9 flagged pass (utils.ts:60-116) ----
     val wOrd = Window.partitionBy(col("workItemId")).orderBy(col("revision").cast("int"))
@@ -221,29 +223,28 @@ object RevisionPipeline {
       "blockedReason", "discardedReason", "isDelayed")
 
     val prevState = last(
-      when(col("type") === "state_change",
-        struct(copied.map(col).toIndexedSeq: _*)), ignoreNulls = true).over(wPrev)
+      when(isState, struct(copied.map(col): _*)),
+      ignoreNulls = true).over(wPrev)
 
     val marker = when(isFlagRow && col("flagged"), 1)
       .when(isFlagRow && !col("flagged"), 0)
     val interval = coalesce(last(marker, ignoreNulls = true).over(wRun), lit(0)) === 1
 
-    val withPrev = joined.withColumn("__prev", prevState)
-    val inherited = copied.foldLeft(withPrev) { (df, c) =>
-      df.withColumn(c,
-        when(isFlagRow && col("__prev").isNotNull, col("__prev").getField(c))
-          .otherwise(col(c)))
-    }
-    inherited
-      // leading flag row with no prior state change → stateType 'queue'
-      .withColumn("stateType",
-        when(isFlagRow && col("__prev").isNull, "queue").otherwise(col("stateType")))
-      // interval fill; the unflag row itself reports false (marker 0 at row)
-      .withColumn("flagged", interval)
-      .drop("__prev")
+    val prev = col("__prev")
+    val inherit = isFlagRow && prev.isNotNull
+    joined.select(col("*"), prevState.as("__prev"), interval.as("__interval"))
+      .select(joined.columns.toIndexedSeq.map {
+        // a leading flag row with no prior state change → stateType 'queue'
+        case "stateType" => when(isFlagRow && prev.isNull, "queue")
+          .when(inherit, prev("stateType")).otherwise(col("stateType")).as("stateType")
+        // interval fill; the unflag row itself reports false (marker 0 at row)
+        case "flagged" => col("__interval").as("flagged")
+        case c if copied.contains(c) => when(inherit, prev(c)).otherwise(col(c)).as(c)
+        case c => col(c)
+      }: _*)
   }
 
-  private def stepCategoryCol(order: org.apache.spark.sql.Column,
+  private def stepCategoryCol(order: Column,
                               a: Option[Int], c: Option[Int], d: Option[Int]) = {
     val aO = lit(a.getOrElse(Int.MaxValue))
     val cO = lit(c.getOrElse(Int.MaxValue))
@@ -273,6 +274,9 @@ object RevisionPipeline {
     */
   val FlaggedValues: Set[String] = Set("Impediment", "Impedimento")
 
+  // one per JVM: `readTree` is thread-safe once the mapper is configured
+  private val JsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** `isItemFlagged` (`revision_processor.ts:1038-1053`): scan ALL fields;
     * flagged iff any field value is a non-empty array whose first element's
     * `value` is a flagged marker. The scan is genuinely dynamic (fields are
@@ -280,8 +284,7 @@ object RevisionPipeline {
     */
   private[graft] def isItemFlaggedJson(fieldsJson: String): Boolean = {
     if (fieldsJson == null) return false
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(fieldsJson)
+    val root = JsonMapper.readTree(fieldsJson)
     val it = root.fields()
     var flagged = false
     while (it.hasNext && !flagged) {
@@ -316,15 +319,16 @@ object RevisionPipeline {
     import spark.implicits._
     val fieldNames = raw.schema("fields").dataType
       .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
+    val nullStr = lit(null).cast("string")
     def fieldOrNull(name: String) =
       if (fieldNames.contains(name)) col("fields").getField(name).cast("string")
-      else lit(null).cast("string")
+      else nullStr
     // parent resolution chain (`:879-898`)
     val parentKey =
       if (fieldNames.contains("parent")) col("fields.parent.key")
-      else lit(null).cast("string")
+      else nullStr
     val parent = coalesce(parentKey, fieldOrNull(parentLinkFieldId),
-      epicLinkFieldId.map(fieldOrNull).getOrElse(lit(null).cast("string")))
+      epicLinkFieldId.map(fieldOrNull).getOrElse(nullStr))
 
     val flaggedUdf = udf(isItemFlaggedJson _)
 
@@ -342,28 +346,24 @@ object RevisionPipeline {
 
     // current workflow step → stateType/stateOrder (`workflowStep` input
     // of translateWorkItem; step identity is the (id, name) pair)
-    val withStep = workflow match {
+    val (withStep, stepCols) = workflow match {
       case None =>
-        base.withColumn("stateType", lit(null).cast("string"))
-          .withColumn("stateOrder", lit(null).cast("string"))
+        (base, Seq(nullStr.as("stateType"), nullStr.as("stateOrder")))
       case Some(wf) =>
         val steps = wf.steps.map(s => (s.id, s.name, s.order, s.stateType))
           .toDF("__sid", "__sname", "__sorder", "__stype")
-        base.join(broadcast(steps),
-            col("__curSid") === col("__sid") && col("state") === col("__sname"), "left")
-          .withColumn("stateType", col("__stype"))
-          .withColumn("stateOrder", col("__sorder").cast("string"))
-          .drop("__sid", "__sname", "__sorder", "__stype")
+        (base.join(broadcast(steps),
+            col("__curSid") === col("__sid") && col("state") === col("__sname"), "left"),
+          Seq(col("__stype").as("stateType"), col("__sorder").cast("string").as("stateOrder")))
     }
 
     // workItemTypeMap dimension join (broadcast: config-sized by nature)
-    val withType =
+    val (withType, typeCols) =
       if (typeMaps.isEmpty)
-        withStep.withColumn("flomatikaWorkItemTypeId", lit(null).cast("string"))
-          .withColumn("workItemType", col("rawItemType"))
-          .withColumn("flomatikaWorkItemTypeLevel", lit(null).cast("string"))
-          .withColumn("flomatikaWorkItemTypeServiceLevelExpectationInDays",
-            lit(null).cast("int"))
+        (withStep, Seq(nullStr.as("flomatikaWorkItemTypeId"),
+          col("rawItemType").as("workItemType"),
+          nullStr.as("flomatikaWorkItemTypeLevel"),
+          lit(null).cast("int").as("flomatikaWorkItemTypeServiceLevelExpectationInDays")))
       else {
         val tm = typeMaps
           .map(t => (t.projectId, t.typeName, t.workItemTypeId, t.displayName,
@@ -371,28 +371,29 @@ object RevisionPipeline {
           .toDF("__tproj", "__ttype", "flomatikaWorkItemTypeId",
             "__tdisplay", "flomatikaWorkItemTypeLevel",
             "flomatikaWorkItemTypeServiceLevelExpectationInDays")
-        withStep.join(broadcast(tm),
+        (withStep.join(broadcast(tm),
             col("projectId") === col("__tproj") &&
-              col("rawItemType") === col("__ttype"), "left")
-          .withColumn("workItemType", coalesce(col("__tdisplay"), col("rawItemType")))
-          .drop("__tproj", "__ttype", "__tdisplay")
+              col("rawItemType") === col("__ttype"), "left"),
+          Seq(col("flomatikaWorkItemTypeId"), col("flomatikaWorkItemTypeLevel"),
+            col("flomatikaWorkItemTypeServiceLevelExpectationInDays"),
+            coalesce(col("__tdisplay"), col("rawItemType")).as("workItemType")))
       }
 
     withType
       .join(eventDates // item-cardinality side: shuffle join, AQE decides
-        .withColumnRenamed("arrival", "arrivalDate")
-        .withColumnRenamed("commitment", "commitmentDate")
-        .withColumnRenamed("departure", "departureDate")
-        .select("workItemId", "arrivalDate", "commitmentDate", "departureDate",
-          "isDelayed", "stepCategory"),
+        .select(col("workItemId"), col("arrival").as("arrivalDate"),
+          col("commitment").as("commitmentDate"), col("departure").as("departureDate"),
+          col("isDelayed"), col("stepCategory")),
         Seq("workItemId"), "left")
-      .withColumn("stateCategory",
+      .select(Seq("workItemId", "title", "state", "assignedTo", "projectId",
+          "parentId", "flagged", "changedDate").map(col) ++ stepCols ++ typeCols ++
+        Seq("arrivalDate", "commitmentDate", "departureDate", "isDelayed",
+          "stepCategory").map(col) ++ Seq(
         when(col("departureDate").isNotNull, "completed")
           .when(col("commitmentDate").isNotNull, "inprogress")
           .when(col("arrivalDate").isNotNull, "proposed")
-          .otherwise("preceding"))
-      .withColumn("partitionKey", concat(lit("state#"), lit(orgId)))
-      .withColumn("sortKey", concat(lit(datasourceId), lit("#"), col("workItemId")))
-      .drop("__curSid", "rawItemType")
+          .otherwise("preceding").as("stateCategory"),
+        concat(lit("state#"), lit(orgId)).as("partitionKey"),
+        concat(lit(datasourceId), lit("#"), col("workItemId")).as("sortKey")): _*)
   }
 }

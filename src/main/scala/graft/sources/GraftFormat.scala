@@ -283,7 +283,7 @@ class GraftDataSource extends RelationProvider with DataSourceRegister
     * advances exactly when the group commits.
     */
   private def cdcSpec(spark: SparkSession, parameters: Map[String, String])
-      : (Seq[String], Seq[String], StructType, () => Option[Long],
+      : (StructType, () => Option[Long],
          (Option[Long], Long) => org.apache.spark.sql.DataFrame) = {
     val path = pathOf(parameters)
     val (man, dataPath) = pin(spark, parameters, path)
@@ -338,24 +338,22 @@ class GraftDataSource extends RelationProvider with DataSourceRegister
               MergeWriter.readTableVersion(spark, path, _))(to)
           })
     }
-    (keys, compareCols, schema, latest, diffFn)
+    (schema, latest, diffFn)
   }
 
   override def sourceSchema(sqlContext: SQLContext,
                             schema: Option[StructType], providerName: String,
                             parameters: Map[String, String])
       : (String, StructType) =
-    (shortName(), cdcSpec(sqlContext.sparkSession, parameters)._3)
+    (shortName(), cdcSpec(sqlContext.sparkSession, parameters)._1)
 
   override def createSource(sqlContext: SQLContext, metadataPath: String,
                             schema: Option[StructType], providerName: String,
                             parameters: Map[String, String])
       : org.apache.spark.sql.execution.streaming.Source = {
-    val spark = sqlContext.sparkSession
-    val (keys, compareCols, cdcSchema, latest, readV) =
-      cdcSpec(spark, parameters)
-    new GraftChangeFeedSource(spark, keys, compareCols, cdcSchema, latest,
-      readV, parameters.get("maxVersionsPerTrigger").map(_.toLong))
+    val (cdcSchema, latest, readV) = cdcSpec(sqlContext.sparkSession, parameters)
+    new GraftChangeFeedSource(cdcSchema, latest, readV,
+      parameters.get("maxVersionsPerTrigger").map(_.toLong))
   }
 }
 
@@ -391,9 +389,7 @@ private[sources] class GraftParquetFileFormat(ids: Map[String, Long])
       hadoopConf)
 }
 
-class GraftChangeFeedSource(spark: SparkSession,
-                            keys: Seq[String], compareCols: Seq[String],
-                            cdcSchema: StructType,
+class GraftChangeFeedSource(cdcSchema: StructType,
                             latestVersion: () => Option[Long],
                             diffFn: (Option[Long], Long) => DataFrame,
                             versionsPerTrigger: Option[Long] = None)

@@ -2173,7 +2173,7 @@ object MergeWriter {
     */
   private def applyGenerated(df: DataFrame, specs: Map[String, String],
                              tablePath: String,
-                             recompute: Boolean = false): DataFrame =
+                             recompute: Boolean): DataFrame =
     specs.toSeq.sortBy(_._1).foldLeft(df) { case (d, (c, g)) =>
       if (!d.columns.contains(c)) d
       else {
@@ -3426,7 +3426,7 @@ object MergeWriter {
                                // them, and trickle-appended files are
                                // naturally value-clustered even when
                                // the table isn't
-                               priorityCols: Set[String] = Set.empty)
+                               priorityCols: Set[String])
       : Map[Int, Seq[FileStat]] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -4066,8 +4066,7 @@ object MergeWriter {
     * age guard). Bounded by the per-commit key cap, so `coalesce(1)`
     * keeps it one file.
     */
-  private def writeEqdSidecar(spark: SparkSession, root: String,
-                              name: String, doomed: DataFrame,
+  private def writeEqdSidecar(root: String, name: String, doomed: DataFrame,
                               colIds: Map[String, Long]): Unit = {
     stampFrame(doomed, colIds).coalesce(1).write.mode(SaveMode.ErrorIfExists)
       .parquet(s"$root/$EqDirName/$name")
@@ -4413,7 +4412,7 @@ object MergeWriter {
     // anything (nothing to delete from); sidecar first, manifest last
     val sidecar = "eqd-" + UUID.randomUUID()
     if (stored.nonEmpty)
-      writeEqdSidecar(spark, root, sidecar, doomed.distinct(), man.colIds)
+      writeEqdSidecar(root, sidecar, doomed.distinct(), man.colIds)
     // upTo from the PRE-COMMIT base: the overlay appended after it takes
     // ordinal upTo, keeping this commit's own rows exempt
     Staged(_.map { base =>
@@ -6308,13 +6307,13 @@ object MergeWriter {
                            tablePath: String, rows: DataFrame,
                            keys: Seq[String], buckets: Int,
                            prev: Option[Manifest],
-                           dropBuckets: Set[Int] = Set.empty,
-                           clusterCols: Seq[String] = Seq.empty,
-                           bloomCols: Seq[String] = Seq.empty,
-                           bloomN: Long = DefaultBloomItems,
-                           fpSeed: Boolean = false,
-                           dvSeed: Boolean = false,
-                           eqdSeed: Boolean = false,
+                           dropBuckets: Set[Int],
+                           clusterCols: Seq[String],
+                           bloomCols: Seq[String],
+                           bloomN: Long,
+                           fpSeed: Boolean,
+                           dvSeed: Boolean,
+                           eqdSeed: Boolean,
                            shredSeed: Seq[ShredSpec] = Seq.empty)
       : StagedRewrite = {
     // CHECK-constraint guard fused into the epoch write's pass: every
@@ -6544,7 +6543,7 @@ object MergeWriter {
                                  man: Manifest,
                                  expectedVersion: Option[Long],
                                  touched: Seq[Int], op: String,
-                                 ref: Option[String] = None): Unit =
+                                 ref: Option[String]): Unit =
     expectedVersion.filter(_ != man.version).foreach { ev =>
       val scanned = refManifestFiles(fs, new Path(tablePath), ref)
         .find(_._1 == ev)

@@ -3,6 +3,10 @@ package graft
 import java.time.LocalDateTime
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -56,6 +60,19 @@ class RevisionPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p2.length == 2)
     assert(p2(0).getAs[Boolean]("flagged"))
     assert(!p2(1).getAs[Boolean]("flagged"))
+  }
+
+  test("T1: the explode is one narrow pass: no shuffle, window or join") {
+    val plan = revisions.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val wide = plan.collect {
+      case e: Exchange => e.nodeName
+      case w: WindowExec => w.nodeName
+      case j: BaseJoinExec => j.nodeName
+    }
+    assert(wide.isEmpty, plan.treeString)
   }
 
   test("T4: event dates per item") {
